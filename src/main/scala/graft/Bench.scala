@@ -30,7 +30,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Dress-rehearsal knob (unset in driver runs): skip named queries —
     // used at sf1 to omit the documented quadratic baselines (dd02/ss02)
     // whose O(D²) cost at 10× docs is a predicted 100×, not a measurement
@@ -50,11 +49,7 @@ object Bench {
     if (excluded.nonEmpty)
       System.err.println(
         s"[bench] excluding ${excluded.toSeq.sorted.mkString(",")}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: one full pass over every query, so JVM JIT and
     // whole-stage-codegen compilation (Spark's generated-class cache is

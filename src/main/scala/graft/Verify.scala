@@ -1,31 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER override: the multi-process rehearsal runs this
-    // exact dump under `local-cluster[n,cores,mem]` — real standalone
-    // executors in SEPARATE JVMs (cross-process shuffle + broadcast +
-    // block replication), the closest a single box gets to cluster
-    // semantics. Unset (the driver's gate invocation) = local[$cpus],
-    // byte-identical behavior to before the override existed.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // non-in-process masters spawn executor JVMs that must load graft's
-    // classes (native expressions deserialize executor-side); point them
-    // at whatever classpath root this very class was loaded from
-    if (!master.startsWith("local["))
-      builder.config("spark.executor.extraClassPath",
-        getClass.getProtectionDomain.getCodeSource.getLocation.getPath)
-    val spark = builder.getOrCreate()
+    // master/cores from the environment (GraftSession): SPARK_GRAFT_MASTER
+    // runs this exact dump under `local-cluster[n,cores,mem]` — real
+    // standalone executors in SEPARATE JVMs (cross-process shuffle +
+    // broadcast + block replication), the closest a single box gets to
+    // cluster semantics
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Dev-loop subset: SPARK_GRAFT_ONLY=q01_scan,t21_token_entropy runs

@@ -90,13 +90,7 @@ object CurationExample {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: CurationExample <sf-dir> <out-path> [bucketed-table]")
-    // local master only when none was provided (sbt runMain forks with no
-    // spark.master; under spark-submit the submitted master must win)
-    val builder = SparkSession.builder()
-      .appName("graft-curation-example")
-      .config("spark.sql.shuffle.partitions", "32")
-    val spark = (if (sys.props.contains("spark.master")) builder
-      else builder.master("local[32]")).getOrCreate()
+    val spark = graft.GraftSession()
     try {
       // two writes consume the same plan — pinned, the full curation
       // graph (LSH pairs, passage counts, decontamination) computes once

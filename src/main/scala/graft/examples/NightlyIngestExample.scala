@@ -284,11 +284,7 @@ object NightlyIngestExample {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
       "usage: NightlyIngestExample <sf-dir> <curated> <index>")
-    val builder = SparkSession.builder()
-      .appName("graft-nightly-ingest-example")
-      .config("spark.sql.shuffle.partitions", "32")
-    val spark = (if (sys.props.contains("spark.master")) builder
-      else builder.master("local[32]")).getOrCreate()
+    val spark = graft.GraftSession()
     try {
       // demo: the sf dir's documents/embeddings play "tonight's batch"
       val docs = graft.sources.Tables.t(spark, args(0), "documents")

@@ -202,11 +202,7 @@ object PretrainPipelineExample {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: PretrainPipelineExample <jsonl-drop> <out-dir>")
-    val builder = SparkSession.builder()
-      .appName("graft-pretrain-pipeline-example")
-      .config("spark.sql.shuffle.partitions", "32")
-    val spark = (if (sys.props.contains("spark.master")) builder
-      else builder.master("local[32]")).getOrCreate()
+    val spark = graft.GraftSession()
     try {
       val r = run(spark, args(0), args(1))
       r.lineage.foreach(s => println(

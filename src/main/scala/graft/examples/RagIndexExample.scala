@@ -147,11 +147,7 @@ object RagIndexExample {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: RagIndexExample <sf-dir> <index-root>")
-    val builder = SparkSession.builder()
-      .appName("graft-rag-index-example")
-      .config("spark.sql.shuffle.partitions", "32")
-    val spark = (if (sys.props.contains("spark.master")) builder
-      else builder.master("local[32]")).getOrCreate()
+    val spark = graft.GraftSession()
     try {
       val docs = graft.sources.Tables.t(spark, args(0), "documents")
         .select("doc_id", "text")

@@ -173,11 +173,7 @@ object StreamingCurationExample {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4,
       "usage: StreamingCurationExample <src-json-dir> <checkpoint> <curated> <profile>")
-    val builder = SparkSession.builder()
-      .appName("graft-streaming-curation-example")
-      .config("spark.sql.shuffle.partitions", "32")
-    val spark = (if (sys.props.contains("spark.master")) builder
-      else builder.master("local[32]")).getOrCreate()
+    val spark = graft.GraftSession()
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("source", StringType),

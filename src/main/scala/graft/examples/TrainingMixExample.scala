@@ -98,11 +98,7 @@ object TrainingMixExample {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: TrainingMixExample <sf-dir> <out-path>")
-    val builder = SparkSession.builder()
-      .appName("graft-training-mix-example")
-      .config("spark.sql.shuffle.partitions", "32")
-    val spark = (if (sys.props.contains("spark.master")) builder
-      else builder.master("local[32]")).getOrCreate()
+    val spark = graft.GraftSession()
     try {
       val mix = trainingMix(spark, args(0))
       // one ordered file set per (split, phase, shard): a trainer streams

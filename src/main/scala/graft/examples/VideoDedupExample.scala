@@ -198,9 +198,7 @@ object VideoDedupExample {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions", 4)
-      .appName("video-dedup-example").getOrCreate()
+    val spark = graft.GraftSession()
     try {
       val videos = Multimodal.binaryDocs(spark, dir)
       val kept = dedupVideos(videos, theta = 3L,

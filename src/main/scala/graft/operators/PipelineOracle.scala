@@ -1,7 +1,7 @@
 package graft.operators
 
-/** DuckDB oracle SQL for the training-data pipeline operators
-  * (generated + validated by tools/proto_llm.py — keep in sync). */
+/** DuckDB oracle SQL for the training-data pipeline operators; the gate
+  * that checks each one against the engine is tools/compare.py. */
 object PipelineOracle {
   /** Shared CTE chain: tokenized 60-bit SimHash signatures, 5×12-bit bands,
     * and the banded candidate pairs — the common prefix of dd05 (pair

@@ -240,20 +240,25 @@ final class KafkaStore(spark: SparkSession, bootstrap: String,
     partitionsOf.orElse(admin.map(_.partitionsOf(topics)))
 
   override def send(messages: DataFrame): Long = {
-    val n = messages.persist().count()
-    messages
-      .selectExpr(s"${Msg.Topic}", s"CAST(${Msg.Key} AS BINARY) AS key",
-        s"CAST(${Msg.Value} AS BINARY) AS value")
-      .write.format(format)
-      // a topic append is semantically Append; also required by the DSv2
-      // write path (save()'s ErrorIfExists default is rejected there)
-      .mode("append")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("kafka.acks", "all") // ref integration_test.clj:25 acks=all
-      .options(extraOpts)
-      .save()
-    messages.unpersist()
-    n
+    messages.persist()
+    // unpersist in finally: a failed write (a broker error inside a CDC
+    // foreachBatch) must not leave the caller's frame cached for the life
+    // of the session
+    try {
+      val n = messages.count()
+      messages
+        .selectExpr(s"${Msg.Topic}", s"CAST(${Msg.Key} AS BINARY) AS key",
+          s"CAST(${Msg.Value} AS BINARY) AS value")
+        .write.format(format)
+        // a topic append is semantically Append; also required by the DSv2
+        // write path (save()'s ErrorIfExists default is rejected there)
+        .mode("append")
+        .option("kafka.bootstrap.servers", bootstrap)
+        .option("kafka.acks", "all") // ref integration_test.clj:25 acks=all
+        .options(extraOpts)
+        .save()
+      n
+    } finally { messages.unpersist(); () }
   }
 
   private def kafkaRead(topics: Seq[String], startingOffsets: String): DataFrame =

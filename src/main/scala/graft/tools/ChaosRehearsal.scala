@@ -50,17 +50,10 @@ object ChaosRehearsal {
 
   private def session(master: String, reliable: Boolean,
       ckDir: String): SparkSession = {
-    val b = graft.GraftSession.configure(
-        SparkSession.builder().master(master), shufflePartitions = 16)
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.reliableCheckpoint", reliable.toString)
-      .config("spark.graft.checkpointDir", ckDir)
-    if (master.startsWith("local-cluster"))
-      b.config("spark.executor.extraClassPath",
-        getClass.getProtectionDomain.getCodeSource.getLocation.getPath)
-    val spark = b.getOrCreate()
+    val spark = graft.GraftSession.create(master, 16,
+      "spark.graft.reliableCheckpoint" -> reliable.toString,
+      "spark.graft.checkpointDir" -> ckDir)
     spark.sparkContext.setLogLevel("WARN")
-    graft.GraftExtensions.register(spark)
     spark
   }
 

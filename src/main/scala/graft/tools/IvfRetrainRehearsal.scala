@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -13,7 +12,10 @@ import graft.sources.Tables
   * recall audited across the swap on a panel spanning all three
   * populations.
   *
-  * Drift model — measured, not assumed (tools/DriftProbe): the fixture
+  * Drift model — measured, not assumed (a one-off sf1 probe: each
+  * candidate transform applied to the vec_id % 4 = 3 vectors, scored by
+  * mean assigned-centroid cosine against a 64-cell, 2-iteration quantizer
+  * frozen on the even vec_ids): the fixture
   * embeddings are near-isotropic, so ANY direction-preserving transform
   * (negation, sign modulation, one-hot spikes, dim shuffle) still scores
   * mean best-cosine ≈ 0.26 against a 64-cell quantizer — direction
@@ -38,10 +40,7 @@ object IvfRetrainRehearsal {
     val sfDir = args.headOption.getOrElse("/root/repo/target/sf1")
     val root = args.lift(1).getOrElse(
       "/root/repo/target/r14/ivf_rehearsal")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .appName("ivf-retrain-rehearsal").getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     try {
       val fs = new org.apache.hadoop.fs.Path(root)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prices the PANEL-PINNED production usage of the LSH recall audit
   * (dd20's library surface) across scale decades:
   * `runMain graft.tools.PanelAuditPrice <sfDir> <perMille> [reps=N]`.
@@ -20,10 +18,7 @@ object PanelAuditPrice {
     val perMille = args(1).toInt
     val reps = args.drop(2).collectFirst { case s if s.startsWith("reps=") =>
       s.stripPrefix("reps=").toInt }.getOrElse(3)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     def run(): (Long, Double) = {
       val docs = graft.sources.Tables.t(spark, sfDir, "documents")

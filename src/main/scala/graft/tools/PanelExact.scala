@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Engine-side panel run of dd02's exact all-pairs arm:
@@ -21,13 +20,7 @@ object PanelExact {
     val sfDir = args(0)
     val outDir = args(1)
     val pm = args.lift(2).map(_.toInt).getOrElse(100)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     val docs = graft.sources.Tables.t(spark, sfDir, "documents")
       .where(graft.functions.Hashing.md5Long(

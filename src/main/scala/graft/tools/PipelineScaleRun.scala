@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dress-rehearsal driver for the composed pipeline (r12 verdict #4):
   * `runMain graft.tools.PipelineScaleRun <sfDir> <workDir>` — dumps the
   * scale dir's documents table as the JSONL drop the pipeline ingests
@@ -16,11 +14,7 @@ object PipelineScaleRun {
     require(args.length >= 2,
       "usage: PipelineScaleRun <sfDir> <workDir>")
     val (sfDir, workDir) = (args(0), args(1))
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("graft-pipeline-scale-run")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     try {
       val drop = s"$workDir/drop_jsonl"

@@ -99,9 +99,7 @@ object ScaleUp {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dstDir = args.lift(1).getOrElse("target/sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     graft.sources.Tables.all.foreach { t =>
       val scaled = scaleTable(spark, srcDir, t, factor)

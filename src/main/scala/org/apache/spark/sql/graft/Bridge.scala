@@ -53,4 +53,10 @@ object Bridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(id, info, builder)
+
+  /** Block until every posted listener event has been delivered
+    * (`listenerBus` is private[spark]): a profiler reads its listener's
+    * counters right after an action returns, before the bus has caught up. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -173,6 +173,20 @@ class KafkaE2eSpec extends SparkSpec {
     assert(c.lastReadOptions.get("kafka.bootstrap.servers").contains(bs))
   }
 
+  test("a failed KafkaStore.send leaves the caller's frame uncached") {
+    // send persists the frame to count and write it from one computation;
+    // a write that throws (here: a format that does not exist, standing in
+    // for a broker error inside a CDC foreachBatch) must still release it
+    import org.apache.spark.storage.StorageLevel
+    import spark.implicits._
+    val store = new KafkaStore(spark, "emu://nowhere:9092",
+      adminOverride = Some(new EmuKafkaAdmin("emu://nowhere:9092")),
+      format = "graft-no-such-format")
+    val messages = Seq(("t", "k1", "v1")).toDF("topic", "key", "value")
+    intercept[Exception](store.send(messages))
+    assert(messages.storageLevel == StorageLevel.NONE)
+  }
+
   test("murmur2 matches published reference vectors (key pinning is real-Kafka compatible)") {
     // MurmurHash2 test vectors computed from the public algorithm: the
     // same values Kafka's partitioner produces for these keys. Pinning a

@@ -6,13 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session (one per suite, lazy). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // 4 cores and 4 shuffle partitions whatever SPARK_GRAFT_CPUS says, so
+    // plan-shape assertions see the same partitioning on every box
+    val s = GraftSession.local(4)
     // Codegen compile failures must FAIL tests, not silently fall back to
     // interpreted execution (that's how the ArrayDot/ArrayIntersect
     // redefinition bug hid in round 1). Set as runtime conf so it applies

@@ -9,12 +9,13 @@ import graft.store.MessageStore
 /** Change-tracking CDC (SURVEY.md §7.1 module cdc.sqlserver; ref
   * /root/reference/src/jdbc/melt/sql_server.clj).
   *
-  * The feed is abstracted behind [[ChangeFeed]]: production is SQL Server
-  * change tracking via JDBC (the CHANGETABLE query is a table-valued
-  * function, so it stays literal SQL pushed to the DB — pushdown by
-  * construction, SURVEY §4); tests use an in-memory feed. The version number
-  * is the stream's offset/watermark: capture → read → advance, idempotent
-  * upserts make overlap harmless (ref sql_server.clj:155-162).
+  * Changes arrive through one runner, the `graft-cdc` micro-batch stream,
+  * from a [[graft.cdc.stream.CdcFeedRegistry.VersionedFeed]]: production is
+  * SQL Server change tracking via JDBC ([[SqlServerFeed]]; the CHANGETABLE
+  * query is a table-valued function, so it stays literal SQL pushed to the
+  * DB — pushdown by construction, SURVEY §4); tests use an in-memory feed.
+  * The version number is the stream's offset: capture → read → advance,
+  * idempotent upserts make overlap harmless (ref sql_server.clj:155-162).
   */
 object ChangeTracking {
 
@@ -124,9 +125,10 @@ object ChangeTracking {
       nonKeyCols: Seq[String]): String =
     entityScanSql(schema, table, keys, nonKeyCols, "?", ordered = true)
 
-  /** Variant for `spark.read.jdbc(query=…)`: version inlined (the query
-    * option cannot bind parameters) and no ORDER BY (Spark subquery-wraps
-    * the pushdown; SQL Server rejects ORDER BY there). */
+  /** Variant for [[SqlServerFeed]]: version inlined (a Long, so no
+    * injection surface) and no ORDER BY, so the feed can append its
+    * `Where` range bound; within a batch the newest version per key wins
+    * by compaction ([[batchMessages]]), not by row order. */
   def changeEntitySqlAt(schema: String, table: String, keys: Seq[String],
       nonKeyCols: Seq[String], ver: Long): String =
     entityScanSql(schema, table, keys, nonKeyCols, ver.toString,
@@ -149,16 +151,12 @@ object ChangeTracking {
   def minValidVersionSql(schema: String, table: String): String =
     s"Select CHANGE_TRACKING_MIN_VALID_VERSION(Object_Id('${br(schema)}.${br(table)}'))"
 
-  /** The CDC source abstraction. `changesSince(ver)` returns the raw change
-    * frame: tracking columns + key columns + (nullable) entity columns. */
-  trait ChangeFeed {
-    def currentVersion(): Long
-    def minValidVersion(): Long
-    def changesSince(ver: Long): DataFrame
-  }
-
   /** Projection core: (topic, key, value, sys_change_version), no transform
-    * applied. Streaming-safe (no aggregation). */
+    * applied. Streaming-safe (no aggregation). O28 (ref
+    * sql_server.clj:111-124 relocate-tracking-fields + tombstone): tracking
+    * fields leave the value; operation "D" ⇒ value NULL (tombstone). Key =
+    * canonical JSON of the PK columns; value = canonical JSON of the
+    * non-tracking columns. */
   private def projectChanges(changes: DataFrame, source: SourceDef): DataFrame = {
     val df = Canonical.lowerCols(changes)
     val tracking = TrackingFields.toSet
@@ -175,79 +173,13 @@ object ChangeTracking {
       col("sys_change_version"))
   }
 
-  /** O28 — message projection of a change frame (ref sql_server.clj:111-124
-    * relocate-tracking-fields + tombstone): tracking fields leave the value;
-    * operation "D" ⇒ value NULL (tombstone). Key = canonical JSON of the PK
-    * columns; value = canonical JSON of the non-tracking columns. The user
-    * transform sees the documented (topic, key, value) message frame — same
-    * contract as the load/sync paths (model.scala). */
-  def changeMessages(changes: DataFrame, source: SourceDef): DataFrame = {
-    val base = projectChanges(changes, source)
-      .select(Msg.Topic, Msg.Key, Msg.Value)
-    source.transform.fold(base)(f => f(base))
-  }
-
-  /** Batch variant keeping only the NEWEST version per key: a sink append is
-    * unordered within a batch, so a row-level feed emitting several versions
-    * of one key would make downstream last-write-wins arbitrary. (Net change
-    * tracking already guarantees one row per key — then this is a no-op.)
-    * Not usable on streaming frames (aggregation); foreachBatch consumers of
-    * row-level feeds should apply the same compaction per batch. */
-  def changeMessagesCompacted(changes: DataFrame, source: SourceDef): DataFrame = {
-    val newest = projectChanges(changes, source)
-      .groupBy(Msg.Topic, Msg.Key)
-      .agg(max_by(col(Msg.Value), col("sys_change_version")).as(Msg.Value))
-    source.transform.fold(newest)(f => f(newest))
-  }
-
-  final case class SendResult(version: Long, sentCount: Long)
-
-  /** O29 — one CDC micro-batch: changes since `ver` → messages → sink; the
-    * new watermark = max(sys_change_version), computed on the RAW change
-    * frame (ref sql_server.clj:126-153 send-changes) so a user transform
-    * that drops rows or columns cannot lose the version cursor. */
-  def sendChanges(feed: ChangeFeed, source: SourceDef, store: MessageStore,
-      ver: Long): SendResult = {
-    val changes = feed.changesSince(ver).persist()
-    try {
-      val stats = Canonical.lowerCols(changes).agg(
-        max(col("sys_change_version")).as("v"),
-        count(lit(1)).as("n")).collect()(0)
-      if (stats.getLong(1) == 0L) SendResult(ver, 0)
-      else {
-        val sent = store.send(changeMessagesCompacted(changes, source)
-          .select(Msg.Topic, Msg.Key, Msg.Value))
-        SendResult(stats.getLong(0), sent)
-      }
-    } finally { changes.unpersist(); () }
-  }
-
-  /** O30 — bootstrap + CDC handoff (ref sql_server.clj:155-162): capture the
-    * version BEFORE the full sync so no change can fall in a gap; overlap is
-    * idempotent because sync sends upserts keyed by PK. */
-  def bootstrapThenChanges(feed: ChangeFeed, source: SourceDef,
-      store: MessageStore, fullSync: () => Long): SendResult = {
-    val ver = feed.currentVersion()
-    fullSync()
-    sendChanges(feed, source, store, ver)
-  }
-
-  /** Validity check before resuming from a stored version: if retention
-    * already discarded versions ≤ stored, a full re-sync is required (ref
-    * sql_server.clj:100-104; SURVEY §7.4 #5). */
-  def versionValid(feed: ChangeFeed, stored: Long): Boolean =
-    stored >= feed.minValidVersion()
-
-  /** Streaming CDC pipeline: the DSv2 source (`format("graft-cdc")`) piped
-    * through the message projection. Emits (topic, key, value,
-    * sys_change_version) — the version column is kept so sinks can order
-    * within a batch. The safe sink recipe compacts per key before the
-    * append (batch-internal append order is undefined; a row-level feed may
-    * emit several versions of one key per trigger):
+  /** The CDC stream: the DSv2 source (`format("graft-cdc")`, the one CDC
+    * runner) piped through the message projection. Emits (topic, key,
+    * value, sys_change_version) — the version column is kept so each
+    * micro-batch can be compacted before the send. The sink recipe:
     * {{{
     *   .writeStream.foreachBatch { (b, _) =>
-    *     store.send(b.groupBy("topic", "key")
-    *       .agg(max_by(col("value"), col("sys_change_version")).as("value")))
+    *     store.send(ChangeTracking.batchMessages(b, source))
     *   }
     * }}} */
   def changeStream(spark: org.apache.spark.sql.SparkSession, feedName: String,
@@ -259,20 +191,20 @@ object ChangeTracking {
         .load(),
       source)
 
-  /** Driver-side polling loop — the `foreachBatch`-style CDC runner
-    * (SURVEY §7.1 #7: polling loop first, DSv2 MicroBatchStream later). */
-  def poll(feed: ChangeFeed, source: SourceDef, store: MessageStore,
-      fromVer: Long, rounds: Int, delayMs: Long = 0): SendResult = {
-    var st = SendResult(fromVer, 0)
-    var total = 0L
-    var i = 0
-    while (i < rounds) {
-      if (i > 0 && delayMs > 0) Thread.sleep(delayMs)
-      val r = sendChanges(feed, source, store, st.version)
-      total += r.sentCount
-      st = SendResult(r.version, total)
-      i += 1
-    }
-    st
+  /** O29 — one [[changeStream]] micro-batch → the messages to send (ref
+    * sql_server.clj:126-153 send-changes). Keeps only the NEWEST version
+    * per key ([[MessageStore.compact]] with `sys_change_version` as the
+    * offset): a sink append is unordered within a batch, so a row-level
+    * feed emitting several versions of one key would make downstream
+    * last-write-wins arbitrary (net change tracking already yields one row
+    * per key — then this is a no-op). Then the user transform, which sees
+    * the documented (topic, key, value) message frame — same contract as
+    * the load/sync paths (model.scala). The stream's offset comes from the
+    * feed, so a transform that drops rows cannot lose the version cursor. */
+  def batchMessages(batch: DataFrame, source: SourceDef): DataFrame = {
+    val newest = MessageStore.compact(
+      batch.withColumnRenamed("sys_change_version", Msg.Offset))
+      .select(Msg.Topic, Msg.Key, Msg.Value)
+    source.transform.fold(newest)(f => f(newest))
   }
 }

@@ -1,58 +1,50 @@
 package graft.cdc
 
-import java.sql.DriverManager
 import java.util.Properties
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.StructType
 import graft.SourceDef
-import graft.cdc.ChangeTracking.ChangeFeed
 
-/** Production SQL Server change feed (ref
-  * /root/reference/src/jdbc/melt/sql_server.clj:63-109): version scalars run
-  * on a driver-side JDBC connection; the change scan runs through
-  * `spark.read.jdbc` with the CHANGETABLE entity query pushed down whole —
-  * the table-valued function, PK left-outer join, and ORDER BY all execute
-  * inside SQL Server (pushdown by construction, SURVEY §4).
+/** Production SQL Server change feed for the `graft-cdc` stream (ref melt
+  * sql_server.clj:63-109). Every call runs over its own JDBC connection;
+  * the CHANGETABLE entity query runs whole inside SQL Server — the
+  * table-valued function, the PK left-outer join and the version range
+  * bound (pushdown by construction, SURVEY §4).
   *
-  * NOT exercised by the offline test environment (no SQL Server) — the CDC
-  * logic it feeds is covered via in-memory feeds (CdcSpec/CdcStreamSpec);
-  * this class is the thin binding layer.
-  */
-final class SqlServerFeed(spark: SparkSession, url: String, props: Properties,
-    source: SourceDef, nonKeyCols: Seq[String]) extends ChangeFeed {
+  *  - `schema`: the entity query's columns, from a `Where 1 = 0` probe;
+  *  - `rows(from, to)`: changes with version in `(from, to]`;
+  *  - `minValidVersion()`: CHANGE_TRACKING_MIN_VALID_VERSION, which the
+  *    stream checks before every batch (retention may have cleaned up the
+  *    history a stored offset points into).
+  *
+  * Register it locally (`CdcFeedRegistry.register`); on a cluster wrap it
+  * in a `FeedProvider`. NOT exercised by the offline test environment (no
+  * SQL Server) beyond its SQL strings — the CDC logic it feeds is covered
+  * via in-memory and Derby feeds; this class is the thin binding layer. */
+final class SqlServerFeed(url: String, props: Properties, source: SourceDef,
+    nonKeyCols: Seq[String]) extends stream.CdcFeedRegistry.VersionedFeed {
 
-  private def scalarLong(sql: String): Long = {
-    val conn = DriverManager.getConnection(url, props)
-    try {
-      val rs = conn.createStatement().executeQuery(sql)
-      if (!rs.next()) throw new IllegalStateException(s"no row from: $sql")
-      val v = rs.getLong(1)
-      // CHANGE_TRACKING_* return NULL when tracking is not enabled — 0 here
-      // would look like a valid watermark and silently deliver no changes
-      if (rs.wasNull()) throw new IllegalStateException(
-        s"change tracking not enabled (NULL from: $sql)")
-      v
-    } finally conn.close()
-  }
+  private val jdbc = new JdbcRows(url, props)
+
+  /** Changes in `(fromExclusive, toInclusive]`. The versions are Longs
+    * inlined into the SQL, so no injection surface exists. */
+  private[graft] def rowsSql(fromExclusive: Long, toInclusive: Long): String =
+    ChangeTracking.changeEntitySqlAt(source.schemaName, source.name,
+      source.keys, nonKeyCols, fromExclusive) +
+      s" Where ct.sys_change_version <= $toInclusive"
+
+  private[graft] def schemaProbeSql: String =
+    ChangeTracking.changeEntitySqlAt(source.schemaName, source.name,
+      source.keys, nonKeyCols, 0L) + " Where 1 = 0"
+
+  override lazy val schema: StructType = jdbc.schema(schemaProbeSql)
 
   override def currentVersion(): Long =
-    scalarLong(ChangeTracking.CurrentVersionSql)
+    jdbc.scalarLong(ChangeTracking.CurrentVersionSql)
 
-  override def minValidVersion(): Long =
-    scalarLong(ChangeTracking.minValidVersionSql(source.schemaName, source.name))
+  override def minValidVersion(): Long = jdbc.scalarLong(
+    ChangeTracking.minValidVersionSql(source.schemaName, source.name))
 
-  /** Changes strictly after `ver`. The version literal is inlined by the
-    * builder (Spark's JDBC `query` option cannot bind parameters); it is a
-    * Long, so no injection surface exists. No ORDER BY: Spark wraps the
-    * query as a subquery (SQL Server rejects ORDER BY there), and this
-    * engine's watermark is agg(max), not last-row order
-    * (ChangeTracking.sendChanges). */
-  override def changesSince(ver: Long): DataFrame = {
-    val sql = ChangeTracking.changeEntitySqlAt(
-      source.schemaName, source.name, source.keys, nonKeyCols, ver)
-    val reader = spark.read.format("jdbc")
-      .option("url", url)
-      .option("query", sql)
-    props.stringPropertyNames.forEach(k => reader.option(k, props.getProperty(k)))
-    reader.load()
-  }
+  override def rows(fromExclusive: Long, toInclusive: Long): Iterator[Row] =
+    jdbc.rows(rowsSql(fromExclusive, toInclusive), schema)
 }

@@ -20,19 +20,21 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * /root/reference/src/jdbc/melt/sql_server.clj:126-162 where the version is
   * chained between send-changes calls by hand).
   *
-  * Versus the polling loop in [[graft.cdc.ChangeTracking]]: checkpointing,
-  * restart recovery, exactly-once batch planning, and trigger scheduling all
-  * come from the Structured Streaming engine; each micro-batch reads
-  * `(startVersion, endVersion]`.
+  * This is the one CDC runner: checkpointing, restart recovery,
+  * exactly-once batch planning, and trigger scheduling all come from the
+  * Structured Streaming engine; each micro-batch reads
+  * `(startVersion, endVersion]`. A batch whose start version is below the
+  * feed's `minValidVersion()` fails the query: retention has cleaned up
+  * part of the history it would read, and only a re-bootstrap recovers
+  * (ref sql_server.clj:100-104).
   *
   * Feeds resolve in two ways:
   *  - `option("feedClass", fqcn)`: the class (a [[CdcFeedRegistry.FeedProvider]]
   *    with a no-arg constructor) is instantiated FROM THE OPTIONS on
   *    whichever JVM needs it — driver for offsets, executors for reads.
-  *    This is the cluster path: a SQL Server provider builds its JDBC
-  *    connection per executor and runs the
-  *    [[graft.cdc.ChangeTracking.changeEntitySql]] query with the version
-  *    range bound, exactly like Spark's own JDBC source.
+  *    This is the cluster path; no provider ships with the library (the
+  *    feeds, [[graft.cdc.SqlServerFeed]] included, register locally), so a
+  *    cluster deployment wraps its feed in one.
   *  - `option("feed", name)` alone: look up [[CdcFeedRegistry]] — a JVM-local
   *    registry, valid only where driver and executors share the JVM
   *    (local mode; tests register in-memory feeds here).
@@ -48,6 +50,9 @@ object CdcFeedRegistry {
     def currentVersion(): Long
     /** Rows with `sys_change_version` in `(fromExclusive, toInclusive]`. */
     def rows(fromExclusive: Long, toInclusive: Long): Iterator[Row]
+    /** Oldest version a reader may resume from; history before it has been
+      * cleaned up. Feeds without a retention window keep the default. */
+    def minValidVersion(): Long = Long.MinValue
   }
 
   /** Executor-constructible feed factory (cluster path): implementations
@@ -138,9 +143,15 @@ final class CdcMicroBatchStream(opts: Map[String, String], schema: StructType,
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    Array(CdcInputPartition(opts,
-      start.asInstanceOf[CdcOffset].version, end.asInstanceOf[CdcOffset].version))
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+    val from = start.asInstanceOf[CdcOffset].version
+    val minValid = feed.minValidVersion()
+    if (from < minValid) throw new IllegalStateException(
+      s"graft-cdc: start version $from is below the feed's minimum valid " +
+        s"version $minValid — retention discarded changes after $from; " +
+        "a re-bootstrap (full sync, then stream from the new version) is needed")
+    Array(CdcInputPartition(opts, from, end.asInstanceOf[CdcOffset].version))
+  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new CdcReaderFactory(schema)

@@ -2,10 +2,9 @@ package graft.examples
 
 import java.util.Properties
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, max_by}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.{Msg, SourceDef}
+import graft.SourceDef
 import graft.cdc.ChangeTracking
 import graft.ops.Mirror
 import graft.sources.Jdbc
@@ -28,10 +27,10 @@ import graft.store.MessageStore
   *     recovery, trigger scheduling, and exactly-once batch planning ride
   *     the Structured Streaming engine and its checkpoint — the hand-rolled
   *     version-chaining loop of the reference disappears.
-  *  3. Per micro-batch: canonical messages, compacted to the NEWEST version
-  *     per key (batch-internal sink append order is undefined — the
-  *     documented safe recipe from [[ChangeTracking.changeStream]]), then
-  *     one [[MessageStore.send]] — with a [[graft.store.KafkaStore]] this
+  *  3. Per micro-batch: [[ChangeTracking.batchMessages]] — canonical
+  *     messages compacted to the NEWEST version per key (batch-internal
+  *     sink append order is undefined), then the source's transform — and
+  *     one [[MessageStore.send]]; with a [[graft.store.KafkaStore]] this
   *     is the `.format("kafka")` producer write, acks=all.
   *
   * Restart contract: stop the query; call [[start]] again with the same
@@ -50,19 +49,19 @@ object CdcToKafkaExample {
     * to [[start]] as `fromVersion`. */
   final case class Bootstrap(fromVersion: Long, snapshotCount: Long)
 
-  /** No-gap bootstrap: version first, then the full snapshot sync through
-    * the store (diff-driven — on an empty topic it sends everything). */
+  /** No-gap bootstrap ([[Mirror.bootstrapCdc]]): version first, then the
+    * full snapshot sync through the store (diff-driven — on an empty topic
+    * it sends everything). */
   def bootstrap(spark: SparkSession, url: String, props: Properties,
       source: SourceDef, feed: graft.cdc.stream.CdcFeedRegistry.VersionedFeed,
       store: MessageStore): Bootstrap = {
-    val ver = feed.currentVersion()
-    val sent = Mirror.sync(Jdbc.readSource(spark, url, props, source),
-      source, store)
+    val (ver, sent) = Mirror.bootstrapCdc(feed, source, store,
+      Jdbc.readSource(spark, url, props, source))
     Bootstrap(ver, sent)
   }
 
-  /** The continuous half: version-offset micro-batches → canonical
-    * messages → newest-per-key compaction → one store send per batch. */
+  /** The continuous half: version-offset micro-batches → one store send of
+    * each batch's [[ChangeTracking.batchMessages]]. */
   def start(spark: SparkSession, feedName: String, source: SourceDef,
       store: MessageStore, checkpointDir: String,
       fromVersion: Long): StreamingQuery =
@@ -71,8 +70,7 @@ object CdcToKafkaExample {
       .option("checkpointLocation", checkpointDir)
       .queryName(s"graft-cdc-mirror-${source.topic}")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        store.send(batch.groupBy(Msg.Topic, Msg.Key)
-          .agg(max_by(col(Msg.Value), col("sys_change_version")).as(Msg.Value)))
+        store.send(ChangeTracking.batchMessages(batch, source))
         ()
       }
       .start()

@@ -22,7 +22,7 @@ final case class SourceDef(
     topicOverride: Option[String] = None,
     /** The xform hook (ref melt.clj:30-31): an arbitrary DataFrame→DataFrame
       * rewrite of the *message frame* (columns topic/key/value), applied in
-      * the load and diff paths alike. The reference's whole UDF surface. */
+      * the load, diff and CDC paths alike. The reference's whole UDF surface. */
     transform: Option[DataFrame => DataFrame] = None) {
   def topic: String = topicOverride.getOrElse(s"melt.$schemaName.$name")
 }

@@ -6,14 +6,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.SourceDef
 import graft.sources.Jdbc
 import graft.store.MessageStore
-import graft.cdc.ChangeTracking
-import graft.cdc.ChangeTracking.ChangeFeed
+import graft.cdc.stream.CdcFeedRegistry.VersionedFeed
 
 /** Top-level orchestration — the reference's full workflow as one API
   * (DESIGN.md:6-35: plan → initial load → re-sync → verify/monitor → CDC).
   * A user of the reference drives melt with five entry points; these are
   * their Spark-native equivalents, composing the module layer (Jdbc, Load,
-  * Diff, Sync, VerifyOps, ChangeTracking) over any MessageStore.
+  * Diff, Sync, VerifyOps, the CDC feeds) over any MessageStore.
   */
 object Mirror {
 
@@ -50,11 +49,16 @@ object Mirror {
       retries: Int = 0, delayMs: Long = 1000): VerifyOps.Result =
     VerifyOps.verifySync(rows, source, store, retries, delayMs)
 
-  /** Bootstrap + CDC handoff (ref sql_server.clj:155-162): capture the
-    * change version, full-sync, then stream changes from the captured
-    * version — overlap is idempotent, no gap. */
-  def bootstrapCdc(feed: ChangeFeed, source: SourceDef, store: MessageStore,
-      rows: => DataFrame): ChangeTracking.SendResult =
-    ChangeTracking.bootstrapThenChanges(feed, source, store,
-      () => sync(rows, source, store))
+  /** O30 — bootstrap for the CDC stream (ref sql_server.clj:155-162):
+    * capture the feed's version BEFORE the full sync, then sync. Returns
+    * `(fromVersion, snapshotCount)`; stream from `fromVersion`
+    * ([[graft.cdc.ChangeTracking.changeStream]]). A change committed while
+    * the snapshot runs is above the captured version, so the stream
+    * re-delivers it — nothing falls in a gap, and the overlap is harmless
+    * because messages are keyed upserts. */
+  def bootstrapCdc(feed: VersionedFeed, source: SourceDef, store: MessageStore,
+      rows: => DataFrame): (Long, Long) = {
+    val fromVersion = feed.currentVersion()
+    (fromVersion, sync(rows, source, store))
+  }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.Msg
+import graft.store.MessageStore
 
 /** Structured Streaming surface (SURVEY.md §7.1 module stream).
   *
@@ -24,42 +25,12 @@ import graft.Msg
 object Streaming {
 
   /** Compacted topic state as a continuously-maintained streaming
-    * aggregation: last-write-wins per (topic, key) ordered by (partition,
-    * offset) — identical semantics to MessageStore.topicState, but
+    * aggregation: last-write-wins per (topic, key) ordered by offset — the
+    * same [[MessageStore.compact]] rule behind MessageStore.topicState, but
     * incremental. Emit in Update mode; tombstoned keys surface with a null
     * value so a downstream sink can delete them. */
   def compactedState(log: DataFrame): DataFrame =
-    log.groupBy(Msg.Topic, Msg.Key)
-      .agg(max_by(col(Msg.Value), col(Msg.Offset)).as(Msg.Value))
-
-  /** Typed last-write-wins via mapGroupsWithState — the explicit-state
-    * variant (ref melt.clj:307-323 merge-seq-entry fold, incl. tombstone
-    * removal). Used where per-key custom logic (TTL, counters, conflation)
-    * outgrows a declarative aggregate. */
-  final case class KeyedRecord(topic: String, key: String,
-      value: Option[String], offset: Long)
-  final case class KeyState(value: Option[String], offset: Long)
-
-  def compactedStateTyped(spark: SparkSession, log: DataFrame): DataFrame = {
-    import spark.implicits._
-    log.select(col(Msg.Topic), col(Msg.Key), col(Msg.Value), col(Msg.Offset))
-      .as[(String, String, Option[String], Long)]
-      .map(r => KeyedRecord(r._1, r._2, r._3, r._4))
-      .groupByKey(r => (r.topic, r.key))
-      .mapGroupsWithState[KeyState, (String, String, Option[String])](
-        GroupStateTimeout.NoTimeout) {
-        case ((topic, key), records, state: GroupState[KeyState]) =>
-          val prev = state.getOption.getOrElse(KeyState(None, Long.MinValue))
-          // newest offset wins; a null value is a tombstone but must still
-          // advance the offset (ref melt.clj:316-321)
-          val newest = records.foldLeft(prev) { (acc, r) =>
-            if (r.offset > acc.offset) KeyState(r.value, r.offset) else acc
-          }
-          state.update(newest)
-          (topic, key, newest.value)
-      }
-      .toDF(Msg.Topic, Msg.Key, Msg.Value)
-  }
+    MessageStore.compact(log).select(Msg.Topic, Msg.Key, Msg.Value)
 
   /** Streaming exact dedup — dd01's fingerprint filter as a continuous
     * operator over a document stream: normalize → fingerprint → keep the
@@ -363,7 +334,7 @@ object Streaming {
     * whole compacted state in the driver — the faithful analogue of the
     * reference's atom-held map (melt.clj:325-340) including its capacity
     * cap. At scale, consume the Update-mode stream instead:
-    * `compactedState(log)` (or `compactedStateTyped`) with `foreachBatch`
+    * `compactedState(log)` with `foreachBatch`
     * upserting into a keyed sink — state then lives in the distributed
     * state store, sized by key cardinality per executor. */
   def backgroundConsume(spark: SparkSession, log: DataFrame,

@@ -1,13 +1,16 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import graft.cdc.ChangeTracking
-import graft.cdc.ChangeTracking.{ChangeFeed, SendResult}
-import graft.store.LocalStore
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
+import graft.cdc.{ChangeTracking, SqlServerFeed}
+import graft.cdc.stream.CdcFeedRegistry
+import graft.ops.Mirror
+import graft.store.{LocalStore, MessageStore}
 
-/** O25–O30 change-tracking CDC with an in-memory feed, replaying the
-  * reference's three-round UPDATE/INSERT/DELETE arc
+/** O25–O30 change-tracking CDC with an in-memory feed through the one CDC
+  * runner (`graft-cdc` stream → [[ChangeTracking.batchMessages]] → store),
+  * replaying the reference's three-round UPDATE/INSERT/DELETE arc
   * (ref integration/jdbc/melt/integration_test.clj:197-230). */
 class CdcSpec extends SparkSpec {
 
@@ -15,17 +18,20 @@ class CdcSpec extends SparkSpec {
 
   val source = SourceDef("graft", "dbo", "orders", Seq("o_orderkey"))
 
-  final class FakeFeed(all: DataFrame, current: Long, minValid: Long = 0)
-      extends ChangeFeed {
-    override def currentVersion(): Long = current
-    override def minValidVersion(): Long = minValid
-    override def changesSince(ver: Long): DataFrame =
-      all.where(col("sys_change_version") > ver)
+  /** Stream `feed` from `from` into `store`, one send per micro-batch. */
+  private def mirror(name: String, feed: MemFeed, store: MessageStore,
+      from: Long): StreamingQuery = {
+    CdcFeedRegistry.register(name, feed)
+    ChangeTracking.changeStream(spark, name, source, from).writeStream
+      .option("checkpointLocation", tmpDir(s"${name}_ckpt"))
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        store.send(ChangeTracking.batchMessages(b, source)); ()
+      }.start()
   }
 
-  private def changesDf(rows: Seq[(Long, String, Long, java.lang.Double)]): DataFrame =
-    rows.toDF("sys_change_version", "sys_change_operation", "o_orderkey",
-      "o_totalprice")
+  private def state(store: MessageStore): Map[String, String] =
+    store.topicState(Seq(source.topic)).collect()
+      .map(r => r.getAs[String]("key") -> r.getAs[String]("value")).toMap
 
   test("O26 SQL builders match the reference's CHANGETABLE shape") {
     val sql = ChangeTracking.changeEntitySql("SalesLT", "Address",
@@ -39,11 +45,37 @@ class CdcSpec extends SparkSpec {
       == "Select ct.* From CHANGETABLE(CHANGES [s].[t], ?) As ct Order By ct.sys_change_version")
   }
 
+  test("O26 SqlServerFeed bounds the entity query by version and probes its schema") {
+    // constructing the feed opens no connection: the schema is lazy
+    val feed = new SqlServerFeed("jdbc:sqlserver://unused", new java.util.Properties,
+      SourceDef("c", "SalesLT", "Address", Seq("AddressID")), Seq("City"))
+    val entity = "Select ct.[sys_change_version], ct.[sys_change_creation_version], " +
+      "ct.[sys_change_operation], ct.[sys_change_columns], ct.[sys_change_context], " +
+      "ct.[AddressID], t.[City] From CHANGETABLE(CHANGES [SalesLT].[Address], %d) As ct " +
+      "Left Outer Join [SalesLT].[Address] As t On ct.[AddressID] = t.[AddressID]"
+    // (from, to]: the lower bound is CHANGETABLE's, the upper one a Where
+    assert(feed.rowsSql(7, 12) ==
+      entity.format(7) + " Where ct.sys_change_version <= 12")
+    assert(feed.schemaProbeSql == entity.format(0) + " Where 1 = 0")
+    assert(!feed.rowsSql(7, 12).contains("Order By"))
+  }
+
   test("O28 change projection: tracking fields relocated, D ⇒ tombstone") {
-    val ch = changesDf(Seq((5L, "U", 1L, 10.5), (6L, "D", 2L, null)))
-    val msgs = ChangeTracking.changeMessages(ch, source)
-    assert(msgs.columns.toSeq == Seq("topic", "key", "value")) // xform contract
-    val rows = msgs.orderBy("key").collect()
+    val feed = new MemFeed
+    feed.add("U", 1L, 10.5)
+    feed.add("D", 2L, null)
+    CdcFeedRegistry.register("o28", feed)
+    val got = mutable.ArrayBuffer.empty[Row]
+    var cols = Seq.empty[String]
+    val q = ChangeTracking.changeStream(spark, "o28", source).writeStream
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        val msgs = ChangeTracking.batchMessages(b, source)
+        cols = msgs.columns.toSeq
+        got ++= msgs.collect(); ()
+      }.start()
+    try q.processAllAvailable() finally q.stop()
+    assert(cols == Seq("topic", "key", "value")) // xform contract
+    val rows = got.sortBy(_.getAs[String]("key"))
     assert(rows(0).getAs[String]("key") == """{"o_orderkey":1}""")
     val v = rows(0).getAs[String]("value")
     // value carries entity columns only — no sys_change_* inside
@@ -53,57 +85,74 @@ class CdcSpec extends SparkSpec {
     assert(rows(1).isNullAt(rows(1).fieldIndex("value")))
   }
 
-  test("O29 sendChanges advances the version watermark; empty batch is a no-op") {
+  test("O29 stream advances the version watermark; empty batch is a no-op") {
     val store = new LocalStore(spark, tmpDir("cdc"))
-    val feed = new FakeFeed(
-      changesDf(Seq((5L, "I", 1L, 1.0), (6L, "U", 1L, 2.0), (7L, "I", 2L, 3.0))),
-      current = 7)
-    val r1 = ChangeTracking.sendChanges(feed, source, store, ver = 5)
-    assert(r1 == SendResult(version = 7, sentCount = 2))
-    // compacted state reflects the upserts
-    val st = store.topicState(Seq(source.topic))
-    assert(st.count() == 2)
-    // nothing newer → version unchanged, nothing sent (ref sql_server.clj:137-144)
-    val r2 = ChangeTracking.sendChanges(feed, source, store, ver = r1.version)
-    assert(r2 == SendResult(version = 7, sentCount = 0))
+    val feed = new MemFeed
+    (1 to 4).foreach(_ => feed.bump())
+    feed.add("I", 1L, 1.0) // v5: already synced
+    feed.add("U", 1L, 2.0) // v6
+    feed.add("I", 2L, 3.0) // v7
+    val q = mirror("o29", feed, store, from = 5)
+    try {
+      q.processAllAvailable()
+      assert(store.read(Seq(source.topic)).count() == 2)
+      assert(state(store).keySet == Set(1, 2).map(k => s"""{"o_orderkey":$k}"""))
+      // a version with no change row: the batch runs empty and sends
+      // nothing (ref sql_server.clj:137-144)
+      feed.bump()
+      q.processAllAvailable()
+      assert(store.read(Seq(source.topic)).count() == 2)
+      // the offset advanced past 7 and 8: only the new change is sent
+      feed.add("I", 3L, 4.0)
+      q.processAllAvailable()
+      assert(store.read(Seq(source.topic)).count() == 3)
+    } finally q.stop()
   }
 
   test("O29/O11 delete round-trip: tombstone removes the key from state") {
     val store = new LocalStore(spark, tmpDir("cdc2"))
-    val feed = new FakeFeed(
-      changesDf(Seq((1L, "I", 1L, 1.0), (2L, "D", 1L, null))), current = 2)
-    ChangeTracking.sendChanges(feed, source, store, ver = 0)
+    val feed = new MemFeed
+    feed.add("I", 1L, 1.0)
+    feed.add("D", 1L, null)
+    val q = mirror("o29del", feed, store, from = 0)
+    try q.processAllAvailable() finally q.stop()
     assert(store.topicState(Seq(source.topic)).isEmpty)
   }
 
   test("O30 bootstrap captures version BEFORE full sync (no gap)") {
     val store = new LocalStore(spark, tmpDir("cdc3"))
-    var capturedBeforeSync = -1L
-    val feed = new FakeFeed(changesDf(Seq((11L, "I", 9L, 9.0))), current = 10)
-    val r = ChangeTracking.bootstrapThenChanges(feed, source, store, () => {
-      capturedBeforeSync = feed.currentVersion(); 0L
+    val feed = new MemFeed
+    (1 to 10).foreach(_ => feed.bump())
+    val (from, snapshot) = Mirror.bootstrapCdc(feed, source, store, {
+      feed.add("I", 9L, 9.0) // v11 commits while the snapshot is read
+      Seq((8L, 8.0)).toDF("o_orderkey", "o_totalprice")
     })
+    assert(from == 10 && snapshot == 1)
     // change version 11 landed "during" the sync → still picked up
-    assert(capturedBeforeSync == 10 && r.sentCount == 1 && r.version == 11)
+    val q = mirror("o30", feed, store, from)
+    try q.processAllAvailable() finally q.stop()
+    assert(state(store).keySet == Set(8, 9).map(k => s"""{"o_orderkey":$k}"""))
   }
 
   test("O27 stored version validity vs retention (ref sql_server.clj:100-104)") {
-    val feed = new FakeFeed(changesDf(Seq.empty), current = 100, minValid = 50)
-    assert(ChangeTracking.versionValid(feed, 50))
-    assert(!ChangeTracking.versionValid(feed, 49))
-  }
-
-  test("O29 poll loop chains versions across rounds (ref integration_test.clj:203-226)") {
-    val store = new LocalStore(spark, tmpDir("cdc4"))
-    val feed = new FakeFeed(
-      changesDf(Seq((1L, "I", 1L, 1.0), (2L, "U", 1L, 2.0), (3L, "D", 1L, null))),
-      current = 3)
-    val r = ChangeTracking.poll(feed, source, store, fromVer = 0, rounds = 2)
-    // round 1 compacts the 3 versions of key 1 to its newest (the v3
-    // tombstone) — batch-internal sink order is undefined, so only the
-    // newest version per key is sent; round 2 finds nothing newer
-    assert(r.version == 3 && r.sentCount == 1)
-    assert(store.topicState(Seq(source.topic)).isEmpty) // final state: deleted
+    val feed = new MemFeed(minValid = 5)
+    (1 to 6).foreach(i => feed.add("I", i.toLong, i.toDouble))
+    CdcFeedRegistry.register("o27", feed)
+    def run(from: Long) = spark.readStream.format("graft-cdc")
+      .option("feed", "o27").option("fromVersion", from.toString).load()
+      .writeStream.format("memory").queryName(s"o27_from$from").start()
+    // retention discarded history after version 2: the batch must fail
+    val stale = run(2)
+    val e = try intercept[StreamingQueryException](stale.processAllAvailable())
+      finally stale.stop()
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    assert(msgs.contains("start version 2") &&
+      msgs.contains("minimum valid version 5") && msgs.contains("re-bootstrap"))
+    // resuming exactly at the minimum valid version is fine
+    val ok = run(5)
+    try ok.processAllAvailable() finally ok.stop()
+    assert(spark.table("o27_from5").collect().map(_.getLong(0)).toSeq == Seq(6L))
   }
 
   test("O25 trackable-untracked set difference (ref sql_server.clj:48-51)") {

@@ -1,8 +1,6 @@
 package graft
 
-import scala.collection.mutable
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.types._
+import graft.cdc.ChangeTracking
 import graft.cdc.stream.CdcFeedRegistry
 
 object CdcStreamSpec {
@@ -16,29 +14,6 @@ object CdcStreamSpec {
   * trigger, each change is delivered exactly once, restarts resume from the
   * checkpointed version. */
 class CdcStreamSpec extends SparkSpec {
-
-  private val schema = StructType(Seq(
-    StructField("sys_change_version", LongType),
-    StructField("sys_change_operation", StringType),
-    StructField("o_orderkey", LongType),
-    StructField("o_totalprice", DoubleType)))
-
-  /** Mutable in-memory feed standing in for CHANGETABLE. */
-  final class MemFeed extends CdcFeedRegistry.VersionedFeed {
-    val log = mutable.ArrayBuffer.empty[Row]
-    @volatile var version = 0L
-    def add(op: String, key: Long, price: java.lang.Double): Unit =
-      synchronized {
-        version += 1
-        log += Row(version, op, key, price)
-      }
-    override def schema: StructType = CdcStreamSpec.this.schema
-    override def currentVersion(): Long = version
-    override def rows(from: Long, to: Long): Iterator[Row] =
-      log.iterator.filter { r =>
-        val v = r.getLong(0); v > from && v <= to
-      }
-  }
 
   test("graft-cdc stream delivers each change exactly once, in version order") {
     val feed = new MemFeed
@@ -99,13 +74,10 @@ class CdcStreamSpec extends SparkSpec {
     CdcFeedRegistry.register("t4", feed)
     val source = SourceDef("graft", "dbo", "orders", Seq("o_orderkey"))
     val store = new graft.store.LocalStore(spark, tmpDir("cdcmsg"))
-    val q = graft.cdc.ChangeTracking.changeStream(spark, "t4", source)
+    val q = ChangeTracking.changeStream(spark, "t4", source)
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        // the documented safe recipe: newest version per key, then append
-        import org.apache.spark.sql.functions.{col, max_by}
-        store.send(batch.groupBy("topic", "key")
-          .agg(max_by(col("value"), col("sys_change_version")).as("value")))
+        store.send(ChangeTracking.batchMessages(batch, source))
         ()
       }
       .start()

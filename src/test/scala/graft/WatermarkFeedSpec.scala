@@ -1,16 +1,21 @@
 package graft
 
 import java.util.Properties
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.cdc.{ChangeTracking, WatermarkFeed}
-import graft.cdc.ChangeTracking.SendResult
+import graft.cdc.{ChangeTracking, WatermarkVersionedFeed}
+import graft.cdc.stream.CdcFeedRegistry
+import graft.ops.Mirror
 import graft.store.LocalStore
 
 /** Generic watermark CDC (VERDICT r5 §next-round #6) against LIVE embedded
   * Derby: a table with a monotone sequence column drives the same
-  * bootstrap-then-changes / send-changes machinery as CHANGETABLE — no-gap
-  * capture-before-snapshot, watermark advance, empty-batch no-op, pushdown. */
+  * bootstrap and `graft-cdc` stream as CHANGETABLE — no-gap
+  * capture-before-snapshot, watermark advance, empty-trigger no-op,
+  * pushdown range reads. */
 class WatermarkFeedSpec extends SparkSpec {
+
+  import spark.implicits._
 
   private val url = "jdbc:derby:memory:wmdb;create=true"
   private val props = {
@@ -22,8 +27,8 @@ class WatermarkFeedSpec extends SparkSpec {
 
   private val source = SourceDef("graft", "APP", "WMORDERS", Seq("ok"))
 
-  private def feed = new WatermarkFeed(spark, url, props, source,
-    watermarkCol = "SEQ", entityCols = Seq("OK", "TOTAL", "SEQ"))
+  private lazy val feed = new WatermarkVersionedFeed(url, props, "APP",
+    "WMORDERS", watermarkCol = "SEQ", entityCols = Seq("OK", "TOTAL", "SEQ"))
 
   private def exec(sqls: String*): Unit = {
     val c = conn()
@@ -36,46 +41,51 @@ class WatermarkFeedSpec extends SparkSpec {
     exec("CREATE TABLE WMORDERS (OK BIGINT PRIMARY KEY, TOTAL DOUBLE, SEQ BIGINT)",
       "INSERT INTO WMORDERS VALUES (1, 1.0, 1), (2, 2.0, 2)")
     val store = new LocalStore(spark, tmpDir("wmcdc"))
+    CdcFeedRegistry.register("wmorders", feed)
+    def sent() = store.read(Seq(source.topic)).count()
 
     // O30 no-gap contract: the version is captured BEFORE the snapshot, so
     // a row committed DURING the full sync (ok=3, seq=3) cannot fall in a
-    // gap — the post-sync change read picks it up
-    var capturedAt = -1L
-    val r0 = ChangeTracking.bootstrapThenChanges(feed, source, store, () => {
-      capturedAt = feed.currentVersion()
+    // gap — the stream from the captured version picks it up
+    val (from, snapshot) = Mirror.bootstrapCdc(feed, source, store, {
       exec("INSERT INTO WMORDERS VALUES (3, 3.0, 3)") // racing writer
-      0L
+      // the snapshot read before the racer committed
+      Seq((1L, 1.0, 1L), (2L, 2.0, 2L)).toDF("ok", "total", "seq")
     })
-    assert(capturedAt == 2, "watermark must be captured before the sync ran")
-    assert(r0 == SendResult(version = 3, sentCount = 1))
-    val st0 = store.topicState(Seq(source.topic))
-    assert(st0.where(col("key") === """{"ok":3}""").count() == 1)
+    assert(from == 2, "watermark must be captured before the sync ran")
+    assert(snapshot == 2)
+    val q = ChangeTracking.changeStream(spark, "wmorders", source, from)
+      .writeStream.option("checkpointLocation", tmpDir("wmorders_ckpt"))
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        store.send(ChangeTracking.batchMessages(b, source)); ()
+      }.start()
+    try {
+      q.processAllAvailable()
+      assert(sent() == 3)
+      val st0 = store.topicState(Seq(source.topic))
+      assert(st0.where(col("key") === """{"ok":3}""").count() == 1)
 
-    // watermark advance: two new rows and an UPDATE re-versioning row 1 —
-    // delivered as keyed upserts, cursor lands on max(seq)
-    exec("INSERT INTO WMORDERS VALUES (4, 4.0, 4)",
-      "UPDATE WMORDERS SET TOTAL = 9.9, SEQ = 5 WHERE OK = 1")
-    val r1 = ChangeTracking.sendChanges(feed, source, store, ver = r0.version)
-    assert(r1 == SendResult(version = 5, sentCount = 2))
-    // keys 1/3/4 arrived through the change path (the stubbed fullSync
-    // deliberately sends nothing, so pre-capture key 2 is absent — the
-    // no-gap property under test concerns the CHANGES side only)
-    val st1 = store.topicState(Seq(source.topic)).collect()
-      .map(r => r.getAs[String]("key") -> r.getAs[String]("value")).toMap
-    assert(st1.keySet == Set(1, 3, 4).map(k => s"""{"ok":$k}"""))
-    assert(st1("""{"ok":1}""").contains(""""total":9.9"""))
+      // watermark advance: a new row and an UPDATE re-versioning row 1 —
+      // delivered as keyed upserts, the offset lands on max(seq)
+      exec("INSERT INTO WMORDERS VALUES (4, 4.0, 4)",
+        "UPDATE WMORDERS SET TOTAL = 9.9, SEQ = 5 WHERE OK = 1")
+      q.processAllAvailable()
+      assert(sent() == 5)
+      val st1 = store.topicState(Seq(source.topic)).collect()
+        .map(r => r.getAs[String]("key") -> r.getAs[String]("value")).toMap
+      assert(st1.keySet == Set(1, 2, 3, 4).map(k => s"""{"ok":$k}"""))
+      assert(st1("""{"ok":1}""").contains(""""total":9.9"""))
 
-    // nothing newer → version unchanged, nothing sent
-    assert(ChangeTracking.sendChanges(feed, source, store, ver = r1.version)
-      == SendResult(version = 5, sentCount = 0))
+      // nothing newer → nothing sent
+      q.processAllAvailable()
+      assert(sent() == 5)
+    } finally q.stop()
 
-    // any stored cursor stays valid: there is no retention window
-    assert(ChangeTracking.versionValid(feed, stored = 0))
+    // any stored offset stays valid: there is no retention window
+    assert(feed.minValidVersion() == Long.MinValue)
   }
 
   test("watermark table drives the DSv2 graft-cdc stream: offsets are watermarks") {
-    import graft.cdc.WatermarkVersionedFeed
-    import graft.cdc.stream.CdcFeedRegistry
     exec("CREATE TABLE WMSTREAM (OK BIGINT PRIMARY KEY, TOTAL DOUBLE, SEQ BIGINT)",
       "INSERT INTO WMSTREAM VALUES (1, 1.0, 1)")
     CdcFeedRegistry.register("wmstream", new WatermarkVersionedFeed(
@@ -105,19 +115,17 @@ class WatermarkFeedSpec extends SparkSpec {
   test("safetyLag holds back the cursor so commit-skew stragglers are never passed") {
     exec("CREATE TABLE WMLAG (OK BIGINT PRIMARY KEY, SEQ BIGINT)",
       "INSERT INTO WMLAG VALUES (1, 10), (2, 20)")
-    val lagged = new WatermarkFeed(spark, url, props,
-      SourceDef("graft", "APP", "WMLAG", Seq("ok")),
+    val lagged = new WatermarkVersionedFeed(url, props, "APP", "WMLAG",
       watermarkCol = "SEQ", entityCols = Seq("OK", "SEQ"), safetyLag = 5)
+    def oks(from: Long, to: Long) =
+      lagged.rows(from, to).map(_.getLong(0)).toSeq.sorted
     // high-water mark is max(seq) − lag: rows inside the skew window stay
     // unread (and unadvanced-past) until a later max moves the bound up
     assert(lagged.currentVersion() == 15)
-    val ch = lagged.changesSince(0)
-    assert(ch.select("OK").collect().map(_.getLong(0)).toSeq == Seq(1L))
+    assert(oks(0, 15) == Seq(1L))
     // the straggler "commits late" with seq 16 ≤ old max: still delivered,
-    // because the cursor never passed it
+    // because the offset never passed it
     exec("INSERT INTO WMLAG VALUES (3, 16), (4, 30)")
-    val ch2 = lagged.changesSince(15)
-    assert(ch2.select("OK").collect().map(_.getLong(0)).sorted.toSeq
-      == Seq(2L, 3L))
+    assert(oks(15, lagged.currentVersion()) == Seq(2L, 3L))
   }
 }

@@ -1941,8 +1941,12 @@ object Similarity {
     * with the iteration count. Cells that lose all members simply drop out
     * of the centroid table (standard Lloyd behavior). Returns the final
     * (vec_id, label, assigned, cos). */
-  def kmeansFit(spark: SparkSession, dir: String, iters: Int): DataFrame =
-    kmeansFitOn(embCorpus(spark, dir), iters)
+  def kmeansFit(spark: SparkSession, dir: String, iters: Int): DataFrame = {
+    val emb = embCorpus(spark, dir)
+    // the last round's pin holds the whole result, so no plan reads this
+    // call's corpus pin again: free it now, not whenever the driver GCs
+    try kmeansFitOn(emb, iters) finally graft.Materialize.unpin(emb)
+  }
 
   /** The Lloyd loop over an already-pinned corpus — callers that hold an
     * `embCorpus` frame pass it here so trainer and consumer share ONE

@@ -15,37 +15,53 @@ object Load {
   def load(rows: DataFrame, source: SourceDef, store: MessageStore): Long =
     store.send(Canonical.messages(rows, source))
 
-  /** Load many sources (ref melt.clj:456-465 one job per source). */
+  /** Load many sources (ref melt.clj:456-465 one job per source); returns
+    * records sent per topic, summed over the sources that share one. */
   def loadAll(sources: Seq[(SourceDef, DataFrame)],
       store: MessageStore): Map[String, Long] =
-    sources.map { case (s, df) => s.topic -> load(df, s, store) }.toMap
+    sources.map { case (s, df) => s.topic -> load(df, s, store) }
+      .groupMapReduce(_._1)(_._2)(_ + _)
 }
 
-/** Diff between a source snapshot and compacted topic state (ref
-  * melt.clj:418-429). Both sides are canonical-JSON message frames, so value
-  * comparison is plain string equality — the fuzz/unfuzz JSON-round-trip
-  * machinery of the reference (melt.clj:359-390) is unnecessary by
-  * construction (SURVEY §2 O15).
+/** Diff between a source snapshot and a topic (ref melt.clj:418-429).
+  * Both sides are canonical-JSON message frames, so value comparison is
+  * plain string equality — the fuzz/unfuzz JSON-round-trip machinery of the
+  * reference (melt.clj:359-390) is unnecessary by construction (SURVEY §2
+  * O15).
   *
-  * Scale shape: both inputs are keyed (unique (topic,key)), the join
-  * shuffles each side once on the key; with AQE a small drifted side
-  * broadcasts. The diff frame is lazily computed — sync and verify reuse it
-  * without re-scanning when cached.
+  * Scale shape: one aggregation on (topic, key) over the union of the
+  * table's messages and the topic's records. It picks each key's newest
+  * record ([[MessageStore.newest]]) and classifies the key in the same
+  * pass, so compaction and diff share one shuffle, partially aggregated
+  * map-side, and nothing is cached. Repeated source keys (a keyless
+  * table's identical rows) collapse to one entry, as in the reference's
+  * keyed map diff.
   */
 object Diff {
   val Side = "side"
 
-  /** Full-outer classify. Output: (topic, key, table_value, topic_value,
-    * side ∈ match | differs | table-only | topic-only). */
-  def diff(source: DataFrame, topicState: DataFrame): DataFrame = {
+  /** Classify every key. `topic` is the raw log `(topic, key, value,
+    * offset)`, tombstones and repeated keys included, or a compacted state
+    * without `offset` (each row is its key's only record). Output: (topic,
+    * key, table_value, topic_value, side ∈ match | differs | table-only |
+    * topic-only); topic_value is the key's live value, null for a key the
+    * topic lacks or has tombstoned. */
+  def diff(source: DataFrame, topic: DataFrame): DataFrame = {
+    val offset =
+      if (topic.columns.contains(Msg.Offset)) col(Msg.Offset) else lit(0L)
+    val none = lit(null).cast("string")
     val s = source.select(col(Msg.Topic), col(Msg.Key),
-      col(Msg.Value).as("table_value"))
-    val t = topicState.select(col(Msg.Topic), col(Msg.Key),
-      col(Msg.Value).as("topic_value"))
-    s.join(t, Seq(Msg.Topic, Msg.Key), "full_outer")
+      col(Msg.Value).as("table_value"), none.as("topic_value"),
+      lit(null).cast("long").as(Msg.Offset))
+    val t = topic.select(col(Msg.Topic), col(Msg.Key), none.as("table_value"),
+      col(Msg.Value).as("topic_value"), offset.cast("long").as(Msg.Offset))
+    s.unionAll(t).groupBy(Msg.Topic, Msg.Key)
+      .agg(max("table_value").as("table_value"),
+        MessageStore.newest(col("topic_value")).as("topic_value"))
+      .where(col("table_value").isNotNull || col("topic_value").isNotNull)
       .withColumn(Side,
-        when(col("topic_value").isNull && col("table_value").isNotNull, "table-only")
-          .when(col("table_value").isNull && col("topic_value").isNotNull, "topic-only")
+        when(col("topic_value").isNull, "table-only")
+          .when(col("table_value").isNull, "topic-only")
           .when(col("table_value") === col("topic_value"), "match")
           .otherwise("differs"))
   }
@@ -72,13 +88,15 @@ object Diff {
   * sync-kafka): upserts for drifted keys + null-value tombstones for
   * deleted keys, in one sink write. */
 object Sync {
-  /** Returns records sent (upserts + tombstones). */
+  /** Returns records sent (upserts + tombstones): each non-`match` key with
+    * its table value, which is null — a tombstone — for `topic-only`. */
   def syncFromDiff(d: DataFrame, store: MessageStore): Long =
-    store.send(Diff.tableOnly(d).unionAll(Diff.deleted(d)))
+    store.send(d.where(col(Diff.Side) =!= "match")
+      .select(col(Msg.Topic), col(Msg.Key), col("table_value").as(Msg.Value)))
 
   def sync(rows: DataFrame, source: SourceDef, store: MessageStore): Long = {
     val src = Canonical.messages(rows, source)
-    syncFromDiff(Diff.diff(src, store.topicState(Seq(source.topic))), store)
+    syncFromDiff(Diff.diff(src, store.read(Seq(source.topic))), store)
   }
 }
 
@@ -130,22 +148,32 @@ object VerifyOps {
   }
 
   /** Retry loop tolerating in-flight latency (ref melt.clj:518-546;
-    * monitoring = verify with latency allowance, DESIGN.md:26-27). Topic
-    * state refreshes incrementally across retries instead of re-scanning. */
+    * monitoring = verify with latency allowance, DESIGN.md:26-27). The
+    * first attempt diffs the raw topic log and caches nothing; a retry
+    * builds an [[IncrementalTopicState]], whose later refreshes merge only
+    * the records past its cursor instead of re-scanning. */
   def verify(rows: => DataFrame, source: SourceDef, store: MessageStore,
       retries: Int = 0, delayMs: Long = 1000): (Boolean, Int) = {
-    val topic = new IncrementalTopicState(store, Seq(source.topic))
+    require(retries >= 0, s"retries must be >= 0: $retries")
+    require(delayMs >= 0, s"delayMs must be >= 0: $delayMs")
+    val topics = Seq(source.topic)
+    var state: Option[IncrementalTopicState] = None
     try {
       var attempts = 0
       var ok = false
       while (!ok && attempts <= retries) {
-        if (attempts > 0) { Thread.sleep(delayMs); topic.refresh() }
+        val topic =
+          if (attempts == 0) store.read(topics)
+          else {
+            Thread.sleep(delayMs)
+            if (state.isEmpty) state = Some(new IncrementalTopicState(store, topics))
+            state.get.refresh()
+          }
         attempts += 1
-        val src = Canonical.messages(rows, source)
-        ok = Diff.isEmpty(Diff.diff(src, topic.live()))
+        ok = Diff.isEmpty(Diff.diff(Canonical.messages(rows, source), topic))
       }
       (ok, attempts)
-    } finally topic.close()
+    } finally state.foreach(_.close())
   }
 
   /** Verify; on failure sync once and verify once more (ref

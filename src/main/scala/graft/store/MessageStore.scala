@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Msg
@@ -87,8 +87,13 @@ object MessageStore {
     * the max offset per key is retained. */
   def compact(log: DataFrame): DataFrame =
     log.groupBy(Msg.Topic, Msg.Key)
-      .agg(max_by(col(Msg.Value), col(Msg.Offset)).as(Msg.Value),
+      .agg(newest(col(Msg.Value)).as(Msg.Value),
         max(col(Msg.Offset)).as(Msg.Offset))
+
+  /** The one last-write-wins rule, as an aggregate over a (topic, key)
+    * group: the value of the highest-offset record, null if that record is
+    * a tombstone. Rows with a null offset take no part. */
+  def newest(value: Column): Column = max_by(value, col(Msg.Offset))
 
   /** Spark-Kafka `startingOffsets` JSON for "strictly after the cursor":
     * next offset for cursor partitions, earliest (-2) for partitions the

@@ -79,6 +79,26 @@ class EndToEndSpec extends SparkSpec {
     assert(Diff.isEmpty(Diff.diff(Canonical.messages(region, src), state)))
   }
 
+  test("keyless duplicates: sync sends one upsert for the new row key and one tombstone") {
+    import spark.implicits._
+    val store = new LocalStore(spark, tmpDir("e2e6"))
+    val src = SourceDef("graft", "main", "pairs", Seq.empty)
+    val before = Seq((1L, "a"), (1L, "a")).toDF("id", "name")
+    assert(Load.load(before, src, store) == 2)
+    // both identical rows change the same way: one whole-row key replaces
+    // another, as in the reference's keyed map diff (melt.clj:418-429)
+    val after = Seq((1L, "b"), (1L, "b")).toDF("id", "name")
+    val d = Diff.diff(Canonical.messages(after, src), store.read(Seq(src.topic)))
+    assert(d.groupBy(Diff.Side).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap ==
+      Map("table-only" -> 1L, "topic-only" -> 1L))
+    assert(Sync.sync(after, src, store) == 2)
+    val newKey = Canonical.messages(after.limit(1), src).head().getString(1)
+    assert(store.topicState(Seq(src.topic)).collect().map(_.getString(1))
+      .toSeq == Seq(newKey))
+    assert(VerifyOps.verify(after, src, store) == ((true, 1)))
+  }
+
   test("empty table: diff empty both sides (ref integration_test.clj:81-83 t_empty)") {
     val orders = Tables.t(spark, sf, "orders").where(lit(false))
     val d = Diff.diff(Canonical.messages(orders, source),

@@ -1,13 +1,18 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
-import graft.ops.{Sample, VerifyOps}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import graft.canonical.Canonical
+import graft.ops.{Diff, Load, Sample, VerifyOps}
 import graft.sources.Tables
 import graft.store.LocalStore
 
-/** O22 sampling, O12 read-twice, incremental verify state, and the SQL
-  * function surface. */
-class OpsExtraSpec extends SparkSpec {
+/** O22 sampling, O12 read-twice, incremental verify state, the shape of a
+  * mirror check, and the SQL function surface. */
+class OpsExtraSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   import spark.implicits._
 
@@ -127,6 +132,70 @@ class OpsExtraSpec extends SparkSpec {
     inc.close()
   }
 
+  test("loadAll sums the counts of sources that share a topic") {
+    val store = new LocalStore(spark, tmpDir("shared"))
+    val a = SourceDef("graft", "main", "a", Seq("id"), Some("shared"))
+    val b = a.copy(name = "b")
+    val c = SourceDef("graft", "main", "c", Seq("id"))
+    val sent = Load.loadAll(Seq(
+      a -> Seq((1L, "x"), (2L, "y")).toDF("id", "v"),
+      b -> Seq((3L, "z")).toDF("id", "v"),
+      c -> Seq((1L, "w")).toDF("id", "v")), store)
+    assert(sent == Map("shared" -> 3L, c.topic -> 1L))
+    assert(store.read(Seq("shared")).count() == 3)
+  }
+
+  test("verify and verifySync reject a negative retries or delayMs") {
+    val store = new LocalStore(spark, tmpDir("neg"))
+    val src = SourceDef("graft", "main", "t", Seq("id"))
+    val rows = Seq((1L, "x")).toDF("id", "v")
+    val r = intercept[IllegalArgumentException](
+      VerifyOps.verify(rows, src, store, retries = -1))
+    assert(r.getMessage.contains("retries must be >= 0: -1"))
+    val d = intercept[IllegalArgumentException](
+      VerifyOps.verify(rows, src, store, retries = 1, delayMs = -5))
+    assert(d.getMessage.contains("delayMs must be >= 0: -5"))
+    intercept[IllegalArgumentException](
+      VerifyOps.verifySync(rows, src, store, retries = -1))
+    // rejected before any attempt, so verifySync did not sync
+    assert(store.read(Seq(src.topic)).isEmpty)
+  }
+
+  test("a mirror check diffs the raw log in one (topic, key) shuffle and caches nothing") {
+    val store = new LocalStore(spark, tmpDir("shape"))
+    val src = SourceDef("graft", "main", "t", Seq("id"))
+    val rows = (1L to 40L).map(i => (i, s"v$i")).toDF("id", "v")
+    Load.load(rows, src, store)
+    Load.load(rows.where(col("id") <= 5), src, store) // repeated keys
+    val d = Diff.diff(Canonical.messages(rows, src), store.read(Seq(src.topic)))
+    assert(d.where(col(Diff.Side) =!= "match").isEmpty)
+    d.collect()
+    val exchanges = collect(d.queryExecution.executedPlan) { case e: Exchange => e }
+    assert(exchanges.size == 1, exchanges.mkString("\n"))
+    exchanges.head match {
+      case ShuffleExchangeExec(h: HashPartitioning, _, _, _) =>
+        assert(h.expressions.flatMap(_.references.map(_.name)) ==
+          Seq("topic", "key"), h)
+      case e => fail(s"not a hash shuffle on (topic, key): $e")
+    }
+    // retries = 0 persists no topic state: a probe in the table's rows
+    // lists the persisted RDDs while each attempt's diff runs
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    OpsExtraSpec.sc = sc
+    OpsExtraSpec.added.clear()
+    val probe = udf { (v: String) =>
+      OpsExtraSpec.added.addAll(
+        (OpsExtraSpec.sc.getPersistentRDDs.keySet -- before).asJava); v
+    }.asNondeterministic()
+    val probed = rows.withColumn("v", probe(col("v")))
+    assert(VerifyOps.verify(probed, src, store) == ((true, 1)))
+    assert(VerifyOps.verifySync(probed, src, store).matches)
+    assert(OpsExtraSpec.added.isEmpty,
+      s"persisted during verify: ${OpsExtraSpec.added}")
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
   test("Kafka startingOffsets JSON covers every partition (cursor + earliest)") {
     val json = graft.store.MessageStore.startingOffsetsJson(
       topics = Seq("a", "b"),
@@ -166,4 +235,10 @@ class OpsExtraSpec extends SparkSpec {
         "FROM range(1000)").head().getStruct(0)
     assert(r.getInt(0) == 10 && r.isNullAt(1)) // 10 distinct < k, kth null
   }
+}
+
+object OpsExtraSpec {
+  /** Read by a probe UDF on local executor threads (same JVM). */
+  @volatile var sc: org.apache.spark.SparkContext = _
+  val added = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 }

@@ -4,7 +4,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.canonical.Canonical
 import graft.ops.{Diff, Sync}
-import graft.store.LocalStore
+import graft.store.{LocalStore, MessageStore}
 
 /** Property tests (SURVEY.md §5 engine test plan): canonicalization
   * determinism and the diff/sync algebra
@@ -103,6 +103,70 @@ class PropertiesSpec extends SparkSpec {
           .map(_.getString(0)).toSet
         val expected = bRows.map(_._1).toSet -- aRows.map(_._1).toSet
         assert(deleted == expected.map(id => s"""{"id":$id}"""))
+      }
+    }
+  }
+
+  /** A raw topic log in log order: each key pinned to partition key % 3,
+    * offsets dense per partition, value None = tombstone. */
+  private def logOf(events: Seq[(Int, Option[String])]) = {
+    val next = collection.mutable.Map[Int, Long]().withDefaultValue(0L)
+    events.map { case (k, v) =>
+      val p = k % 3
+      next(p) += 1
+      ("t", s"k$k", v.orNull, p, next(p) - 1)
+    }
+  }
+
+  private val diffCaseGen = for {
+    tableKeys <- Gen.choose(0, 10).flatMap(n => Gen.pick(n, 0 to 14))
+    table <- Gen.sequence[List[(Int, String)], (Int, String)](
+      tableKeys.toList.map(k => Gen.oneOf("a", "b", "c").map(k -> _)))
+    n <- Gen.choose(0, 30)
+    events <- Gen.listOfN(n, for {
+      k <- Gen.choose(0, 14)
+      v <- Gen.frequency(4 -> Gen.oneOf("a", "b", "c").map(Some(_)), 1 -> Gen.const(None))
+    } yield (k, v))
+  } yield (table, events)
+
+  test("diff over the raw log ≡ full-outer join against the compacted live state") {
+    import org.apache.spark.sql.functions._
+    def side = when(col("topic_value").isNull, "table-only")
+      .when(col("table_value").isNull, "topic-only")
+      .when(col("table_value") === col("topic_value"), "match")
+      .otherwise("differs")
+    val fixed = (
+      List(1 -> "a", 2 -> "b", 3 -> "c", 5 -> "a"),
+      List(1 -> Some("a"), 2 -> Some("a"), 4 -> Some("a"), 1 -> Some("b"),
+        2 -> None, 6 -> Some("c"), 6 -> None, 3 -> None, 3 -> Some("c"),
+        5 -> Some("a"), 1 -> Some("a")))
+    // fixed: k1 rewritten back to its table value, k2 tombstoned last
+    // while the table has it, k3's tombstone overwritten, k4 topic-only,
+    // k6 tombstoned topic-only; then seeded logs, an empty table and an
+    // empty log
+    val cases = Seq(fixed, (Nil, fixed._2), (fixed._1, Nil), (Nil, Nil)) ++
+      (1L to 10L).map(sample(diffCaseGen, _))
+    cases.zipWithIndex.foreach { case ((table, events), i) =>
+      withClue(s"case $i: table=$table log=$events") {
+        val source = table.map { case (k, v) => ("t", s"k$k", v) }
+          .toDF("topic", "key", "value")
+        // log order shuffled across four input partitions
+        val log = spark.sparkContext.parallelize(
+          new scala.util.Random(i).shuffle(logOf(events)), 4)
+          .toDF("topic", "key", "value", "partition", "offset")
+        val live = MessageStore.compact(log).where(col("value").isNotNull)
+          .select("topic", "key", "value")
+        val oracle = source.withColumnRenamed("value", "table_value")
+          .join(live.withColumnRenamed("value", "topic_value"),
+            Seq("topic", "key"), "full_outer")
+          .withColumn(Diff.Side, side)
+        def rows(df: org.apache.spark.sql.DataFrame) = df
+          .select("topic", "key", "table_value", "topic_value", Diff.Side)
+          .collect().map(_.toSeq).toSeq.sortBy(_(1).toString)
+        val expected = rows(oracle)
+        assert(rows(Diff.diff(source, log)) == expected)
+        // a compacted state without offsets is accepted unchanged
+        assert(rows(Diff.diff(source, live)) == expected)
       }
     }
   }

@@ -34,7 +34,7 @@ object Msg {
   val Topic = "topic"
   val Key = "key"
   val Value = "value"
-  /** LocalStore log bookkeeping columns (Kafka parity). */
+  /** Log position columns of a read: the Kafka partition and offset. */
   val Partition = "partition"
   val Offset = "offset"
 }

@@ -66,12 +66,6 @@ object Diff {
           .otherwise("differs"))
   }
 
-  /** Entries the table has but the topic lacks-or-differs — what sync must
-    * (re)send (ref melt.clj:423-426 :table-only). */
-  def tableOnly(d: DataFrame): DataFrame =
-    d.where(col(Side) === "table-only" || col(Side) === "differs")
-      .select(col(Msg.Topic), col(Msg.Key), col("table_value").as(Msg.Value))
-
   /** Keys present on the topic but absent from the table — to tombstone
     * (ref melt.clj:484-487 `deleted`: topic-only minus table-only keys;
     * equivalently an anti-join of topic state vs table keys). */

@@ -1,17 +1,19 @@
 package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.Msg
 
 /** Topic-store abstraction (SURVEY.md §7.1 module io.kafka).
   *
-  * The production impl is Kafka via Spark's built-in source/sink
-  * (`read/write.format("kafka")` — see KafkaStore below); tests and the
-  * offline environment use LocalStore, which emulates Kafka's log semantics
-  * on parquet (mirrors how the reference's tests inject fake send-fns
-  * instead of a producer, ref /root/reference/test/jdbc/melt_test.clj:20-30).
+  * The one impl is [[KafkaStore]]: Kafka via Spark's built-in source/sink
+  * (`read/write.format("kafka")`). Tests and the offline environment run
+  * the same class over the `kafka-emu` format and its in-JVM broker
+  * ([[graft.store.kafkaemu.EmuBroker]]), which keeps Kafka's murmur2 key
+  * partitioning, dense per-partition offsets and planning-time end-offset
+  * snapshot (the reference's tests inject fake send-fns instead of a
+  * producer, ref melt_test.clj:20-30).
   */
 trait MessageStore {
   /** Append a message frame `(topic, key, value)`; returns records sent
@@ -130,95 +132,17 @@ object MessageStore {
     }
 }
 
-/** Kafka-log-on-parquet: append-only files carrying explicit (partition,
-  * offset) assigned exactly like a keyed Kafka producer would — partition =
-  * hash(key) % numPartitions (null keys hash the value), offset dense and
-  * monotone per partition. Gives tests real compaction/tombstone/incremental
-  * semantics with zero external systems. */
-final class LocalStore(spark: SparkSession, dir: String,
-    numPartitions: Int = 8) extends MessageStore {
-
-  private val path = s"$dir/log.parquet"
-
-  private def exists: Boolean =
-    new java.io.File(path).exists && new java.io.File(path).list() != null &&
-      new java.io.File(path).list().exists(_.endsWith(".parquet"))
-
-  private def fullLog(): DataFrame =
-    spark.read.parquet(path)
-
-  override def send(messages: DataFrame): Long = {
-    val hashSrc = coalesce(col(Msg.Key), col(Msg.Value), lit(""))
-    val withPart = messages.withColumn(
-      Msg.Partition, pmod(xxhash64(hashSrc), lit(numPartitions)).cast("int"))
-    val bases: Map[Int, Long] =
-      if (exists)
-        fullLog().groupBy(Msg.Partition).agg(max(Msg.Offset).as("m"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      else Map.empty
-    val baseCol = bases.foldLeft(lit(-1L)) { case (acc, (p, m)) =>
-      when(col(Msg.Partition) === p, lit(m)).otherwise(acc)
-    }
-    val w = Window.partitionBy(Msg.Partition)
-      .orderBy(monotonically_increasing_id())
-    // pin the batch before counting AND writing: monotonically_increasing_id
-    // is non-deterministic across recomputation, and counting the batch
-    // directly avoids re-scanning the whole log after the append
-    val withOff = withPart
-      .withColumn(Msg.Offset, row_number().over(w).cast("long") + baseCol)
-      .select(Msg.Topic, Msg.Key, Msg.Value, Msg.Partition, Msg.Offset)
-      .persist()
-    try {
-      val n = withOff.count()
-      withOff.write.mode("append").parquet(path)
-      n
-    } finally { withOff.unpersist(); () }
-  }
-
-  /** Empty store = empty topic (matches Kafka semantics — a first
-    * sync/verify against a fresh store must see an empty log, not throw). */
-  override def read(topics: Seq[String]): DataFrame =
-    if (!exists) emptyLog()
-    else fullLog().where(col(Msg.Topic).isin(topics: _*))
-
-  private def emptyLog(): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField(Msg.Topic, StringType), StructField(Msg.Key, StringType),
-        StructField(Msg.Value, StringType), StructField(Msg.Partition, IntegerType),
-        StructField(Msg.Offset, LongType))))
-  }
-
-  override def readFrom(topics: Seq[String],
-      after: Map[(String, Int), Long]): DataFrame =
-    MessageStore.filterAfter(read(topics), after)
-
-  override def listTopics(): Seq[String] =
-    if (!exists) Seq.empty
-    else fullLog().select(Msg.Topic).distinct().collect()
-      .map(_.getString(0)).toSeq.sorted
-
-  override def endOffsets(topics: Seq[String]): Map[(String, Int), Long] =
-    if (!exists) Map.empty
-    else read(topics).groupBy(Msg.Topic, Msg.Partition)
-      .agg(max(Msg.Offset).as("m")).collect()
-      .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
-}
-
 /** Production Kafka store — the Spark-native sink/source contract the message
   * frame is shaped for (`df.write.format("kafka")` takes topic/key/value
   * columns directly; serdes O24 of the reference drop out entirely).
-  * Unused in the offline test environment (no brokers), kept thin by design:
-  * everything interesting (canonicalization, compaction, diff) happens on
-  * DataFrames before/after this boundary. */
+  * Offline, the tests run this same class over the in-JVM `kafka-emu`
+  * format. Kept thin by design: everything interesting (canonicalization,
+  * compaction, diff) happens on DataFrames before/after this boundary. */
 final class KafkaStore(spark: SparkSession, bootstrap: String,
     extraOpts: Map[String, String] = Map.empty,
-    /** Full topic → partition-id map, if known. Overrides AdminClient
-      * discovery; enables exact per-offset incremental reads in readFrom. */
-    partitionsOf: Option[Map[String, Seq[Int]]] = None,
     /** Injected metadata provider (tests / custom clients). None → try the
-      * reflective AdminClient, then fall back to offset-by-scan. */
+      * reflective AdminClient, then fall back to offset-by-scan. The admin
+      * is the one source of the partition map readFrom's fast path needs. */
     adminOverride: Option[KafkaAdmin] = None,
     /** Spark data-source format carrying the Kafka option contract.
       * Production default is Spark's own connector; tests substitute
@@ -242,13 +166,16 @@ final class KafkaStore(spark: SparkSession, bootstrap: String,
   def close(): Unit = adminOverride.orElse(adminCreated).foreach(_.close())
 
   private def partitionMap(topics: Seq[String]): Option[Map[String, Seq[Int]]] =
-    partitionsOf.orElse(admin.map(_.partitionsOf(topics)))
+    admin.map(_.partitionsOf(topics))
 
   override def send(messages: DataFrame): Long = {
-    messages.persist()
+    // cache the frame so count and write share one computation, unless the
+    // caller cached it already: that cache is the caller's to release
+    val owned = messages.storageLevel == StorageLevel.NONE
+    if (owned) messages.persist()
     // unpersist in finally: a failed write (a broker error inside a CDC
-    // foreachBatch) must not leave the caller's frame cached for the life
-    // of the session
+    // foreachBatch) must not leave the frame cached for the life of the
+    // session
     try {
       val n = messages.count()
       messages
@@ -263,7 +190,7 @@ final class KafkaStore(spark: SparkSession, bootstrap: String,
         .options(extraOpts)
         .save()
       n
-    } finally { messages.unpersist(); () }
+    } finally { if (owned) messages.unpersist(); () }
   }
 
   private def kafkaRead(topics: Seq[String], startingOffsets: String): DataFrame =
@@ -288,7 +215,7 @@ final class KafkaStore(spark: SparkSession, bootstrap: String,
     * Spark's Kafka source rejects a specific-offsets JSON that omits ANY
     * partition of a subscribed topic, and the cursor (derived from observed
     * records) cannot know about still-empty partitions — so the per-offset
-    * fast path is only taken when `partitionsOf` declares the full partition
+    * fast path is only taken when the admin declares the full partition
     * map (unknown partitions start at earliest = -2). Otherwise the read
     * starts at earliest and filters — correct on every partition at the
     * cost of a full scan. */

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 import graft.cdc.{ChangeTracking, SqlServerFeed}
 import graft.cdc.stream.CdcFeedRegistry
 import graft.ops.Mirror
-import graft.store.{LocalStore, MessageStore}
+import graft.store.MessageStore
 
 /** O25–O30 change-tracking CDC with an in-memory feed through the one CDC
   * runner (`graft-cdc` stream → [[ChangeTracking.batchMessages]] → store),
@@ -86,7 +86,7 @@ class CdcSpec extends SparkSpec {
   }
 
   test("O29 stream advances the version watermark; empty batch is a no-op") {
-    val store = new LocalStore(spark, tmpDir("cdc"))
+    val store = emuStore("cdc")
     val feed = new MemFeed
     (1 to 4).foreach(_ => feed.bump())
     feed.add("I", 1L, 1.0) // v5: already synced
@@ -110,7 +110,7 @@ class CdcSpec extends SparkSpec {
   }
 
   test("O29/O11 delete round-trip: tombstone removes the key from state") {
-    val store = new LocalStore(spark, tmpDir("cdc2"))
+    val store = emuStore("cdc2")
     val feed = new MemFeed
     feed.add("I", 1L, 1.0)
     feed.add("D", 1L, null)
@@ -120,7 +120,7 @@ class CdcSpec extends SparkSpec {
   }
 
   test("O30 bootstrap captures version BEFORE full sync (no gap)") {
-    val store = new LocalStore(spark, tmpDir("cdc3"))
+    val store = emuStore("cdc3")
     val feed = new MemFeed
     (1 to 10).foreach(_ => feed.bump())
     val (from, snapshot) = Mirror.bootstrapCdc(feed, source, store, {

@@ -73,7 +73,7 @@ class CdcStreamSpec extends SparkSpec {
     feed.add("I", 2L, 20.0)
     CdcFeedRegistry.register("t4", feed)
     val source = SourceDef("graft", "dbo", "orders", Seq("o_orderkey"))
-    val store = new graft.store.LocalStore(spark, tmpDir("cdcmsg"))
+    val store = emuStore("cdcmsg")
     val q = ChangeTracking.changeStream(spark, "t4", source)
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>

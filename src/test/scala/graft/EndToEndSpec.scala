@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import graft.canonical.Canonical
 import graft.ops.{Diff, Load, Sync, VerifyOps}
 import graft.sources.Tables
-import graft.store.LocalStore
 
 /** The minimum end-to-end slice (SURVEY.md §7.2), replaying the reference
   * integration suite's arc (integration_test.clj:60-122) offline.
@@ -18,7 +17,7 @@ class EndToEndSpec extends SparkSpec {
   val source = SourceDef("graft", "main", "orders", Seq("o_orderkey"))
 
   test("load → diff empty → mutate → sync → delete → tombstone → verify") {
-    val store = new LocalStore(spark, tmpDir("e2e"))
+    val store = emuStore("e2e")
     val orders = Tables.t(spark, sf, "orders")
     val k0 = orders.agg(min("o_orderkey")).head().getLong(0)
 
@@ -62,7 +61,7 @@ class EndToEndSpec extends SparkSpec {
   }
 
   test("verify-sync repairs a drifted topic (sync path, ref melt.clj:548-571)") {
-    val store = new LocalStore(spark, tmpDir("e2e2"))
+    val store = emuStore("e2e2")
     val orders = Tables.t(spark, sf, "orders").where(col("o_orderkey") < 100)
     Load.load(orders.where(col("o_orderkey") >= 50), source, store)
     val r = VerifyOps.verifySync(orders, source, store)
@@ -70,7 +69,7 @@ class EndToEndSpec extends SparkSpec {
   }
 
   test("keyless source: whole value as key (ref integration_test.clj:158-184)") {
-    val store = new LocalStore(spark, tmpDir("e2e3"))
+    val store = emuStore("e2e3")
     val region = Tables.t(spark, sf, "region")
     val src = SourceDef("graft", "main", "region", Seq.empty)
     Load.load(region, src, store)
@@ -81,7 +80,7 @@ class EndToEndSpec extends SparkSpec {
 
   test("keyless duplicates: sync sends one upsert for the new row key and one tombstone") {
     import spark.implicits._
-    val store = new LocalStore(spark, tmpDir("e2e6"))
+    val store = emuStore("e2e6")
     val src = SourceDef("graft", "main", "pairs", Seq.empty)
     val before = Seq((1L, "a"), (1L, "a")).toDF("id", "name")
     assert(Load.load(before, src, store) == 2)
@@ -108,7 +107,7 @@ class EndToEndSpec extends SparkSpec {
 
   test("last-write-wins compaction honors offset order within a key") {
     import spark.implicits._
-    val store = new LocalStore(spark, tmpDir("e2e4"))
+    val store = emuStore("e2e4")
     val v1 = Seq(("t", """{"id":1}""", """{"id":1,"v":"old"}""")).toDF("topic", "key", "value")
     val v2 = Seq(("t", """{"id":1}""", """{"id":1,"v":"new"}""")).toDF("topic", "key", "value")
     store.send(v1); store.send(v2)
@@ -123,7 +122,7 @@ class EndToEndSpec extends SparkSpec {
 
   test("incremental readFrom returns only post-offset records (ref melt.clj:518-523)") {
     import spark.implicits._
-    val store = new LocalStore(spark, tmpDir("e2e5"))
+    val store = emuStore("e2e5")
     store.send(Seq(("t", """{"id":1}""", "a")).toDF("topic", "key", "value"))
     val cursor = store.endOffsets(Seq("t"))
     store.send(Seq(("t", """{"id":2}""", "b")).toDF("topic", "key", "value"))

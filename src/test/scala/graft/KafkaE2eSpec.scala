@@ -15,8 +15,8 @@ import graft.store.kafkaemu.{EmuBroker, EmuKafkaAdmin}
   * [[graft.store.KafkaStore]] — its `.format(...)` read AND write branches,
   * offset-JSON incremental path, and admin-backed metadata — against the
   * in-JVM `kafka-emu` broker stand-in (no Kafka bytes exist in this
-  * environment; see EmuBroker's scaladoc). Live Derby is the source DB,
-  * exactly like MirrorSpec's LocalStore twin. */
+  * environment; see EmuBroker's scaladoc). Live embedded Derby is the
+  * source DB, planned with discovery, samples and a schema snapshot. */
 class KafkaE2eSpec extends SparkSpec {
 
   private val url = "jdbc:derby:memory:kafkae2edb;create=true"
@@ -25,7 +25,6 @@ class KafkaE2eSpec extends SparkSpec {
     p.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
     p
   }
-  private val bootstrap = "emu://e2e:9092"
 
   private lazy val conn = {
     val c = DriverManager.getConnection(url)
@@ -39,14 +38,16 @@ class KafkaE2eSpec extends SparkSpec {
   }
 
   test("load → read-back → diff → sync → verify through KafkaStore on the emulated broker") {
-    EmuBroker.reset(bootstrap)
-    val store = new KafkaStore(spark, bootstrap,
-      adminOverride = Some(new EmuKafkaAdmin(bootstrap)), format = "kafka-emu")
+    val store = emuStore("ke2e")
 
-    // 1. plan + initial load via the real kafkaWrite branch
+    // 1. plan (discovery + snapshot + samples) + initial load via the real
+    //    kafkaWrite branch
     val plan = Mirror.plan(spark, conn, url, props, tmpDir("ke2e-samples"),
       s"${tmpDir("ke2e")}/schema.txt")
+    assert(plan.drift.isEmpty)
     val acct = plan.tables.find(_.source.name.equalsIgnoreCase("accounts")).get
+    assert(acct.source.keys == Seq("id"))
+    assert(plan.samples.exists(_.toLowerCase.contains("accounts")))
     val counts = Mirror.loadAll(spark, url, props, Seq(acct), store)
     assert(counts(acct.source.topic) == 3)
     val topic = acct.source.topic
@@ -185,6 +186,21 @@ class KafkaE2eSpec extends SparkSpec {
     val messages = Seq(("t", "k1", "v1")).toDF("topic", "key", "value")
     intercept[Exception](store.send(messages))
     assert(messages.storageLevel == StorageLevel.NONE)
+  }
+
+  test("KafkaStore.send keeps a cache the caller made") {
+    // send caches only a frame it was handed uncached; the caller's own
+    // cache outlives the send
+    import org.apache.spark.storage.StorageLevel
+    import spark.implicits._
+    val store = emuStore("cached")
+    val messages = Seq(("t", "k1", "v1")).toDF("topic", "key", "value").persist()
+    try {
+      assert(messages.count() == 1)
+      assert(store.send(messages) == 1)
+      assert(messages.storageLevel != StorageLevel.NONE)
+      assert(store.read(Seq("t")).count() == 1)
+    } finally messages.unpersist()
   }
 
   test("murmur2 matches published reference vectors (key pinning is real-Kafka compatible)") {

@@ -5,14 +5,15 @@ import java.util.Properties
 import org.apache.spark.sql.functions._
 import graft.ops.Mirror
 import graft.sources.Jdbc
-import graft.store.LocalStore
 
 /** Full mirror lifecycle against a REAL JDBC database (embedded Derby):
   * plan (discover + samples + snapshot) → load → verify → mutate the DB →
   * drift detected → sync repairs → delete → tombstone. The Spark-native
   * replay of the reference's integration arc
   * (ref integration/jdbc/melt/integration_test.clj:60-122) with a live
-  * metadata + JDBC-scan path instead of parquet stand-ins. */
+  * metadata + JDBC-scan path, on a [[graft.store.KafkaStore]] over
+  * `kafka-emu`. [[KafkaE2eSpec]] runs the same arc with the store's
+  * offsets, metadata and live-read checks added. */
 class MirrorSpec extends SparkSpec {
 
   private val url = "jdbc:derby:memory:mirrordb;create=true"
@@ -35,7 +36,7 @@ class MirrorSpec extends SparkSpec {
 
   test("plan → load → verify → mutate → sync → delete → tombstone") {
     val dir = tmpDir("mirror")
-    val store = new LocalStore(spark, s"$dir/log")
+    val store = emuStore("mirror")
 
     // 1. plan: discovery + snapshot + samples
     val plan = Mirror.plan(spark, conn, url, props, s"$dir/samples",
@@ -66,5 +67,6 @@ class MirrorSpec extends SparkSpec {
     val state = store.topicState(Seq(acct.source.topic))
     assert(state.count() == 2)
     assert(state.where(col("value").contains("99.0")).count() == 1)
+    store.close()
   }
 }

@@ -8,7 +8,6 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import graft.canonical.Canonical
 import graft.ops.{Diff, Load, Sample, VerifyOps}
 import graft.sources.Tables
-import graft.store.LocalStore
 
 /** O22 sampling, O12 read-twice, incremental verify state, the shape of a
   * mirror check, and the SQL function surface. */
@@ -29,7 +28,7 @@ class OpsExtraSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("O12 topicStateLive equals topicState on a quiescent topic") {
-    val store = new LocalStore(spark, tmpDir("live"))
+    val store = emuStore("live")
     store.send(Seq(("t", "k1", "v1"), ("t", "k2", "v2"), ("t", "k1", "v3"))
       .toDF("topic", "key", "value"))
     val a = store.topicState(Seq("t")).orderBy("key").collect().toSeq
@@ -39,8 +38,9 @@ class OpsExtraSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** A store where traffic lands DURING reads: each read/readFrom pass is
     * materialized, then the next pending record arrives — the live-topic
-    * race topicStateLive's catch-up passes exist for (ref melt.clj:342-357). */
-  private final class LiveTrafficStore(inner: LocalStore,
+    * race topicStateLive's catch-up passes and verify's retries exist for
+    * (ref melt.clj:342-357, 518-546). */
+  private final class LiveTrafficStore(inner: graft.store.MessageStore,
       pending: scala.collection.mutable.Queue[Seq[(String, String, String)]])
       extends graft.store.MessageStore {
     private def afterRead(df: org.apache.spark.sql.DataFrame) = {
@@ -59,7 +59,7 @@ class OpsExtraSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("O12 N catch-up passes each absorb one round of in-flight traffic") {
     def scenario(passes: Int): Map[String, String] = {
-      val inner = new LocalStore(spark, tmpDir(s"liveN$passes"))
+      val inner = emuStore(s"liveN$passes")
       inner.send(Seq(("t", "k1", "v1")).toDF("topic", "key", "value"))
       val store = new LiveTrafficStore(inner, scala.collection.mutable.Queue(
         Seq(("t", "k2", "v2")),   // lands during the initial read
@@ -78,7 +78,7 @@ class OpsExtraSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("fresh store reads as an empty topic: first sync/verify bootstraps") {
-    val store = new LocalStore(spark, tmpDir("fresh"))
+    val store = emuStore("fresh")
     assert(store.read(Seq("t")).isEmpty)
     assert(store.topicState(Seq("t")).isEmpty)
     assert(store.endOffsets(Seq("t")).isEmpty)
@@ -91,8 +91,8 @@ class OpsExtraSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(graft.ops.VerifyOps.verify(orders, src, store)._1)
   }
 
-  test("LocalStore pins a key to one partition (last-write-wins precondition)") {
-    val store = new LocalStore(spark, tmpDir("pin"))
+  test("a keyed send pins each key to one partition (last-write-wins precondition)") {
+    val store = emuStore("pin")
     // three sends of the same key — offsets must land on ONE partition so
     // per-key order = offset order (SURVEY §7.4 #2)
     (1 to 3).foreach { i =>
@@ -104,8 +104,28 @@ class OpsExtraSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(st.length == 1 && st(0).getString(2) == "v3")
   }
 
+  test("verify retries through the incremental state until in-flight records land") {
+    val src = SourceDef("graft", "main", "t", Seq("id"))
+    val rows = Seq((1L, "x"), (2L, "y")).toDF("id", "v")
+    def scenario(retries: Int): (Boolean, Int) = {
+      val inner = emuStore(s"verify$retries")
+      Load.load(rows.where(col("id") === 1), src, inner)
+      // row 2's message is in flight: it lands once the first read is taken
+      val inFlight = Canonical.messages(rows.where(col("id") === 2), src)
+        .as[(String, String, String)].collect().toSeq
+      val store = new LiveTrafficStore(inner,
+        scala.collection.mutable.Queue(inFlight))
+      VerifyOps.verify(rows, src, store, retries = retries, delayMs = 0)
+    }
+    // no retry: the first read misses the in-flight record
+    assert(scenario(0) == ((false, 1)))
+    // one retry: the incremental state (admin-backed end-offset cursor,
+    // then a full read) sees it
+    assert(scenario(1) == ((true, 2)))
+  }
+
   test("incremental state stays correct across three refresh rounds") {
-    val store = new LocalStore(spark, tmpDir("inc3"))
+    val store = emuStore("inc3")
     val inc = new VerifyOps.IncrementalTopicState(store, Seq("t"))
     store.send(Seq(("t", "a", "1")).toDF("topic", "key", "value"))
     inc.refresh()
@@ -119,7 +139,7 @@ class OpsExtraSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("incremental topic state merges deltas without full re-read") {
-    val store = new LocalStore(spark, tmpDir("inc"))
+    val store = emuStore("inc")
     store.send(Seq(("t", "k1", "v1"), ("t", "k2", "v2")).toDF("topic", "key", "value"))
     val inc = new VerifyOps.IncrementalTopicState(store, Seq("t"))
     assert(inc.live().count() == 2)
@@ -133,7 +153,7 @@ class OpsExtraSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("loadAll sums the counts of sources that share a topic") {
-    val store = new LocalStore(spark, tmpDir("shared"))
+    val store = emuStore("shared")
     val a = SourceDef("graft", "main", "a", Seq("id"), Some("shared"))
     val b = a.copy(name = "b")
     val c = SourceDef("graft", "main", "c", Seq("id"))
@@ -146,7 +166,7 @@ class OpsExtraSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("verify and verifySync reject a negative retries or delayMs") {
-    val store = new LocalStore(spark, tmpDir("neg"))
+    val store = emuStore("neg")
     val src = SourceDef("graft", "main", "t", Seq("id"))
     val rows = Seq((1L, "x")).toDF("id", "v")
     val r = intercept[IllegalArgumentException](
@@ -162,7 +182,7 @@ class OpsExtraSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("a mirror check diffs the raw log in one (topic, key) shuffle and caches nothing") {
-    val store = new LocalStore(spark, tmpDir("shape"))
+    val store = emuStore("shape")
     val src = SourceDef("graft", "main", "t", Seq("id"))
     val rows = (1L to 40L).map(i => (i, s"v$i")).toDF("id", "v")
     Load.load(rows, src, store)

@@ -4,7 +4,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.canonical.Canonical
 import graft.ops.{Diff, Sync}
-import graft.store.{LocalStore, MessageStore}
+import graft.store.MessageStore
 
 /** Property tests (SURVEY.md §5 engine test plan): canonicalization
   * determinism and the diff/sync algebra
@@ -74,7 +74,7 @@ class PropertiesSpec extends SparkSpec {
       val aRows = sample(rowsGen, seed)
       val bRows = sample(rowsGen, seed + 100)
       withClue(s"seed=$seed") {
-        val store = new LocalStore(spark, tmpDir("prop"))
+        val store = emuStore("prop")
         val a = aRows.toDF("id", "name", "score")
         val b = bRows.toDF("id", "name", "score")
         if (bRows.nonEmpty) store.send(Canonical.messages(b, source))

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.store.KafkaStore
+import graft.store.kafkaemu.{EmuBroker, EmuKafkaAdmin}
 
 /** Shared local session (one per suite, lazy). */
 trait SparkSpec extends AnyFunSuite {
@@ -21,4 +23,13 @@ trait SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** A [[KafkaStore]] on its own empty `kafka-emu` cluster: a fresh
+    * bootstrap per call isolates tests the way [[tmpDir]] does. */
+  def emuStore(prefix: String): KafkaStore = {
+    val bs = s"emu://$prefix-${java.util.UUID.randomUUID()}:9092"
+    EmuBroker.reset(bs)
+    new KafkaStore(spark, bs, adminOverride = Some(new EmuKafkaAdmin(bs)),
+      format = "kafka-emu")
+  }
 }

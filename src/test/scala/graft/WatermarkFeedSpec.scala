@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import graft.cdc.{ChangeTracking, WatermarkVersionedFeed}
 import graft.cdc.stream.CdcFeedRegistry
 import graft.ops.Mirror
-import graft.store.LocalStore
 
 /** Generic watermark CDC (VERDICT r5 §next-round #6) against LIVE embedded
   * Derby: a table with a monotone sequence column drives the same
@@ -40,7 +39,7 @@ class WatermarkFeedSpec extends SparkSpec {
   test("watermark CDC on a Derby sequence column: no-gap bootstrap, advance, no-op") {
     exec("CREATE TABLE WMORDERS (OK BIGINT PRIMARY KEY, TOTAL DOUBLE, SEQ BIGINT)",
       "INSERT INTO WMORDERS VALUES (1, 1.0, 1), (2, 2.0, 2)")
-    val store = new LocalStore(spark, tmpDir("wmcdc"))
+    val store = emuStore("wmcdc")
     CdcFeedRegistry.register("wmorders", feed)
     def sent() = store.read(Seq(source.topic)).count()
 

@@ -22,8 +22,8 @@ import org.apache.spark.sql.types.StructType
   *
   * Honest semantic limits vs real change tracking (callers must know):
   *  - DELETES ARE INVISIBLE: a vanished row never surfaces as a
-  *    tombstone. Pair with a periodic [[graft.ops.Diff.deleted]] anti-join
-  *    sweep when deletes matter.
+  *    tombstone. Pair with a periodic [[graft.ops.Mirror.sync]], which
+  *    tombstones topic-only keys, when deletes matter.
   *  - The column must be monotone AT COMMIT TIME. A sequence/identity
   *    column is; wall-clock `updated_at` is NOT under concurrent writers
   *    (a transaction can commit an older timestamp after a newer one was

@@ -154,9 +154,6 @@ object Bpe {
     // the single-node reference trainer (BpeSpec) and the unrolled DuckDB
     // oracle — the merge list is bit-identical to the one-at-a-time loop.
     val TopM = 64
-    // optimization-round diagnostics: one stderr line per count job
-    // (batch size taken, scan stop reason, wall) — zero cost when unset
-    val bpeDebug = sys.env.get("GRAFT_BPE_DEBUG").contains("1")
     var pinned = graft.Materialize.pin(wordFreq.select(col("freq"),
       concat(regexp_extract_all(col("word"), lit("."), lit(0)),
         array(lit(Marker))).as("s")))
@@ -178,7 +175,6 @@ object Bpe {
     sess.conf.set("spark.sql.adaptive.enabled", "false")
     try {
     while (!done && merges.size < numMerges) {
-      val t0 = if (bpeDebug) System.nanoTime() else 0L
       val top = cur
         .select(col("freq"), explode(arrays_zip(
           slice(col("s"), lit(1), size(col("s")) - 1).as("l"),
@@ -224,10 +220,6 @@ object Bpe {
         // counts only decrease, new pairs are bounded by touching pairs
         // ≤ the head); every later entry needs strict clearance
         val safe = batch.take(1) ++ batch.drop(1).takeWhile(_._3 > bound)
-        if (bpeDebug) System.err.println(
-          s"[bpe] count-job merges=${merges.size} batch=${batch.size} " +
-            s"safe=${safe.size} stopCnt=$stopCnt trunc=$truncBound " +
-            f"wall=${(System.nanoTime() - t0) / 1e9}%.2f")
         safe.take(numMerges - merges.size).foreach { case (l, r, cnt) =>
           merges += Merge(merges.size, l, r, l + r, cnt)
           cur = cur.select(col("freq"), mergeExpr(col("s"), l, r).as("s"))

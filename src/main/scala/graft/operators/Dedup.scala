@@ -1196,11 +1196,6 @@ object Dedup {
       propRounds: Int = 8): DataFrame =
     ccPhase(edges, propRounds, phase = 0)
 
-  /** Optimization-round diagnostics: GRAFT_CC_DEBUG=1 prints one stderr
-    * line per propagation round (phase, round, improved count, wall) —
-    * measurement only, zero cost when unset. */
-  private val ccDebug = sys.env.get("GRAFT_CC_DEBUG").contains("1")
-
   /** PARTITION-LOCAL pointer collapse (r17): union-find over the pointer
     * pairs (doc_id, lbl) that happen to share a partition, emitting each
     * node's partition-local component MINIMUM as its new label. This sits
@@ -1343,10 +1338,6 @@ object Dedup {
       // labels are monotone (the union includes the own-label row), so
       // "improved" is strictly-less — and zero improvements IS the fixpoint
       converged = obs.get("improved").asInstanceOf[Long] == 0L
-      if (ccDebug) System.err.println(
-        s"[cc] phase=$phase round=$rounds improved=" +
-          obs.get("improved") + s" parts=${merged.rdd.getNumPartitions}" +
-          s" t=${System.nanoTime() / 1e9}")
       // merged is materialized (pin is eager) and carries every label, so
       // the previous round's pinned state is dead — free its blocks now
       // instead of letting round count become peak storage footprint

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Msg, SourceDef}
 import graft.canonical.Canonical
-import graft.store.MessageStore
+import graft.store.{IncrementalTopicState, MessageStore}
 
 /** Snapshot load (ref /root/reference/src/jdbc/melt.clj:445-476
   * load-with-producer / do-load): scan → message → xform → sink.
@@ -66,14 +66,6 @@ object Diff {
           .otherwise("differs"))
   }
 
-  /** Keys present on the topic but absent from the table — to tombstone
-    * (ref melt.clj:484-487 `deleted`: topic-only minus table-only keys;
-    * equivalently an anti-join of topic state vs table keys). */
-  def deleted(d: DataFrame): DataFrame =
-    d.where(col(Side) === "topic-only")
-      .select(col(Msg.Topic), col(Msg.Key),
-        lit(null).cast("string").as(Msg.Value))
-
   def isEmpty(d: DataFrame): Boolean =
     d.where(col(Side) =!= "match").isEmpty
 }
@@ -100,46 +92,6 @@ object Sync {
 object VerifyOps {
   final case class Result(matches: Boolean, attempts: Int,
       synced: Boolean, syncCount: Long)
-
-  /** Incrementally-refreshed compacted topic state for retry loops (ref
-    * melt.clj:518-523; SURVEY §7.4 #6): the first refresh reads the whole
-    * log once and caches the compacted frame; each later refresh reads only
-    * records past the cursor and merges them in — at scale a retry costs
-    * |keys| + |delta|, not another full topic scan. */
-  final class IncrementalTopicState(store: MessageStore, topics: Seq[String]) {
-    private var cursor: Map[(String, Int), Long] = Map.empty
-    private var state: Option[DataFrame] = None
-
-    /** Re-read what's new and return the current compacted state
-      * (tombstones included — filter for consumers who need live keys). */
-    def refresh(): DataFrame = {
-      val nextCursor = store.endOffsets(topics)
-      val merged = state match {
-        case None => MessageStore.compact(store.read(topics))
-        case Some(prev) =>
-          MessageStore.compact(prev.unionAll(store.readFrom(topics, cursor)
-            .select(Msg.Topic, Msg.Key, Msg.Value, Msg.Offset)))
-      }
-      // materialize the merge BEFORE dropping the previous cache — merged
-      // reads prev; unpersisting first would silently recompute the full
-      // topic scan (and re-grow the lineage) on every refresh
-      val cached = merged.persist()
-      cached.count()
-      state.foreach(_.unpersist())
-      state = Some(cached)
-      cursor = nextCursor
-      cached
-    }
-
-    def current(): DataFrame = state.getOrElse(refresh())
-
-    def close(): Unit = { state.foreach(_.unpersist()); state = None }
-
-    /** Live (non-tombstoned) view in the (topic, key, value) contract. */
-    def live(): DataFrame = current()
-      .where(col(Msg.Value).isNotNull)
-      .select(Msg.Topic, Msg.Key, Msg.Value)
-  }
 
   /** Retry loop tolerating in-flight latency (ref melt.clj:518-546;
     * monitoring = verify with latency allowance, DESIGN.md:26-27). The

@@ -45,37 +45,19 @@ trait MessageStore {
 
   /** O12 read-then-catch-up (ref melt.clj:342-357 read-topics-loop, whose
     * `retries` arg is `catchUpPasses` here): a long read means its planned
-    * end offsets are stale on a live topic — each extra incremental pass
-    * catches what landed during the previous one. Every pass is MATERIALIZED
-    * (eager, via [[graft.Materialize.pin]]) before the next is planned;
-    * otherwise all reads resolve their end offsets at the same action and
-    * later passes can never see anything new. Each pass's cursor is captured
-    * BEFORE its read, so the passes tile the log with (harmless) overlap —
-    * the union compacts as one frame, duplicate offsets collapse in max_by.
-    * Checkpoint rather than persist(): blocks are released by the
-    * ContextCleaner once the frame is unreachable, so repeated polling
-    * doesn't accumulate pinned caches. `catchUpPasses = 0` degrades to a
-    * plain materialized read. */
+    * end offsets are stale on a live topic, so each of `catchUpPasses`
+    * extra refreshes of one [[IncrementalTopicState]] catches what landed
+    * during the previous one. Every refresh is materialized before the next
+    * is planned; otherwise all reads resolve their end offsets at the same
+    * action and later refreshes can never see anything new. The returned
+    * live state is the one frame left pinned: the ContextCleaner frees it
+    * once it is unreachable. `catchUpPasses = 0` degrades to a plain
+    * materialized read. */
   def topicStateLive(topics: Seq[String], catchUpPasses: Int = 1): DataFrame = {
     require(catchUpPasses >= 0, s"catchUpPasses must be >= 0: $catchUpPasses")
-    var cursor: Map[(String, Int), Long] = Map.empty
-    var log: DataFrame = null
-    var pass = 0
-    while (pass <= catchUpPasses) {
-      // the last pass's successor cursor would be unused — skip the call
-      // (it is a full scan on stores without an offsets API)
-      val nextCursor =
-        if (pass < catchUpPasses) endOffsets(topics) else cursor
-      val batch =
-        (if (pass == 0) read(topics) else readFrom(topics, cursor))
-          .transform(graft.Materialize.pin)
-      log = if (log == null) batch else log.unionAll(batch)
-      cursor = nextCursor
-      pass += 1
-    }
-    MessageStore.compact(log)
-      .where(col(Msg.Value).isNotNull)
-      .select(Msg.Topic, Msg.Key, Msg.Value)
+    val reader = new IncrementalTopicState(this, topics)
+    (0 to catchUpPasses).foreach(_ => reader.refresh())
+    reader.live()
   }
 
   /** Current end offset per (topic, partition) — the incremental-read cursor. */
@@ -130,6 +112,51 @@ object MessageStore {
       }
       log.where(col(Msg.Offset) > cutoff)
     }
+}
+
+/** Incrementally refreshed compacted topic state (ref melt.clj:342-357
+  * read-topics-loop and 518-523 verify refresh; SURVEY §7.4 #6): the one
+  * reader behind O12 catch-up passes and verify retries. The first refresh
+  * reads the whole log; each later one reads only the records past the
+  * cursor and merges them in, so at scale a refresh costs |keys| + |delta|,
+  * never another full topic scan. Each refresh's cursor is captured BEFORE
+  * its read, so refreshes tile the log with (harmless) overlap: duplicate
+  * offsets collapse in the compaction.
+  *
+  * One pin rule: each merged state is pinned ([[graft.Materialize.pin]],
+  * eager), and the state it replaced is unpinned only once that pin has
+  * materialized, because the merge reads it. At most one state stays
+  * pinned, and [[close]] frees it: no superseded state waits for a driver
+  * GC. */
+final class IncrementalTopicState(store: MessageStore, topics: Seq[String]) {
+  private var cursor: Map[(String, Int), Long] = Map.empty
+  private var state: Option[DataFrame] = None
+
+  /** Re-read what's new and return the current compacted state
+    * (tombstones included — filter for consumers who need live keys). */
+  def refresh(): DataFrame = {
+    val nextCursor = store.endOffsets(topics)
+    val log = state match {
+      case None => store.read(topics)
+      case Some(prev) =>
+        prev.unionAll(store.readFrom(topics, cursor)
+          .select(Msg.Topic, Msg.Key, Msg.Value, Msg.Offset))
+    }
+    val merged = graft.Materialize.pin(MessageStore.compact(log))
+    state.foreach(graft.Materialize.unpin)
+    state = Some(merged)
+    cursor = nextCursor
+    merged
+  }
+
+  def current(): DataFrame = state.getOrElse(refresh())
+
+  def close(): Unit = { state.foreach(graft.Materialize.unpin); state = None }
+
+  /** Live (non-tombstoned) view in the (topic, key, value) contract. */
+  def live(): DataFrame = current()
+    .where(col(Msg.Value).isNotNull)
+    .select(Msg.Topic, Msg.Key, Msg.Value)
 }
 
 /** Production Kafka store — the Spark-native sink/source contract the message

@@ -326,28 +326,10 @@ object Streaming {
       }
   }
 
-  /** Start a continuous compaction query over a message stream into an
-    * in-memory queryable table (the O21 "background consume with a handle
-    * you can close": stop via the returned query).
-    *
-    * LOCAL/DEV SURFACE ONLY: Complete mode + the memory sink materialize the
-    * whole compacted state in the driver — the faithful analogue of the
-    * reference's atom-held map (melt.clj:325-340) including its capacity
-    * cap. At scale, consume the Update-mode stream instead:
-    * `compactedState(log)` with `foreachBatch`
-    * upserting into a keyed sink — state then lives in the distributed
-    * state store, sized by key cardinality per executor. */
-  def backgroundConsume(spark: SparkSession, log: DataFrame,
-      queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    compactedState(log).writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-
-  /** The AT-SCALE O21 recipe backgroundConsume's doc promises: Update-mode
-    * compaction with a `foreachBatch` upsert into a caller-provided keyed
-    * sink, checkpointed and restartable. Each micro-batch delivers only the
+  /** O21 background consume (ref melt.clj:325-340, whose atom-held map
+    * this replaces): Update-mode compaction with a `foreachBatch` upsert
+    * into a caller-provided keyed sink, checkpointed and restartable; stop
+    * it via the returned query. Each micro-batch delivers only the
     * keys whose compacted value CHANGED (tombstones as null values — delete
     * them downstream); the last-write-wins state lives in Spark's
     * distributed, checkpointed state store, sized by key cardinality per

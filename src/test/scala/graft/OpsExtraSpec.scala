@@ -126,7 +126,7 @@ class OpsExtraSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("incremental state stays correct across three refresh rounds") {
     val store = emuStore("inc3")
-    val inc = new VerifyOps.IncrementalTopicState(store, Seq("t"))
+    val inc = new graft.store.IncrementalTopicState(store, Seq("t"))
     store.send(Seq(("t", "a", "1")).toDF("topic", "key", "value"))
     inc.refresh()
     store.send(Seq(("t", "b", "1"), ("t", "a", "2")).toDF("topic", "key", "value"))
@@ -141,7 +141,7 @@ class OpsExtraSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("incremental topic state merges deltas without full re-read") {
     val store = emuStore("inc")
     store.send(Seq(("t", "k1", "v1"), ("t", "k2", "v2")).toDF("topic", "key", "value"))
-    val inc = new VerifyOps.IncrementalTopicState(store, Seq("t"))
+    val inc = new graft.store.IncrementalTopicState(store, Seq("t"))
     assert(inc.live().count() == 2)
     // new upsert + a tombstone for k2 arrive after the first read
     store.send(Seq(("t", "k1", "v1b"), ("t", "k2", null.asInstanceOf[String]))
@@ -150,6 +150,32 @@ class OpsExtraSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val state = inc.live().collect().map(r => r.getString(1) -> r.getString(2)).toMap
     assert(state == Map("k1" -> "v1b"))
     inc.close()
+  }
+
+  test("the incremental reader keeps one pin and frees every superseded state") {
+    val store = emuStore("pins")
+    store.send(Seq(("t", "k1", "v1"), ("t", "k2", "v2")).toDF("topic", "key", "value"))
+    val sc = spark.sparkContext
+    def pinnedSince(before: Set[Int]) = sc.getPersistentRDDs.keySet.toSet -- before
+    // O12: three refreshes, and only the returned state stays pinned
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val live = store.topicStateLive(Seq("t"), catchUpPasses = 2)
+    val pinned = pinnedSince(before)
+    assert(pinned.size == 1, s"pinned after topicStateLive: $pinned")
+    val leaves = live.queryExecution.analyzed.collectLeaves().collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }
+    assert(leaves.toSet == pinned)
+    assert(live.count() == 2)
+    // verify retries: three refreshes and a close leave nothing pinned
+    val beforeRetries = sc.getPersistentRDDs.keySet.toSet
+    val inc = new graft.store.IncrementalTopicState(store, Seq("t"))
+    (1 to 3).foreach { i =>
+      store.send(Seq(("t", "k1", s"v1.$i")).toDF("topic", "key", "value"))
+      inc.refresh()
+    }
+    inc.close()
+    assert(pinnedSince(beforeRetries).isEmpty)
   }
 
   test("loadAll sums the counts of sources that share a topic") {

@@ -32,8 +32,10 @@ trait KafkaAdmin {
   * kafka-clients is an optional runtime dependency (it ships inside the
   * spark-sql-kafka connector package on real clusters but is absent from
   * this offline build classpath, so a compile-time dependency is
-  * impossible). When the class is missing, [[load]] returns None and
-  * [[KafkaStore]] falls back to offset-by-scan. */
+  * impossible). When the class is missing, [[load]] returns None, and a
+  * [[KafkaStore]] with no injected provider refuses every metadata call
+  * (topics, partition map, end offsets) with an
+  * UnsupportedOperationException. */
 object ReflectiveKafkaAdmin {
 
   /** None when kafka-clients is not on the classpath. `extraOpts` may carry

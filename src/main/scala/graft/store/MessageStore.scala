@@ -1,8 +1,7 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.Msg
 
 /** Topic-store abstraction (SURVEY.md §7.1 module io.kafka).
@@ -99,19 +98,6 @@ object MessageStore {
     }
     s"{${byTopic.mkString(",")}}"
   }
-
-  /** Records strictly after the per-(topic,partition) cursor, by filtering
-    * a full log frame — the store-agnostic incremental-read fallback. */
-  def filterAfter(log: DataFrame,
-      after: Map[(String, Int), Long]): DataFrame =
-    if (after.isEmpty) log
-    else {
-      val cutoff = after.foldLeft(lit(-1L)) { case (acc, ((t, p), o)) =>
-        when(col(Msg.Topic) === t && col(Msg.Partition) === p, lit(o))
-          .otherwise(acc)
-      }
-      log.where(col(Msg.Offset) > cutoff)
-    }
 }
 
 /** Incrementally refreshed compacted topic state (ref melt.clj:342-357
@@ -164,12 +150,14 @@ final class IncrementalTopicState(store: MessageStore, topics: Seq[String]) {
   * columns directly; serdes O24 of the reference drop out entirely).
   * Offline, the tests run this same class over the in-JVM `kafka-emu`
   * format. Kept thin by design: everything interesting (canonicalization,
-  * compaction, diff) happens on DataFrames before/after this boundary. */
+  * compaction, diff) happens on DataFrames before/after this boundary.
+  * Each member is one path: `send` is one counted write, and topics,
+  * partitions and end offsets come only from the [[KafkaAdmin]]. */
 final class KafkaStore(spark: SparkSession, bootstrap: String,
     extraOpts: Map[String, String] = Map.empty,
-    /** Injected metadata provider (tests / custom clients). None → try the
-      * reflective AdminClient, then fall back to offset-by-scan. The admin
-      * is the one source of the partition map readFrom's fast path needs. */
+    /** Injected metadata provider (tests / custom clients). None → the
+      * reflective AdminClient; with neither, every metadata call throws
+      * UnsupportedOperationException. */
     adminOverride: Option[KafkaAdmin] = None,
     /** Spark data-source format carrying the Kafka option contract.
       * Production default is Spark's own connector; tests substitute
@@ -177,14 +165,19 @@ final class KafkaStore(spark: SparkSession, bootstrap: String,
       * branches execute end-to-end in the broker-less environment. */
     format: String = "kafka") extends MessageStore {
 
-  /** AdminClient-backed metadata when kafka-clients is on the classpath or a
-    * provider is injected; None in the offline build → scan fallbacks. */
   @volatile private var adminCreated: Option[KafkaAdmin] = None
-  private lazy val admin: Option[KafkaAdmin] = {
+  private lazy val adminLoaded: Option[KafkaAdmin] = {
     val a = adminOverride.orElse(ReflectiveKafkaAdmin.load(bootstrap, extraOpts))
     adminCreated = a
     a
   }
+
+  /** The one metadata source: the injected provider, else an AdminClient
+    * when kafka-clients is on the classpath. */
+  private def admin: KafkaAdmin = adminLoaded.getOrElse(
+    throw new UnsupportedOperationException(
+      "Kafka metadata (topics, partitions, end offsets) requires " +
+        "kafka-clients (AdminClient) on the classpath or an injected KafkaAdmin"))
 
   /** Release the AdminClient's network thread/sockets. Injected providers
     * are closed unconditionally — the store took ownership at
@@ -192,32 +185,29 @@ final class KafkaStore(spark: SparkSession, bootstrap: String,
     * actually touched (closing would otherwise have to CREATE one). */
   def close(): Unit = adminOverride.orElse(adminCreated).foreach(_.close())
 
-  private def partitionMap(topics: Seq[String]): Option[Map[String, Seq[Int]]] =
-    admin.map(_.partitionsOf(topics))
-
+  /** One write, counted by its own tasks: each row passes a counter on its
+    * way to the sink, so the frame is neither cached nor scanned twice.
+    * Spark applies a result task's accumulator update once, so a retried
+    * task counts once, and the value is final when `save()` returns. A
+    * failed write throws before the count is read. (A `Dataset.observe`
+    * count is not used: Spark's `kafka` batch sink writes through
+    * `queryExecution.toRdd`, which never completes the Observation.) */
   override def send(messages: DataFrame): Long = {
-    // cache the frame so count and write share one computation, unless the
-    // caller cached it already: that cache is the caller's to release
-    val owned = messages.storageLevel == StorageLevel.NONE
-    if (owned) messages.persist()
-    // unpersist in finally: a failed write (a broker error inside a CDC
-    // foreachBatch) must not leave the frame cached for the life of the
-    // session
-    try {
-      val n = messages.count()
-      messages
-        .selectExpr(s"${Msg.Topic}", s"CAST(${Msg.Key} AS BINARY) AS key",
-          s"CAST(${Msg.Value} AS BINARY) AS value")
-        .write.format(format)
-        // a topic append is semantically Append; also required by the DSv2
-        // write path (save()'s ErrorIfExists default is rejected there)
-        .mode("append")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("kafka.acks", "all") // ref integration_test.clj:25 acks=all
-        .options(extraOpts)
-        .save()
-      n
-    } finally { if (owned) messages.unpersist(); () }
+    val sent = spark.sparkContext.longAccumulator
+    val records = messages.selectExpr(s"${Msg.Topic}",
+      s"CAST(${Msg.Key} AS BINARY) AS key", s"CAST(${Msg.Value} AS BINARY) AS value")
+    records
+      .mapPartitions(rows => rows.map { r => sent.add(1); r })(
+        Encoders.row(records.schema))
+      .write.format(format)
+      // a topic append is semantically Append; also required by the DSv2
+      // write path (save()'s ErrorIfExists default is rejected there)
+      .mode("append")
+      .option("kafka.bootstrap.servers", bootstrap)
+      .option("kafka.acks", "all") // ref integration_test.clj:25 acks=all
+      .options(extraOpts)
+      .save()
+    sent.value
   }
 
   private def kafkaRead(topics: Seq[String], startingOffsets: String): DataFrame =
@@ -237,46 +227,32 @@ final class KafkaStore(spark: SparkSession, bootstrap: String,
   override def read(topics: Seq[String]): DataFrame =
     kafkaRead(topics, "earliest")
 
-  /** Incremental read past the cursor (ref melt.clj:278-279).
-    *
-    * Spark's Kafka source rejects a specific-offsets JSON that omits ANY
-    * partition of a subscribed topic, and the cursor (derived from observed
-    * records) cannot know about still-empty partitions — so the per-offset
-    * fast path is only taken when the admin declares the full partition
-    * map (unknown partitions start at earliest = -2). Otherwise the read
-    * starts at earliest and filters — correct on every partition at the
-    * cost of a full scan. */
+  /** Incremental read past the cursor (ref melt.clj:278-279): an empty
+    * cursor reads the whole log; otherwise the read starts at the
+    * per-partition offsets JSON built from the admin's partition map.
+    * Spark's Kafka source rejects a JSON that omits any partition of a
+    * subscribed topic, and the cursor cannot know still-empty partitions,
+    * so every declared partition is listed (unknown ones start at
+    * earliest, -2). A topic the admin does not declare holds no records
+    * and is left out of the subscription. */
   override def readFrom(topics: Seq[String],
       after: Map[(String, Int), Long]): DataFrame =
-    partitionMap(topics) match {
-      // fast path requires EVERY subscribed topic declared — Spark rejects
-      // a specific-offsets JSON with an empty/missing partition set
-      case Some(parts) if after.nonEmpty && topics.forall(parts.contains) =>
-        kafkaRead(topics,
-          MessageStore.startingOffsetsJson(topics, after, parts))
-      case _ =>
-        MessageStore.filterAfter(read(topics), after)
+    if (after.isEmpty) read(topics)
+    else {
+      val parts = admin.partitionsOf(topics)
+      val declared = topics.filter(parts.contains)
+      if (declared.isEmpty) read(topics)
+      else kafkaRead(declared,
+        MessageStore.startingOffsetsJson(declared, after, parts))
     }
 
-  override def listTopics(): Seq[String] =
-    admin.map(_.listTopics()).getOrElse(throw new UnsupportedOperationException(
-      "topic listing requires kafka-clients (AdminClient) on the classpath " +
-        "or an injected KafkaAdmin; otherwise inject topics explicitly"))
+  override def listTopics(): Seq[String] = admin.listTopics()
 
   /** Record cursor per (topic, partition): last written offset, empty
-    * partitions absent. With an AdminClient present this is one driver-side
-    * metadata call reading ZERO records (Kafka reports next-offset-to-write;
-    * converted here — an entry of 0 means an empty partition and is dropped,
-    * not mapped to cursor −1, which Spark's offset JSON would read as
-    * "latest"). Without it, the fallback derives offsets by scanning
-    * records — a full topic read per call, correct but O(topic). */
+    * partitions absent. One driver-side admin call reading ZERO records
+    * (Kafka reports next-offset-to-write; converted here — an entry of 0
+    * means an empty partition and is dropped, not mapped to cursor −1,
+    * which Spark's offset JSON would read as "latest"). */
   override def endOffsets(topics: Seq[String]): Map[(String, Int), Long] =
-    admin match {
-      case Some(a) =>
-        a.endOffsets(topics).collect { case (tp, next) if next > 0 => tp -> (next - 1) }
-      case None =>
-        read(topics).groupBy(Msg.Topic, Msg.Partition)
-          .agg(max(Msg.Offset).as("m")).collect()
-          .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
-    }
+    admin.endOffsets(topics).collect { case (tp, next) if next > 0 => tp -> (next - 1) }
 }

@@ -27,8 +27,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `startingOffsets` = earliest | latest | per-partition JSON with -2
   *    (earliest) / -1 (latest) sentinels, `endingOffsets` = latest | JSON;
   *    a specific-offsets JSON must name EVERY partition of every subscribed
-  *    topic — omissions throw, exactly like the real source (KafkaStore's
-  *    readFrom fast-path gating relies on this);
+  *    topic — omissions throw, exactly like the real source (why
+  *    KafkaStore.readFrom lists every partition the admin declares);
   *  - read schema: key/value binary, topic string, partition int, offset
   *    long, timestamp, timestampType int — start inclusive, end exclusive,
   *    offsets resolved at plan time (batch planning snapshot);

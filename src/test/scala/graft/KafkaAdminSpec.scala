@@ -2,10 +2,11 @@ package graft
 
 import graft.store.{KafkaAdmin, KafkaStore, ReflectiveKafkaAdmin}
 
-/** AdminClient-backed Kafka metadata (ref melt.clj:239-254, 301-305): with a
-  * provider present, offset/topic discovery reads ZERO records — any fall
-  * back to the scan path would throw here (no broker exists), so a passing
-  * test IS the zero-record proof. */
+/** AdminClient-backed Kafka metadata (ref melt.clj:239-254, 301-305): the
+  * admin is the store's only source of topics, partitions and end offsets,
+  * so offset/topic discovery reads ZERO records — no broker exists here,
+  * so any record read would throw, and a passing test IS the zero-record
+  * proof. Without a provider every metadata call refuses loudly. */
 class KafkaAdminSpec extends SparkSpec {
 
   private final class FakeAdmin extends KafkaAdmin {
@@ -39,6 +40,17 @@ class KafkaAdminSpec extends SparkSpec {
     intercept[UnsupportedOperationException] { bare.listTopics() }
   }
 
+  test("an admin-less store refuses every metadata call loudly") {
+    // no kafka-clients and no injected provider: end offsets and an
+    // incremental read fail naming the missing client; neither scans the log
+    val bare = new KafkaStore(spark, "unreachable:9092")
+    val errors = Seq(
+      intercept[UnsupportedOperationException](bare.endOffsets(Seq("a"))),
+      intercept[UnsupportedOperationException](
+        bare.readFrom(Seq("a"), Map(("a", 0) -> 1L))))
+    errors.foreach(e => assert(e.getMessage.contains("kafka-clients"), e.getMessage))
+  }
+
   test("admin-discovered partition map enables the per-offset readFrom path") {
     // the specific-offsets JSON the store would hand Spark, built from the
     // admin's partition discovery + the converted cursor
@@ -61,7 +73,7 @@ class KafkaAdminSpec extends SparkSpec {
 
   test("reflective loader degrades to None on this offline classpath") {
     // kafka-clients is absent here by construction; on a real cluster the
-    // same call yields Some and the scan fallback never runs
+    // same call yields Some, the store's one metadata source
     assert(ReflectiveKafkaAdmin.load("unreachable:9092").isEmpty)
   }
 }

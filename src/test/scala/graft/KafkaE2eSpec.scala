@@ -78,9 +78,9 @@ class KafkaE2eSpec extends SparkSpec {
     val v1 = Mirror.verifySync(rows, acct.source, store)
     assert(v1.matches && v1.synced && v1.syncCount == 2)
 
-    // 6. incremental read past the pre-sync cursor takes the
-    //    specific-offsets JSON fast path (admin declares every partition)
-    //    and sees exactly the 2 repair records
+    // 6. incremental read past the pre-sync cursor starts at the
+    //    specific-offsets JSON built from the admin's partition map and
+    //    sees exactly the 2 repair records
     val delta = store.readFrom(Seq(topic), cursor0)
     assert(delta.count() == 2)
     assert(delta.where(col("value").isNull).count() == 1) // the tombstone
@@ -132,7 +132,7 @@ class KafkaE2eSpec extends SparkSpec {
     assert(skipped == 8 - math.min(1, n1))
 
     // omitting a partition must throw, exactly like the real source —
-    // KafkaStore.readFrom's fast-path gating depends on this strictness
+    // why KafkaStore.readFrom lists every partition the admin declares
     val e = intercept[IllegalArgumentException](read("""{"t":{"0":0}}""").count())
     assert(e.getMessage.contains("omits partition"))
 
@@ -175,9 +175,9 @@ class KafkaE2eSpec extends SparkSpec {
   }
 
   test("a failed KafkaStore.send leaves the caller's frame uncached") {
-    // send persists the frame to count and write it from one computation;
-    // a write that throws (here: a format that does not exist, standing in
-    // for a broker error inside a CDC foreachBatch) must still release it
+    // send caches nothing: a write that throws (here: a format that does
+    // not exist, standing in for a broker error inside a CDC foreachBatch)
+    // leaves the frame as it was handed over
     import org.apache.spark.storage.StorageLevel
     import spark.implicits._
     val store = new KafkaStore(spark, "emu://nowhere:9092",
@@ -189,8 +189,8 @@ class KafkaE2eSpec extends SparkSpec {
   }
 
   test("KafkaStore.send keeps a cache the caller made") {
-    // send caches only a frame it was handed uncached; the caller's own
-    // cache outlives the send
+    // send neither caches nor releases the frame: the caller's own cache
+    // outlives the send
     import org.apache.spark.storage.StorageLevel
     import spark.implicits._
     val store = emuStore("cached")
@@ -201,6 +201,69 @@ class KafkaE2eSpec extends SparkSpec {
       assert(messages.storageLevel != StorageLevel.NONE)
       assert(store.read(Seq("t")).count() == 1)
     } finally messages.unpersist()
+  }
+
+  test("a KafkaStore.send is one write and caches nothing") {
+    // send counts its rows inside the write itself: it launches no job the
+    // plain write of the same frame does not, and persists nothing, not
+    // even while it runs (a probe in the rows lists the persisted RDDs).
+    // Jobs are counted per job group by a listener; a marker job run after
+    // each probe drains the listener's queue, which delivers in order.
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val bs = s"emu://onewrite-${java.util.UUID.randomUUID()}:9092"
+    EmuBroker.reset(bs)
+    val store = new KafkaStore(spark, bs,
+      adminOverride = Some(new EmuKafkaAdmin(bs)), format = "kafka-emu")
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val marker = s"marker-${java.util.UUID.randomUUID()}"
+    val drained = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach { g =>
+            if (g.startsWith(marker)) drained.put(g)
+            else { jobs.merge(g, 1, (a: Integer, b: Integer) => a + b); () }
+          }
+    }
+    def jobsIn(group: String)(body: => Unit): Int = {
+      sc.setJobGroup(group, "send job-count probe")
+      try body finally sc.clearJobGroup()
+      val m = s"$marker-$group"
+      sc.setJobGroup(m, "listener drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.poll(60, java.util.concurrent.TimeUnit.SECONDS) == m)
+      jobs.getOrDefault(group, 0)
+    }
+    val before = sc.getPersistentRDDs.keySet.toSet
+    KafkaE2eSpec.sc = sc
+    KafkaE2eSpec.persisted.clear()
+    val probe = udf { (v: String) =>
+      KafkaE2eSpec.persisted.addAll(
+        (KafkaE2eSpec.sc.getPersistentRDDs.keySet -- before).asJava); v
+    }.asNondeterministic()
+    val frame = sc.parallelize((0 until 400).map(i => ("t", s"k$i", s"v$i")), 4)
+      .toDF("topic", "key", "value").withColumn("value", probe(col("value")))
+    sc.addSparkListener(listener)
+    try {
+      val plain = jobsIn(s"plain-$marker") {
+        frame.selectExpr("topic", "CAST(key AS BINARY) AS key",
+          "CAST(value AS BINARY) AS value")
+          .write.format("kafka-emu").mode("append")
+          .option("kafka.bootstrap.servers", bs).save()
+      }
+      var sent = -1L
+      val viaSend = jobsIn(s"send-$marker") { sent = store.send(frame) }
+      assert(plain >= 1, "the listener saw no job of the plain write")
+      assert(sent == 400)
+      assert(viaSend <= plain, s"send ran $viaSend jobs, the plain write $plain")
+      assert(KafkaE2eSpec.persisted.isEmpty,
+        s"persisted during the send: ${KafkaE2eSpec.persisted}")
+      assert(sc.getPersistentRDDs.keySet.toSet == before)
+      assert(store.read(Seq("t")).count() == 800)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("murmur2 matches published reference vectors (key pinning is real-Kafka compatible)") {
@@ -222,4 +285,10 @@ class KafkaE2eSpec extends SparkSpec {
     assert(part("") == 681 && part("a") == 524 && part("ab") == 434 &&
       part("abc") == 107 && part("123456789") == 566)
   }
+}
+
+object KafkaE2eSpec {
+  /** Read by a probe UDF on local executor threads (same JVM). */
+  @volatile var sc: org.apache.spark.SparkContext = _
+  val persisted = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 }

@@ -152,6 +152,25 @@ class OpsExtraSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     inc.close()
   }
 
+  test("a topic the admin did not declare is picked up on the next refresh") {
+    val store = emuStore("undeclared")
+    store.send(Seq(("a", "k1", "v1")).toDF("topic", "key", "value"))
+    assert(!store.listTopics().contains("b")) // b holds no records yet
+    val inc = new graft.store.IncrementalTopicState(store, Seq("a", "b"))
+    inc.refresh()
+    // past a non-empty cursor, a topic the admin does not declare is left
+    // out of the subscription; with none declared the read is the full log
+    val cursor = store.endOffsets(Seq("a"))
+    assert(store.readFrom(Seq("a", "never"), cursor).count() == 0)
+    assert(store.readFrom(Seq("never"), cursor).count() == 0)
+    store.send(Seq(("b", "k2", "v2"), ("a", "k1", "v1b")).toDF("topic", "key", "value"))
+    inc.refresh()
+    val live = inc.live().collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
+    assert(live == Map(("a", "k1") -> "v1b", ("b", "k2") -> "v2"))
+    inc.close()
+  }
+
   test("the incremental reader keeps one pin and frees every superseded state") {
     val store = emuStore("pins")
     store.send(Seq(("t", "k1", "v1"), ("t", "k2", "v2")).toDF("topic", "key", "value"))

@@ -176,20 +176,26 @@ object ChangeTracking {
   /** The CDC stream: the DSv2 source (`format("graft-cdc")`, the one CDC
     * runner) piped through the message projection. Emits (topic, key,
     * value, sys_change_version) — the version column is kept so each
-    * micro-batch can be compacted before the send. The sink recipe:
+    * micro-batch can be compacted before the send. A keyless source is
+    * rejected here: every change would key `{}`, and [[batchMessages]]
+    * would compact a whole batch to one message (melt tracks only tables
+    * with a PK, sql_server.clj:23-27). The sink recipe:
     * {{{
     *   .writeStream.foreachBatch { (b, _) =>
     *     store.send(ChangeTracking.batchMessages(b, source))
     *   }
     * }}} */
   def changeStream(spark: org.apache.spark.sql.SparkSession, feedName: String,
-      source: SourceDef, fromVersion: Long = 0L): DataFrame =
+      source: SourceDef, fromVersion: Long = 0L): DataFrame = {
+    require(source.keys.nonEmpty,
+      s"CDC needs a primary key: ${source.schemaName}.${source.name} has none")
     projectChanges(
       spark.readStream.format("graft-cdc")
         .option("feed", feedName)
         .option("fromVersion", fromVersion.toString)
         .load(),
       source)
+  }
 
   /** O29 — one [[changeStream]] micro-batch → the messages to send (ref
     * sql_server.clj:126-153 send-changes). Keeps only the NEWEST version

@@ -11,7 +11,9 @@ import graft.SourceDef
   * table-valued function, the PK left-outer join and the version range
   * bound (pushdown by construction, SURVEY §4).
   *
-  *  - `schema`: the entity query's columns, from a `Where 1 = 0` probe;
+  *  - `schema`: the entity query's columns, from a `Where 1 = 0` probe,
+  *    typed by Spark's SQL Server JDBC dialect ([[JdbcRows]]) — the map
+  *    `spark.read.jdbc` applies to the snapshot;
   *  - `rows(from, to)`: changes with version in `(from, to]`;
   *  - `minValidVersion()`: CHANGE_TRACKING_MIN_VALID_VERSION, which the
   *    stream checks before every batch (retention may have cleaned up the

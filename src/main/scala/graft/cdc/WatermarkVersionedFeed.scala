@@ -36,6 +36,11 @@ import org.apache.spark.sql.types.StructType
   * There is no retention window (the table itself IS the history), so
   * `minValidVersion` keeps its default: any stored offset stays valid.
   *
+  * Rows decode through Spark's JDBC dialect for `url` ([[JdbcRows]]), the
+  * one `spark.read.jdbc` uses, so a streamed row's value canonicalizes
+  * byte-for-byte like the bootstrap snapshot's (DECIMAL scale, TIME and
+  * DATE columns included).
+  *
   * `watermarkCol` must cast to BIGINT in the source database (sequence,
   * version counter, epoch millis). Identifiers are ANSI-quoted
   * (`"ident"`, embedded quotes doubled) — portable across Derby,

@@ -1324,6 +1324,24 @@ object Similarity {
       .limit(k)
   }
 
+  /** Per-query top-k of a scored `(qid, vec_id, cos)` frame, ties broken
+    * by `vec_id`: TWO-LEVEL (per-(qid, shard) heads, then a final window
+    * over shards·k survivors), so no window partition is corpus-sized.
+    * The result is shard-count-invariant; `shards` only sets parallelism.
+    * Returns `(qid, vec_id)`. */
+  private def twoLevelTopK(scored: DataFrame, k: Int,
+      shards: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w1 = Window.partitionBy("qid", "shard")
+      .orderBy(col("cos").desc, col("vec_id"))
+    val w2 = Window.partitionBy("qid")
+      .orderBy(col("cos").desc, col("vec_id"))
+    scored.withColumn("shard", pmod(col("vec_id"), lit(shards)))
+      .withColumn("r1", row_number().over(w1)).where(col("r1") <= k)
+      .withColumn("r2", row_number().over(w2)).where(col("r2") <= k)
+      .select("qid", "vec_id")
+  }
+
   /** RECALL AUDIT of a persisted IVF index (ss17's audit, index
     * edition): for a panel of the index's OWN stored vectors, measured
     * recall@k of the probe path (nprobe cells) against exact search over
@@ -1346,8 +1364,7 @@ object Similarity {
     import spark.implicits._
     require(panelIds.nonEmpty, "empty audit panel")
     require(nprobe >= 1 && k >= 1, s"nprobe/k: $nprobe/$k")
-    // Two-level top-k shard count (recallAuditOf's trick): output is
-    // shard-count-invariant, so this is purely a parallelism knob.
+    // twoLevelTopK's shard count: purely a parallelism knob
     val Shards = 64
     val path0 = resolveIndexDir(spark, path)
     val postings = spark.read.parquet(path0)
@@ -1379,29 +1396,19 @@ object Similarity {
     // probe path does, so the audit replays the served ordering exactly
     val cosCol = round(
       guardedCos(dotLong(col("q"), col("qq")), col("qn2"), col("n2")), 4)
-    def topK(scored: DataFrame): DataFrame = {
-      val w1 = Window.partitionBy("qid", "shard")
-        .orderBy(col("cos").desc, col("vec_id"))
-      val w2 = Window.partitionBy("qid")
-        .orderBy(col("cos").desc, col("vec_id"))
-      scored.withColumn("shard", pmod(col("vec_id"), lit(Shards)))
-        .withColumn("r1", row_number().over(w1)).where(col("r1") <= k)
-        .withColumn("r2", row_number().over(w2)).where(col("r2") <= k)
-        .select("qid", "vec_id")
-    }
     // approx arm: only the nprobe cells' postings per qid (the equi-join
     // on cell prunes partitions — the same pruning the probe path gets
     // from its IN list); exact arm: the full postings scan, once, for
     // ALL panel members together — |panel|× cheaper than the old
     // 2-jobs-per-member driver loop.
-    val approxK = topK(postings
+    val approxK = twoLevelTopK(postings
       .join(broadcast(probeCells), Seq("cell"))
       .where(col("vec_id") =!= col("qid"))
       .join(broadcast(panel), Seq("qid"))
-      .select(col("qid"), col("vec_id"), cosCol.as("cos")))
-    val exactK = topK(postings.crossJoin(broadcast(panel))
+      .select(col("qid"), col("vec_id"), cosCol.as("cos")), k, Shards)
+    val exactK = twoLevelTopK(postings.crossJoin(broadcast(panel))
       .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), cosCol.as("cos")))
+      .select(col("qid"), col("vec_id"), cosCol.as("cos")), k, Shards)
     val hits = exactK.join(approxK, Seq("qid", "vec_id"))
       .groupBy("qid").agg(count(lit(1)).as("hits"))
     panel.select(col("qid"))
@@ -2070,7 +2077,6 @@ object Similarity {
   def recallAuditOf(qv0: DataFrame, panel: Int, k: Int,
       shards: Int): DataFrame = {
     import graft.functions.ArrayDot.dotLong
-    import org.apache.spark.sql.expressions.Window
     require(panel >= 1 && k >= 1 && shards >= 1, s"$panel/$k/$shards")
     val qv = qv0
       .withColumn("b1", hyperplaneBucket(0))
@@ -2081,20 +2087,9 @@ object Similarity {
         col("n2").as("qn2"), col("b1").as("qb1"), col("b2").as("qb2"))
     val cosCol = round(dotLong(col("q"), col("qq")).cast("double") /
       sqrt(col("qn2").cast("double") * col("n2").cast("double")), 4)
-    // two-level per-query top-k: no corpus-sized window partition
-    def topK(scored: DataFrame): DataFrame = {
-      val w1 = Window.partitionBy("qid", "shard")
-        .orderBy(col("cos").desc, col("vec_id"))
-      val w2 = Window.partitionBy("qid")
-        .orderBy(col("cos").desc, col("vec_id"))
-      scored.withColumn("shard", pmod(col("vec_id"), lit(shards)))
-        .withColumn("r1", row_number().over(w1)).where(col("r1") <= k)
-        .withColumn("r2", row_number().over(w2)).where(col("r2") <= k)
-        .select("qid", "vec_id")
-    }
-    val exactK = topK(qv.crossJoin(broadcast(queries))
+    val exactK = twoLevelTopK(qv.crossJoin(broadcast(queries))
       .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), cosCol.as("cos")))
+      .select(col("qid"), col("vec_id"), cosCol.as("cos")), k, shards)
     // ss03's multi-probe candidates, panel-wide: probe frames broadcast
     def tableCand(bucketCol: String, queryBucket: String): DataFrame = {
       val probes = queries.select(col("qid"),
@@ -2106,11 +2101,11 @@ object Similarity {
     val cand = tableCand("b1", "qb1").unionAll(tableCand("b2", "qb2"))
       .distinct()
       .transform(graft.Materialize.pin)
-    val approxK = topK(cand
+    val approxK = twoLevelTopK(cand
       .join(qv.select(col("vec_id"), col("q"), col("n2")), Seq("vec_id"))
       .join(broadcast(queries.select(col("qid"), col("qq"), col("qn2"))),
         Seq("qid"))
-      .select(col("qid"), col("vec_id"), cosCol.as("cos")))
+      .select(col("qid"), col("vec_id"), cosCol.as("cos")), k, shards)
     val nCand = cand.groupBy("qid").agg(count(lit(1)).as("n_cand"))
     val hits = exactK.join(approxK, Seq("qid", "vec_id"))
       .groupBy("qid").agg(count(lit(1)).as("hits"))

@@ -11,8 +11,8 @@ import graft.SourceDef
   * Discovery uses raw `java.sql.DatabaseMetaData` — Spark exposes no PK
   * metadata API (ref melt.clj:72-84 getTables/getColumns/getPrimaryKeys).
   * Reads go through `spark.read.jdbc` so Catalyst pushes filters and prunes
-  * columns into the generated SQL; for big tables pass a `Partitioning` so
-  * the scan fans out over executors instead of a single JDBC cursor.
+  * columns into the generated SQL. Each table is one JDBC query in one
+  * task, as in melt's query-source (melt.clj:141-151).
   */
 object Jdbc {
 
@@ -73,30 +73,18 @@ object Jdbc {
 
   private def emptyToNull(s: String): String = if (s == null || s.isEmpty) null else s
 
-  /** Partitioned-read spec — REQUIRED at scale: without it the whole table
-    * flows through one JDBC cursor on one executor. Column must be indexed and
-    * roughly uniform (the PK). */
-  final case class Partitioning(column: String, lower: Long, upper: Long,
-      num: Int)
-
   /** O3 — scan a source: `Select * From schema.name` or user SQL override
     * (ref melt.clj:135-151). Filters/pruning applied on the returned frame
     * push down into the JDBC query via Catalyst. */
   def readSource(spark: SparkSession, url: String,
       props: java.util.Properties, source: SourceDef,
-      sql: Option[String] = None,
-      part: Option[Partitioning] = None): DataFrame = {
+      sql: Option[String] = None): DataFrame = {
     val reader = spark.read.format("jdbc")
       .option("url", url)
     val withTable = sql match {
       case Some(q) => reader.option("query", q)
       case None =>
-        val r = reader.option("dbtable", s"${source.schemaName}.${source.name}")
-        part.fold(r)(p => r
-          .option("partitionColumn", p.column)
-          .option("lowerBound", p.lower.toString)
-          .option("upperBound", p.upper.toString)
-          .option("numPartitions", p.num.toString))
+        reader.option("dbtable", s"${source.schemaName}.${source.name}")
     }
     props.stringPropertyNames.forEach { k =>
       withTable.option(k, props.getProperty(k))

@@ -94,6 +94,14 @@ class CdcStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("a keyless source is rejected when the change stream is defined") {
+    val keyless = SourceDef("graft", "dbo", "audit_log", Nil)
+    val e = intercept[IllegalArgumentException] {
+      ChangeTracking.changeStream(spark, "no_such_feed", keyless)
+    }
+    assert(e.getMessage.contains("dbo.audit_log"), e.getMessage)
+  }
+
   test("fromVersion option starts past already-synced history") {
     val feed = new MemFeed
     feed.add("I", 1L, 1.0)

@@ -49,6 +49,19 @@ class JdbcSpec extends SparkSpec {
     assert(df.columns.map(_.toLowerCase).toSeq == Seq("id", "name"))
   }
 
+  test("O3 user-SQL scan: readSource runs the query, not the table") {
+    val tables = Jdbc.discover(conn)
+    val cust = tables.find(_.source.name.toLowerCase == "customers").get
+    val props = new java.util.Properties()
+    props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+    val df = Jdbc.readSource(spark, "jdbc:derby:memory:graftdb", props,
+      cust.source,
+      sql = Some("SELECT name, id * 10 AS id10 FROM customers WHERE id > 1"))
+    assert(df.columns.map(_.toLowerCase).toSeq == Seq("name", "id10"))
+    assert(df.collect().map(r => (r.getString(0), r.getInt(1))).toSeq ==
+      Seq(("bob", 20)))
+  }
+
   test("O23 schema snapshot + drift detection") {
     val tables = Jdbc.discover(conn)
     val snap = tmpDir("schema") + "/schema.txt"

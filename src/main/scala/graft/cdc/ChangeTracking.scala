@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{Msg, SourceDef}
 import graft.canonical.Canonical
-import graft.store.MessageStore
 
 /** Change-tracking CDC (SURVEY.md §7.1 module cdc.sqlserver; ref
   * /root/reference/src/jdbc/melt/sql_server.clj).
@@ -127,8 +126,10 @@ object ChangeTracking {
 
   /** Variant for [[SqlServerFeed]]: version inlined (a Long, so no
     * injection surface) and no ORDER BY, so the feed can append its
-    * `Where` range bound; within a batch the newest version per key wins
-    * by compaction ([[batchMessages]]), not by row order. */
+    * `Where` range bound. Row order does not matter: CHANGETABLE returns
+    * net change, one row per changed key carrying its newest version, so
+    * a batch holds no two versions of one key. A key whose newest change
+    * lies past the upper bound is left for the next batch. */
   def changeEntitySqlAt(schema: String, table: String, keys: Seq[String],
       nonKeyCols: Seq[String], ver: Long): String =
     entityScanSql(schema, table, keys, nonKeyCols, ver.toString,
@@ -175,11 +176,11 @@ object ChangeTracking {
 
   /** The CDC stream: the DSv2 source (`format("graft-cdc")`, the one CDC
     * runner) piped through the message projection. Emits (topic, key,
-    * value, sys_change_version) — the version column is kept so each
-    * micro-batch can be compacted before the send. A keyless source is
-    * rejected here: every change would key `{}`, and [[batchMessages]]
-    * would compact a whole batch to one message (melt tracks only tables
-    * with a PK, sql_server.clj:23-27). The sink recipe:
+    * value, sys_change_version); the version column is kept for callers
+    * that read it, and [[batchMessages]] drops it. A keyless source is
+    * rejected here: every change would key `{}`, so every message would
+    * overwrite one key's state (melt tracks only tables with a PK,
+    * sql_server.clj:23-27). The sink recipe:
     * {{{
     *   .writeStream.foreachBatch { (b, _) =>
     *     store.send(ChangeTracking.batchMessages(b, source))
@@ -198,19 +199,17 @@ object ChangeTracking {
   }
 
   /** O29 — one [[changeStream]] micro-batch → the messages to send (ref
-    * sql_server.clj:126-153 send-changes). Keeps only the NEWEST version
-    * per key ([[MessageStore.compact]] with `sys_change_version` as the
-    * offset): a sink append is unordered within a batch, so a row-level
-    * feed emitting several versions of one key would make downstream
-    * last-write-wins arbitrary (net change tracking already yields one row
-    * per key — then this is a no-op). Then the user transform, which sees
-    * the documented (topic, key, value) message frame — same contract as
-    * the load/sync paths (model.scala). The stream's offset comes from the
-    * feed, so a transform that drops rows cannot lose the version cursor. */
+    * sql_server.clj:126-153 send-changes, which hands CHANGETABLE's rows
+    * straight to the producer). The feed already delivers net change, at
+    * most one row per key (the `VersionedFeed.rows` contract), so this is
+    * the (topic, key, value) projection and nothing else: no aggregation,
+    * and one micro-batch send is one map-only job. Then the user
+    * transform, which sees the documented (topic, key, value) message
+    * frame — same contract as the load/sync paths (model.scala). The
+    * stream's offset comes from the feed, so a transform that drops rows
+    * cannot lose the version cursor. */
   def batchMessages(batch: DataFrame, source: SourceDef): DataFrame = {
-    val newest = MessageStore.compact(
-      batch.withColumnRenamed("sys_change_version", Msg.Offset))
-      .select(Msg.Topic, Msg.Key, Msg.Value)
-    source.transform.fold(newest)(f => f(newest))
+    val msgs = batch.select(Msg.Topic, Msg.Key, Msg.Value)
+    source.transform.fold(msgs)(f => f(msgs))
   }
 }

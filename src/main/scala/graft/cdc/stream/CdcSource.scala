@@ -48,7 +48,15 @@ object CdcFeedRegistry {
   trait VersionedFeed {
     def schema: StructType
     def currentVersion(): Long
-    /** Rows with `sys_change_version` in `(fromExclusive, toInclusive]`. */
+    /** The net change in `(fromExclusive, toInclusive]`: at most one row per
+      * primary key, the key's newest change in the range, with its
+      * `sys_change_version`. This is what SQL Server's CHANGETABLE returns
+      * (net change tracking, ref sql_server.clj:63-95); a watermark feed
+      * reads current table rows, one per key. Each micro-batch is one
+      * input partition, so the stream sends these rows as they are:
+      * nothing downstream compacts a batch, and a feed that returned
+      * several versions of one key would leave the key's last write to
+      * the sink's unordered append. */
     def rows(fromExclusive: Long, toInclusive: Long): Iterator[Row]
     /** Oldest version a reader may resume from; history before it has been
       * cleaned up. Feeds without a retention window keep the default. */

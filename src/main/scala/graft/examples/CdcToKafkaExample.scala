@@ -27,11 +27,11 @@ import graft.store.MessageStore
   *     recovery, trigger scheduling, and exactly-once batch planning ride
   *     the Structured Streaming engine and its checkpoint — the hand-rolled
   *     version-chaining loop of the reference disappears.
-  *  3. Per micro-batch: [[ChangeTracking.batchMessages]] — canonical
-  *     messages compacted to the NEWEST version per key (batch-internal
-  *     sink append order is undefined), then the source's transform — and
-  *     one [[MessageStore.send]]; with a [[graft.store.KafkaStore]] this
-  *     is the `.format("kafka")` producer write, acks=all.
+  *  3. Per micro-batch: [[ChangeTracking.batchMessages]] — the feed's net
+  *     change (at most one row per key) projected to canonical messages,
+  *     then the source's transform — and one [[MessageStore.send]], one
+  *     map-only job; with a [[graft.store.KafkaStore]] this is the
+  *     `.format("kafka")` producer write, acks=all.
   *
   * Restart contract: stop the query; call [[start]] again with the same
   * checkpoint dir. The source resumes from the committed version offset —
@@ -61,7 +61,8 @@ object CdcToKafkaExample {
   }
 
   /** The continuous half: version-offset micro-batches → one store send of
-    * each batch's [[ChangeTracking.batchMessages]]. */
+    * each batch's [[ChangeTracking.batchMessages]], with no per-batch
+    * shuffle. */
   def start(spark: SparkSession, feedName: String, source: SourceDef,
       store: MessageStore, checkpointDir: String,
       fromVersion: Long): StreamingQuery =

@@ -1214,17 +1214,14 @@ object Dedup {
     * (measured: dd06's 7 observed rounds → 3). Cost: one map-only pass
     * over the label-sized frame, no exchange (union-find needs no
     * particular distribution — whatever rows co-locate, collapse). */
-  /** Sentinel tagging rows that participate in the union-find but emit no
-    * label row (the first message round's raw-edge rows): impossible as a
-    * real pre-round label — node ids are non-negative at every phase
-    * (doc_ids at phase 0, prior-phase labels — themselves doc_ids —
-    * after contraction). */
-  private val CcEdgeRow = Long.MinValue
-
+  /** `stepped` is (doc_id, lbl, __prev, __edge). Rows with `__edge` set
+    * (the first message round's raw-edge rows) join the union-find but
+    * emit no label row. The tag is its own column because every Long is a
+    * legal node id, so no `__prev` value can mark an edge row. */
   private def ccLocalJump(stepped: DataFrame): DataFrame = {
     val spark = stepped.sparkSession
     import spark.implicits._
-    stepped.as[(Long, Long, Long)]
+    stepped.as[(Long, Long, Long, Boolean)]
       .mapPartitions { it =>
         val rows = it.toArray
         val parent = new java.util.HashMap[Long, Long](rows.length * 2)
@@ -1236,13 +1233,13 @@ object Dedup {
           while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
           r
         }
-        rows.foreach { case (d, l, _) =>
+        rows.foreach { case (d, l, _, _) =>
           val rd = find(d); val rl = find(l)
           if (rd < rl) parent.put(rl, rd)
           else if (rl < rd) parent.put(rd, rl)
         }
         rows.iterator.collect {
-          case (d, _, p) if p != CcEdgeRow => (d, find(d), p)
+          case (d, _, p, false) => (d, find(d), p)
         }
       }
       .toDF("doc_id", "lbl", "__prev")
@@ -1324,13 +1321,15 @@ object Dedup {
       // once per phase (AQE sizes the partitions: one partition at
       // report scale = a full component solve in this round; many at
       // cluster scale = per-partition star contraction), and every later
-      // round stays message-sized. The sentinel __prev keeps edge rows
-      // out of the emitted label set.
+      // round stays message-sized. The __edge tag keeps edge rows out of
+      // the emitted label set.
+      val labelRows = hopped.withColumn("__edge", lit(false))
       val ufIn = if (rounds == 2)
-        hopped.unionAll(edges.select(col("ida").as("doc_id"),
-          col("idb").as("lbl"), lit(CcEdgeRow).as("__prev")))
+        labelRows.unionAll(edges.select(col("ida").as("doc_id"),
+          col("idb").as("lbl"), col("idb").as("__prev"),
+          lit(true).as("__edge")))
           .hint("rebalance", "doc_id")
-      else hopped
+      else labelRows
       val merged = ccLocalJump(ufIn)
         .observe(obs,
           count(when(col("lbl") < col("__prev"), 1)).as("improved"))

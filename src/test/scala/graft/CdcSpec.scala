@@ -1,7 +1,12 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, TimeUnit}
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 import graft.cdc.{ChangeTracking, SqlServerFeed}
 import graft.cdc.stream.CdcFeedRegistry
@@ -12,7 +17,7 @@ import graft.store.MessageStore
   * runner (`graft-cdc` stream → [[ChangeTracking.batchMessages]] → store),
   * replaying the reference's three-round UPDATE/INSERT/DELETE arc
   * (ref integration/jdbc/melt/integration_test.clj:197-230). */
-class CdcSpec extends SparkSpec {
+class CdcSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   import spark.implicits._
 
@@ -107,6 +112,58 @@ class CdcSpec extends SparkSpec {
       q.processAllAvailable()
       assert(store.read(Seq(source.topic)).count() == 3)
     } finally q.stop()
+  }
+
+  test("O29 a micro-batch send is one map-only job: no Exchange, one Spark job") {
+    // the feed delivers net change, so batchMessages is a projection: its
+    // plan shuffles nothing and the send is the write's one job. Jobs are
+    // counted per batch by a listener keyed on a local property; a marker
+    // job run after the stream stops drains the listener's ordered queue.
+    val sc = spark.sparkContext
+    val store = emuStore("cdc1job")
+    val feed = new MemFeed
+    (1L to 20L).foreach(k => feed.add("I", k, k.toDouble))
+    feed.add("U", 3L, 30.0)
+    feed.add("D", 4L, null)
+    CdcFeedRegistry.register("o29onejob", feed)
+    val probe = s"graft.test.sendProbe-${java.util.UUID.randomUUID()}"
+    val jobs = new ConcurrentHashMap[String, Integer]()
+    val drained = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(probe)))
+          .foreach { tag =>
+            if (tag == "drain") drained.put(tag)
+            else { jobs.merge(tag, 1, (a: Integer, b: Integer) => a + b); () }
+          }
+    }
+    val exchanges = mutable.ArrayBuffer.empty[String]
+    sc.addSparkListener(listener)
+    try {
+      val q = ChangeTracking.changeStream(spark, "o29onejob", source)
+        .writeStream.foreachBatch { (b: DataFrame, id: Long) =>
+          val msgs = ChangeTracking.batchMessages(b, source)
+          exchanges ++= collect(msgs.queryExecution.executedPlan) {
+            case e: Exchange => e.toString
+          }
+          sc.setLocalProperty(probe, s"batch-$id")
+          try store.send(msgs) finally sc.setLocalProperty(probe, null)
+          ()
+        }.start()
+      try {
+        q.processAllAvailable()
+        feed.add("U", 5L, 50.0)
+        q.processAllAvailable()
+      } finally q.stop()
+      sc.setLocalProperty(probe, "drain")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(probe, null)
+      assert(drained.poll(60, TimeUnit.SECONDS) == "drain")
+    } finally sc.removeSparkListener(listener)
+    assert(exchanges.isEmpty, exchanges.mkString("\n"))
+    assert(jobs.asScala.toMap == Map("batch-0" -> 1, "batch-1" -> 1), jobs)
+    // 20 keys' net change, then the one update
+    assert(store.read(Seq(source.topic)).count() == 21)
   }
 
   test("O29/O11 delete round-trip: tombstone removes the key from state") {

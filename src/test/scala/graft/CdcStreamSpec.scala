@@ -102,6 +102,21 @@ class CdcStreamSpec extends SparkSpec {
     assert(e.getMessage.contains("dbo.audit_log"), e.getMessage)
   }
 
+  test("MemFeed delivers net change: I/U/D of one key in a range is one D row") {
+    // the VersionedFeed contract, as CHANGETABLE keeps it: each key's
+    // newest change in (from, to], in version order
+    val feed = new MemFeed
+    feed.add("I", 7L, 1.0)
+    feed.add("I", 8L, 3.0)
+    feed.add("U", 7L, 2.0)
+    feed.add("D", 7L, null)
+    def net(from: Long, to: Long) = feed.rows(from, to)
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+    assert(net(0, 4) == Seq((2L, "I", 8L), (4L, "D", 7L)))
+    // a range that ends before the delete nets to the update
+    assert(net(0, 3) == Seq((2L, "I", 8L), (3L, "U", 7L)))
+  }
+
   test("fromVersion option starts past already-synced history") {
     val feed = new MemFeed
     feed.add("I", 1L, 1.0)

@@ -6,7 +6,9 @@ import org.apache.spark.sql.types._
 import graft.cdc.stream.CdcFeedRegistry
 
 /** Mutable in-memory feed standing in for CHANGETABLE: each `add` commits
-  * one change at the next version. `minValid` plays the retention window. */
+  * one change at the next version. `rows` returns net change, as
+  * CHANGETABLE does: each key's last change in the range, in version
+  * order. `minValid` plays the retention window. */
 final class MemFeed(minValid: Long = Long.MinValue)
     extends CdcFeedRegistry.VersionedFeed {
   private val log = mutable.ArrayBuffer.empty[Row]
@@ -25,8 +27,9 @@ final class MemFeed(minValid: Long = Long.MinValue)
   override def currentVersion(): Long = version
   override def minValidVersion(): Long = minValid
   override def rows(from: Long, to: Long): Iterator[Row] = synchronized {
-    log.filter { r => val v = r.getLong(0); v > from && v <= to }
-      .toVector.iterator
+    val inRange = log.filter { r => val v = r.getLong(0); v > from && v <= to }
+    val last = inRange.map(r => r.getLong(2) -> r).toMap
+    inRange.filter(r => last(r.getLong(2)) eq r).toVector.iterator
   }
 }
 

@@ -120,23 +120,14 @@ class PipelinesSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("property: connectedComponents == union-find on random graphs") {
-    // random edge sets, tiny propagation budgets (so the CONTRACTION path
-    // runs, not just the frontier loop), checked against a brute-force
-    // driver-side union-find — the fallback must be exactly as correct as
-    // the fast path on arbitrary topology, not just chains
+  /** Seeds 1–5 of `graphGen` (edge pairs a < b, round budget): each graph's
+    * [[operators.Dedup.connectedComponents]] labels must equal a
+    * brute-force driver-side union-find's component minima. */
+  private def ccMatchesUnionFind(
+      graphGen: org.scalacheck.Gen[(List[(Long, Long)], Int)]): Unit = {
     import spark.implicits._
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
-    val graphGen = for {
-      n <- Gen.choose(2, 60) // node id space
-      m <- Gen.choose(1, 90) // edges
-      edges <- Gen.listOfN(m, for {
-        a <- Gen.choose(0L, n.toLong - 1)
-        b <- Gen.choose(0L, n.toLong - 1) if a != b
-      } yield (math.min(a, b), math.max(a, b)))
-      budget <- Gen.oneOf(1, 2, 3)
-    } yield (edges.distinct, budget)
     (1L to 5L).foreach { seed =>
       val (pairs, budget) =
         graphGen.pureApply(Gen.Parameters.default, Seed(seed))
@@ -160,6 +151,43 @@ class PipelinesSpec extends SparkSpec {
         assert(got == want)
       }
     }
+  }
+
+  test("property: connectedComponents == union-find on random graphs") {
+    // random edge sets, tiny propagation budgets (so the CONTRACTION path
+    // runs, not just the frontier loop), checked against a brute-force
+    // driver-side union-find — the fallback must be exactly as correct as
+    // the fast path on arbitrary topology, not just chains
+    import org.scalacheck.Gen
+    ccMatchesUnionFind(for {
+      n <- Gen.choose(2, 60) // node id space
+      m <- Gen.choose(1, 90) // edges
+      edges <- Gen.listOfN(m, for {
+        a <- Gen.choose(0L, n.toLong - 1)
+        b <- Gen.choose(0L, n.toLong - 1) if a != b
+      } yield (math.min(a, b), math.max(a, b)))
+      budget <- Gen.oneOf(1, 2, 3)
+    } yield (edges.distinct, budget))
+  }
+
+  test("property: connectedComponents == union-find over the full Long id range") {
+    // node ids are any Long, Long.MinValue and Long.MaxValue included; the
+    // edge rows the first message round feeds to the local union-find must
+    // not be told apart from label rows by an id value
+    import org.scalacheck.Gen
+    val idGen = Gen.frequency(
+      3 -> Gen.oneOf(Long.MinValue, Long.MinValue + 1, -1L, 0L, Long.MaxValue),
+      5 -> Gen.choose(Long.MinValue, Long.MaxValue))
+    ccMatchesUnionFind(for {
+      ids <- Gen.listOfN(24, idGen).map(_.distinct)
+      m <- Gen.choose(1, 30)
+      edges <- Gen.listOfN(m, for {
+        a <- Gen.oneOf(ids)
+        b <- Gen.oneOf(ids) if a != b
+      } yield (math.min(a, b), math.max(a, b)))
+      budget <- Gen.oneOf(1, 2, 3)
+      // every graph holds the extreme edge, so every seed covers it
+    } yield (((Long.MinValue, Long.MinValue + 1) :: edges).distinct, budget))
   }
 
   test("c02 keeps exactly the quality-passing cluster representatives") {

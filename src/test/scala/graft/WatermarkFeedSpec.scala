@@ -111,6 +111,23 @@ class WatermarkFeedSpec extends SparkSpec {
     } finally stream.stop()
   }
 
+  test("watermark feed delivers net change: a thrice-updated key is one row, newest SEQ") {
+    exec("CREATE TABLE WMNET (OK BIGINT PRIMARY KEY, TOTAL DOUBLE, SEQ BIGINT)",
+      "INSERT INTO WMNET VALUES (1, 1.0, 1), (2, 2.0, 2)")
+    val net = new WatermarkVersionedFeed(url, props, "APP", "WMNET",
+      watermarkCol = "SEQ", entityCols = Seq("OK", "TOTAL", "SEQ"))
+    exec("UPDATE WMNET SET TOTAL = 1.1, SEQ = 3 WHERE OK = 1",
+      "UPDATE WMNET SET TOTAL = 1.2, SEQ = 4 WHERE OK = 1",
+      "UPDATE WMNET SET TOTAL = 1.3, SEQ = 5 WHERE OK = 1")
+    assert(net.currentVersion() == 5)
+    // (ok, total, seq, sys_change_version, sys_change_operation)
+    def rows(from: Long, to: Long) = net.rows(from, to)
+      .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2), r.getLong(3)))
+      .toSeq.sortBy(_._1)
+    assert(rows(2, 5) == Seq((1L, 1.3, 5L, 5L)))
+    assert(rows(0, 5) == Seq((1L, 1.3, 5L, 5L), (2L, 2.0, 2L, 2L)))
+  }
+
   test("safetyLag holds back the cursor so commit-skew stragglers are never passed") {
     exec("CREATE TABLE WMLAG (OK BIGINT PRIMARY KEY, SEQ BIGINT)",
       "INSERT INTO WMLAG VALUES (1, 10), (2, 20)")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Similarity, TextAnalysis}
 import graft.sources.Sink
+import graft.sources.Tables
 
 /** The third leg of the deployment story: [[CurationExample]] curates the
   * BACKFILL, [[StreamingCurationExample]] guards the LIVE TAIL, and this
@@ -90,7 +91,7 @@ object NightlyIngestExample {
     val ledgerDir = s"$curatedDir/_fingerprints"
     val existing =
       if (dirExists(spark, ledgerDir))
-        spark.read.parquet(ledgerDir)
+        Tables.parquet(spark, ledgerDir)
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Seq(
@@ -247,7 +248,7 @@ object NightlyIngestExample {
       ledgerBuckets: Int = 32): Unit = {
     require(dirExists(spark, curatedDir),
       s"reconcileNight: no store at $curatedDir — nothing to rebuild from")
-    val store = spark.read.parquet(curatedDir)
+    val store = Tables.parquet(spark, curatedDir)
     store.select("fp").where(col("fp").isNotNull).distinct()
       .write.mode("overwrite").parquet(s"$curatedDir/_fingerprints")
     nearDupLedger.foreach { name =>
@@ -258,7 +259,7 @@ object NightlyIngestExample {
       store.select(col("doc_id").as("vec_id")), "vec_id")
     val liveIndex = Similarity.resolveIndexDir(spark, indexDir)
     if (dirExists(spark, s"$liveIndex/_centroids")) {
-      val indexed = spark.read.parquet(liveIndex).select("vec_id")
+      val indexed = Tables.parquet(spark, liveIndex).select("vec_id")
       // the emptiness probe and the append both consume the anti-join;
       // pinned, the store ⋈ index scan runs once
       val missing = graft.Materialize.pin(

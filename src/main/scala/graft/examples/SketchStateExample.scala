@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{Hashing, KmvMinK}
 import graft.operators.Relational
+import graft.sources.Tables
 
 /** "Use as a library" — the PERSISTED-STATE warehouse pattern end to end:
   * raw rows are scanned ONCE (the night they arrive), everything a
@@ -89,7 +90,7 @@ object SketchStateExample {
     val events = graft.sources.Tables.t(spark, dir, "events")
     nightly(events).write.mode("overwrite").parquet(s"$out/state")
     nightlyCms(events).write.mode("overwrite").parquet(s"$out/cms")
-    report(mergeStates(spark.read.parquet(s"$out/state")))
+    report(mergeStates(Tables.parquet(spark, s"$out/state")))
       .show(truncate = false)
     spark.stop()
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.streaming.Streaming
+import graft.sources.Tables
 
 /** The live-tail sibling of [[CurationExample]]: the batch pipeline curates
   * the accumulated corpus; this one guards the INGEST — the same dedup and
@@ -165,7 +166,7 @@ object StreamingCurationExample {
 
   /** Read back the additive profile store as per-(window, source) totals. */
   def profile(spark: SparkSession, profileDir: String): DataFrame =
-    spark.read.parquet(profileDir)
+    Tables.parquet(spark, profileDir)
       .groupBy("window_start", "source")
       .agg(sum("n_docs").as("n_docs"),
         (sum("sum_quality") / sum("n_docs")).as("mean_quality"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 import graft.sources.Tables.t
 
 /** Distributed BPE tokenizer TRAINING and application (Sennrich et al.
@@ -250,7 +251,7 @@ object Bpe {
     * broadcast-by-closure form [[segment]] and [[t25BpeSegment]] consume.
     * Bounded driver collect: numMerges rows by construction. */
   def readMerges(spark: SparkSession, path: String): Seq[Merge] =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .orderBy("rank")
       .collect()
       .map(r => Merge(r.getAs[Int]("rank"), r.getAs[String]("left"),
@@ -273,7 +274,7 @@ object Bpe {
     // (single-threaded access, freed with the task); the size cap bounds
     // worst-case memory on adversarial all-unique-token input, where the
     // memo simply stops filling and the UDF degrades to the uncached cost.
-    val nBpe = udf(new SegmentCounter(merges.toArray))
+    val nBpe = udf(new SegmentCounter(merges.toIndexedSeq))
     docs
       .select(col(idCol),
         split(lower(trim(col(textCol))), "\\s+").as("__ws"))
@@ -285,8 +286,9 @@ object Bpe {
   /** [[segmentWith]]'s UDF body: per-word BPE token count with a
     * per-task-instance memo (see the call site for the scale rationale).
     * A named serializable class rather than a lambda so the memo field
-    * has somewhere to live. */
-  private final class SegmentCounter(merges: Array[(String, String)])
+    * has somewhere to live. The merge list is held as the immutable `Seq`
+    * [[segment]] takes, so a memo miss replays it without copying it. */
+  private final class SegmentCounter(merges: IndexedSeq[(String, String)])
       extends (Seq[String] => Long) with Serializable {
     @transient private var cache: java.util.HashMap[String, java.lang.Long] = _
     private val MaxMemo = 1 << 20
@@ -299,7 +301,7 @@ object Bpe {
         val hit = cache.get(w)
         if (hit != null) total += hit.longValue()
         else {
-          val n = segment(w, merges.toSeq).length.toLong
+          val n = segment(w, merges).length.toLong
           if (cache.size < MaxMemo) cache.put(w, java.lang.Long.valueOf(n))
           total += n
         }

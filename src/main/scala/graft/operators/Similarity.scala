@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 import graft.sources.Tables.t
 
 /** Similarity search over the `embeddings` table (64-dim float vectors) —
@@ -1071,7 +1072,7 @@ object Similarity {
   private def cachedCentroids(spark: SparkSession,
       path0: String): Array[CentroidRow] =
     cachedArtifact(spark, s"$path0/_centroids") {
-      spark.read.parquet(s"$path0/_centroids")
+      Tables.parquet(spark, s"$path0/_centroids")
         .select(col("clabel").cast("long"), col("cvec"),
           col("cn2").cast("long"))
         .collect()
@@ -1085,7 +1086,7 @@ object Similarity {
   private def cachedCodebooks(spark: SparkSession,
       path0: String): Array[CodebookRow] =
     cachedArtifact(spark, s"$path0/_pq_codebooks") {
-      spark.read.parquet(s"$path0/_pq_codebooks")
+      Tables.parquet(spark, s"$path0/_pq_codebooks")
         .select(col("sub").cast("int"), col("clabel").cast("long"),
           col("cvec"), col("cn2").cast("long"))
         .collect()
@@ -1124,7 +1125,8 @@ object Similarity {
   def assignToIvfIndex(spark: SparkSession, path: String, vecs: DataFrame,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     import graft.functions.ArrayDot.dotLong
-    val cent = spark.read.parquet(s"${resolveIndexDir(spark, path)}/_centroids")
+    val cent =
+      Tables.parquet(spark, s"${resolveIndexDir(spark, path)}/_centroids")
     vecs
       .select(col(idCol).cast("long").as("vec_id"), lit(0L).as("label"),
         quantizedOf(col(embCol)).as("q"))
@@ -1208,7 +1210,7 @@ object Similarity {
       if (stats.nAppended > 0 && stats.meanCos < retrainBelow) {
         // drifted: rebuild from stored postings + the (already-quantized)
         // new batch, seeded by the current cells so training warm-starts
-        val old = spark.read.parquet(live)
+        val old = Tables.parquet(spark, live)
           .select(col("vec_id"), col("cell").as("label"), col("q"),
             col("n2"))
         val fresh = assigned
@@ -1311,7 +1313,7 @@ object Similarity {
     val qn2 = q.map(x => x * x).sum
     val qlit = typedLit(q)
     val cells = rankCellsDriverSide(cachedCentroids(spark, path0), q, nprobe)
-    val probed = spark.read.parquet(path0)
+    val probed = Tables.parquet(spark, path0)
       .where(col("cell").isInCollection(cells))
     val scoped =
       if (excludeIds.isEmpty) probed
@@ -1367,7 +1369,7 @@ object Similarity {
     // twoLevelTopK's shard count: purely a parallelism knob
     val Shards = 64
     val path0 = resolveIndexDir(spark, path)
-    val postings = spark.read.parquet(path0)
+    val postings = Tables.parquet(spark, path0)
     // THE one bounded driver collect of the audit: |panel| stored
     // vectors, fetched once so the panel becomes a local relation (the
     // exact-search probe set) instead of re-filtering the postings scan
@@ -1383,7 +1385,7 @@ object Similarity {
     // rows — the per-qid nprobe cut is a window over ≤ cells rows.
     val cellRank = Window.partitionBy("qid")
       .orderBy(col("ccos").desc, col("clabel"))
-    val probeCells = spark.read.parquet(s"$path0/_centroids")
+    val probeCells = Tables.parquet(spark, s"$path0/_centroids")
       .crossJoin(broadcast(panel))
       .select(col("qid"),
         guardedCos(dotLong(col("cvec"), col("qq")), col("cn2"), col("qn2"))
@@ -1482,7 +1484,7 @@ object Similarity {
     * CODES, and re-encoding is one bounded pass over the postings). */
   def addPqToIvfIndex(spark: SparkSession, path: String, m: Int): Unit = {
     val path0 = resolveIndexDir(spark, path)
-    val postings = spark.read.parquet(path0)
+    val postings = Tables.parquet(spark, path0)
       .select(col("vec_id"), col("cell").cast("long").as("label"), col("q"),
         col("cell"))
     val (subs, cb0) = pqPartsQ(postings.select("vec_id", "label", "q"), m)
@@ -1516,7 +1518,7 @@ object Similarity {
     val cbPath = new org.apache.hadoop.fs.Path(path0, "_pq_codebooks")
     if (!fsOf(spark, path0).exists(cbPath)) false
     else {
-      val m = spark.read.parquet(s"$path0/_pq_codebooks")
+      val m = Tables.parquet(spark, s"$path0/_pq_codebooks")
         .agg(max(col("sub"))).head().getInt(0) + 1
       addPqToIvfIndex(spark, path0, m)
       ensurePointerUnmoved(spark, path, path0)
@@ -1564,7 +1566,7 @@ object Similarity {
     }
     import spark.implicits._
     val lut = lutRows.toDF("sub", "code", "qdot", "cn2")
-    val codes = spark.read.parquet(s"$path0/_pq_codes")
+    val codes = Tables.parquet(spark, s"$path0/_pq_codes")
       .where(col("cell").isInCollection(cells))
     val scopedCodes =
       if (excludeIds.isEmpty) codes
@@ -1579,7 +1581,7 @@ object Similarity {
     if (rerank <= 0) adc.limit(k)
     else {
       val shortlist = adc.limit(rerank).select("vec_id")
-      spark.read.parquet(path0)
+      Tables.parquet(spark, path0)
         .where(col("cell").isInCollection(cells))
         .join(broadcast(shortlist), Seq("vec_id"))
         .select(col("vec_id"),
@@ -1740,11 +1742,11 @@ object Similarity {
       m: Int): Unit = {
     import graft.functions.ArrayDot.dotLong
     val path0 = resolveIndexDir(spark, path)
-    val postings = spark.read.parquet(path0)
+    val postings = Tables.parquet(spark, path0)
       .select(col("vec_id"), col("cell").cast("long").as("label"), col("q"))
     val cnt = postings.groupBy("label").agg(count(lit(1)).as("n"))
     // cell references from the stored SUM centroids ÷ live counts
-    val rcm = spark.read.parquet(s"$path0/_centroids")
+    val rcm = Tables.parquet(spark, s"$path0/_centroids")
       .select(col("clabel").as("label"), col("cvec"))
       .join(broadcast(cnt), "label")
       .select(col("label"),
@@ -1793,7 +1795,7 @@ object Similarity {
   private def cachedRpqCentroids(spark: SparkSession,
       path0: String): Array[RpqCentroidRow] =
     cachedArtifact(spark, s"$path0/_rpq_centroids") {
-      spark.read.parquet(s"$path0/_rpq_centroids")
+      Tables.parquet(spark, s"$path0/_rpq_centroids")
         .select(col("label").cast("long"), col("rvec"))
         .collect()
         .map(r => RpqCentroidRow(r.getLong(0), r.getSeq[Long](1).toArray))
@@ -1802,7 +1804,7 @@ object Similarity {
   private def cachedRpqCodebooks(spark: SparkSession,
       path0: String): Array[CodebookRow] =
     cachedArtifact(spark, s"$path0/_rpq_codebooks") {
-      spark.read.parquet(s"$path0/_rpq_codebooks")
+      Tables.parquet(spark, s"$path0/_rpq_codebooks")
         .select(col("sub").cast("int"), col("clabel").cast("long"),
           col("cvec"), col("cn2").cast("long"))
         .collect()
@@ -1848,7 +1850,7 @@ object Similarity {
     import spark.implicits._
     val lut = lutRows.toDF("sub", "code", "qdot")
     val cellDot = cellDotRows.toDF("cell", "rcdot")
-    val codes = spark.read.parquet(s"$path0/_rpq_codes")
+    val codes = Tables.parquet(spark, s"$path0/_rpq_codes")
       .where(col("cell").isInCollection(cells))
     val scoped =
       if (excludeIds.isEmpty) codes
@@ -1865,7 +1867,7 @@ object Similarity {
     if (rerank <= 0) adc.limit(k)
     else {
       val shortlist = adc.limit(rerank).select("vec_id")
-      spark.read.parquet(path0)
+      Tables.parquet(spark, path0)
         .where(col("cell").isInCollection(cells))
         .join(broadcast(shortlist), Seq("vec_id"))
         .select(col("vec_id"),

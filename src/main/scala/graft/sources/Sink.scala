@@ -191,7 +191,7 @@ object Sink {
       n
     }
     val before = countFiles(srcPath)
-    writeCurated(spark.read.parquet(srcPath), destPath,
+    writeCurated(Tables.parquet(spark, srcPath), destPath,
       partitionCols = partitionCols, sortCols = sortCols,
       maxRecordsPerFile = maxRecordsPerFile)
     (before, countFiles(destPath))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.Msg
 import graft.store.MessageStore
+import graft.sources.Tables
 
 /** Structured Streaming surface (SURVEY.md §7.1 module stream).
   *
@@ -965,7 +966,7 @@ object Streaming {
     import graft.functions.ArrayDot.dotLong
     import graft.operators.Similarity
     val path0 = Similarity.resolveIndexDir(spark, indexPath)
-    val bench = spark.read.parquet(path0)
+    val bench = Tables.parquet(spark, path0)
       .select(col("vec_id").as("idb"), col("q").as("bq"),
         col("n2").as("bn2"))
     vecs
@@ -1049,7 +1050,7 @@ object Streaming {
         graft.operators.ImageCodec.gifFrameSigsComposed,
       idCol: String = "doc_id",
       payloadCol: String = "payload"): DataFrame = {
-    val ledger = spark.read.parquet(ledgerPath)
+    val ledger = Tables.parquet(spark, ledgerPath)
       .select(col("doc_id").as("idb"), col("nf"), col("cb"), col("ssum"))
       .where(col("cb") > 0)
     graft.operators.Multimodal

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Deterministic scale-up replicator for dress rehearsals at N× the bench
   * scale factor: `runMain graft.tools.ScaleUp <srcDir> <dstDir> <factor>`.
@@ -112,7 +113,7 @@ object ScaleUp {
         else scaled.withColumn("ts", expr(
           "timestampadd(MICROSECOND, ts div 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"))
       out.write.mode("overwrite").parquet(s"$dstDir/$t.parquet")
-      val n = spark.read.parquet(s"$dstDir/$t.parquet").count()
+      val n = Tables.parquet(spark, s"$dstDir/$t.parquet").count()
       println(s"[scaleup] $t -> $n rows")
     }
     spark.stop()

@@ -54,6 +54,12 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(id, info, builder)
 
+  /** Whether a file listing skips `name`: Spark's rule (`_` and `.` names
+    * except `k=v` partition directories and parquet summary files;
+    * `HadoopFSUtils` is private[spark]). */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** Block until every posted listener event has been delivered
     * (`listenerBus` is private[spark]): a profiler reads its listener's
     * counters right after an action returns, before the bus has caught up. */

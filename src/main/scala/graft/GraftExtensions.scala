@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo,
+  Literal}
 import org.apache.spark.sql.graft.Bridge
-import graft.functions.{ArrayDotLong, ArrayIntersectCountLong, NfcNormalizeExpr}
+import graft.functions.{ArrayDotLong, ArrayIntersectCountLong, KmvBottomKPairs,
+  KmvMergePairs, KmvMergeSet, KmvMinK, KmvMinKSet, NfcNormalizeExpr}
 
 /** SQL-surface registration of graft's native expressions, so
   * `spark.sql("... array_dot_long(a, b) ...")` works like a built-in.
@@ -23,91 +25,55 @@ object GraftExtensions {
   private type FunctionDescription =
     (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  private def binary(name: String, clazz: Class[_],
-      mk: (Expression, Expression) => Expression): FunctionDescription = (
+  private def fn(name: String, clazz: Class[_], arity: Int)(
+      mk: Seq[Expression] => Expression): FunctionDescription = (
     FunctionIdentifier(name),
     new ExpressionInfo(clazz.getName, name),
     (children: Seq[Expression]) => {
-      require(children.length == 2,
-        s"$name takes 2 arguments, got ${children.length}")
-      mk(children.head, children(1))
+      require(children.length == arity, s"$name takes $arity argument" +
+        s"${if (arity == 1) "" else "s"}, got ${children.length}")
+      mk(children)
     })
 
-  private def unary(name: String, clazz: Class[_],
-      mk: Expression => Expression): FunctionDescription = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(clazz.getName, name),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"$name takes 1 argument, got ${children.length}")
-      mk(children.head)
-    })
+  /** A KMV aggregate over `arity` columns and then k, which must be an
+    * integer literal (it sizes the state). */
+  private def kmv(name: String, clazz: Class[_], arity: Int)(
+      mk: (Seq[Expression], Int) => Expression): FunctionDescription =
+    fn(name, clazz, arity + 1) { c =>
+      c.last match {
+        case Literal(k: Int, _) => mk(c.init, k)
+        case other => throw new IllegalArgumentException(
+          s"$name: k must be an integer literal, got $other")
+      }
+    }
 
   private val all: Seq[FunctionDescription] = Seq(
-    binary("array_dot_long", classOf[ArrayDotLong], ArrayDotLong.apply),
-    binary("array_intersect_count_long", classOf[ArrayIntersectCountLong],
-      ArrayIntersectCountLong.apply),
+    fn("array_dot_long", classOf[ArrayDotLong], 2)(
+      c => ArrayDotLong(c(0), c(1))),
+    fn("array_intersect_count_long", classOf[ArrayIntersectCountLong], 2)(
+      c => ArrayIntersectCountLong(c(0), c(1))),
     // nfc_normalize: SQL surface for the canonicalization expression.
     // (bloom_might_contain_long is deliberately NOT here: its filter
     // argument is a driver-built object, not expressible in SQL text.)
-    unary("nfc_normalize", classOf[NfcNormalizeExpr], NfcNormalizeExpr.apply),
-    // kmv_min_k(hash, k): bounded-state distinct sketch aggregate — the
-    // k argument must be a foldable integer literal (it sizes the state)
-    binary("kmv_min_k", classOf[graft.functions.KmvMinK], (h, kExpr) => {
-      val k = kExpr match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"kmv_min_k: k must be an integer literal, got $other")
-      }
-      graft.functions.KmvMinK(h, k)
-    }),
-    // kmv_min_k_set(hash, k): the sketch as a storable/mergeable array —
-    // union = kmv_min_k_set over the exploded sketch contents
-    binary("kmv_min_k_set", classOf[graft.functions.KmvMinKSet], (h, kExpr) => {
-      val k = kExpr match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"kmv_min_k_set: k must be an integer literal, got $other")
-      }
-      graft.functions.KmvMinKSet(h, k)
-    }),
-    // kmv_merge_set(sketch_array, k) / kmv_merge_pairs(sample_array, k):
-    // re-aggregate STORED sketch/sample columns directly — the
-    // rollup-maintenance path (q43)
-    binary("kmv_merge_set", classOf[graft.functions.KmvMergeSet],
-      (s, kExpr) => {
-        val k = kExpr match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"kmv_merge_set: k must be an integer literal, got $other")
-        }
-        graft.functions.KmvMergeSet(s, k)
-      }),
-    binary("kmv_merge_pairs", classOf[graft.functions.KmvMergePairs],
-      (s, kExpr) => {
-        val k = kExpr match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"kmv_merge_pairs: k must be an integer literal, got $other")
-        }
-        graft.functions.KmvMergePairs(s, k)
-      }),
-    // kmv_bottom_k_pairs(hash, payload, k): deterministic bottom-k-by-hash
-    // row sample carrying a double payload — the quantile-sketch
-    // aggregate behind q42; k sizes the state, so it must be a literal
-    (FunctionIdentifier("kmv_bottom_k_pairs"),
-      new ExpressionInfo(classOf[graft.functions.KmvBottomKPairs].getName,
-        "kmv_bottom_k_pairs"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          s"kmv_bottom_k_pairs takes 3 arguments, got ${children.length}")
-        val k = children(2) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"kmv_bottom_k_pairs: k must be an integer literal, got $other")
-        }
-        graft.functions.KmvBottomKPairs(children.head, children(1), k)
-      }))
+    fn("nfc_normalize", classOf[NfcNormalizeExpr], 1)(
+      c => NfcNormalizeExpr(c(0))),
+    // the KMV aggregates: k sizes the bounded state, so it must be a
+    // foldable integer literal. kmv_min_k(hash, k) is the (held, kth)
+    // distinct sketch; kmv_min_k_set(hash, k) the storable array (union =
+    // kmv_min_k_set over the exploded contents); kmv_bottom_k_pairs(hash,
+    // payload, k) the bottom-k-by-hash row sample behind q42;
+    // kmv_merge_set / kmv_merge_pairs(stored_array, k) re-aggregate
+    // STORED sketch/sample columns directly — the rollup-maintenance path
+    // (q43)
+    kmv("kmv_min_k", classOf[KmvMinK], 1)((c, k) => KmvMinK(c(0), k)),
+    kmv("kmv_min_k_set", classOf[KmvMinKSet], 1)(
+      (c, k) => KmvMinKSet(c(0), k)),
+    kmv("kmv_merge_set", classOf[KmvMergeSet], 1)(
+      (c, k) => KmvMergeSet(c(0), k)),
+    kmv("kmv_merge_pairs", classOf[KmvMergePairs], 1)(
+      (c, k) => KmvMergePairs(c(0), k)),
+    kmv("kmv_bottom_k_pairs", classOf[KmvBottomKPairs], 2)(
+      (c, k) => KmvBottomKPairs(c(0), c(1), k)))
 
   /** Register on an already-built session. */
   def register(spark: SparkSession): Unit =

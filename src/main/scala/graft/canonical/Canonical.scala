@@ -41,23 +41,22 @@ object Canonical {
   def lowerCols(df: DataFrame): DataFrame =
     df.toDF(df.columns.toIndexedSeq.map(_.toLowerCase): _*)
 
-  /** Deterministic struct: fields sorted by lower-cased name. */
-  private def sortedStruct(df: DataFrame, cols: Seq[String]): Column =
-    struct(cols.sortBy(_.toLowerCase).map(c => col(c).as(c.toLowerCase)): _*)
+  /** Canonical JSON of `cols`: `to_json` over a struct whose fields are
+    * sorted by lower-cased name. */
+  private def json(cols: Seq[String]): Column =
+    to_json(struct(cols.sortBy(_.toLowerCase)
+      .map(c => col(c).as(c.toLowerCase)): _*), jsonOpts)
 
   /** Canonical JSON of the key columns (sorted field order ⇒ string equality
     * = logical equality, ref melt.clj:359-362 ensure-sorted). */
-  def keyJson(df: DataFrame, keys: Seq[String]): Column =
-    to_json(sortedStruct(df, keys), jsonOpts)
+  def keyJson(df: DataFrame, keys: Seq[String]): Column = json(keys)
 
   /** Canonical JSON of the whole row. */
-  def valueJson(df: DataFrame): Column =
-    to_json(sortedStruct(df, df.columns.toSeq), jsonOpts)
+  def valueJson(df: DataFrame): Column = json(df.columns.toSeq)
 
   /** Canonical JSON of a column subset (CDC values exclude the tracking
     * fields, ref sql_server.clj:111-119 relocate-tracking-fields). */
-  def valueJsonOf(df: DataFrame, cols: Seq[String]): Column =
-    to_json(sortedStruct(df, cols), jsonOpts)
+  def valueJsonOf(df: DataFrame, cols: Seq[String]): Column = json(cols)
 
   /** Row frame → message frame `(topic, key, value)` (ref melt.clj:49-53
     * `message`: key = select-keys(row, keys), value = row). Keyless sources

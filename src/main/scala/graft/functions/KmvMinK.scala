@@ -1,16 +1,50 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression,
+  GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
-  StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType,
+  LongType, StructField, StructType}
+
+/** A KMV aggregate: a [[BottomK]] state of one element kind, k elements
+  * serialized between partial and final aggregation. A declaration says
+  * how an input row offers into the state and, where it is not the
+  * ascending `array<element>`, what the state reads out as. */
+abstract class KmvAggregate[E](kind: BottomK.Kind[E])
+    extends TypedImperativeAggregate[BottomK[E]] with Serializable {
+  def k: Int
+  require(k >= 2, s"$prettyName needs k >= 2: $k")
+
+  protected def offer(buf: BottomK[E], input: InternalRow): Unit
+
+  /** Offer every element of a stored sketch array; null offers nothing. */
+  protected def offerStored(buf: BottomK[E], arr: Any): Unit =
+    if (arr != null) {
+      val a = arr.asInstanceOf[ArrayData]
+      var i = 0
+      while (i < a.numElements()) { buf.offer(kind.read(a, i)); i += 1 }
+    }
+
+  override def nullable: Boolean = false
+  override def dataType: DataType =
+    ArrayType(kind.elementType, containsNull = false)
+  override def createAggregationBuffer(): BottomK[E] = BottomK(kind, k)
+  override def update(buf: BottomK[E], input: InternalRow): BottomK[E] = {
+    offer(buf, input); buf
+  }
+  override def merge(b1: BottomK[E], b2: BottomK[E]): BottomK[E] = {
+    b1.offerAll(b2); b1
+  }
+  override def eval(buf: BottomK[E]): Any = buf.toArrayData
+  override def serialize(buf: BottomK[E]): Array[Byte] = buf.toBytes
+  override def deserialize(bytes: Array[Byte]): BottomK[E] =
+    BottomK.fromBytes(kind, k, bytes)
+}
 
 /** KMV (k-minimum-values) distinct-count sketch as a native Catalyst
   * aggregate — the BOUNDED-STATE alternative to exact `COUNT(DISTINCT)`:
@@ -30,65 +64,25 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
   * hash when saturated, NULL below saturation (the caller reports `held`
   * itself — the sketch holds the whole set). Estimate when saturated:
   * `(k−1) · 2⁶⁰ / kth` (hashes are uniform on [0, 2⁶⁰): the k-th order
-  * statistic estimates k/n of the range). Relative error ≈ 1/√(k−2).
-  *
-  * State is a bounded TreeSet: insert, truncate-above-k — O(log k) per
-  * row, k longs serialized between partial and final aggregation. */
+  * statistic estimates k/n of the range). Relative error ≈ 1/√(k−2). */
 case class KmvMinK(child: Expression, k: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]]
-    with UnaryLike[Expression] {
-
-  require(k >= 2, s"kmv_min_k needs k >= 2: $k")
+    extends KmvAggregate[Long](BottomK.Hashes) with UnaryLike[Expression] {
 
   override def prettyName: String = "kmv_min_k"
-  override def nullable: Boolean = false
   override def dataType: DataType = StructType(Seq(
     StructField("held", IntegerType, nullable = false),
     StructField("kth", LongType, nullable = true)))
 
-  override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
-    new java.util.TreeSet[java.lang.Long]()
-
-  override def update(buf: java.util.TreeSet[java.lang.Long],
-      input: InternalRow): java.util.TreeSet[java.lang.Long] = {
+  override protected def offer(buf: BottomK[Long], input: InternalRow)
+      : Unit = {
     val v = child.eval(input)
-    if (v != null) {
-      buf.add(v.asInstanceOf[Long])
-      if (buf.size > k) buf.pollLast()
-    }
-    buf
+    if (v != null) buf.offer(v.asInstanceOf[Long])
   }
 
-  override def merge(b1: java.util.TreeSet[java.lang.Long],
-      b2: java.util.TreeSet[java.lang.Long])
-      : java.util.TreeSet[java.lang.Long] = {
-    val it = b2.iterator()
-    while (it.hasNext) {
-      b1.add(it.next())
-      if (b1.size > k) b1.pollLast()
-    }
-    b1
-  }
-
-  override def eval(buf: java.util.TreeSet[java.lang.Long]): Any =
+  override def eval(buf: BottomK[Long]): Any =
     new GenericInternalRow(Array[Any](buf.size,
-      if (buf.size >= k) buf.last().longValue() else null))
-
-  override def serialize(buf: java.util.TreeSet[java.lang.Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buf.size)
-    val it = buf.iterator()
-    while (it.hasNext) bb.putLong(it.next())
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte])
-      : java.util.TreeSet[java.lang.Long] = {
-    val buf = createAggregationBuffer()
-    val bb = ByteBuffer.wrap(bytes)
-    while (bb.remaining() >= 8) buf.add(bb.getLong())
-    buf
-  }
+      if (buf.size >= k) buf.last else null))
 
   override def withNewMutableAggBufferOffset(newOffset: Int): KmvMinK =
     copy(mutableAggBufferOffset = newOffset)
@@ -98,74 +92,26 @@ case class KmvMinK(child: Expression, k: Int,
     copy(child = newChild)
 }
 
-/** Sketch-ALGEBRA variant of [[KmvMinK]]: identical bounded-TreeSet
-  * state, but `eval` returns the held hashes THEMSELVES (ascending
-  * array, ≤ k elements) instead of the (held, kth) summary — which makes
-  * the sketch a storable, RE-AGGREGABLE column: union of sketches =
-  * `kmv_min_k_set` over the exploded sketch contents (insert + truncate
-  * is associative and commutative, so any merge tree yields the same k
-  * minima as one pass over the raw rows — asserted in KmvSpec). That is
-  * the pre-aggregation pattern at 100 TB: persist one k-long array per
-  * (partition unit, dimension) beside the data, answer any coarser
-  * distinct-count rollup from the sketch column alone, never rescanning
-  * raw rows. */
+/** Sketch-ALGEBRA variant of [[KmvMinK]]: the same state, but `eval`
+  * returns the held hashes THEMSELVES (ascending array, ≤ k elements)
+  * instead of the (held, kth) summary — which makes the sketch a
+  * storable, RE-AGGREGABLE column: union of sketches = `kmv_min_k_set`
+  * over the exploded sketch contents, or [[KmvMergeSet]] over the stored
+  * arrays (any merge tree yields the same k minima as one pass over the
+  * raw rows — asserted in KmvSpec). That is the pre-aggregation pattern
+  * at 100 TB: persist one k-long array per (partition unit, dimension)
+  * beside the data, answer any coarser distinct-count rollup from the
+  * sketch column alone, never rescanning raw rows. */
 case class KmvMinKSet(child: Expression, k: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]]
-    with UnaryLike[Expression] {
-
-  require(k >= 2, s"kmv_min_k_set needs k >= 2: $k")
+    extends KmvAggregate[Long](BottomK.Hashes) with UnaryLike[Expression] {
 
   override def prettyName: String = "kmv_min_k_set"
-  override def nullable: Boolean = false
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
 
-  override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
-    new java.util.TreeSet[java.lang.Long]()
-
-  override def update(buf: java.util.TreeSet[java.lang.Long],
-      input: InternalRow): java.util.TreeSet[java.lang.Long] = {
+  override protected def offer(buf: BottomK[Long], input: InternalRow)
+      : Unit = {
     val v = child.eval(input)
-    if (v != null) {
-      buf.add(v.asInstanceOf[Long])
-      if (buf.size > k) buf.pollLast()
-    }
-    buf
-  }
-
-  override def merge(b1: java.util.TreeSet[java.lang.Long],
-      b2: java.util.TreeSet[java.lang.Long])
-      : java.util.TreeSet[java.lang.Long] = {
-    val it = b2.iterator()
-    while (it.hasNext) {
-      b1.add(it.next())
-      if (b1.size > k) b1.pollLast()
-    }
-    b1
-  }
-
-  override def eval(buf: java.util.TreeSet[java.lang.Long]): Any = {
-    val out = new Array[Any](buf.size)
-    val it = buf.iterator()
-    var i = 0
-    while (it.hasNext) { out(i) = it.next().longValue(); i += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override def serialize(buf: java.util.TreeSet[java.lang.Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buf.size)
-    val it = buf.iterator()
-    while (it.hasNext) bb.putLong(it.next())
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte])
-      : java.util.TreeSet[java.lang.Long] = {
-    val buf = createAggregationBuffer()
-    val bb = ByteBuffer.wrap(bytes)
-    while (bb.remaining() >= 8) buf.add(bb.getLong())
-    buf
+    if (v != null) buf.offer(v.asInstanceOf[Long])
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): KmvMinKSet =
@@ -183,89 +129,32 @@ case class KmvMinKSet(child: Expression, k: Int,
   * hash-sample QUANTILE estimation (q42): exact per-group quantiles sort
   * the whole group (at 100 TB the sort IS the query); a bottom-k-by-hash
   * sample moves exactly k (hash, value) pairs per partition, map-side
-  * combined and mergeable (insert + truncate, associative/commutative),
-  * and — unlike reservoir sampling, whose content depends on encounter
-  * order — its content is a pure function of the DATA, so Spark and a
-  * DuckDB oracle (row_number over the same hash order) select the exact
-  * same rows and hence the exact same quantile values. Payload ties on
-  * equal hashes are broken by the payload itself, keeping the selection
-  * total-ordered on both engines.
+  * combined and mergeable, and — unlike reservoir sampling, whose content
+  * depends on encounter order — its content is a pure function of the
+  * DATA, so Spark and a DuckDB oracle (row_number over the same hash
+  * order) select the exact same rows and hence the exact same quantile
+  * values. Payload ties on equal hashes are broken by the payload itself
+  * ([[BottomK.Pairs]]' order), keeping the selection total-ordered on
+  * both engines.
   *
-  * State: bounded TreeSet of (hash, payload) lexicographic pairs —
-  * O(log k) per row, 16·k bytes between partial and final aggregation.
-  * Returns the sample as an ascending `array<struct<h, v>>` (≤ k rows) —
-  * storable and re-mergeable exactly like [[KmvMinKSet]] arrays. */
+  * 16·k bytes between partial and final aggregation. Returns the sample
+  * as an ascending `array<struct<h, v>>` (≤ k rows) — storable and
+  * re-mergeable exactly like [[KmvMinKSet]] arrays. */
 case class KmvBottomKPairs(hash: Expression, payload: Expression, k: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[java.util.TreeSet[(Long, Double)]]
-    with org.apache.spark.sql.catalyst.trees.BinaryLike[Expression] {
-
-  require(k >= 2, s"kmv_bottom_k_pairs needs k >= 2: $k")
+    extends KmvAggregate[(Long, Double)](BottomK.Pairs)
+    with BinaryLike[Expression] {
 
   override def prettyName: String = "kmv_bottom_k_pairs"
-  override def nullable: Boolean = false
   override def left: Expression = hash
   override def right: Expression = payload
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StructType(Seq(
-      StructField("h", LongType, nullable = false),
-      StructField("v", org.apache.spark.sql.types.DoubleType,
-        nullable = false))), containsNull = false)
 
-  override def createAggregationBuffer(): java.util.TreeSet[(Long, Double)] =
-    new java.util.TreeSet[(Long, Double)](KmvBottomKPairs.pairOrd)
-
-  override def update(buf: java.util.TreeSet[(Long, Double)],
-      input: InternalRow): java.util.TreeSet[(Long, Double)] = {
+  override protected def offer(buf: BottomK[(Long, Double)],
+      input: InternalRow): Unit = {
     val h = hash.eval(input)
     val v = payload.eval(input)
-    if (h != null && v != null) {
-      buf.add((h.asInstanceOf[Long], v.asInstanceOf[Double]))
-      if (buf.size > k) buf.pollLast()
-    }
-    buf
-  }
-
-  override def merge(b1: java.util.TreeSet[(Long, Double)],
-      b2: java.util.TreeSet[(Long, Double)])
-      : java.util.TreeSet[(Long, Double)] = {
-    val it = b2.iterator()
-    while (it.hasNext) {
-      b1.add(it.next())
-      if (b1.size > k) b1.pollLast()
-    }
-    b1
-  }
-
-  override def eval(buf: java.util.TreeSet[(Long, Double)]): Any = {
-    val out = new Array[Any](buf.size)
-    val it = buf.iterator()
-    var i = 0
-    while (it.hasNext) {
-      val (h, v) = it.next()
-      out(i) = new GenericInternalRow(Array[Any](h, v))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override def serialize(buf: java.util.TreeSet[(Long, Double)])
-      : Array[Byte] = {
-    val bb = ByteBuffer.allocate(16 * buf.size)
-    val it = buf.iterator()
-    while (it.hasNext) {
-      val (h, v) = it.next()
-      bb.putLong(h); bb.putDouble(v)
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte])
-      : java.util.TreeSet[(Long, Double)] = {
-    val buf = createAggregationBuffer()
-    val bb = ByteBuffer.wrap(bytes)
-    while (bb.remaining() >= 16) buf.add((bb.getLong(), bb.getDouble()))
-    buf
+    if (h != null && v != null)
+      buf.offer((h.asInstanceOf[Long], v.asInstanceOf[Double]))
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int)
@@ -282,71 +171,16 @@ case class KmvBottomKPairs(hash: Expression, payload: Expression, k: Int,
   * the same bounded k-minima as building from raw hashes — so a rollup
   * table with a sketch column re-aggregates DIRECTLY
   * (`groupBy(coarser).agg(kmv_merge_set(sk))`), no explode, no join, no
-  * raw-row rescan. Insert+truncate is associative/commutative, so any
-  * merge tree ≡ the one-pass sketch (asserted in KmvSpec). */
+  * raw-row rescan. Any merge tree ≡ the one-pass sketch (asserted in
+  * KmvSpec). */
 case class KmvMergeSet(child: Expression, k: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]]
-    with UnaryLike[Expression] {
-
-  require(k >= 2, s"kmv_merge_set needs k >= 2: $k")
+    extends KmvAggregate[Long](BottomK.Hashes) with UnaryLike[Expression] {
 
   override def prettyName: String = "kmv_merge_set"
-  override def nullable: Boolean = false
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
 
-  override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
-    new java.util.TreeSet[java.lang.Long]()
-
-  override def update(buf: java.util.TreeSet[java.lang.Long],
-      input: InternalRow): java.util.TreeSet[java.lang.Long] = {
-    val arr = child.eval(input)
-    if (arr != null) {
-      val a = arr.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      var i = 0
-      while (i < a.numElements()) {
-        buf.add(a.getLong(i))
-        if (buf.size > k) buf.pollLast()
-        i += 1
-      }
-    }
-    buf
-  }
-
-  override def merge(b1: java.util.TreeSet[java.lang.Long],
-      b2: java.util.TreeSet[java.lang.Long])
-      : java.util.TreeSet[java.lang.Long] = {
-    val it = b2.iterator()
-    while (it.hasNext) {
-      b1.add(it.next())
-      if (b1.size > k) b1.pollLast()
-    }
-    b1
-  }
-
-  override def eval(buf: java.util.TreeSet[java.lang.Long]): Any = {
-    val out = new Array[Any](buf.size)
-    val it = buf.iterator()
-    var i = 0
-    while (it.hasNext) { out(i) = it.next().longValue(); i += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override def serialize(buf: java.util.TreeSet[java.lang.Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buf.size)
-    val it = buf.iterator()
-    while (it.hasNext) bb.putLong(it.next())
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte])
-      : java.util.TreeSet[java.lang.Long] = {
-    val buf = createAggregationBuffer()
-    val bb = ByteBuffer.wrap(bytes)
-    while (bb.remaining() >= 8) buf.add(bb.getLong())
-    buf
-  }
+  override protected def offer(buf: BottomK[Long], input: InternalRow)
+      : Unit = offerStored(buf, child.eval(input))
 
   override def withNewMutableAggBufferOffset(newOffset: Int): KmvMergeSet =
     copy(mutableAggBufferOffset = newOffset)
@@ -362,79 +196,13 @@ case class KmvMergeSet(child: Expression, k: Int,
   * sample of the raw rows (asserted in KmvSpec). */
 case class KmvMergePairs(child: Expression, k: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[java.util.TreeSet[(Long, Double)]]
+    extends KmvAggregate[(Long, Double)](BottomK.Pairs)
     with UnaryLike[Expression] {
 
-  require(k >= 2, s"kmv_merge_pairs needs k >= 2: $k")
-
   override def prettyName: String = "kmv_merge_pairs"
-  override def nullable: Boolean = false
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StructType(Seq(
-      StructField("h", LongType, nullable = false),
-      StructField("v", org.apache.spark.sql.types.DoubleType,
-        nullable = false))), containsNull = false)
 
-  override def createAggregationBuffer(): java.util.TreeSet[(Long, Double)] =
-    new java.util.TreeSet[(Long, Double)](KmvBottomKPairs.pairOrd)
-
-  override def update(buf: java.util.TreeSet[(Long, Double)],
-      input: InternalRow): java.util.TreeSet[(Long, Double)] = {
-    val arr = child.eval(input)
-    if (arr != null) {
-      val a = arr.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      var i = 0
-      while (i < a.numElements()) {
-        val row = a.getStruct(i, 2)
-        buf.add((row.getLong(0), row.getDouble(1)))
-        if (buf.size > k) buf.pollLast()
-        i += 1
-      }
-    }
-    buf
-  }
-
-  override def merge(b1: java.util.TreeSet[(Long, Double)],
-      b2: java.util.TreeSet[(Long, Double)])
-      : java.util.TreeSet[(Long, Double)] = {
-    val it = b2.iterator()
-    while (it.hasNext) {
-      b1.add(it.next())
-      if (b1.size > k) b1.pollLast()
-    }
-    b1
-  }
-
-  override def eval(buf: java.util.TreeSet[(Long, Double)]): Any = {
-    val out = new Array[Any](buf.size)
-    val it = buf.iterator()
-    var i = 0
-    while (it.hasNext) {
-      val (h, v) = it.next()
-      out(i) = new GenericInternalRow(Array[Any](h, v))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override def serialize(buf: java.util.TreeSet[(Long, Double)])
-      : Array[Byte] = {
-    val bb = ByteBuffer.allocate(16 * buf.size)
-    val it = buf.iterator()
-    while (it.hasNext) {
-      val (h, v) = it.next()
-      bb.putLong(h); bb.putDouble(v)
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte])
-      : java.util.TreeSet[(Long, Double)] = {
-    val buf = createAggregationBuffer()
-    val bb = ByteBuffer.wrap(bytes)
-    while (bb.remaining() >= 16) buf.add((bb.getLong(), bb.getDouble()))
-    buf
-  }
+  override protected def offer(buf: BottomK[(Long, Double)],
+      input: InternalRow): Unit = offerStored(buf, child.eval(input))
 
   override def withNewMutableAggBufferOffset(newOffset: Int): KmvMergePairs =
     copy(mutableAggBufferOffset = newOffset)
@@ -444,53 +212,36 @@ case class KmvMergePairs(child: Expression, k: Int,
       : KmvMergePairs = copy(child = newChild)
 }
 
-object KmvBottomKPairs {
-  /** Lexicographic (hash, payload) order — a named Serializable class,
-    * not a SAM lambda (the expression ships to executors inside the
-    * physical plan, and Java lambdas don't serialize). Shared with
-    * [[KmvMergePairs]]. */
-  private[functions] object pairOrd
-      extends java.util.Comparator[(Long, Double)] with Serializable {
-    override def compare(a: (Long, Double), b: (Long, Double)): Int = {
-      val c = java.lang.Long.compare(a._1, b._1)
-      if (c != 0) c else java.lang.Double.compare(a._2, b._2)
-    }
-  }
-}
-
 object KmvMinK {
+  private def agg(f: KmvAggregate[_]): Column =
+    Bridge.column(f.toAggregateExpression())
+  private def e(c: Column): Expression = Bridge.expression(c)
+
   /** Column API: KMV sketch state of a LONG hash column —
     * `struct(held, kth)`; compose with [[estimate]]. */
-  def kmvMinK(hash: Column, k: Int): Column =
-    Bridge.column(KmvMinK(Bridge.expression(hash), k)
-      .toAggregateExpression())
+  def kmvMinK(hash: Column, k: Int): Column = agg(KmvMinK(e(hash), k))
 
   /** Column API for [[KmvMinKSet]]: the sketch as a storable/mergeable
     * ascending array (≤ k longs); compose with [[estimateFromSet]], merge
     * by re-aggregating over `explode(sketch)`. */
-  def kmvMinKSet(hash: Column, k: Int): Column =
-    Bridge.column(KmvMinKSet(Bridge.expression(hash), k)
-      .toAggregateExpression())
+  def kmvMinKSet(hash: Column, k: Int): Column = agg(KmvMinKSet(e(hash), k))
 
   /** Column API for [[KmvBottomKPairs]]: deterministic bottom-k-by-hash
     * row sample with a double payload, as a storable/mergeable ascending
     * `array<struct<h, v>>`. Compose with [[sampleQuantile]]. */
   def kmvBottomKPairs(hash: Column, payload: Column, k: Int): Column =
-    Bridge.column(KmvBottomKPairs(Bridge.expression(hash),
-      Bridge.expression(payload), k).toAggregateExpression())
+    agg(KmvBottomKPairs(e(hash), e(payload), k))
 
   /** Column API for [[KmvMergeSet]]: re-aggregate a STORED sketch-array
     * column directly — the rollup-maintenance path (no explode, no
     * raw-row rescan). */
   def kmvMergeSet(sketches: Column, k: Int): Column =
-    Bridge.column(KmvMergeSet(Bridge.expression(sketches), k)
-      .toAggregateExpression())
+    agg(KmvMergeSet(e(sketches), k))
 
   /** Column API for [[KmvMergePairs]]: re-aggregate a STORED sample-array
     * column directly. */
   def kmvMergePairs(samples: Column, k: Int): Column =
-    Bridge.column(KmvMergePairs(Bridge.expression(samples), k)
-      .toAggregateExpression())
+    agg(KmvMergePairs(e(samples), k))
 
   /** Nearest-rank quantile of the PAYLOADS held in a [[kmvBottomKPairs]]
     * sample: sort the sampled values, take element ceil(q·n) (1-based).

@@ -162,19 +162,6 @@ object Bpe {
     var sincePin = 0
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var done = false
-    // AQE off for the ITERATION jobs only (r17, measured −35% on t24):
-    // each count job is one exchange + TakeOrdered over the bounded,
-    // already-pinned vocab table — AQE's coalescing buys nothing there at
-    // any corpus size (the vocab is ~10⁷–10⁸ rows at 100 TB, one
-    // fixed-partition exchange either way), while its per-stage
-    // materialization adds an extra job round-trip × ~25 iterations.
-    // The one corpus-sized job (wordFreq → the initial pin above) runs
-    // BEFORE this point and keeps AQE. Restored in the finally — same
-    // save/restore discipline as PlanAuditSpec's AQE-off block.
-    val sess = wordFreq.sparkSession
-    val aqePrev = sess.conf.get("spark.sql.adaptive.enabled")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
     while (!done && merges.size < numMerges) {
       val top = cur
         .select(col("freq"), explode(arrays_zip(
@@ -233,7 +220,6 @@ object Bpe {
         }
       }
     }
-    } finally sess.conf.set("spark.sql.adaptive.enabled", aqePrev)
     graft.Materialize.unpin(pinned)
     merges.toSeq
   }

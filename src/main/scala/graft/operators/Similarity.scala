@@ -1327,20 +1327,15 @@ object Similarity {
   }
 
   /** Per-query top-k of a scored `(qid, vec_id, cos)` frame, ties broken
-    * by `vec_id`: TWO-LEVEL (per-(qid, shard) heads, then a final window
-    * over shards·k survivors), so no window partition is corpus-sized.
-    * The result is shard-count-invariant; `shards` only sets parallelism.
-    * Returns `(qid, vec_id)`. */
-  private def twoLevelTopK(scored: DataFrame, k: Int,
-      shards: Int): DataFrame = {
+    * by `vec_id`; returns `(qid, vec_id)`. Spark plans `row_number() ≤ k`
+    * as a partial WindowGroupLimit before the `qid` exchange and a final
+    * one after it, so each input partition ships at most k rows per query
+    * and no window partition is corpus-sized (PlanAuditSpec). */
+  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w1 = Window.partitionBy("qid", "shard")
-      .orderBy(col("cos").desc, col("vec_id"))
-    val w2 = Window.partitionBy("qid")
-      .orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("shard", pmod(col("vec_id"), lit(shards)))
-      .withColumn("r1", row_number().over(w1)).where(col("r1") <= k)
-      .withColumn("r2", row_number().over(w2)).where(col("r2") <= k)
+    scored.withColumn("rk", row_number().over(Window.partitionBy("qid")
+        .orderBy(col("cos").desc, col("vec_id"))))
+      .where(col("rk") <= k)
       .select("qid", "vec_id")
   }
 
@@ -1355,8 +1350,8 @@ object Similarity {
     * ONE plan, not a driver loop (r9 directive #4): the whole panel
     * rides a single job — broadcast panel × centroids for per-qid cell
     * ranking, a cell equi-join for the approx arm, one shared full
-    * postings scan for the exact arm, and recallAuditOf's two-level
-    * top-k so no task ever windows a corpus-sized partition. A
+    * postings scan for the exact arm, and a pruned per-query top-k
+    * ([[topKPerQuery]]) so no task ever windows a corpus-sized partition. A
     * 1000-member audit is one job; the old shape was 2000 serial ones.
     * The single driver collect is the bounded panel fetch. */
   def auditIvfIndex(spark: SparkSession, path: String,
@@ -1366,8 +1361,6 @@ object Similarity {
     import spark.implicits._
     require(panelIds.nonEmpty, "empty audit panel")
     require(nprobe >= 1 && k >= 1, s"nprobe/k: $nprobe/$k")
-    // twoLevelTopK's shard count: purely a parallelism knob
-    val Shards = 64
     val path0 = resolveIndexDir(spark, path)
     val postings = Tables.parquet(spark, path0)
     // THE one bounded driver collect of the audit: |panel| stored
@@ -1403,14 +1396,14 @@ object Similarity {
     // from its IN list); exact arm: the full postings scan, once, for
     // ALL panel members together — |panel|× cheaper than the old
     // 2-jobs-per-member driver loop.
-    val approxK = twoLevelTopK(postings
+    val approxK = topKPerQuery(postings
       .join(broadcast(probeCells), Seq("cell"))
       .where(col("vec_id") =!= col("qid"))
       .join(broadcast(panel), Seq("qid"))
-      .select(col("qid"), col("vec_id"), cosCol.as("cos")), k, Shards)
-    val exactK = twoLevelTopK(postings.crossJoin(broadcast(panel))
+      .select(col("qid"), col("vec_id"), cosCol.as("cos")), k)
+    val exactK = topKPerQuery(postings.crossJoin(broadcast(panel))
       .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), cosCol.as("cos")), k, Shards)
+      .select(col("qid"), col("vec_id"), cosCol.as("cos")), k)
     val hits = exactK.join(approxK, Seq("qid", "vec_id"))
       .groupBy("qid").agg(count(lit(1)).as("hits"))
     panel.select(col("qid"))
@@ -2061,25 +2054,25 @@ object Similarity {
     *
     * Scale shape: the query panel (5 rows here) broadcasts everywhere;
     * the exact pass is panel×corpus dot products — embarrassingly
-    * parallel, and the per-query top-k is TWO-LEVEL (per-(query, shard)
-    * heads via a window over ~N/shards rows, then a final window over
-    * shards·k survivors) so NO task ever sorts a corpus-sized partition
-    * (the single-query ss01 gets this from TakeOrderedAndProject; a
-    * per-query window over the whole corpus would be the classic skew
-    * hazard). Candidate generation is ss03's broadcast probe-set
-    * equi-join, panel-wide: probes are |panel|·37·2 rows. The exact pass
+    * parallel, and the per-query top-k ([[topKPerQuery]]) prunes every
+    * input partition to its own k rows per query before the one `qid`
+    * exchange (Spark's partial WindowGroupLimit), so NO task ever sorts a
+    * corpus-sized partition (the single-query ss01 gets this from
+    * TakeOrderedAndProject; an unpruned per-query window over the whole
+    * corpus would be the classic skew hazard). Candidate generation is
+    * ss03's broadcast probe-set equi-join, panel-wide: probes are
+    * |panel|·37·2 rows. The exact pass
     * prices the audit at one full scan per panel — which is exactly what
     * an audit is; run it on a sampled shard at 100 TB and the recall
     * estimate inherits the sample's confidence, not the engine's. */
   def ss17RecallAudit(spark: SparkSession, dir: String): DataFrame =
-    recallAuditOf(corpus(spark, dir), panel = 5, k = 10, shards = 64)
+    recallAuditOf(corpus(spark, dir), panel = 5, k = 10)
 
   /** Library surface: recall audit over a quantized (vec_id, q, n2)
     * frame; the panel is vec_ids [0, panel). */
-  def recallAuditOf(qv0: DataFrame, panel: Int, k: Int,
-      shards: Int): DataFrame = {
+  def recallAuditOf(qv0: DataFrame, panel: Int, k: Int): DataFrame = {
     import graft.functions.ArrayDot.dotLong
-    require(panel >= 1 && k >= 1 && shards >= 1, s"$panel/$k/$shards")
+    require(panel >= 1 && k >= 1, s"$panel/$k")
     val qv = qv0
       .withColumn("b1", hyperplaneBucket(0))
       .withColumn("b2", hyperplaneBucket(8))
@@ -2089,9 +2082,9 @@ object Similarity {
         col("n2").as("qn2"), col("b1").as("qb1"), col("b2").as("qb2"))
     val cosCol = round(dotLong(col("q"), col("qq")).cast("double") /
       sqrt(col("qn2").cast("double") * col("n2").cast("double")), 4)
-    val exactK = twoLevelTopK(qv.crossJoin(broadcast(queries))
+    val exactK = topKPerQuery(qv.crossJoin(broadcast(queries))
       .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), cosCol.as("cos")), k, shards)
+      .select(col("qid"), col("vec_id"), cosCol.as("cos")), k)
     // ss03's multi-probe candidates, panel-wide: probe frames broadcast
     def tableCand(bucketCol: String, queryBucket: String): DataFrame = {
       val probes = queries.select(col("qid"),
@@ -2103,11 +2096,11 @@ object Similarity {
     val cand = tableCand("b1", "qb1").unionAll(tableCand("b2", "qb2"))
       .distinct()
       .transform(graft.Materialize.pin)
-    val approxK = twoLevelTopK(cand
+    val approxK = topKPerQuery(cand
       .join(qv.select(col("vec_id"), col("q"), col("n2")), Seq("vec_id"))
       .join(broadcast(queries.select(col("qid"), col("qq"), col("qn2"))),
         Seq("qid"))
-      .select(col("qid"), col("vec_id"), cosCol.as("cos")), k, shards)
+      .select(col("qid"), col("vec_id"), cosCol.as("cos")), k)
     val nCand = cand.groupBy("qid").agg(count(lit(1)).as("n_cand"))
     val hits = exactK.join(approxK, Seq("qid", "vec_id"))
       .groupBy("qid").agg(count(lit(1)).as("hits"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.Msg
+import graft.functions.BottomK
 import graft.store.MessageStore
 import graft.sources.Tables
 
@@ -654,12 +655,9 @@ object Streaming {
       .mapGroupsWithState[KmvBuffer, (String, Int, Option[Long])](
         GroupStateTimeout.NoTimeout()) {
         case (g, rows, state: GroupState[KmvBuffer]) =>
-          val set = scala.collection.mutable.TreeSet.empty[Long]
-          state.getOption.foreach(b => set ++= b.hashes)
-          rows.foreach { r =>
-            set += r._2
-            if (set.size > k) set -= set.last
-          }
+          val set = BottomK(BottomK.Hashes, k)
+          state.getOption.foreach(_.hashes.foreach(set.offer))
+          rows.foreach(r => set.offer(r._2))
           state.update(KmvBuffer(set.toSeq))
           (g, set.size, if (set.size >= k) Some(set.last) else None)
       }
@@ -805,15 +803,12 @@ object Streaming {
       .mapGroupsWithState[KmvPairBuffer, (String, Int, Seq[Double])](
         GroupStateTimeout.NoTimeout()) {
         case (g, rows, state: GroupState[KmvPairBuffer]) =>
-          val set = scala.collection.mutable.TreeSet.empty[(Long, Double)]
-          state.getOption.foreach(b => set ++= b.hs.zip(b.vs))
-          rows.foreach { r =>
-            set += ((r._2, r._3))
-            if (set.size > k) set -= set.last
-          }
-          state.update(KmvPairBuffer(set.toSeq.map(_._1),
-            set.toSeq.map(_._2)))
-          val sorted = set.toSeq.map(_._2).sorted
+          val set = BottomK(BottomK.Pairs, k)
+          state.getOption.foreach(b => b.hs.zip(b.vs).foreach(set.offer))
+          rows.foreach(r => set.offer((r._2, r._3)))
+          val held = set.toSeq
+          state.update(KmvPairBuffer(held.map(_._1), held.map(_._2)))
+          val sorted = held.map(_._2).sorted
           val n = sorted.length
           (g, n, qs.map(q =>
             sorted(math.max(1, math.ceil(q * n).toInt) - 1)))

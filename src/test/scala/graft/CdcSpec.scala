@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, TimeUnit}
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -117,37 +114,22 @@ class CdcSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("O29 a micro-batch send is one map-only job: no Exchange, one Spark job") {
     // the feed delivers net change, so batchMessages is a projection: its
     // plan shuffles nothing and the send is the write's one job. Jobs are
-    // counted per batch by a listener keyed on a local property; a marker
-    // job run after the stream stops drains the listener's ordered queue.
-    val sc = spark.sparkContext
+    // counted per batch by tag (SparkSpec.jobStartsByTag).
     val store = emuStore("cdc1job")
     val feed = new MemFeed
     (1L to 20L).foreach(k => feed.add("I", k, k.toDouble))
     feed.add("U", 3L, 30.0)
     feed.add("D", 4L, null)
     CdcFeedRegistry.register("o29onejob", feed)
-    val probe = s"graft.test.sendProbe-${java.util.UUID.randomUUID()}"
-    val jobs = new ConcurrentHashMap[String, Integer]()
-    val drained = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).flatMap(p => Option(p.getProperty(probe)))
-          .foreach { tag =>
-            if (tag == "drain") drained.put(tag)
-            else { jobs.merge(tag, 1, (a: Integer, b: Integer) => a + b); () }
-          }
-    }
     val exchanges = mutable.ArrayBuffer.empty[String]
-    sc.addSparkListener(listener)
-    try {
+    val jobs = jobStartsByTag { tagged =>
       val q = ChangeTracking.changeStream(spark, "o29onejob", source)
         .writeStream.foreachBatch { (b: DataFrame, id: Long) =>
           val msgs = ChangeTracking.batchMessages(b, source)
           exchanges ++= collect(msgs.queryExecution.executedPlan) {
             case e: Exchange => e.toString
           }
-          sc.setLocalProperty(probe, s"batch-$id")
-          try store.send(msgs) finally sc.setLocalProperty(probe, null)
+          tagged(s"batch-$id")(store.send(msgs))
           ()
         }.start()
       try {
@@ -155,13 +137,9 @@ class CdcSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         feed.add("U", 5L, 50.0)
         q.processAllAvailable()
       } finally q.stop()
-      sc.setLocalProperty(probe, "drain")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(probe, null)
-      assert(drained.poll(60, TimeUnit.SECONDS) == "drain")
-    } finally sc.removeSparkListener(listener)
+    }.map { case (tag, starts) => tag -> starts.size }
     assert(exchanges.isEmpty, exchanges.mkString("\n"))
-    assert(jobs.asScala.toMap == Map("batch-0" -> 1, "batch-1" -> 1), jobs)
+    assert(jobs == Map("batch-0" -> 1, "batch-1" -> 1), jobs)
     // 20 keys' net change, then the one update
     assert(store.read(Seq(source.topic)).count() == 21)
   }

@@ -207,36 +207,14 @@ class KafkaE2eSpec extends SparkSpec {
     // send counts its rows inside the write itself: it launches no job the
     // plain write of the same frame does not, and persists nothing, not
     // even while it runs (a probe in the rows lists the persisted RDDs).
-    // Jobs are counted per job group by a listener; a marker job run after
-    // each probe drains the listener's queue, which delivers in order.
+    // Jobs are counted per probe by tag (SparkSpec.jobStartsByTag).
     import scala.jdk.CollectionConverters._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import spark.implicits._
     val sc = spark.sparkContext
     val bs = s"emu://onewrite-${java.util.UUID.randomUUID()}:9092"
     EmuBroker.reset(bs)
     val store = new KafkaStore(spark, bs,
       adminOverride = Some(new EmuKafkaAdmin(bs)), format = "kafka-emu")
-    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val marker = s"marker-${java.util.UUID.randomUUID()}"
-    val drained = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach { g =>
-            if (g.startsWith(marker)) drained.put(g)
-            else { jobs.merge(g, 1, (a: Integer, b: Integer) => a + b); () }
-          }
-    }
-    def jobsIn(group: String)(body: => Unit): Int = {
-      sc.setJobGroup(group, "send job-count probe")
-      try body finally sc.clearJobGroup()
-      val m = s"$marker-$group"
-      sc.setJobGroup(m, "listener drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.poll(60, java.util.concurrent.TimeUnit.SECONDS) == m)
-      jobs.getOrDefault(group, 0)
-    }
     val before = sc.getPersistentRDDs.keySet.toSet
     KafkaE2eSpec.sc = sc
     KafkaE2eSpec.persisted.clear()
@@ -246,24 +224,25 @@ class KafkaE2eSpec extends SparkSpec {
     }.asNondeterministic()
     val frame = sc.parallelize((0 until 400).map(i => ("t", s"k$i", s"v$i")), 4)
       .toDF("topic", "key", "value").withColumn("value", probe(col("value")))
-    sc.addSparkListener(listener)
-    try {
-      val plain = jobsIn(s"plain-$marker") {
+    var sent = -1L
+    val jobs = jobStartsByTag { tagged =>
+      tagged("plain") {
         frame.selectExpr("topic", "CAST(key AS BINARY) AS key",
           "CAST(value AS BINARY) AS value")
           .write.format("kafka-emu").mode("append")
           .option("kafka.bootstrap.servers", bs).save()
       }
-      var sent = -1L
-      val viaSend = jobsIn(s"send-$marker") { sent = store.send(frame) }
-      assert(plain >= 1, "the listener saw no job of the plain write")
-      assert(sent == 400)
-      assert(viaSend <= plain, s"send ran $viaSend jobs, the plain write $plain")
-      assert(KafkaE2eSpec.persisted.isEmpty,
-        s"persisted during the send: ${KafkaE2eSpec.persisted}")
-      assert(sc.getPersistentRDDs.keySet.toSet == before)
-      assert(store.read(Seq("t")).count() == 800)
-    } finally sc.removeSparkListener(listener)
+      tagged("send") { sent = store.send(frame) }
+    }
+    val plain = jobs.getOrElse("plain", Nil).size
+    val viaSend = jobs.getOrElse("send", Nil).size
+    assert(plain >= 1, "the listener saw no job of the plain write")
+    assert(sent == 400)
+    assert(viaSend <= plain, s"send ran $viaSend jobs, the plain write $plain")
+    assert(KafkaE2eSpec.persisted.isEmpty,
+      s"persisted during the send: ${KafkaE2eSpec.persisted}")
+    assert(sc.getPersistentRDDs.keySet.toSet == before)
+    assert(store.read(Seq("t")).count() == 800)
   }
 
   test("murmur2 matches published reference vectors (key pinning is real-Kafka compatible)") {

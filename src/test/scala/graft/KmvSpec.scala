@@ -51,6 +51,29 @@ class KmvSpec extends SparkSpec {
     val results = Seq(1, 4, 32).map(p => sketch(3000, p))
     assert(results.distinct.size == 1,
       s"sketch depends on partitioning: $results")
+    // the pair sample and the two stored-array merges ride the same
+    // bounded state: their output is a pure function of the rows too
+    import spark.implicits._
+    val rows = (1 to 3000).map(i => (i % 24, s"r$i", (i * 7 % 101).toDouble))
+      .toDF("cell", "key", "v")
+      .select(col("cell"),
+        graft.functions.Hashing.md5Long(col("key"), 15).as("h"), col("v"))
+    val forms = Seq(1, 4, 32).map { p =>
+      val perCell = rows.repartition(p).groupBy("cell").agg(
+        KmvMinK.kmvMinKSet(col("h"), K).as("sk"),
+        KmvMinK.kmvBottomKPairs(col("h"), col("v"), K).as("vs"))
+      val r = perCell.repartition(p).agg(
+          KmvMinK.kmvMergeSet(col("sk"), K).as("sk"),
+          KmvMinK.kmvMergePairs(col("vs"), K).as("vs"))
+        .select(col("sk"), col("vs.h"), col("vs.v")).collect()(0)
+      val pairs = rows.repartition(p)
+        .agg(KmvMinK.kmvBottomKPairs(col("h"), col("v"), K).as("vs"))
+        .select(col("vs.h"), col("vs.v")).collect()(0)
+      (r.getSeq[Long](0), r.getSeq[Long](1), r.getSeq[Double](2),
+        pairs.getSeq[Long](0), pairs.getSeq[Double](1))
+    }
+    assert(forms.distinct.size == 1,
+      s"pair sample or stored merges depend on partitioning: $forms")
   }
 
   test("sketch algebra: merging grouped kmv_min_k_set arrays == one-pass sketch") {

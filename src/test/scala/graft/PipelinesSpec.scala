@@ -2017,18 +2017,20 @@ class PipelinesSpec extends SparkSpec {
     val noise = (0 until 50).map(i => (1000L + i, vec()))
     val qv = (queries ++ copies ++ noise).toDF("vec_id", "q")
       .withColumn("n2", dotLong(col("q"), col("q")))
-    val out = Similarity.recallAuditOf(qv, panel = 3, k = 10, shards = 8)
+    val out = Similarity.recallAuditOf(qv, panel = 3, k = 10)
       .orderBy("qid").collect()
     assert(out.length == 3)
     out.foreach { r =>
       assert(r.getLong(2) == 10L, s"hits for qid ${r.getLong(0)}")
       assert(r.getLong(3) == 100L)
     }
-    // the two-level top-k is an implementation detail: shard count must
-    // not change the audit (global top-k ⊆ union of per-shard top-ks)
-    val s1 = Similarity.recallAuditOf(qv, panel = 3, k = 10, shards = 1)
+    // the per-query top-k prunes each input partition to its own top k
+    // before the qid exchange (partial WindowGroupLimit): how the rows
+    // are split must not change the audit (global top-k ⊆ union of the
+    // per-partition top-ks)
+    val s1 = Similarity.recallAuditOf(qv.repartition(1), panel = 3, k = 10)
       .orderBy("qid").collect().toSeq
-    val s7 = Similarity.recallAuditOf(qv, panel = 3, k = 10, shards = 7)
+    val s7 = Similarity.recallAuditOf(qv.repartition(7), panel = 3, k = 10)
       .orderBy("qid").collect().toSeq
     assert(s1 == s7)
   }

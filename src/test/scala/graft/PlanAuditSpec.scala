@@ -182,6 +182,39 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("recall audits plan one Window per top-k arm behind a partial WindowGroupLimit") {
+    // ss17 and the IVF index audit rank each arm with row_number() <= k
+    // over qid alone: every input partition prunes to its own top k before
+    // the one qid exchange, so an arm is ONE window (a (qid, shard) window
+    // under the qid window would hash-partition twice per arm)
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.{WindowExec,
+      WindowGroupLimitExec}
+    import graft.operators.Similarity
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def executedShape(df: DataFrame): (Int, Int) = {
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      (aqe.collect(plan) { case w: WindowExec => w }.size,
+        aqe.collect(plan) { case l: WindowGroupLimitExec => l }.size)
+    }
+    val (ss17Windows, ss17Limits) =
+      executedShape(SparkEntry.queries("ss17_recall_audit")(spark, sf))
+    // the exact arm and the approximate arm
+    assert(ss17Windows == 2, s"ss17 plans $ss17Windows windows, want 2")
+    assert(ss17Limits > 0, "ss17: no partial top-k pruning")
+    val index = tmpDir("plan-audit-ivf")
+    Similarity.buildIvfIndexOf(
+      graft.sources.Tables.t(spark, sf, "embeddings")
+        .select("vec_id", "embedding"), index, iters = 1, cells = 4)
+    val (ivfWindows, ivfLimits) = executedShape(Similarity.auditIvfIndex(
+      spark, index, Seq(0L, 1L, 2L), nprobe = 2, k = 3))
+    // the per-query nprobe cell ranking, then the two arms
+    assert(ivfWindows == 3, s"the IVF audit plans $ivfWindows windows, want 3")
+    assert(ivfLimits > 0, "IVF audit: no partial top-k pruning")
+  }
+
   test("t02's stopword scan is bound once — roundDiv guards must not replicate it") {
     // r14 regression pin: ExactPresent.roundDiv's overflow guards embed
     // their operands in several when/raise_error branches, and codegen

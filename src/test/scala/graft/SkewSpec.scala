@@ -52,38 +52,30 @@ class SkewSpec extends SparkSpec {
     // a histogram collect (the job count itself is AQE-dependent: a pinned
     // aggregate materializes its shuffle stage as its own job). Jobs are
     // submitted synchronously, so by the time selfPairs returns they have
-    // run; give the async listener bus a beat to deliver before checking.
-    val sites = java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        j.stageInfos.foreach(s => sites.add(s.name)); ()
-      }
+    // run; a drain marker job after them (SparkSpec.jobStartsByTag) makes
+    // the listener's record complete before checking.
+    var pairs: org.apache.spark.sql.DataFrame = null
+    val jobs = jobStartsByTag { tagged =>
+      pairs = tagged("construct")(
+        Skew.selfPairs(df, Seq("bucket"), "vid", maxGroup = 50))
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val pairs = Skew.selfPairs(df, Seq("bucket"), "vid", maxGroup = 50)
-      Thread.sleep(1500)
-      // any driver-side materialization counts, not just collect(): a
-      // regression could just as easily sneak back in as head/first/
-      // isEmpty/count/take on the histogram
-      val actions =
-        Seq("collect", "head", "first", "isEmpty", "count", "take", "show")
-      // the listener rides the shared context's async bus, so it can also
-      // receive events from neighboring tests' own counts/collects — only
-      // stages whose call site is INSIDE the operator under test count
-      // (Skew.scala, not SkewSpec.scala or another suite)
-      val strays = sites.toArray.map(_.toString)
-        .filter(s => actions.exists(s.startsWith))
-        .filter(_.contains(" Skew.scala"))
-      assert(strays.isEmpty,
-        s"construction ran driver actions: ${strays.mkString(", ")}")
-      // the explode is structural (unskewed buckets degenerate to g = 1
-      // inside the same plan), so Generate appears even for mixed input
-      val plan = pairs.queryExecution.executedPlan.toString
-      assert(plan.contains("Generate"), s"missing salt explode in:\n$plan")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val sites = jobs.values.flatten.flatMap(_.stageInfos.map(_.name))
+    // any driver-side materialization counts, not just collect(): a
+    // regression could just as easily sneak back in as head/first/
+    // isEmpty/count/take on the histogram
+    val actions =
+      Seq("collect", "head", "first", "isEmpty", "count", "take", "show")
+    // only stages whose call site is INSIDE the operator under test count
+    // (Skew.scala, not SkewSpec.scala or another suite)
+    val strays = sites.toSeq
+      .filter(s => actions.exists(s.startsWith))
+      .filter(_.contains(" Skew.scala"))
+    assert(strays.isEmpty,
+      s"construction ran driver actions: ${strays.mkString(", ")}")
+    // the explode is structural (unskewed buckets degenerate to g = 1
+    // inside the same plan), so Generate appears even for mixed input
+    val plan = pairs.queryExecution.executedPlan.toString
+    assert(plan.contains("Generate"), s"missing salt explode in:\n$plan")
   }
 
   test("reserved internal column names are rejected, not silently shadowed") {

@@ -1,14 +1,11 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, TimeUnit}
-
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.{MICROS, NANOS}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, DOUBLE, INT64}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.LongType
@@ -61,30 +58,10 @@ class TablesSpec extends SparkSpec {
   }
 
   test("opening every table and reading its schema runs no Spark job") {
-    // jobs are counted by a listener keyed on a local property; a marker
-    // job run after the opens drains the listener's ordered queue
-    val sc = spark.sparkContext
-    val probe = s"graft.test.openProbe-${java.util.UUID.randomUUID()}"
-    val jobs = new ConcurrentHashMap[String, Integer]()
-    val drained = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).flatMap(p => Option(p.getProperty(probe)))
-          .foreach { tag =>
-            if (tag == "drain") drained.put(tag)
-            else { jobs.merge(tag, 1, (a: Integer, b: Integer) => a + b); () }
-          }
+    // jobs are counted by tag (SparkSpec.jobStartsByTag)
+    val jobs = jobStartsByTag { tagged =>
+      tagged("open")(Tables.all.foreach(n => Tables.t(spark, sf, n).schema))
     }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(probe, "open")
-      try Tables.all.foreach(n => Tables.t(spark, sf, n).schema)
-      finally sc.setLocalProperty(probe, null)
-      sc.setLocalProperty(probe, "drain")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(probe, null)
-      assert(drained.poll(60, TimeUnit.SECONDS) == "drain")
-    } finally sc.removeSparkListener(listener)
     assert(jobs.isEmpty, jobs)
   }
 

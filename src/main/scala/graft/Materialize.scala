@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Central policy for pinning shared subplans (the LSH signature frames,
   * salted join inputs, per-round label frames, live-read snapshots):
@@ -20,13 +24,18 @@ import org.apache.spark.sql.DataFrame
   * The checkpoint dir comes from `spark.graft.checkpointDir` unless
   * `SparkContext.setCheckpointDir` was already called. Cost per pin: one
   * write+read round trip to the FS instead of executor-memory blocks.
+  *
+  * Pin lifetime has one rule, [[scoped]]'s: a call frees every pin it took
+  * that its result does not read. Explicit [[unpin]] is left for a loop
+  * freeing a round's predecessor right after its successor's pin (peak
+  * storage per round) and for long-lived state with its own `close`.
   */
 object Materialize {
   /** Test observability: while ENABLED, every pin records (caller thread,
     * persisted RDD id). Pin runs synchronously on the operator's calling
     * thread, so a concurrently-running suite can audit ITS OWN pins'
     * release precisely — no cross-suite delta counting with allowance
-    * guesses (PipelinesSpec's unpin-discipline test). OFF by default: a
+    * guesses (SparkSpec.pinsLeftBy). OFF by default: a
     * long-lived production job (a streaming query pinning every
     * micro-batch, a nightly loop in one JVM) must not accumulate one log
     * tuple per pin forever — the audit log must not itself reintroduce
@@ -35,6 +44,18 @@ object Materialize {
     new java.util.concurrent.atomic.AtomicBoolean(false)
   private[graft] val pinLog =
     new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int)]()
+
+  /** The pins each open [[scoped]] call on this thread took, innermost
+    * first, keyed by RDD id. */
+  private val open =
+    ThreadLocal.withInitial[List[mutable.Map[Int, RDD[_]]]](() => Nil)
+
+  /** The pinned RDDs a plan reads: its `LogicalRDD` leaves, subqueries
+    * included. */
+  private def pinnedRdds(ds: Dataset[_]): Seq[RDD[_]] =
+    ds.queryExecution.analyzed.collectWithSubqueries {
+      case lr: LogicalRDD => lr.rdd
+    }
 
   def pin(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
@@ -58,48 +79,73 @@ object Materialize {
     // AQE re-plans joins from true runtime sizes, which for a pinned
     // bounded frame are also the more accurate ones.
     val out = org.apache.spark.sql.graft.Bridge.freshLeaf(pinned)
+    val rdds = pinnedRdds(out)
+    open.get.headOption.foreach(scope => rdds.foreach(r => scope(r.id) = r))
     if (pinLogEnabled.get())
-      out.queryExecution.analyzed.collectLeaves().foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          pinLog.add((Thread.currentThread().getId, lr.rdd.id))
-        case _ => ()
-      }
+      rdds.foreach(r => pinLog.add((Thread.currentThread().getId, r.id)))
     out
   }
 
-  /** Free the checkpoint blocks behind a pinned frame (and any pinned
-    * leaves a lazy plan over pins references). Iterative operators pin one
-    * frame per round; without explicit release, executor storage grows
-    * LINEARLY with round count — superseded round state stays resident
-    * until the context cleaner happens to GC the driver-side handle, which
-    * at 100 TB means hours of peak storage pressure for state that died a
-    * round ago. Caller contract: a pinned leaf CANNOT be recomputed (its
-    * lineage was truncated at the pin), so unpin ONLY frames no live plan
-    * will read again — i.e. after the pin that supersedes them has
-    * materialized. No-op on plans with no pinned leaves. */
-  def unpin(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-        // reliable-checkpoint mode persists to FILES, not blocks — and
-        // spark.cleaner.referenceTracking.cleanCheckpoints defaults to
-        // false, so without this delete a spot-fleet run accumulates one
-        // checkpoint directory per superseded round for the job's
-        // lifetime (the exact linear growth unpin exists to prevent).
-        // Best-effort: cleanup must never fail the job it serves — but only
-        // for ordinary failures (NonFatal): a bare `catch Exception` would
-        // also swallow InterruptedException and lose a cancellation.
-        lr.rdd.getCheckpointFile.foreach { dir =>
-          try {
-            val p = new org.apache.hadoop.fs.Path(dir)
-            p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-              .delete(p, true)
-          } catch {
-            case e: InterruptedException =>
-              Thread.currentThread().interrupt(); ()
-            case scala.util.control.NonFatal(_) => ()
-          }
-        }
-      case _ => ()
+  /** Runs `body` as the owner of the pins it takes on this thread (nested
+    * calls included). If `body` throws, every one of them is freed before
+    * the exception propagates. If it returns, those its result's plan
+    * does not read are freed, and the rest pass to the enclosing scope
+    * (or to the caller). A result that is not a Dataset reads no pin.
+    * Pins taken before the scope opened, or on another thread, are not
+    * its to free. A non-local `return` out of `body` counts as a throw. */
+  def scoped[T](body: => T): T = {
+    val mine = mutable.LinkedHashMap.empty[Int, RDD[_]]
+    val outer = open.get
+    open.set(mine :: outer)
+    var read = Set.empty[Int] // stays empty if body throws
+    try {
+      val result = body
+      read = result match {
+        case ds: Dataset[_] => pinnedRdds(ds).map(_.id).toSet
+        case _ => Set.empty
+      }
+      result
+    } finally {
+      open.set(outer)
+      mine.foreach { case (id, r) =>
+        if (read(id)) outer.headOption.foreach(_(id) = r) else free(r)
+      }
     }
+  }
+
+  /** Free now the checkpoint blocks behind a pinned frame (and any pinned
+    * leaves a lazy plan over pins references): the supersede step of an
+    * iterative operator, which drops round N−1's state as soon as round
+    * N's eager pin holds everything, so peak storage stays one round's
+    * state whatever the round count. Caller contract: a pinned leaf
+    * CANNOT be recomputed (its lineage was truncated at the pin), so
+    * unpin ONLY frames no live plan will read again. No-op on plans with
+    * no pinned leaves. */
+  def unpin(df: DataFrame): Unit =
+    pinnedRdds(df).foreach { r =>
+      open.get.foreach(_.remove(r.id))
+      free(r)
+    }
+
+  private def free(rdd: RDD[_]): Unit = {
+    rdd.unpersist(blocking = false)
+    // reliable-checkpoint mode persists to FILES, not blocks — and
+    // spark.cleaner.referenceTracking.cleanCheckpoints defaults to
+    // false, so without this delete a spot-fleet run accumulates one
+    // checkpoint directory per superseded round for the job's
+    // lifetime (the exact linear growth unpin exists to prevent).
+    // Best-effort: cleanup must never fail the job it serves — but only
+    // for ordinary failures (NonFatal): a bare `catch Exception` would
+    // also swallow InterruptedException and lose a cancellation.
+    rdd.getCheckpointFile.foreach { dir =>
+      try {
+        val p = new org.apache.hadoop.fs.Path(dir)
+        p.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(p, true)
+      } catch {
+        case e: InterruptedException =>
+          Thread.currentThread().interrupt(); ()
+        case scala.util.control.NonFatal(_) => ()
+      }
+    }
+  }
 }

@@ -79,7 +79,8 @@ object NightlyIngestExample {
       nearDupLedger: Option[String] = None,
       nearDupThreshold: Double = 0.3,
       ledgerBuckets: Int = 32,
-      onStage: String => Unit = _ => ()): NightReport = {
+      onStage: String => Unit = _ => ()): NightReport =
+      graft.Materialize.scoped {
     val fp = TextAnalysis.fingerprint(col("text"))
     val incoming = newDocs.select(col("doc_id"), fp.as("fp"))
     // The fingerprint LEDGER is separate from the curated store: a doc
@@ -101,123 +102,112 @@ object NightlyIngestExample {
     // pinned: the admission join scans the WHOLE historical ledger — the
     // part that grows with corpus age — and four consumers below (two
     // counts, the ledger append, the survivors join) must not re-run it.
-    // Both pins sit inside the try so a failure between them cannot
-    // strand the first one's materialized blocks.
-    var decisions: DataFrame = null
-    var survivors: DataFrame = null
-    var nearDupKept: DataFrame = null
-    try {
-      // bloomAdmit ≡ incrementalAdmit row-for-row (proven in
-      // PipelinesSpec), but the ledger side — the part that grows with
-      // corpus age — is pre-filtered by a Bloom probe over tonight's
-      // keys, so ledger rows that can't match never reach the join
-      decisions = graft.Materialize.pin(
-        Dedup.bloomAdmit(existing, incoming))
-      val admittedDocs = newDocs
-        .join(decisions.where(col("admitted")).select("doc_id"), "doc_id")
-        .withColumn("quality", TextAnalysis.quality(col("text")))
-        .withColumn("fp", fp)
-      survivors = graft.Materialize.pin(
-        admittedDocs.where(col("quality") >= minQuality)
-          .select("doc_id", "lang", "source", "text", "fp", "quality"))
-      val nSurvive = survivors.count()
-      val nAdmit = decisions.where(col("admitted")).count()
-      val nTotal = decisions.count()
-      // near-dup admission: tonight's exact-admitted, quality-passing
-      // docs against the STANDING banded ledger — only the batch side
-      // shuffles; the ledger reads pre-bucketed (dd16's scale shape)
-      val (finalDocs, nFinal, nNearDup) = nearDupLedger match {
-        case Some(name) if spark.catalog.tableExists(s"${name}_bands") =>
-          val adm = Dedup.nearDupAdmitAgainstLedger(spark, survivors,
-            name, nearDupThreshold)
-          nearDupKept = graft.Materialize.pin(survivors.join(
-            adm.where(col("admitted")).select("doc_id"), "doc_id"))
-          val nKept = nearDupKept.count()
-          (nearDupKept, nKept, nSurvive - nKept)
-        case _ => (survivors, nSurvive, 0L)
-      }
-      Sink.writeCurated(finalDocs, curatedDir,
-        partitionCols = Seq("lang"), sortCols = Seq("quality"),
-        mode = "append")
-      // `onStage` fires AFTER each stage boundary commits — the crash
-      // matrix in NightlyIngestSpec throws from it to prove the
-      // reconcile contract at every seam; production callers can hang
-      // progress metrics off it
-      onStage("store-append")
-      // remember every fingerprint this night ADMITTED (quality-rejects
-      // included — they were processed and must not return); null fps are
-      // never recorded, matching incrementalAdmit's admit-verbatim rule
-      decisions.where(col("admitted") && col("fp").isNotNull)
-        .select("fp").write.mode("append").parquet(ledgerDir)
-      onStage("fp-ledger-append")
-      // index: only the surviving docs' vectors enter. Guard rails:
-      //  - a night with NO survivors must not touch the index — building
-      //    from an empty frame would write an empty quantizer, and every
-      //    later assignment against zero centroids appends nothing while
-      //    reporting success (the index would stay empty forever);
-      //  - an indexDir WITHOUT _centroids but with content means a
-      //    retrain swap crashed mid-rename — rebuilding fresh here would
-      //    silently replace the historical index with one night's
-      //    vectors; fail loudly and let the operator restore the .old /
-      //    .retrain directory maintainIvfIndex staged.
-      val vecs = newVecs
-        .join(finalDocs.select(col("doc_id").as("vec_id")), "vec_id")
-      // resolveIndexDir: a FLAT index resolves to itself, a VERSIONED root
-      // (built with buildIvfIndexVersionedOf — the layout to prefer when
-      // probes can't be quiesced during retrains) to its live version, so
-      // either layout passes the liveness probe here
-      val liveIndex = Similarity.resolveIndexDir(spark, indexDir)
-      val retrained =
-        if (nFinal == 0) false
-        else if (dirExists(spark, s"$liveIndex/_centroids"))
-          Similarity.maintainIvfIndex(spark, indexDir, vecs,
-            retrainBelow).retrained
-        else if (dirExists(spark, indexDir) ||
-            dirExists(spark, s"$indexDir.old"))
-          throw new IllegalStateException(
-            s"$indexDir exists without _centroids — a retrain swap may " +
-              s"have crashed; restore $indexDir.old or $indexDir.retrain " +
-              "instead of rebuilding from one night's vectors")
-        else {
-          Similarity.buildIvfIndexOf(vecs, indexDir, iters = 1)
-          false
-        }
-      onStage("index-maintained")
-      // PQ codes are a DERIVED artifact: tonight's appended (or
-      // retrained) postings are ADC-invisible until re-encoded. No-op on
-      // an index that was never PQ-augmented, so the call is
-      // unconditional rather than an operator runbook step.
-      if (nFinal > 0) Similarity.refreshPqCodes(spark, indexDir)
-      onStage("pq-refreshed")
-      // the near-dup ledger grows LAST, deliberately: tonight's docs are
-      // already materialized in nearDupKept (their own bands cannot
-      // reject them this run), and crash-ORDERING matters — growing the
-      // ledger before the fp-ledger append would make a crash between
-      // the two turn the RE-RUN against tonight's own bands (every doc
-      // self-rejects at J=1 and never reaches the index). Grown last, a
-      // crash anywhere earlier re-runs cleanly (at worst duplicating
-      // store rows per the contract above), and the only gap — crash
-      // after the fp append but before this grow — is repaired by the
-      // same reconcile: rebuild the ledger from the store
-      // (writeNearDupLedger over the curated corpus).
-      // grow reads the standing table's bucket spec from the catalog, so
-      // a ledger bootstrapped at ANY bucket count keeps growing;
-      // `ledgerBuckets` applies only to the night-1 bootstrap write
-      nearDupLedger.foreach { name =>
-        if (spark.catalog.tableExists(s"${name}_bands"))
-          Dedup.growNearDupLedger(finalDocs, name)
-        else if (nFinal > 0)
-          Dedup.writeNearDupLedger(finalDocs, name, ledgerBuckets)
-      }
-      onStage("neardup-ledger-grown")
-      NightReport(admitted = nAdmit, rejected = nTotal - nAdmit,
-        belowQuality = nAdmit - nSurvive, indexRetrained = retrained,
-        nearDupRejected = nNearDup)
-    } finally {
-      if (nearDupKept != null) graft.Materialize.unpin(nearDupKept)
-      if (survivors != null) graft.Materialize.unpin(survivors)
-      if (decisions != null) graft.Materialize.unpin(decisions)
+    // bloomAdmit ≡ incrementalAdmit row-for-row (proven in
+    // PipelinesSpec), but the ledger side — the part that grows with
+    // corpus age — is pre-filtered by a Bloom probe over tonight's
+    // keys, so ledger rows that can't match never reach the join
+    val decisions = graft.Materialize.pin(
+      Dedup.bloomAdmit(existing, incoming))
+    val admittedDocs = newDocs
+      .join(decisions.where(col("admitted")).select("doc_id"), "doc_id")
+      .withColumn("quality", TextAnalysis.quality(col("text")))
+      .withColumn("fp", fp)
+    val survivors = graft.Materialize.pin(
+      admittedDocs.where(col("quality") >= minQuality)
+        .select("doc_id", "lang", "source", "text", "fp", "quality"))
+    val nSurvive = survivors.count()
+    val nAdmit = decisions.where(col("admitted")).count()
+    val nTotal = decisions.count()
+    // near-dup admission: tonight's exact-admitted, quality-passing
+    // docs against the STANDING banded ledger — only the batch side
+    // shuffles; the ledger reads pre-bucketed (dd16's scale shape)
+    val (finalDocs, nFinal, nNearDup) = nearDupLedger match {
+      case Some(name) if spark.catalog.tableExists(s"${name}_bands") =>
+        val adm = Dedup.nearDupAdmitAgainstLedger(spark, survivors,
+          name, nearDupThreshold)
+        val nearDupKept = graft.Materialize.pin(survivors.join(
+          adm.where(col("admitted")).select("doc_id"), "doc_id"))
+        val nKept = nearDupKept.count()
+        (nearDupKept, nKept, nSurvive - nKept)
+      case _ => (survivors, nSurvive, 0L)
     }
+    Sink.writeCurated(finalDocs, curatedDir,
+      partitionCols = Seq("lang"), sortCols = Seq("quality"),
+      mode = "append")
+    // `onStage` fires AFTER each stage boundary commits — the crash
+    // matrix in NightlyIngestSpec throws from it to prove the
+    // reconcile contract at every seam; production callers can hang
+    // progress metrics off it
+    onStage("store-append")
+    // remember every fingerprint this night ADMITTED (quality-rejects
+    // included — they were processed and must not return); null fps are
+    // never recorded, matching incrementalAdmit's admit-verbatim rule
+    decisions.where(col("admitted") && col("fp").isNotNull)
+      .select("fp").write.mode("append").parquet(ledgerDir)
+    onStage("fp-ledger-append")
+    // index: only the surviving docs' vectors enter. Guard rails:
+    //  - a night with NO survivors must not touch the index — building
+    //    from an empty frame would write an empty quantizer, and every
+    //    later assignment against zero centroids appends nothing while
+    //    reporting success (the index would stay empty forever);
+    //  - an indexDir WITHOUT _centroids but with content means a
+    //    retrain swap crashed mid-rename — rebuilding fresh here would
+    //    silently replace the historical index with one night's
+    //    vectors; fail loudly and let the operator restore the .old /
+    //    .retrain directory maintainIvfIndex staged.
+    val vecs = newVecs
+      .join(finalDocs.select(col("doc_id").as("vec_id")), "vec_id")
+    // resolveIndexDir: a FLAT index resolves to itself, a VERSIONED root
+    // (built with buildIvfIndexVersionedOf — the layout to prefer when
+    // probes can't be quiesced during retrains) to its live version, so
+    // either layout passes the liveness probe here
+    val liveIndex = Similarity.resolveIndexDir(spark, indexDir)
+    val retrained =
+      if (nFinal == 0) false
+      else if (dirExists(spark, s"$liveIndex/_centroids"))
+        Similarity.maintainIvfIndex(spark, indexDir, vecs,
+          retrainBelow).retrained
+      else if (dirExists(spark, indexDir) ||
+          dirExists(spark, s"$indexDir.old"))
+        throw new IllegalStateException(
+          s"$indexDir exists without _centroids — a retrain swap may " +
+            s"have crashed; restore $indexDir.old or $indexDir.retrain " +
+            "instead of rebuilding from one night's vectors")
+      else {
+        Similarity.buildIvfIndexOf(vecs, indexDir, iters = 1)
+        false
+      }
+    onStage("index-maintained")
+    // PQ codes are a DERIVED artifact: tonight's appended (or
+    // retrained) postings are ADC-invisible until re-encoded. No-op on
+    // an index that was never PQ-augmented, so the call is
+    // unconditional rather than an operator runbook step.
+    if (nFinal > 0) Similarity.refreshPqCodes(spark, indexDir)
+    onStage("pq-refreshed")
+    // the near-dup ledger grows LAST, deliberately: tonight's docs are
+    // already materialized in nearDupKept (their own bands cannot
+    // reject them this run), and crash-ORDERING matters — growing the
+    // ledger before the fp-ledger append would make a crash between
+    // the two turn the RE-RUN against tonight's own bands (every doc
+    // self-rejects at J=1 and never reaches the index). Grown last, a
+    // crash anywhere earlier re-runs cleanly (at worst duplicating
+    // store rows per the contract above), and the only gap — crash
+    // after the fp append but before this grow — is repaired by the
+    // same reconcile: rebuild the ledger from the store
+    // (writeNearDupLedger over the curated corpus).
+    // grow reads the standing table's bucket spec from the catalog, so
+    // a ledger bootstrapped at ANY bucket count keeps growing;
+    // `ledgerBuckets` applies only to the night-1 bootstrap write
+    nearDupLedger.foreach { name =>
+      if (spark.catalog.tableExists(s"${name}_bands"))
+        Dedup.growNearDupLedger(finalDocs, name)
+      else if (nFinal > 0)
+        Dedup.writeNearDupLedger(finalDocs, name, ledgerBuckets)
+    }
+    onStage("neardup-ledger-grown")
+    NightReport(admitted = nAdmit, rejected = nTotal - nAdmit,
+      belowQuality = nAdmit - nSurvive, indexRetrained = retrained,
+      nearDupRejected = nNearDup)
   }
 
   /** Repair a CRASHED night: rebuild every derived artifact from the
@@ -245,7 +235,7 @@ object NightlyIngestExample {
   def reconcileNight(spark: SparkSession, curatedDir: String,
       indexDir: String, allVecs: DataFrame,
       nearDupLedger: Option[String] = None,
-      ledgerBuckets: Int = 32): Unit = {
+      ledgerBuckets: Int = 32): Unit = graft.Materialize.scoped {
     require(dirExists(spark, curatedDir),
       s"reconcileNight: no store at $curatedDir — nothing to rebuild from")
     val store = Tables.parquet(spark, curatedDir)
@@ -264,12 +254,8 @@ object NightlyIngestExample {
       // pinned, the store ⋈ index scan runs once
       val missing = graft.Materialize.pin(
         storeVecs.join(indexed, Seq("vec_id"), "left_anti"))
-      if (!missing.isEmpty) {
-        Similarity.appendToIvfIndex(spark, indexDir, missing)
-        ()
-      }
+      if (!missing.isEmpty) Similarity.appendToIvfIndex(spark, indexDir, missing)
       Similarity.refreshPqCodes(spark, indexDir)
-      ()
     } else if (!dirExists(spark, indexDir) &&
         !dirExists(spark, s"$indexDir.old")) {
       // same pattern: emptiness probe + index build share the store join

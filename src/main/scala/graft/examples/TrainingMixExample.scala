@@ -38,7 +38,8 @@ object TrainingMixExample {
     * them is meaningless. */
   def trainingMix(spark: SparkSession, dir: String,
       trainPermille: Int = 900, nPhases: Int = 3,
-      shardsPerPhase: Int = 4, packBudget: Long = 512): DataFrame = {
+      shardsPerPhase: Int = 4,
+      packBudget: Long = 512): DataFrame = graft.Materialize.scoped {
     require(nPhases >= 1 && shardsPerPhase >= 1)
 
     // Multi-consumer frames are pinned throughout (the rule the sf10

@@ -136,7 +136,8 @@ object VideoDedupExample {
   def dedupVideos(videos: DataFrame, theta: Long, maxHamming: Int = 4,
       minShared: Long = 1L, containmentPpm: Long = 500000L,
       sigDemux: SigDemux = ImageCodec.gifFrameSigsComposed,
-      hashDemux: HashDemux = ImageCodec.gifFramePhashes): DataFrame = {
+      hashDemux: HashDemux = ImageCodec.gifFramePhashes): DataFrame =
+      graft.Materialize.scoped {
     // Demux AND scene-assign ONCE, then pin: both detectors consume the
     // scene-assigned frame, and for a real ffmpeg demuxer the decode is
     // the dominant cost — an unpinned twice-consumed codec pass is
@@ -163,7 +164,6 @@ object VideoDedupExample {
       .transform(graft.Materialize.pin)
     graft.Materialize.unpin(pairs)
     val labels = Dedup.connectedComponents(edges)
-    graft.Materialize.unpin(edges)
     videos.join(labels, Seq("doc_id"), "left")
       .where(col("lbl").isNull || col("lbl") === col("doc_id"))
       .drop("lbl")

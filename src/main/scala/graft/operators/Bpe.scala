@@ -26,10 +26,11 @@ import graft.sources.Tables.t
   *      the driver never holds the vocabulary);
   *   3. merge application — a pure per-row array fold (codegen'd
   *      `aggregate` lambda, no UDF), map-only over vocab rows.
-  * The loop pins the evolving symbol table every iteration
-  * ([[graft.Materialize.pin]]) and unpins the superseded round, so
-  * lineage stays O(1) and executor storage holds exactly one vocabulary
-  * snapshot — the same round-state discipline as dd06's frontier loop.
+  * The loop pins the evolving symbol table every 4th merge
+  * ([[graft.Materialize.pin]]) and unpins the snapshot it supersedes, so
+  * lineage stays O(1) and executor storage holds one vocabulary snapshot
+  * at a time; the training call's [[graft.Materialize.scoped]] frees the
+  * last one, on return or on a failed round.
   *
   * Determinism contract: tie-breaks are total ((freq DESC, left ASC,
   * right ASC)), so the merge list is a pure function of the word-frequency
@@ -104,7 +105,7 @@ object Bpe {
     * only thing the driver ever holds). Stops early when no pair reaches
     * `minFreq`. */
   def train(wordFreq: DataFrame, numMerges: Int,
-      minFreq: Long = 2L): Seq[Merge] = {
+      minFreq: Long = 2L): Seq[Merge] = graft.Materialize.scoped {
     require(numMerges >= 1 && numMerges <= 100000,
       s"numMerges out of range: $numMerges")
     // chars + end marker; regexp_extract_all('.') = one element per char
@@ -220,7 +221,6 @@ object Bpe {
         }
       }
     }
-    graft.Materialize.unpin(pinned)
     merges.toSeq
   }
 

@@ -814,18 +814,13 @@ object Dedup {
     * overwrite; grow-the-ledger = append admitted batches via a rerun or
     * an incremental insertInto with the same bucketing. */
   def writeNearDupLedger(docs: DataFrame, name: String,
-      buckets: Int = 32): Unit = {
+      buckets: Int = 32): Unit = graft.Materialize.scoped {
     val sig = minhashSigOf(docs)
-    // the pinned sig frame is unreachable once both bucketed tables are
-    // written — release it (try/finally: a failed write must not strand
-    // the corpus-sized localCheckpoint blocks either)
-    try {
-      graft.sources.Sink.writeBucketed(bandsOfSig(sig), s"${name}_bands",
-        buckets, bucketCols = Seq("band", "k1", "k2"))
-      graft.sources.Sink.writeBucketed(
-        sig.select(col("doc_id"), col("set")), s"${name}_sets",
-        buckets, bucketCols = Seq("doc_id"))
-    } finally graft.Materialize.unpin(sig)
+    graft.sources.Sink.writeBucketed(bandsOfSig(sig), s"${name}_bands",
+      buckets, bucketCols = Seq("band", "k1", "k2"))
+    graft.sources.Sink.writeBucketed(
+      sig.select(col("doc_id"), col("set")), s"${name}_sets",
+      buckets, bucketCols = Seq("doc_id"))
   }
 
   /** GROW a [[writeNearDupLedger]] ledger with a night's admitted docs:
@@ -840,7 +835,8 @@ object Dedup {
     * count grows correctly forever, instead of a hard-coded default
     * tripping Spark's bucket-spec mismatch check on every append to a
     * non-default ledger (the r10 advisor finding). */
-  def growNearDupLedger(docs: DataFrame, name: String): Unit = {
+  def growNearDupLedger(docs: DataFrame, name: String): Unit =
+      graft.Materialize.scoped {
     val spark = docs.sparkSession
     val buckets = spark.sessionState.catalog
       .getTableMetadata(
@@ -850,15 +846,11 @@ object Dedup {
         s"growNearDupLedger: table ${name}_bands exists but carries no " +
           "bucket spec — it was not written by writeNearDupLedger"))
     val sig = minhashSigOf(docs)
-    // same unpin discipline as writeNearDupLedger: without it a nightly
-    // loop strands one batch-sized checkpoint pin per night
-    try {
-      graft.sources.Sink.writeBucketed(bandsOfSig(sig), s"${name}_bands",
-        buckets, bucketCols = Seq("band", "k1", "k2"), mode = "append")
-      graft.sources.Sink.writeBucketed(
-        sig.select(col("doc_id"), col("set")), s"${name}_sets",
-        buckets, bucketCols = Seq("doc_id"), mode = "append")
-    } finally graft.Materialize.unpin(sig)
+    graft.sources.Sink.writeBucketed(bandsOfSig(sig), s"${name}_bands",
+      buckets, bucketCols = Seq("band", "k1", "k2"), mode = "append")
+    graft.sources.Sink.writeBucketed(
+      sig.select(col("doc_id"), col("set")), s"${name}_sets",
+      buckets, bucketCols = Seq("doc_id"), mode = "append")
   }
 
   /** Near-dup admission against a [[writeNearDupLedger]] ledger — result
@@ -1114,7 +1106,8 @@ object Dedup {
     * proportional to the near-dup fraction of the corpus, not the corpus
     * (on a real corpus most documents are singletons and never enter the
     * loop); singletons are attached after the fixpoint with one left join. */
-  def dd06NearDupClusters(spark: SparkSession, dir: String): DataFrame = {
+  def dd06NearDupClusters(spark: SparkSession, dir: String): DataFrame =
+      graft.Materialize.scoped {
     // SYMMETRIC edge expansion as a map-only explode over the (unsorted)
     // dd05 pair pipeline — each pair row emits (a,b) and (b,a) in ONE
     // pass, so the pair set needs no pin of its own (r16 optimization:
@@ -1139,7 +1132,6 @@ object Dedup {
       .repartition(col("ida"))
       .transform(graft.Materialize.pin)
     val labels = connectedComponents(edges)
-    graft.Materialize.unpin(edges)
     t(spark, dir, "documents").select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -1246,7 +1238,7 @@ object Dedup {
   }
 
   private def ccPhase(edges: DataFrame,
-      propRounds: Int, phase: Int): DataFrame = {
+      propRounds: Int, phase: Int): DataFrame = graft.Materialize.scoped {
     require(propRounds >= 1, s"propRounds: $propRounds")
     // unreachable for data reasons (phase k alone covers diameter
     // 2^(propRounds·2^k), and the node count strictly decreases per
@@ -1371,7 +1363,6 @@ object Dedup {
         .repartition(col("ida"))
         .transform(graft.Materialize.pin)
       val sub = ccPhase(cEdges, propRounds * 2, phase + 1)
-      graft.Materialize.unpin(cEdges)
       labels
         .join(sub.select(col("doc_id").as("lbl"), col("lbl").as("__sub")),
           Seq("lbl"), "left")

@@ -561,7 +561,7 @@ object Multimodal {
     * per-round state is the duplicated fraction of the corpus, not the
     * corpus. */
   def videoClustersOf(videos: DataFrame, sigs: DataFrame, theta: Long,
-      minPpm: Long): DataFrame = {
+      minPpm: Long): DataFrame = graft.Materialize.scoped {
     // symmetric edge expansion as ONE map-only explode over the pair
     // pipeline (dd06's r16 shape): a single consumer, so the pair set
     // needs no pin of its own before the edge pin
@@ -575,7 +575,6 @@ object Multimodal {
       .repartition(col("ida"))
       .transform(graft.Materialize.pin)
     val labels = Dedup.connectedComponents(edges)
-    graft.Materialize.unpin(edges)
     videos.select(col("doc_id").cast("long").as("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"),

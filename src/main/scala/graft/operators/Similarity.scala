@@ -769,7 +769,7 @@ object Similarity {
     * Lloyd rounds first. */
   def buildIvfIndex(spark: SparkSession, dir: String, path: String,
       iters: Int): Unit =
-    buildIndexFrom(embCorpus(spark, dir), path, iters)
+    graft.Materialize.scoped(buildIndexFrom(embCorpus(spark, dir), path, iters))
 
   /** Generic build over a caller frame (`idCol` castable to long, `embCol`
     * array<float/double>) — the library form of [[buildIvfIndex]]. Cell
@@ -777,7 +777,8 @@ object Similarity {
     * `iters` ≥ 1 Lloyd rounds refine either seeding. */
   def buildIvfIndexOf(vecs: DataFrame, path: String, iters: Int,
       idCol: String = "vec_id", embCol: String = "embedding",
-      seedCol: Option[String] = None, cells: Int = 10): Unit = {
+      seedCol: Option[String] = None,
+      cells: Int = 10): Unit = graft.Materialize.scoped {
     import graft.functions.ArrayDot.dotLong
     require(cells >= 1, s"cells: $cells")
     val seed = seedCol.map(col)
@@ -799,7 +800,7 @@ object Similarity {
     * (cell-by-cell content equality, proven in IvfIndexSpec). Without the
     * add-step, stored cells lag the stored centroids by one Lloyd
     * half-round and appended rows would follow a different rule than
-    * built rows. */
+    * built rows. Its callers' scopes free the build's pins. */
   private def buildIndexFrom(emb: DataFrame, path: String,
       iters: Int): Unit = {
     require(iters >= 0, s"iters: $iters")
@@ -817,13 +818,6 @@ object Similarity {
     // invalidation marker for the driver-side quantizer cache: a rewrite
     // that preserves every (name, len, mtime) still flips this content
     writeNonce(fsOf(emb.sparkSession, path), s"$path/_centroids")
-    // all artifacts are on disk — nothing references the build's pinned
-    // frames anymore. A library caller has no bench harness behind it to
-    // sweep leaked pins, so a build/rebuild loop would otherwise
-    // accumulate pinned corpus copies in executor storage.
-    graft.Materialize.unpin(cent)
-    graft.Materialize.unpin(trained)
-    graft.Materialize.unpin(emb)
   }
 
   // ---- versioned index layout (reader-safe retrain swap) ---------------
@@ -1168,15 +1162,14 @@ object Similarity {
       mode = "append")
 
   def appendToIvfIndex(spark: SparkSession, path: String, vecs: DataFrame,
-      idCol: String = "vec_id", embCol: String = "embedding"): IvfAppendStats = {
+      idCol: String = "vec_id",
+      embCol: String = "embedding"): IvfAppendStats = graft.Materialize.scoped {
     val live = resolveIndexDir(spark, path)
     val assigned = graft.Materialize.pin(
       assignToIvfIndex(spark, live, vecs, idCol, embCol))
-    try {
-      appendAssigned(assigned, live)
-      ensurePointerUnmoved(spark, path, live)
-      appendStats(assigned)
-    } finally graft.Materialize.unpin(assigned)
+    appendAssigned(assigned, live)
+    ensurePointerUnmoved(spark, path, live)
+    appendStats(assigned)
   }
 
   /** What one maintenance round did: appended in place, or re-trained. */
@@ -1200,81 +1193,80 @@ object Similarity {
     * `Double.NegativeInfinity` (the default) to always append. */
   def maintainIvfIndex(spark: SparkSession, path: String, vecs: DataFrame,
       retrainBelow: Double = Double.NegativeInfinity, iters: Int = 1,
-      idCol: String = "vec_id", embCol: String = "embedding"): IvfMaintenance = {
+      idCol: String = "vec_id",
+      embCol: String = "embedding"): IvfMaintenance = graft.Materialize.scoped {
     val live = resolveIndexDir(spark, path)
     val versioned = live != path
     val assigned = graft.Materialize.pin(
       assignToIvfIndex(spark, live, vecs, idCol, embCol))
-    try {
-      val stats = appendStats(assigned)
-      if (stats.nAppended > 0 && stats.meanCos < retrainBelow) {
-        // drifted: rebuild from stored postings + the (already-quantized)
-        // new batch, seeded by the current cells so training warm-starts
-        val old = Tables.parquet(spark, live)
-          .select(col("vec_id"), col("cell").as("label"), col("q"),
-            col("n2"))
-        val fresh = assigned
-          .select(col("vec_id"), col("cell").as("label"), col("q"),
-            col("n2"))
-        val grown = graft.Materialize.pin(old.unionByName(fresh))
-        if (versioned) {
-          // reader-safe swap: build the next version COMPLETELY, flip the
-          // `_current` pointer (one-file rename), keep the superseded
-          // version for one grace round (in-flight probes that resolved
-          // the old pointer finish on intact files), drop anything older.
-          val fs = fsOf(spark, path)
-          val rootP = new org.apache.hadoop.fs.Path(path)
-          val next = versionsOf(fs, rootP).lastOption.map(_._1 + 1)
-            .getOrElse(1L)
-          buildIndexFrom(grown, s"$path/v$next", iters)
-          writePointer(fs, rootP, s"v$next")
-          versionsOf(fs, rootP).dropRight(2).foreach { case (_, dir) =>
-            fs.delete(dir, true)
-          }
-        } else {
-          val tmp = path + ".retrain"
-          buildIndexFrom(grown, tmp, iters)
-          // FLAT-layout fallback swap: old → .old, tmp → live, drop .old.
-          // Two renames, so there IS a brief window where `path` does not
-          // exist (generic filesystems have no atomic directory swap) —
-          // run maintenance while probes are quiesced (use the VERSIONED
-          // layout when probes cannot be quiesced), and on a crash
-          // mid-swap recover by renaming `.old` (or `.retrain`) back into
-          // place; readers of a missing index must fail loudly, never
-          // rebuild from scratch (NightlyIngestExample checks exactly
-          // this). Hadoop FileSystem.rename signals failure by returning
-          // FALSE, not throwing — every step checks, because a silent
-          // false after staging the old index aside would destroy it
-          // while reporting success.
-          val fs = fsOf(spark, path)
-          def mv(a: String, b: String): Boolean =
-            fs.rename(new org.apache.hadoop.fs.Path(a),
-              new org.apache.hadoop.fs.Path(b))
-          val bak = path + ".old"
-          fs.delete(new org.apache.hadoop.fs.Path(bak), true)
-          if (!mv(path, bak))
-            throw new java.io.IOException(
-              s"IVF retrain: cannot stage $path aside; rebuilt index left at $tmp")
-          if (!mv(tmp, path)) {
-            val restored = mv(bak, path) // roll back — keep the old index live
-            throw new java.io.IOException(
-              if (restored)
-                s"IVF retrain: swap failed; old index restored, rebuild left at $tmp"
-              else
-                s"IVF retrain: swap AND rollback failed — no live index at " +
-                  s"$path; recover manually from $bak or $tmp")
-          }
-          fs.delete(new org.apache.hadoop.fs.Path(bak), true)
+    val stats = appendStats(assigned)
+    if (stats.nAppended > 0 && stats.meanCos < retrainBelow) {
+      // drifted: rebuild from stored postings + the (already-quantized)
+      // new batch, seeded by the current cells so training warm-starts
+      val old = Tables.parquet(spark, live)
+        .select(col("vec_id"), col("cell").as("label"), col("q"),
+          col("n2"))
+      val fresh = assigned
+        .select(col("vec_id"), col("cell").as("label"), col("q"),
+          col("n2"))
+      val grown = graft.Materialize.pin(old.unionByName(fresh))
+      if (versioned) {
+        // reader-safe swap: build the next version COMPLETELY, flip the
+        // `_current` pointer (one-file rename), keep the superseded
+        // version for one grace round (in-flight probes that resolved
+        // the old pointer finish on intact files), drop anything older.
+        val fs = fsOf(spark, path)
+        val rootP = new org.apache.hadoop.fs.Path(path)
+        val next = versionsOf(fs, rootP).lastOption.map(_._1 + 1)
+          .getOrElse(1L)
+        buildIndexFrom(grown, s"$path/v$next", iters)
+        writePointer(fs, rootP, s"v$next")
+        versionsOf(fs, rootP).dropRight(2).foreach { case (_, dir) =>
+          fs.delete(dir, true)
         }
-        IvfMaintenance(retrained = true, stats)
       } else {
-        if (stats.nAppended > 0) {
-          appendAssigned(assigned, live)
-          ensurePointerUnmoved(spark, path, live)
+        val tmp = path + ".retrain"
+        buildIndexFrom(grown, tmp, iters)
+        // FLAT-layout fallback swap: old → .old, tmp → live, drop .old.
+        // Two renames, so there IS a brief window where `path` does not
+        // exist (generic filesystems have no atomic directory swap) —
+        // run maintenance while probes are quiesced (use the VERSIONED
+        // layout when probes cannot be quiesced), and on a crash
+        // mid-swap recover by renaming `.old` (or `.retrain`) back into
+        // place; readers of a missing index must fail loudly, never
+        // rebuild from scratch (NightlyIngestExample checks exactly
+        // this). Hadoop FileSystem.rename signals failure by returning
+        // FALSE, not throwing — every step checks, because a silent
+        // false after staging the old index aside would destroy it
+        // while reporting success.
+        val fs = fsOf(spark, path)
+        def mv(a: String, b: String): Boolean =
+          fs.rename(new org.apache.hadoop.fs.Path(a),
+            new org.apache.hadoop.fs.Path(b))
+        val bak = path + ".old"
+        fs.delete(new org.apache.hadoop.fs.Path(bak), true)
+        if (!mv(path, bak))
+          throw new java.io.IOException(
+            s"IVF retrain: cannot stage $path aside; rebuilt index left at $tmp")
+        if (!mv(tmp, path)) {
+          val restored = mv(bak, path) // roll back — keep the old index live
+          throw new java.io.IOException(
+            if (restored)
+              s"IVF retrain: swap failed; old index restored, rebuild left at $tmp"
+            else
+              s"IVF retrain: swap AND rollback failed — no live index at " +
+                s"$path; recover manually from $bak or $tmp")
         }
-        IvfMaintenance(retrained = false, stats)
+        fs.delete(new org.apache.hadoop.fs.Path(bak), true)
       }
-    } finally graft.Materialize.unpin(assigned)
+      IvfMaintenance(retrained = true, stats)
+    } else {
+      if (stats.nAppended > 0) {
+        appendAssigned(assigned, live)
+        ensurePointerUnmoved(spark, path, live)
+      }
+      IvfMaintenance(retrained = false, stats)
+    }
   }
 
   /** Probe a persisted index with a caller-supplied float vector: rank
@@ -1475,7 +1467,8 @@ object Similarity {
     * [[appendToIvfIndex]] or a [[maintainIvfIndex]] retrain — appended
     * rows are invisible to ADC probes until encoded (the probe scores
     * CODES, and re-encoding is one bounded pass over the postings). */
-  def addPqToIvfIndex(spark: SparkSession, path: String, m: Int): Unit = {
+  def addPqToIvfIndex(spark: SparkSession, path: String,
+      m: Int): Unit = graft.Materialize.scoped {
     val path0 = resolveIndexDir(spark, path)
     val postings = Tables.parquet(spark, path0)
       .select(col("vec_id"), col("cell").cast("long").as("label"), col("q"),
@@ -1494,10 +1487,6 @@ object Similarity {
     cb.write.mode("overwrite").parquet(s"$path0/_pq_codebooks")
     writeNonce(fsOf(spark, path0), s"$path0/_pq_codebooks")
     ensurePointerUnmoved(spark, path, path0)
-    // artifacts are on disk — release the build's pinned frames
-    // (same library-caller contract as buildIndexFrom)
-    graft.Materialize.unpin(subs)
-    graft.Materialize.unpin(cb)
   }
 
   /** Re-derive the PQ codes of a PQ-augmented index after an append or a
@@ -1732,7 +1721,7 @@ object Similarity {
     * contract as [[addPqToIvfIndex]]: appended rows are invisible to
     * residual-ADC probes until re-encoded. */
   def addResidualPqToIvfIndex(spark: SparkSession, path: String,
-      m: Int): Unit = {
+      m: Int): Unit = graft.Materialize.scoped {
     import graft.functions.ArrayDot.dotLong
     val path0 = resolveIndexDir(spark, path)
     val postings = Tables.parquet(spark, path0)
@@ -1779,7 +1768,6 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$path0/_rpq_centroids")
     writeNonce(fsOf(spark, path0), s"$path0/_rpq_centroids")
     ensurePointerUnmoved(spark, path, path0)
-    graft.Materialize.unpin(subs)
   }
 
   private[graft] final case class RpqCentroidRow(label: Long,
@@ -1943,12 +1931,8 @@ object Similarity {
     * with the iteration count. Cells that lose all members simply drop out
     * of the centroid table (standard Lloyd behavior). Returns the final
     * (vec_id, label, assigned, cos). */
-  def kmeansFit(spark: SparkSession, dir: String, iters: Int): DataFrame = {
-    val emb = embCorpus(spark, dir)
-    // the last round's pin holds the whole result, so no plan reads this
-    // call's corpus pin again: free it now, not whenever the driver GCs
-    try kmeansFitOn(emb, iters) finally graft.Materialize.unpin(emb)
-  }
+  def kmeansFit(spark: SparkSession, dir: String, iters: Int): DataFrame =
+    graft.Materialize.scoped(kmeansFitOn(embCorpus(spark, dir), iters))
 
   /** The Lloyd loop over an already-pinned corpus — callers that hold an
     * `embCorpus` frame pass it here so trainer and consumer share ONE
@@ -2260,7 +2244,7 @@ object Similarity {
     * query a member row (`queryId`) — caller pool size / k / weights. */
   def mmrDiversifyOf(vecs: DataFrame, queryId: Long, nCand: Int, k: Int,
       lambda: Double, mu: Double, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
+      vecCol: String = "embedding"): DataFrame = graft.Materialize.scoped {
     import graft.functions.ArrayDot.dotLong
     require(nCand >= k && k >= 1, s"nCand=$nCand k=$k")
     val spark = vecs.sparkSession
@@ -2291,15 +2275,11 @@ object Similarity {
         col("q").as("qb"), col("n2").as("nb"))), col("ida") < col("idb"))
       .select(col("ida"), col("idb"),
         dotLong(col("qa"), col("qb")).as("dot"), col("na"), col("nb"))
-    // bounded collects: nCand and nCand(nCand−1)/2 integer rows; the pin
-    // is consumed entirely here, so release it before the driver-side
-    // greedy (the result frame below is built from collected rows and
-    // holds no reference to it)
-    val (candRows, pairRows) = try {
-      val c = cand.select("vec_id", "qdot", "n2", "qn2").collect()
-      require(c.nonEmpty, "mmr: empty candidate pool")
-      (c, pairs.collect())
-    } finally graft.Materialize.unpin(cand)
+    // bounded collects: nCand and nCand(nCand−1)/2 integer rows; the
+    // result frame below is built from them and reads no pin
+    val candRows = cand.select("vec_id", "qdot", "n2", "qn2").collect()
+    require(candRows.nonEmpty, "mmr: empty candidate pool")
+    val pairRows = pairs.collect()
     // the driver-side mirror of guardedCos: same −1 for degenerate rows,
     // identical IEEE expression otherwise
     def gCos(dot: Long, n2a: Long, n2b: Long): Double =

@@ -326,15 +326,15 @@ object TextAnalysis {
     *
     * PIN LIFECYCLE (caller contract): the per-(doc, term) count frame is
     * pinned internally — it feeds two consumers and unpinned the corpus
-    * tokenizes twice (measured +35%). Unlike the index BUILD paths, which
-    * consume their pins internally (artifacts land on disk) and so unpin
-    * before returning, this returns a LAZY plan that still reads the pin —
-    * it cannot be released here. In the default localCheckpoint mode the
-    * blocks free via the ContextCleaner once the returned frame becomes
-    * unreachable; under `spark.graft.reliableCheckpoint=true` checkpoint
-    * FILES back the pin and nothing auto-deletes them — after fully
-    * consuming the result call `Materialize.unpin(result)`, which finds
-    * the pinned leaf inside the result's own plan and deletes its files. */
+    * tokenizes twice (measured +35%). Unlike the index BUILD paths, whose
+    * scopes free their pins once the artifacts are on disk, this returns
+    * a LAZY plan that still reads the pin, so the pin passes to the
+    * caller. In the default localCheckpoint mode the blocks free via the
+    * ContextCleaner once the returned frame becomes unreachable; under
+    * `spark.graft.reliableCheckpoint=true` checkpoint FILES back the pin
+    * and nothing auto-deletes them — consume the result inside a
+    * [[graft.Materialize.scoped]] call whose own result does not read it,
+    * which deletes them on return. */
   def tfidfTopKOf(docs: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k: $k")
     val tok = docs.select(col("doc_id"), explode(toks).as("w"))
@@ -680,8 +680,9 @@ object TextAnalysis {
     * query pins the c04 benchmark slice `doc_id % 97 = 0` and 256
     * buckets). Documents with < 2 tokens carry n_grams = 0 and a NULL
     * weight. The returned frame derives from an internal pin of the gram
-    * stream; in reliable-checkpoint mode call `Materialize.unpin` on it
-    * when done (localCheckpoint blocks are freed by the ContextCleaner). */
+    * stream; in reliable-checkpoint mode consume it inside a
+    * [[graft.Materialize.scoped]] call to delete its files when done
+    * (localCheckpoint blocks are freed by the ContextCleaner). */
   def dsirWeightsOf(docs: DataFrame, isTarget: Column, buckets: Int,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(buckets >= 2, s"buckets: $buckets")
@@ -957,7 +958,7 @@ object TextAnalysis {
     * against the stopword-gate label. Returns one row per feature dim
     * with the weight after each iteration (micro-units). */
   def linearProbeOf(docs: DataFrame, width: Int, iters: Int,
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = graft.Materialize.scoped {
     require(width >= 2 && width <= 64, s"width: $width")
     require(iters >= 1 && iters <= 8, s"iters: $iters")
     val S = 1000000L
@@ -970,30 +971,24 @@ object TextAnalysis {
         (graft.functions.Hashing.md5Long(concat(lit("feat:"), w), 15)
           % width).cast("int"))).as("dims"))
       .transform(graft.Materialize.pin)
-    // The returned frame is rebuilt from the driver-held trajectory, so
-    // the pinned corpus-sized block is unreachable to callers — release
-    // it here once the last gradient collect is done (try/finally: a
-    // failed iteration must not leak the localCheckpoint blocks either).
-    val traj = try {
-      val n = feat.count()
-      val div = 8L * n
-      var w = Array.fill(width)(0L)
-      (1 to iters).map { _ =>
-        val wLit = array(w.map(lit): _*)
-        // residual r = Σ_d w[d]·x_d − S·y as a pure map expression (the
-        // weight vector is a broadcast literal); gradient g_d = Σ_docs r
-        // over docs where dim d is present — a width-cell aggregation
-        val g = feat
-          .select(col("dims"), (aggregate(col("dims"), lit(0L),
-            (acc, d) => acc + element_at(wLit, d + 1)) - lit(S) * col("y"))
-            .as("r"))
-          .select(explode(col("dims")).as("dim"), col("r"))
-          .groupBy("dim").agg(sum("r").as("g"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-        w = Array.tabulate(width)(d => w(d) - g.getOrElse(d, 0L) / div)
-        w.clone()
-      }
-    } finally graft.Materialize.unpin(feat)
+    val n = feat.count()
+    val div = 8L * n
+    var w = Array.fill(width)(0L)
+    val traj = (1 to iters).map { _ =>
+      val wLit = array(w.map(lit): _*)
+      // residual r = Σ_d w[d]·x_d − S·y as a pure map expression (the
+      // weight vector is a broadcast literal); gradient g_d = Σ_docs r
+      // over docs where dim d is present — a width-cell aggregation
+      val g = feat
+        .select(col("dims"), (aggregate(col("dims"), lit(0L),
+          (acc, d) => acc + element_at(wLit, d + 1)) - lit(S) * col("y"))
+          .as("r"))
+        .select(explode(col("dims")).as("dim"), col("r"))
+        .groupBy("dim").agg(sum("r").as("g"))
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      w = Array.tabulate(width)(d => w(d) - g.getOrElse(d, 0L) / div)
+      w.clone()
+    }
     import spark.implicits._
     (0 until width).map(d =>
         (d.toLong, traj.map(_(d)).toList))

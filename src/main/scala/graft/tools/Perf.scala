@@ -1,13 +1,21 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.graft.Bridge
 import graft.{GraftSession, SparkEntry}
 
 /** The engine's per-query profiler:
   * `runMain graft.tools.Perf <sfDir> [explain] [jobs] [reps=N] <query>...` —
-  * times each named query (all if none given). With `reps=N` (N ≥ 2) each
+  * times each named query (all if none given). A timed run is the query's
+  * construction (its eager pins included) plus a `noop` write, which
+  * computes every output column: `count()` lets the optimizer drop
+  * columns that only ride outer joins, so it undercounts such queries
+  * (ss17's audit arms). Timings and counters from a build that still timed
+  * `df.count()` measure a different action — an A/B across the switch
+  * compares different work. With `reps=N` (N ≥ 2) each
   * query gets one untimed warmup then N timed runs reported as
   * min/med/max — the reliable way to compare plan variants on this
   * machine, since separate bench JVMs swing ±15–20% under background
@@ -104,20 +112,26 @@ object Perf {
       counters.tracing = false
       (dt, r, counters.columns)
     }
+    // one run: build the frame, then write it to `noop`; the row count
+    // rides the write as an observed metric
+    def run(name: String): (DataFrame, Long) = {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val obs = Observation()
+      df.observe(obs, count(lit(1)).as("n"))
+        .write.format("noop").mode("overwrite").save()
+      (df, obs.get("n").asInstanceOf[Long])
+    }
     val todo = if (names.isEmpty) SparkEntry.queries.keys.toSeq.sorted else names.toSeq
     todo.foreach { name =>
       require(SparkEntry.queries.contains(name), s"unknown query $name")
-      val df = SparkEntry.queries(name)(spark, sfDir)
+      // with reps, this first run is the warmup (codegen, file listing)
+      val (dt, (df, n), cols) = timed(run(name))
       if (explain) { println(s"==== $name"); df.explain("formatted") }
-      if (reps == 1) {
-        val (dt, n, cols) = timed(df.count())
-        println(f"$name%-22s $dt%8.2f s  ($n rows)  $cols")
-        graft.Bench.dropPins(spark)
-      } else {
-        df.count() // untimed warmup (codegen, file listing)
-        graft.Bench.dropPins(spark)
+      graft.Bench.dropPins(spark)
+      if (reps == 1) println(f"$name%-22s $dt%8.2f s  ($n rows)  $cols")
+      else {
         val runs = (1 to reps).map { _ =>
-          val (dt, _, cols) = timed(SparkEntry.queries(name)(spark, sfDir).count())
+          val (dt, _, cols) = timed(run(name))
           // free the rep's checkpoint blocks so rep N doesn't pay rep
           // N-1's storage pressure (see Bench.dropPins)
           graft.Bench.dropPins(spark)

@@ -286,6 +286,22 @@ class IvfIndexSpec extends SparkSpec {
     assert(out.count() == 5)
   }
 
+  test("buildIvfIndexOf into a path whose write fails leaves none of its own pins live") {
+    val vecs = t(spark, sf, "embeddings").select("vec_id", "embedding")
+    // a regular file where the index's parent directory should be: the
+    // first write fails after the corpus, k-means and centroid pins exist
+    val blocker = new java.io.File(tmpDir("ivf-write-fails"), "blocker")
+    java.nio.file.Files.writeString(blocker.toPath, "not a directory")
+    val (run, pins) = pinsLeftBy(settleTo = 0) {
+      Similarity.buildIvfIndexOf(vecs, s"$blocker/index", iters = 1,
+        cells = 4)
+    }
+    assert(run.isFailure, "the index write under a regular file succeeded")
+    assert(pins.taken.size >= 3, s"pins taken: ${pins.taken}")
+    assert(pins.live.isEmpty,
+      s"${pins.live.size} of ${pins.taken.size} build pins outlived the failure")
+  }
+
   test("gated deployment: passing audit flips the pointer; failing audit never serves") {
     val all = t(spark, sf, "embeddings").select("vec_id", "embedding")
     val root = tmpDir("ivf-gated")

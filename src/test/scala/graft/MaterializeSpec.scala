@@ -4,10 +4,90 @@ import org.apache.spark.sql.functions._
 
 /** Materialize.pin — the central subplan-pinning policy: localCheckpoint by
   * default, reliable checkpointing when spark.graft.reliableCheckpoint is
-  * set (the spot-instance mode the Dedup/Skew sites document). */
+  * set (the spot-instance mode the Dedup/Skew sites document) — and
+  * Materialize.scoped, the one owner of pin release. */
 class MaterializeSpec extends SparkSpec {
 
   private def sample = spark.range(100).select(col("id"), (col("id") * 3).as("v"))
+
+  /** The pinned RDD ids a frame's plan reads. */
+  private def pinIds(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+    df.queryExecution.analyzed.collectLeaves().collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }
+
+  private def persisted(id: Int): Boolean =
+    spark.sparkContext.getPersistentRDDs.contains(id)
+
+  test("scoped: a throw frees every pin the body took") {
+    var taken = Seq.empty[Int]
+    val boom = intercept[IllegalStateException] {
+      Materialize.scoped {
+        val a = Materialize.pin(sample)
+        val b = Materialize.scoped(Materialize.pin(a.select(col("v"))))
+        taken = pinIds(a) ++ pinIds(b)
+        assert(taken.size == 2 && taken.forall(persisted))
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(boom.getMessage == "boom")
+    assert(!taken.exists(persisted), s"pins survived the throw: $taken")
+  }
+
+  test("scoped: a returned frame keeps exactly the pins its plan reads") {
+    var dropped = Seq.empty[Int]
+    val out = Materialize.scoped {
+      val kept = Materialize.pin(sample)
+      val other = Materialize.pin(sample.select(col("id").as("k")))
+      assert(other.count() == 100)
+      dropped = pinIds(other)
+      kept.where(col("v") > 3)
+    }
+    val kept = pinIds(out)
+    assert(kept.size == 1 && kept.forall(persisted))
+    assert(dropped.size == 1 && !dropped.exists(persisted))
+    assert(out.count() == 98)
+    Materialize.unpin(out)
+    assert(!kept.exists(persisted))
+  }
+
+  test("scoped: a nested scope hands its kept pins to the parent") {
+    var inner = Seq.empty[Int]
+    var innerDropped = Seq.empty[Int]
+    val n = Materialize.scoped {
+      val f = Materialize.scoped {
+        val x = Materialize.pin(sample)
+        innerDropped = pinIds(Materialize.pin(sample.select(col("v"))))
+        x.select(col("id"))
+      }
+      inner = pinIds(f)
+      // the inner scope freed what its result does not read and kept the rest
+      assert(inner.size == 1 && inner.forall(persisted))
+      assert(!innerDropped.exists(persisted))
+      f.count()
+    }
+    // the parent's result (a count) reads no pin, so it frees the handed-up one
+    assert(n == 100)
+    assert(!inner.exists(persisted), s"parent kept its child's pin: $inner")
+  }
+
+  test("scoped: pins taken before the scope or on another thread survive it") {
+    val before = Materialize.pin(sample)
+    var elsewhere: org.apache.spark.sql.DataFrame = null
+    intercept[IllegalStateException] {
+      Materialize.scoped {
+        assert(before.count() == 100)
+        val t = new Thread(() => elsewhere = Materialize.pin(sample))
+        t.start(); t.join()
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(Materialize.scoped(before.count()) == 100)
+    val ids = pinIds(before) ++ pinIds(elsewhere)
+    assert(ids.size == 2 && ids.forall(persisted))
+    Materialize.unpin(before)
+    Materialize.unpin(elsewhere)
+  }
 
   test("default mode pins eagerly via localCheckpoint") {
     val pinned = Materialize.pin(sample)

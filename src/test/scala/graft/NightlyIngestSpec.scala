@@ -131,6 +131,32 @@ class NightlyIngestSpec extends SparkSpec {
       "ledger bands must grow by exactly the kept docs' 8 bands each")
   }
 
+  test("reconcileNight leaves none of its own pins after it returns") {
+    val docs = t(spark, sf, "documents").where(col("doc_id") < 200)
+    val vecs = t(spark, sf, "embeddings").select("vec_id", "embedding")
+    val root = tmpDir("nightly-reconcile-pins")
+    val (curated, index) = (s"$root/curated", s"$root/index")
+    NightlyIngestExample.ingestNight(spark, docs,
+      vecs.where(col("vec_id") < 200), curated, index)
+    def reconcile(): SparkSpec.Pins = {
+      val (run, pins) = pinsLeftBy(settleTo = 0) {
+        NightlyIngestExample.reconcileNight(spark, curated, index, vecs)
+      }
+      run.get
+      assert(pins.taken.nonEmpty, "reconcile took no pins")
+      pins
+    }
+    // an index exists: the store ⋈ index anti-join is pinned (empty here)
+    val append = reconcile()
+    assert(append.live.isEmpty, s"append path left pins ${append.live}")
+    // no index at all: the store's vectors build one
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(index))
+    val build = reconcile()
+    assert(build.live.isEmpty, s"build path left pins ${build.live}")
+    assert(spark.read.parquet(index).count() ==
+      spark.read.parquet(curated).count())
+  }
+
   test("crash matrix: reconcile + re-run converges to the never-crashed state after EVERY stage boundary") {
     // the r10 directive: the crash-ordering argument was documented, not
     // failure-injected. Here the night is killed after each of its five

@@ -1044,78 +1044,32 @@ class PipelinesSpec extends SparkSpec {
     // dd06 pins one frame per round plus the pair/edge frames; everything
     // but the surviving label leaves must be unpersisted by the time the
     // result materializes — otherwise executor storage grows linearly with
-    // round count at scale. Suites share one SparkContext and run
-    // concurrently, so the audit uses Materialize.pinLog filtered to THIS
-    // thread (pin runs on the operator's calling thread): exactly the
-    // operator's own pins, zero allowance for neighbors — and never
-    // Bench.dropPins here, which would unpersist a concurrent suite's
-    // live pins out from under it
-    val me = Thread.currentThread().getId
-    def myPinsSince(mark: Int): Seq[Int] = {
-      import scala.jdk.CollectionConverters._
-      Materialize.pinLog.asScala.toSeq.drop(mark)
-        .collect { case (t, id) if t == me => id }
-    }
-    def live(ids: Seq[Int], settleTo: Int): Seq[Int] = {
-      // operator-internal unpins are deliberately non-blocking (the
-      // operator must not stall on block eviction), so under concurrent
-      // suite load a superseded pin can linger — the r9-flagged flake
-      // was exactly this: a no-shrink quiet window expired while an
-      // enqueued unpersist was still queued behind a neighbor suite's
-      // jobs, reporting 2 live pins for a steady state of 1 (observed
-      // again in round 13: two full-suite runs under driver load tripped
-      // the 5 s window; isolation and a quiet machine always pass). The
-      // invariant is "eventually bounded", not "instantaneously bounded",
-      // and the quiet-window heuristic only bought faster FAILURE
-      // reporting at the price of load-dependent false positives — so
-      // poll plainly to the hard deadline and exit early once ≤ settleTo
-      // pins remain. A genuine leak never shrinks to the floor and is
-      // still reported in full; only the failure path pays the wait.
-      // Deadline 300 s, not 60: the 60 s edition tripped a THIRD time
-      // under a concurrent perf JVM (r9, r13, r14-judging) — a gate that
-      // fails under neighbor load trains people to rerun, which is how
-      // real failures get ignored. Worst observed contention (a full
-      // parallel suite + perf JVMs) clears in well under five minutes;
-      // clean runs still exit the moment pins settle.
-      val deadline = System.nanoTime() + 300000000000L
-      def snap() = ids.filter(spark.sparkContext.getPersistentRDDs.keySet)
-      var out = snap()
-      while (out.size > settleTo && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        out = snap()
-      }
-      out
-    }
-    // the log is OFF in production (it would grow forever in a long-lived
-    // job); enable only for this audit's window
-    Materialize.pinLogEnabled.set(true)
-    try {
-      val mark1 = Materialize.pinLog.size()
+    // round count at scale
+    val (run, dd06) = pinsLeftBy(settleTo = 3) {
       Dedup.dd06NearDupClusters(spark, sf).count()
-      val dd06Live = live(myPinsSince(mark1), settleTo = 3)
-      // the RESULT legitimately references its final-round frames (label
-      // leaves + edge/sig pins) — bounded by the plan SHAPE (3), never by
-      // round count
-      assert(dd06Live.size <= 3,
-        s"${dd06Live.size} of dd06's own pins survive — unpin regressed")
-      // the real linear-growth invariant, now directly assertable: more
-      // Lloyd rounds must NOT leave more pins behind
-      def kmLive(iters: Int): Int = {
-        val mark = Materialize.pinLog.size()
-        Similarity.kmeansFit(spark, sf, iters).count()
-        // settleTo = 1: kmeansFit's steady state is its one result pin
-        // (observed in every clean run); a growth-with-iters leak never
-        // shrinks to it and is still reported in full
-        live(myPinsSince(mark), settleTo = 1).size
-      }
-      val (lo, hi) = (kmLive(2), kmLive(5))
-      assert(hi <= lo && lo <= 2,
-        s"kmeansFit live pins grew with iteration count: iters=2 → $lo, " +
-          s"iters=5 → $hi")
-    } finally {
-      Materialize.pinLogEnabled.set(false)
-      Materialize.pinLog.clear()
     }
+    run.get
+    // the RESULT legitimately references its final-round frames (label
+    // leaves + edge/sig pins) — bounded by the plan SHAPE (3), never by
+    // round count
+    assert(dd06.live.size <= 3,
+      s"${dd06.live.size} of dd06's own pins survive — unpin regressed")
+    // the real linear-growth invariant, now directly assertable: more
+    // Lloyd rounds must NOT leave more pins behind
+    def kmLive(iters: Int): Int = {
+      // settleTo = 1: kmeansFit's steady state is its one result pin
+      // (observed in every clean run); a growth-with-iters leak never
+      // shrinks to it and is still reported in full
+      val (run, km) = pinsLeftBy(settleTo = 1) {
+        Similarity.kmeansFit(spark, sf, iters).count()
+      }
+      run.get
+      km.live.size
+    }
+    val (lo, hi) = (kmLive(2), kmLive(5))
+    assert(hi <= lo && lo <= 2,
+      s"kmeansFit live pins grew with iteration count: iters=2 → $lo, " +
+        s"iters=5 → $hi")
   }
 
   test("q29 time buckets partition the corpus: counts total, users bounded") {

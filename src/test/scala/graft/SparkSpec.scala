@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -67,6 +68,62 @@ trait SparkSpec extends AnyFunSuite {
       assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
     } finally sc.removeSparkListener(listener)
     starts.asScala.toSeq.groupMap(_._1)(_._2)
+  }
+
+  /** Runs `body` with [[Materialize.pinLog]] on and returns its outcome
+    * with the pins this thread took during it: all of them, and those
+    * still persisted once at most `settleTo` remain (or 300 s pass).
+    * Filtering the log to the calling thread (pins run on the operator's
+    * calling thread) audits exactly the body's own pins while other
+    * suites pin concurrently on the shared context — no allowance for
+    * neighbors, and no `Bench.dropPins`, which would unpersist a
+    * concurrent suite's live pins. The invariant is "eventually bounded":
+    * unpins are non-blocking, so under concurrent suite load a freed pin
+    * can linger; a quiet-window heuristic tripped on exactly that under
+    * neighbor load (a 5 s window, then a 60 s edition, under parallel
+    * suites and perf JVMs). So poll plainly to a hard deadline and exit
+    * early once ≤ `settleTo` pins remain: a genuine leak never shrinks to
+    * the floor and is still reported in full; only the failure path pays
+    * the wait. */
+  def pinsLeftBy[T](settleTo: Int)(body: => T): (Try[T], SparkSpec.Pins) = {
+    val me = Thread.currentThread().getId
+    val mark = SparkSpec.openPinLog()
+    try {
+      val out = Try(body)
+      val taken = Materialize.pinLog.asScala.toSeq.drop(mark)
+        .collect { case (t, id) if t == me => id }
+      def live() = taken.filter(spark.sparkContext.getPersistentRDDs.keySet)
+      val deadline = System.nanoTime() + 300000000000L
+      var left = live()
+      while (left.size > settleTo && System.nanoTime() < deadline) {
+        Thread.sleep(100)
+        left = live()
+      }
+      (out, SparkSpec.Pins(taken, left))
+    } finally SparkSpec.closePinLog()
+  }
+}
+
+object SparkSpec {
+  /** The RDD ids of the pins a body took, and of those still live. */
+  final case class Pins(taken: Seq[Int], live: Seq[Int])
+
+  // the log is OFF in production (it would grow forever in a long-lived
+  // job): on while any test audits, cleared when the last one finishes
+  private var pinLogUsers = 0
+
+  private def openPinLog(): Int = synchronized {
+    if (pinLogUsers == 0) Materialize.pinLogEnabled.set(true)
+    pinLogUsers += 1
+    Materialize.pinLog.size()
+  }
+
+  private def closePinLog(): Unit = synchronized {
+    pinLogUsers -= 1
+    if (pinLogUsers == 0) {
+      Materialize.pinLogEnabled.set(false)
+      Materialize.pinLog.clear()
+    }
   }
 }
 

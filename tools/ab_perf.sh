@@ -15,6 +15,12 @@
 #   - one cheap-input sibling of the suspect (e.g. t10_common_ratio for
 #     roundDiv movers): isolates WHICH input makes the mover expensive.
 #
+# Each side runs its OWN graft.tools.Perf. Perf now times construction
+# plus a `noop` write (every output column computed); older builds timed
+# `df.count()`. An A/B whose <prev-commit> predates that switch compares
+# different actions, so its ratios mix the code change with the action
+# change — pick a <prev-commit> on the same side of it.
+#
 # Usage: tools/ab_perf.sh <prev-commit> <sfDir> <mem> [reps=N] <query>...
 # Example:
 #   tools/ab_perf.sh b76f99c /root/testdata/sf0.1 8g reps=5 \

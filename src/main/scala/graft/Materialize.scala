@@ -127,8 +127,16 @@ object Materialize {
       free(r)
     }
 
+  /** Bytes the block manager holds for the pins `df` reads, memory plus
+    * disk: 0 when it reads none, or in reliable-checkpoint mode (files,
+    * not blocks). */
+  private[graft] def pinnedBytes(df: DataFrame): Long =
+    pinnedRdds(df).map(org.apache.spark.sql.graft.Bridge.storedBytes).sum
+
   private def free(rdd: RDD[_]): Unit = {
-    rdd.unpersist(blocking = false)
+    // not `rdd.unpersist`: on a locally checkpointed RDD it logs a WARN
+    // that the lineage is gone, and every freed pin is one by design
+    org.apache.spark.sql.graft.Bridge.dropBlocks(rdd)
     // reliable-checkpoint mode persists to FILES, not blocks — and
     // spark.cleaner.referenceTracking.cleanCheckpoints defaults to
     // false, so without this delete a spot-fleet run accumulates one

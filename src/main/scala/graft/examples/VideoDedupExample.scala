@@ -155,15 +155,11 @@ object VideoDedupExample {
     val near = nearDupVideoPairsOf(scenes, videos, maxHamming,
       minShared, hashDemux)
       .select(col("doc_a").as("ida"), col("doc_b").as("idb"))
+    // pinned so the scenes are freed before the component search runs
     val pairs = exact.unionAll(near).distinct()
       .transform(graft.Materialize.pin)
     graft.Materialize.unpin(scenes)
-    val edges = pairs
-      .unionAll(pairs.select(col("idb").as("ida"), col("ida").as("idb")))
-      .repartition(col("ida"))
-      .transform(graft.Materialize.pin)
-    graft.Materialize.unpin(pairs)
-    val labels = Dedup.connectedComponents(edges)
+    val labels = Dedup.connectedComponents(pairs)
     videos.join(labels, Seq("doc_id"), "left")
       .where(col("lbl").isNull || col("lbl") === col("doc_id"))
       .drop("lbl")

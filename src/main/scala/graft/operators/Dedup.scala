@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import graft.sources.Tables.t
 
 /** Deduplication operators for training-data pipelines (SURVEY.md §7.6):
@@ -1102,36 +1103,17 @@ object Dedup {
     * curation pipeline — "keep one per group" needs the transitive group —
     * so every document gets the smallest doc_id reachable through near-dup
     * edges as its cluster id (singletons label themselves). The component
-    * search runs over the edge-TOUCHED subgraph only — per-round state is
+    * search runs over the edge-TOUCHED subgraph only — its state is
     * proportional to the near-dup fraction of the corpus, not the corpus
-    * (on a real corpus most documents are singletons and never enter the
-    * loop); singletons are attached after the fixpoint with one left join. */
+    * (on a real corpus most documents are singletons and never enter it);
+    * singletons are attached afterwards with one left join. The
+    * pair-distinct inside simhashPairs stays even though the search is
+    * duplicate-insensitive: measured A/B at sf0.1, paying one dedup
+    * shuffle beats carrying each duplicated edge (≤ 5× per shared band)
+    * through the search. */
   def dd06NearDupClusters(spark: SparkSession, dir: String): DataFrame =
       graft.Materialize.scoped {
-    // SYMMETRIC edge expansion as a map-only explode over the (unsorted)
-    // dd05 pair pipeline — each pair row emits (a,b) and (b,a) in ONE
-    // pass, so the pair set needs no pin of its own (r16 optimization:
-    // the old two-branch unionAll read the pair frame twice, which forced
-    // an extra full materialization of the pair set; the explode has a
-    // single consumer and feeds the edge pin directly). The pair-distinct
-    // inside simhashPairs stays even though min-label propagation is
-    // duplicate-insensitive: measured A/B at sf0.1, paying one dedup
-    // shuffle beats re-joining each duplicated edge (≤ 5× per shared
-    // band) every propagation round.
-    // Pin the SYMMETRIC edge frame hash-partitioned on the join key: the
-    // propagation loop joins edges on ida every round, and a pinned leaf
-    // advertising HashPartitioning(ida) satisfies the join's required
-    // distribution — the E-sized side is shuffled ONCE here instead of
-    // once per round (the frontier side, which shrinks round over round,
-    // is the only thing that still moves)
-    val edges = simhashPairs(spark, dir)
-      .select(explode(array(
-        struct(col("ida"), col("idb")),
-        struct(col("idb").as("ida"), col("ida").as("idb")))).as("__e"))
-      .select(col("__e.ida").as("ida"), col("__e.idb").as("idb"))
-      .repartition(col("ida"))
-      .transform(graft.Materialize.pin)
-    val labels = connectedComponents(edges)
+    val labels = connectedComponents(simhashPairs(spark, dir))
     t(spark, dir, "documents").select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -1139,105 +1121,124 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Connected components over a SYMMETRIC edge frame (ida, idb): every
+  /** The edge layout [[connectedComponents]] runs on: each (ida, idb) pair
+    * in both orientations, hash-partitioned on `ida` and pinned. This is
+    * the solve's precondition: each node's edges sit in one partition, so
+    * each node gets exactly one label row. The orientations come from ONE
+    * map-only explode, so the pair frame has a single consumer and needs
+    * no pin of its own. */
+  private[graft] def ccEdges(pairs: DataFrame): DataFrame =
+    pairs.select(explode(array(
+        struct(col("ida"), col("idb")),
+        struct(col("idb").as("ida"), col("ida").as("idb")))).as("__e"))
+      .select(col("__e.ida").as("ida"), col("__e.idb").as("idb"))
+      .repartition(col("ida"))
+      .transform(graft.Materialize.pin)
+
+  /** Connected components over an undirected edge frame (ida, idb), each
+    * edge in either orientation or both (duplicates are harmless): every
     * edge-touched node gets the smallest node id reachable from it, as
-    * (doc_id, lbl). Two regimes, switched automatically:
+    * (doc_id, lbl), one row per node. Each phase lays its edges out once
+    * with [[ccEdges]] (one exchange and a pin).
     *
-    * FAST PATH — frontier-driven min-label propagation with pointer
-    * jumping. Each round, only nodes whose label improved last round offer
-    * it to their neighbors (a label can only improve via a neighbor's
-    * improvement, so messages from unchanged nodes are provably redundant):
-    * the edge join touches Σ frontier-degree edges per round, a shrinking
-    * fraction of E, for ~E log D total traffic instead of rounds·E. The
-    * round is ONE fused job — messages UNION'd with every node's current
-    * label (tagged with the pre-round label so the frontier falls out of
-    * the same aggregate), min per node, then a pointer jump against the
-    * PREVIOUS round's pinned labels (lbl ← min(lbl, prev-labels[lbl]);
-    * monotone because a label always names a node whose label is ≤ it, and
+    * SOLVE — each phase opens with one map-only pass: [[ccLocalMinima]]
+    * over each partition's edges labels every node the partition holds
+    * the edges of with its partition-local component minimum. The pin
+    * that materializes those labels observes the smallest and largest
+    * emitting partition id. If every label row came from one partition
+    * (or none came: no edges), that partition held every edge, so its
+    * minima ARE the component minima and the phase returns — one job. The
+    * solve reads the edge pin coalesced to ⌈its stored bytes /
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`⌉ partitions, so an
+    * edge set within one advisory partition is solved in one task however
+    * many partitions AQE left it in. (In reliable-checkpoint mode the
+    * block manager holds no bytes for the pin, and the solve reads the
+    * layout's partitions.)
+    *
+    * PROPAGATION — otherwise the solve's labels (each already ≤ the node's
+    * min(self, min neighbor)) seed frontier-driven min-label propagation
+    * with pointer jumping. Each round, only nodes whose label improved
+    * last round offer it to their neighbors (a label can only improve via
+    * a neighbor's improvement, so messages from unchanged nodes are
+    * provably redundant); the first round's frontier is every node, since
+    * the solve compares no labels across partitions. The round is ONE
+    * fused job — messages UNION'd with every node's current label (tagged
+    * with the pre-round label so the frontier falls out of the same
+    * aggregate), min per node, a pointer jump against the PREVIOUS
+    * round's pinned labels (lbl ← min(lbl, prev-labels[lbl]); monotone
+    * because a label always names a node whose label is ≤ it, and
     * fixpoint-preserving because at the component min the hop is the
-    * identity — same ~log-diameter doubling as Shiloach–Vishkin
-    * shortcutting, but the stepped frame is consumed ONCE, so nothing else
-    * per round needs materializing). Convergence = the round improved no
-    * label — an OBSERVED metric (CollectMetrics) collected during the
-    * pin's own materialization, so detection costs zero extra jobs and
-    * zero extra passes; the next round's frontier is a lazy filter over
-    * the pinned frame.
+    * identity — Shiloach–Vishkin shortcutting), then [[ccLocalMinima]]'s
+    * partition-local collapse. The round ends when its pin materializes;
+    * it improved no label iff the fixpoint is reached — an OBSERVED metric
+    * (CollectMetrics) collected during that pin, so detection costs no
+    * extra job; the next round's frontier is a lazy filter over the
+    * pinned frame.
     *
-    * FALLBACK — after `propRounds` un-converged rounds, CONTRACT: collapse
-    * the graph by the labels found so far (edges between current labels,
-    * self-loops dropped) and recurse on the contracted graph with a
-    * DOUBLED round budget, composing the final label through the
-    * contraction mapping. The doubling is load-bearing: pointer jumping
-    * doubles label reach per round but a contraction resets that doubling
-    * (the contracted graph starts back at identity labels), so a FIXED
-    * per-phase budget b advances a diameter-D path only ~2^b nodes per
-    * phase — linear, not geometric. With the budget doubling, phase k
-    * covers reach 2^(b·2^k), so total rounds across all phases ≈ 2·log₂ D
-    * — the same asymptotics as uninterrupted propagation — while each
-    * phase re-pins lineage and works on a strictly smaller graph (only
-    * the still-unconverged components' labels). Adversarial diameter
-    * (crawl chains, quote cascades) therefore degrades to more phases,
-    * never to an exception, and a nightly 100 TB curation job cannot be
-    * killed by one pathological component.
+    * CONTRACTION — after `propRounds` rounds (the solve counts as the
+    * first) without a fixpoint: collapse the graph by the labels found so
+    * far (edges between current labels, self-loops dropped) and recurse
+    * on the contracted graph with a DOUBLED round budget, composing the
+    * final label through the contraction mapping. The doubling is
+    * load-bearing: pointer jumping doubles label reach per round but a
+    * contraction resets that doubling (the contracted graph starts back at
+    * fresh labels), so a FIXED per-phase budget b advances a diameter-D
+    * path only ~2^b nodes per phase — linear, not geometric. With the
+    * budget doubling, phase k covers reach 2^(b·2^k), so total rounds
+    * across all phases ≈ 2·log₂ D — the same asymptotics as
+    * uninterrupted propagation — while each phase re-pins lineage and
+    * works on a strictly smaller graph (only the still-unconverged
+    * components' labels), which its own solve may finish in one job.
+    * Adversarial diameter (crawl chains, quote cascades) therefore
+    * degrades to more phases, never to an exception, and a nightly 100 TB
+    * curation job cannot be killed by one pathological component.
     *
-    * Public library surface: works over ANY symmetric (ida, idb) edge
+    * Public library surface: works over ANY (ida, idb) edge
     * frame — near-dup graphs here, but equally link graphs or entity-
     * resolution matches. Property-tested against union-find on random
-    * topologies with contraction forced (PipelinesSpec). */
+    * topologies, solved in one partition and with the propagation and
+    * contraction forced over four (PipelinesSpec). */
   def connectedComponents(edges: DataFrame,
       propRounds: Int = 8): DataFrame =
     ccPhase(edges, propRounds, phase = 0)
 
-  /** PARTITION-LOCAL pointer collapse (r17): union-find over the pointer
-    * pairs (doc_id, lbl) that happen to share a partition, emitting each
-    * node's partition-local component MINIMUM as its new label. This sits
-    * BETWEEN the round's hop join and its pin, and is monotone-valid for
-    * the same reason the single hop is: every pointer pair links two nodes
-    * of the same real component, so the transitive minimum over any
-    * SUBSET of pointer pairs still names a node reachable from (and
-    * smaller than) the current label — the fixpoint (per-component min)
-    * is untouched, only reached in fewer rounds. Complements the hop
-    * join on the two regimes: the hop doubles reach GLOBALLY regardless
-    * of partitioning (the adversarial-diameter guarantee at cluster
-    * scale), while the local collapse closes whole pointer chains the
-    * moment they co-locate — at bench/report scale, where AQE coalesces
-    * the label frame into one or two partitions, a round becomes a full
-    * component solve and the loop exits in seed + solve + confirm
-    * (measured: dd06's 7 observed rounds → 3). Cost: one map-only pass
-    * over the label-sized frame, no exchange (union-find needs no
-    * particular distribution — whatever rows co-locate, collapse). */
-  /** `stepped` is (doc_id, lbl, __prev, __edge). Rows with `__edge` set
-    * (the first message round's raw-edge rows) join the union-find but
-    * emit no label row. The tag is its own column because every Long is a
-    * legal node id, so no `__prev` value can mark an edge row. */
-  private def ccLocalJump(stepped: DataFrame): DataFrame = {
-    val spark = stepped.sparkSession
+  /** The partition-local pass behind both the solve and each round's
+    * pointer collapse: a union-find ([[LongUnionFind]]) over the rows of
+    * `rows` (doc_id, lbl, __prev) that share a partition links each
+    * doc_id to its lbl and to its __prev, then emits one row per distinct
+    * doc_id with lbl = its partition-local component MINIMUM and the
+    * __prev of its (last) row. Valid wherever each row links nodes of one
+    * real component, as an edge or a pointer pair does: the minimum over
+    * any SUBSET of such links still names a node reachable from (and no
+    * larger than) the node, so the fixpoint (per-component min) is
+    * untouched, only reached in fewer rounds. Linking the pre-round label
+    * merges a node's old label tree into the one its improved label
+    * names, so co-located nodes that shared the old label move with it.
+    * Cost: one map-only pass, no exchange (union-find needs no particular
+    * distribution); memory per task is bounded by the kernel's bytes per
+    * distinct node. */
+  private def ccLocalMinima(rows: DataFrame): DataFrame = {
+    val spark = rows.sparkSession
     import spark.implicits._
-    stepped.as[(Long, Long, Long, Boolean)]
+    rows.as[(Long, Long, Long)]
       .mapPartitions { it =>
-        val rows = it.toArray
-        val parent = new java.util.HashMap[Long, Long](rows.length * 2)
-        def find(x: Long): Long = {
-          var r = x
-          var p = parent.getOrDefault(r, r)
-          while (p != r) { r = p; p = parent.getOrDefault(r, r) }
-          var c = x // path compression: point the walked chain at the root
-          while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
-          r
+        val uf = new LongUnionFind
+        val held = new scala.collection.mutable.BitSet
+        var prev = new Array[Long](16)
+        it.foreach { case (d, l, p) =>
+          val i = uf.node(d)
+          uf.union(i, uf.node(l))
+          uf.union(i, uf.node(p))
+          if (i >= prev.length) prev = java.util.Arrays.copyOf(prev, 2 * i)
+          prev(i) = p
+          held += i
         }
-        rows.foreach { case (d, l, _, _) =>
-          val rd = find(d); val rl = find(l)
-          if (rd < rl) parent.put(rl, rd)
-          else if (rl < rd) parent.put(rd, rl)
-        }
-        rows.iterator.collect {
-          case (d, _, p, false) => (d, find(d), p)
-        }
+        held.iterator.map(i => (uf.id(i), uf.minOf(i), prev(i)))
       }
       .toDF("doc_id", "lbl", "__prev")
   }
 
-  private def ccPhase(edges: DataFrame,
+  private def ccPhase(pairs: DataFrame,
       propRounds: Int, phase: Int): DataFrame = graft.Materialize.scoped {
     require(propRounds >= 1, s"propRounds: $propRounds")
     // unreachable for data reasons (phase k alone covers diameter
@@ -1245,30 +1246,23 @@ object Dedup {
     // phase); guards against a logic bug turning into an infinite loop
     require(phase <= 64, "connectedComponents: 64 contraction phases — " +
       "node count must strictly decrease per phase; logic bug")
-    // SEED = the old loop's ROUND 1, fused into one aggregate (r17): with
-    // identity initial labels, round 1 computed min(self, min neighbor
-    // SELF-label) = min(self, min neighbor id), and its pointer jump
-    // hopped through identity labels — a no-op. That whole round is one
-    // groupBy over the pinned edge frame — hash-partitioned on ida, so
-    // the aggregate plans with ZERO exchange — replacing both the old
-    // identity-labels pin (distinct + self-label, one edge-sized shuffle)
-    // and the first full round (join + union + agg + hop join + pin).
-    // State after the seed is bit-identical to the old state after
-    // round 1; the round BUDGET check moves accordingly (the loop below
-    // now runs propRounds − 1 message rounds before contracting — the
-    // seed is this phase's first round).
-    var labels = edges.groupBy(col("ida"))
-      .agg(min(col("idb")).as("__mn"))
-      .select(col("ida").as("doc_id"),
-        least(col("ida"), col("__mn")).as("lbl"))
+    val edges = ccEdges(pairs)
+    // coalesce merges whole partitions, so each node's edges still sit
+    // in one task (parts = 0: the pin holds no block bytes)
+    val target = SQLConf.get.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val parts = (graft.Materialize.pinnedBytes(edges) + target - 1) / target
+    val solved = Observation()
+    var labels = ccLocalMinima(
+        (if (parts == 0) edges else edges.coalesce(parts.toInt))
+          .select(col("ida"), col("idb"), col("ida")))
+      .observe(solved, min(spark_partition_id()).as("lo"),
+        max(spark_partition_id()).as("hi"))
+      .select(col("doc_id"), col("lbl"))
       .transform(graft.Materialize.pin)
-    // seed frontier = nodes the seed improved (lbl < self); a node whose
-    // id is below all its neighbors' offers nothing new in round 2 (its
-    // round-1 message — its id — already reached every neighbor via the
-    // seed's min). An edge-free graph is empty here and skips the loop.
-    var frontier = labels.where(col("lbl") < col("doc_id"))
+    // one emitting partition held every edge (null = null: no edges)
+    var converged = solved.get("lo") == solved.get("hi")
+    var frontier = labels
     var rounds = 1
-    var converged = frontier.isEmpty
     while (!converged && rounds < propRounds) {
       rounds += 1
       // messages carry a null pre-round tag; each node's own current label
@@ -1292,37 +1286,14 @@ object Dedup {
           col("lbl").as("__prev")))
         .groupBy("doc_id")
         .agg(min(col("lbl")).as("lbl"), max(col("__prev")).as("__prev"))
-      // pointer jump against the previous round's PINNED labels: stepped
-      // is consumed once, so the whole round is a single pinned job —
-      // and the convergence scalar rides THAT job as an observed metric
-      // (CollectMetrics during checkpoint materialization), so no
-      // separate probe job or extra pass over the frame exists at all
-      val obs = org.apache.spark.sql.Observation()
       val hopped = stepped
         .join(labels.select(col("doc_id").as("lbl"), col("lbl").as("__hop")),
           Seq("lbl"), "left")
         .select(col("doc_id"),
           least(col("lbl"), coalesce(col("__hop"), col("lbl"))).as("lbl"),
           col("__prev"))
-      // FIRST message round of each phase additionally feeds the raw edge
-      // set through the local union-find (r17): pointer pairs alone only
-      // record each node's current MINIMUM, so two pointer trees of one
-      // component stay separate until messages bridge them one edge-hop
-      // per round — the edges themselves are same-component certificates
-      // the collapse can use directly. One rebalance exchange of E rows,
-      // once per phase (AQE sizes the partitions: one partition at
-      // report scale = a full component solve in this round; many at
-      // cluster scale = per-partition star contraction), and every later
-      // round stays message-sized. The __edge tag keeps edge rows out of
-      // the emitted label set.
-      val labelRows = hopped.withColumn("__edge", lit(false))
-      val ufIn = if (rounds == 2)
-        labelRows.unionAll(edges.select(col("ida").as("doc_id"),
-          col("idb").as("lbl"), col("idb").as("__prev"),
-          lit(true).as("__edge")))
-          .hint("rebalance", "doc_id")
-      else labelRows
-      val merged = ccLocalJump(ufIn)
+      val obs = Observation()
+      val merged = ccLocalMinima(hopped)
         .observe(obs,
           count(when(col("lbl") < col("__prev"), 1)).as("improved"))
         .transform(graft.Materialize.pin)
@@ -1334,7 +1305,6 @@ object Dedup {
       // instead of letting round count become peak storage footprint
       graft.Materialize.unpin(labels)
       frontier = merged.where(col("lbl") < col("__prev"))
-        .select(col("doc_id"), col("lbl"))
       labels = merged.select(col("doc_id"), col("lbl"))
     }
     if (converged) labels
@@ -1342,12 +1312,7 @@ object Dedup {
       // contract by the labels found so far and recurse; compose through
       // the mapping. Components that already converged have no inter-label
       // edge and drop out of the sub-problem (coalesce keeps their label).
-      // same treatment the top-level caller gives its edge frame: expand
-      // the contracted pair set symmetrically in ONE map-only explode (no
-      // separate cPairs pin — the explode has a single consumer) and pin
-      // it hash-partitioned on the join key, so the sub-phase's (doubled)
-      // rounds never re-exchange the edge side
-      val cEdges = edges
+      val cPairs = edges
         .join(labels.select(col("doc_id").as("ida"), col("lbl").as("__la")),
           Seq("ida"))
         .join(labels.select(col("doc_id").as("idb"), col("lbl").as("__lb")),
@@ -1356,13 +1321,7 @@ object Dedup {
         .select(least(col("__la"), col("__lb")).as("ida"),
           greatest(col("__la"), col("__lb")).as("idb"))
         .distinct()
-        .select(explode(array(
-          struct(col("ida"), col("idb")),
-          struct(col("idb").as("ida"), col("ida").as("idb")))).as("__e"))
-        .select(col("__e.ida").as("ida"), col("__e.idb").as("idb"))
-        .repartition(col("ida"))
-        .transform(graft.Materialize.pin)
-      val sub = ccPhase(cEdges, propRounds * 2, phase + 1)
+      val sub = ccPhase(cPairs, propRounds * 2, phase + 1)
       labels
         .join(sub.select(col("doc_id").as("lbl"), col("lbl").as("__sub")),
           Seq("lbl"), "left")

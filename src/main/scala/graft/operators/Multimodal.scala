@@ -552,29 +552,15 @@ object Multimodal {
     * directly. Every video gets the smallest reachable doc_id as its
     * cluster id; singletons label themselves.
     *
-    * Scale shape is dd06's, inherited verbatim: the symmetric edge
-    * frame is expanded by a map-only explode (one pass over the pair
-    * pipeline) and pinned hash-partitioned on the join key (the E-sized
-    * side shuffles ONCE, only the shrinking frontier moves per round),
-    * and the
-    * component search runs over the edge-TOUCHED subgraph only —
-    * per-round state is the duplicated fraction of the corpus, not the
-    * corpus. */
+    * Scale shape is dd06's, inherited verbatim: the pair pipeline is
+    * consumed once, by [[Dedup.connectedComponents]]' edge layout, and
+    * the component search runs over the edge-TOUCHED subgraph only — its
+    * state is the duplicated fraction of the corpus, not the corpus. */
   def videoClustersOf(videos: DataFrame, sigs: DataFrame, theta: Long,
       minPpm: Long): DataFrame = graft.Materialize.scoped {
-    // symmetric edge expansion as ONE map-only explode over the pair
-    // pipeline (dd06's r16 shape): a single consumer, so the pair set
-    // needs no pin of its own before the edge pin
-    val edges = duplicateScenesOf(sigs, theta)
+    val labels = Dedup.connectedComponents(duplicateScenesOf(sigs, theta)
       .where(col("containment_ppm") >= minPpm)
-      .select(col("doc_a").as("ida"), col("doc_b").as("idb"))
-      .select(explode(array(
-        struct(col("ida"), col("idb")),
-        struct(col("idb").as("ida"), col("ida").as("idb")))).as("__e"))
-      .select(col("__e.ida").as("ida"), col("__e.idb").as("idb"))
-      .repartition(col("ida"))
-      .transform(graft.Materialize.pin)
-    val labels = Dedup.connectedComponents(edges)
+      .select(col("doc_a").as("ida"), col("doc_b").as("idb")))
     videos.select(col("doc_id").cast("long").as("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"),

@@ -60,6 +60,18 @@ object Bridge {
   def hiddenPathName(name: String): Boolean =
     org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 
+  /** Bytes the block manager holds for `rdd`'s blocks, memory plus disk
+    * (the filtered `getRDDStorageInfo` is private[spark]). */
+  def storedBytes(rdd: org.apache.spark.rdd.RDD[_]): Long =
+    rdd.sparkContext.getRDDStorageInfo(_.id == rdd.id)
+      .map(i => i.memSize + i.diskSize).sum
+
+  /** Remove `rdd` from the persisted set and drop its blocks without
+    * waiting: `RDD.unpersist` less its WARN for a locally checkpointed
+    * RDD (`SparkContext.unpersistRDD` is private[spark]). */
+  def dropBlocks(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
   /** Block until every posted listener event has been delivered
     * (`listenerBus` is private[spark]): a profiler reads its listener's
     * counters right after an action returns, before the bus has caught up. */

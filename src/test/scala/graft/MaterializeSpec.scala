@@ -89,6 +89,43 @@ class MaterializeSpec extends SparkSpec {
     Materialize.unpin(elsewhere)
   }
 
+  test("freeing local-checkpoint pins logs no RDD warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val logger = LogManager.getLogger("org.apache.spark.rdd.RDD")
+      .asInstanceOf[Logger]
+    // the assertion below would pass vacuously if WARN were filtered out
+    assert(logger.isEnabled(Level.WARN))
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]()
+    val capture = new AbstractAppender("graft-rdd-warnings", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = events.add(e.toImmutable)
+    }
+    capture.start()
+    logger.addAppender(capture)
+    var freed = Seq.empty[Int]
+    try {
+      val n = Materialize.scoped {
+        val a = Materialize.pin(sample)
+        val b = Materialize.pin(a.select(col("v")))
+        freed = pinIds(a) ++ pinIds(b)
+        Materialize.unpin(a)
+        b.count()
+      }
+      assert(n == 100)
+    } finally {
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+    assert(freed.size == 2 && !freed.exists(persisted))
+    val warnings = events.toArray(Array.empty[LogEvent])
+      .filter(_.getLevel.isMoreSpecificThan(Level.WARN))
+      .map(_.getMessage.getFormattedMessage)
+    assert(warnings.isEmpty, warnings.mkString("\n"))
+  }
+
   test("default mode pins eagerly via localCheckpoint") {
     val pinned = Materialize.pin(sample)
     assert(pinned.collect().map(_.getLong(1)).sum == 3 * 99 * 100 / 2)

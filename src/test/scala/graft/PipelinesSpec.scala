@@ -84,44 +84,113 @@ class PipelinesSpec extends SparkSpec {
     assert(out == Set((1L, 1L), (2L, 2L), (3L, 3L)))
   }
 
-  test("connectedComponents survives adversarial diameter via contraction") {
-    // 200-node path graph: diameter 199, far past any small propagation
-    // budget. With propRounds=2 the frontier loop CANNOT converge — the
-    // contraction fallback must take over (several phases) and still land
-    // every node on the component minimum, with no round-cap exception.
+  /** Runs `body` with the connected-components search forced past its
+    * one-task solve, as on an edge set larger than one advisory partition:
+    * AQE keeps the edge layout's 4 shuffle partitions, and a 1 KB advisory
+    * size keeps the solve from coalescing them. */
+  private def overFourPartitions[T](body: => T): T = {
+    val confs = Seq(
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k")
+    val before = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The 200-node path graph, both orientations: diameter 199. */
+  private def chain200 = {
     import spark.implicits._
     val chain = (0L until 199L).map(i => (i, i + 1)).toDF("ida", "idb")
-    val edges = chain.unionAll(
-      chain.select(col("idb").as("ida"), col("ida").as("idb")))
-    val labels = operators.Dedup.connectedComponents(edges, propRounds = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    chain.unionAll(chain.select(col("idb").as("ida"), col("ida").as("idb")))
+  }
+
+  private def labelSet(labels: org.apache.spark.sql.DataFrame) =
+    labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  test("connectedComponents survives adversarial diameter via contraction") {
+    // 200-node path graph: diameter 199, far past any small propagation
+    // budget. Its edges fit one task, so the solve labels it exactly; the
+    // twin test below spreads them over four partitions, where the
+    // frontier loop CANNOT converge in propRounds=2 and the contraction
+    // must take over (several phases) with no round-cap exception.
+    val labels =
+      labelSet(operators.Dedup.connectedComponents(chain200, propRounds = 2))
     assert(labels == (0L until 200L).map(i => (i, 0L)).toSet)
   }
 
-  test("connectedComponents contraction keeps components separate") {
-    // two long chains + one already-tiny component, tiny propagation
-    // budget: contraction must not merge across components, and components
-    // that converge in the fast path keep their labels through the
-    // contraction mapping
+  test("connectedComponents survives adversarial diameter over four partitions") {
+    // the same chain with the solve unable to see every edge in one task:
+    // the propagation rounds and the contraction phases run, and must
+    // still land every node on the component minimum
+    val jobs = jobStartsByTag { tagged =>
+      overFourPartitions {
+        tagged("layout")(operators.Dedup.ccEdges(chain200))
+        val labels = tagged("cc")(
+          operators.Dedup.connectedComponents(chain200, propRounds = 2))
+        assert(labelSet(labels) == (0L until 200L).map(i => (i, 0L)).toSet)
+      }
+    }
+    assert(jobs("cc").size > jobs("layout").size + 1,
+      s"layout ${jobs("layout").size} jobs, connectedComponents " +
+        s"${jobs("cc").size}: no round ran after the solve")
+  }
+
+  /** Two long chains and one single edge, both orientations. */
+  private def twoChains = {
     import spark.implicits._
     val pairs =
       (100L until 179L).map(i => (i, i + 1)) ++ // chain A, min 100
         (500L until 560L).map(i => (i, i + 1)) ++ // chain B, min 500
         Seq((900L, 901L)) // single edge, converges in round 1
     val p = pairs.toDF("ida", "idb")
-    val edges = p.unionAll(
-      p.select(col("idb").as("ida"), col("ida").as("idb")))
-    val got = operators.Dedup.connectedComponents(edges, propRounds = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want =
-      (100L to 179L).map(i => (i, 100L)).toSet ++
-        (500L to 560L).map(i => (i, 500L)).toSet ++
-        Set((900L, 900L), (901L, 900L))
-    assert(got == want)
+    p.unionAll(p.select(col("idb").as("ida"), col("ida").as("idb")))
+  }
+
+  private val twoChainsWant =
+    (100L to 179L).map(i => (i, 100L)).toSet ++
+      (500L to 560L).map(i => (i, 500L)).toSet ++
+      Set((900L, 900L), (901L, 900L))
+
+  test("connectedComponents contraction keeps components separate") {
+    // two long chains + one already-tiny component, tiny propagation
+    // budget: solved in one task here; the twin test below forces the
+    // contraction, which must not merge across components, and components
+    // that converge in the fast path keep their labels through the
+    // contraction mapping
+    val got =
+      labelSet(operators.Dedup.connectedComponents(twoChains, propRounds = 3))
+    assert(got == twoChainsWant)
+  }
+
+  test("connectedComponents contraction keeps components separate over four partitions") {
+    val got = overFourPartitions(
+      operators.Dedup.connectedComponents(twoChains, propRounds = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1))))
+    assert(got.length == got.map(_._1).distinct.length,
+      "a node has more than one label row")
+    assert(got.toSet == twoChainsWant)
+  }
+
+  test("connectedComponents solves an edge set in one partition with one job") {
+    // the solve sees every edge in one task, so its labels are the
+    // component minima: no seed, probe, round or confirm job follows it
+    val jobs = jobStartsByTag { tagged =>
+      tagged("layout")(operators.Dedup.ccEdges(twoChains))
+      val got = tagged("cc")(
+        operators.Dedup.connectedComponents(twoChains, propRounds = 3))
+      assert(labelSet(got) == twoChainsWant)
+    }
+    assert(jobs("cc").size == jobs("layout").size + 1,
+      s"layout ${jobs("layout").size} jobs, connectedComponents ${jobs("cc").size}")
   }
 
   /** Seeds 1–5 of `graphGen` (edge pairs a < b, round budget): each graph's
-    * [[operators.Dedup.connectedComponents]] labels must equal a
+    * [[operators.Dedup.connectedComponents]] labels, solved in one task and
+    * over four partitions, must be one row per node and equal a
     * brute-force driver-side union-find's component minima. */
   private def ccMatchesUnionFind(
       graphGen: org.scalacheck.Gen[(List[(Long, Long)], Int)]): Unit = {
@@ -146,9 +215,19 @@ class PipelinesSpec extends SparkSpec {
         val p = pairs.toDF("ida", "idb")
         val edges = p.unionAll(
           p.select(col("idb").as("ida"), col("ida").as("idb")))
-        val got = operators.Dedup.connectedComponents(edges, budget)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-        assert(got == want)
+        def labels() = operators.Dedup.connectedComponents(edges, budget)
+          .collect().map(r => (r.getLong(0), r.getLong(1)))
+        // solved in one task, then with the rounds and contraction forced
+        Seq("one partition" -> labels(),
+            "four partitions" -> overFourPartitions(labels()))
+          .foreach { case (layout, rows) =>
+            withClue(s"$layout: ") {
+              assert(rows.length == rows.map(_._1).distinct.length,
+                "a node has more than one label row")
+              val got = rows.toMap
+              assert(got == want)
+            }
+          }
       }
     }
   }
@@ -171,9 +250,8 @@ class PipelinesSpec extends SparkSpec {
   }
 
   test("property: connectedComponents == union-find over the full Long id range") {
-    // node ids are any Long, Long.MinValue and Long.MaxValue included; the
-    // edge rows the first message round feeds to the local union-find must
-    // not be told apart from label rows by an id value
+    // node ids are any Long, Long.MinValue and Long.MaxValue included: no
+    // id value may act as a marker in the solve or the rounds
     import org.scalacheck.Gen
     val idGen = Gen.frequency(
       3 -> Gen.oneOf(Long.MinValue, Long.MinValue + 1, -1L, 0L, Long.MaxValue),

@@ -178,10 +178,11 @@ object NightlyIngestExample {
         false
       }
     onStage("index-maintained")
-    // PQ codes are a DERIVED artifact: tonight's appended (or
-    // retrained) postings are ADC-invisible until re-encoded. No-op on
-    // an index that was never PQ-augmented, so the call is
-    // unconditional rather than an operator runbook step.
+    // PQ codes (raw and residual) are DERIVED artifacts: tonight's
+    // appended (or retrained) postings are ADC-invisible until
+    // re-encoded. refreshPqCodes re-encodes every code set the index
+    // carries and is a no-op on one that was never PQ-augmented, so the
+    // call is unconditional rather than an operator runbook step.
     if (nFinal > 0) Similarity.refreshPqCodes(spark, indexDir)
     onStage("pq-refreshed")
     // the near-dup ledger grows LAST, deliberately: tonight's docs are

@@ -46,10 +46,6 @@ case class QuantizeMilli(child: Expression) extends UnaryExpression {
       s"quantize_milli needs array<float|double>, got ${other.sql}")
   }
 
-  private def q(x: Double): Long =
-    java.math.BigDecimal.valueOf(x * 1000d)
-      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
-
   override protected def nullSafeEval(a: Any): Any = {
     val xs = a.asInstanceOf[ArrayData]
     val n = xs.numElements()
@@ -58,7 +54,8 @@ case class QuantizeMilli(child: Expression) extends UnaryExpression {
     var i = 0
     while (i < n) {
       if (!xs.isNullAt(i))
-        out(i) = q(if (isFloat) xs.getFloat(i).toDouble else xs.getDouble(i))
+        out(i) = QuantizeMilli.milli(
+          if (isFloat) xs.getFloat(i).toDouble else xs.getDouble(i))
       i += 1
     }
     new GenericArrayData(out)
@@ -93,6 +90,12 @@ case class QuantizeMilli(child: Expression) extends UnaryExpression {
 }
 
 object QuantizeMilli {
+  /** The scalar rule every element goes through, for driver-side callers
+    * that must quantize exactly as the expression does (a probe vector). */
+  def milli(x: Double): Long =
+    java.math.BigDecimal.valueOf(x * 1000d)
+      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
+
   /** Column surface: round(x*1000) per element, as array<long>. */
   def quantize(v: Column): Column =
     Bridge.column(QuantizeMilli(Bridge.expression(v)))

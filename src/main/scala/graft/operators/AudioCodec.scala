@@ -26,55 +26,50 @@ import Multimodal.Frame
   */
 object AudioCodec {
 
-  /** Default windower: PCM_SIGNED 16-bit audio → one [[Frame]] per
-    * `windowSamples` sample frames (channel 0 of interleaved streams —
-    * the level/energy view a silence-trimmer or speech-gate batches on).
-    * Per window: `n_bytes` = sample count (short tail window included),
-    * `checksum` = mean absolute amplitude scaled to 0–127 (integer:
-    * `(Σ|s|/n) >> 8` of 16-bit magnitudes) — a constant-amplitude window
-    * of 8192 reads exactly 32, which the spec pins against a generated
-    * WAV. */
-  def wavWindows(windowSamples: Int)(id: Long,
-      payload: Array[Byte]): Iterator[Frame] = {
-    require(windowSamples >= 1, s"windowSamples: $windowSamples")
+  /** The one PCM decode loop: channel-0 magnitudes |s| of a PCM_SIGNED
+    * 16-bit payload, decoded EAGERLY so the stream is closed on return.
+    * `None` for an undecodable, non-PCM-16 or sample-less payload — the
+    * sentinel case of every surface below. */
+  private def pcm16Magnitudes(payload: Array[Byte]): Option[Array[Int]] =
     try {
       val in = AudioSystem.getAudioInputStream(
         new ByteArrayInputStream(payload))
       try {
         val fmt = in.getFormat
         if (fmt.getEncoding != AudioFormat.Encoding.PCM_SIGNED ||
-            fmt.getSampleSizeInBits != 16)
-          Iterator.single(Frame(id, -1, 0, -1))
+            fmt.getSampleSizeInBits != 16) None
         else {
           val bytes = in.readAllBytes()
-          val channels = fmt.getChannels
           val big = fmt.isBigEndian
-          val stride = 2 * channels // bytes per sample frame, channel 0 read
+          val stride = 2 * fmt.getChannels // bytes per sample frame
           val n = bytes.length / stride
-          if (n == 0) Iterator.single(Frame(id, -1, 0, -1))
-          else {
-            val frames = (0 until (n + windowSamples - 1) / windowSamples)
-              .map { w =>
-                val from = w * windowSamples
-                val until = math.min(n, from + windowSamples)
-                var sum = 0L
-                var i = from
-                while (i < until) {
-                  val o = i * stride
-                  val s =
-                    if (big) ((bytes(o) << 8) | (bytes(o + 1) & 0xff)).toShort
-                    else ((bytes(o + 1) << 8) | (bytes(o) & 0xff)).toShort
-                  sum += math.abs(s.toInt)
-                  i += 1
-                }
-                Frame(id, w, until - from, ((sum / (until - from)) >> 8).toInt)
-              }
-            frames.iterator // decoded EAGERLY above — stream closed on exit
-          }
+          if (n == 0) None
+          else Some(Array.tabulate(n) { i =>
+            val o = i * stride
+            val s =
+              if (big) ((bytes(o) << 8) | (bytes(o + 1) & 0xff)).toShort
+              else ((bytes(o + 1) << 8) | (bytes(o) & 0xff)).toShort
+            math.abs(s.toInt)
+          })
         }
       } finally in.close()
-    } catch { case _: Exception => Iterator.single(Frame(id, -1, 0, -1)) }
-  }
+    } catch { case _: Exception => None }
+
+  /** Default windower: PCM_SIGNED 16-bit audio → one [[Frame]] per
+    * `windowSamples` sample frames (channel 0 of interleaved streams —
+    * the level/energy view a silence-trimmer or speech-gate batches on):
+    * [[wavWindowSigs]] with each window's sum reduced to its mean.
+    * Per window: `n_bytes` = sample count (short tail window included),
+    * `checksum` = mean absolute amplitude scaled to 0–127 (integer:
+    * `(Σ|s|/n) >> 8` of 16-bit magnitudes) — a constant-amplitude window
+    * of 8192 reads exactly 32, which the spec pins against a generated
+    * WAV. The sentinel maps through as (−1, 0, −1). */
+  def wavWindows(windowSamples: Int)(id: Long,
+      payload: Array[Byte]): Iterator[Frame] =
+    wavWindowSigs(windowSamples)(id, payload).map { s =>
+      Frame(id, s.frame_no, s.n_bytes,
+        if (s.level_sum < 0) -1 else ((s.level_sum / s.n_bytes) >> 8).toInt)
+    }
 
   /** Window a whole (id, payload) binary frame with the real PCM decoder —
     * the audio sibling of [[ImageCodec.extractFrames]], same row-expanding
@@ -95,45 +90,16 @@ object AudioCodec {
   def wavWindowSigs(windowSamples: Int)(id: Long,
       payload: Array[Byte]): Iterator[Multimodal.FrameSig] = {
     require(windowSamples >= 1, s"windowSamples: $windowSamples")
-    try {
-      val in = AudioSystem.getAudioInputStream(
-        new ByteArrayInputStream(payload))
-      try {
-        val fmt = in.getFormat
-        if (fmt.getEncoding != AudioFormat.Encoding.PCM_SIGNED ||
-            fmt.getSampleSizeInBits != 16)
-          Iterator.single(Multimodal.FrameSig(id, -1, 0, -1L))
-        else {
-          val bytes = in.readAllBytes()
-          val channels = fmt.getChannels
-          val big = fmt.isBigEndian
-          val stride = 2 * channels
-          val n = bytes.length / stride
-          if (n == 0) Iterator.single(Multimodal.FrameSig(id, -1, 0, -1L))
-          else {
-            val sigs = (0 until (n + windowSamples - 1) / windowSamples)
-              .map { w =>
-                val from = w * windowSamples
-                val until = math.min(n, from + windowSamples)
-                var sum = 0L
-                var i = from
-                while (i < until) {
-                  val o = i * stride
-                  val s =
-                    if (big) ((bytes(o) << 8) | (bytes(o + 1) & 0xff)).toShort
-                    else ((bytes(o + 1) << 8) | (bytes(o) & 0xff)).toShort
-                  sum += math.abs(s.toInt)
-                  i += 1
-                }
-                Multimodal.FrameSig(id, w, until - from, sum)
-              }
-            sigs.iterator // decoded EAGERLY above — stream closed on exit
-          }
+    pcm16Magnitudes(payload) match {
+      case None => Iterator.single(Multimodal.FrameSig(id, -1, 0, -1L))
+      case Some(mag) =>
+        Iterator.range(0, mag.length, windowSamples).map { from =>
+          val until = math.min(mag.length, from + windowSamples)
+          var sum = 0L
+          var i = from
+          while (i < until) { sum += mag(i); i += 1 }
+          Multimodal.FrameSig(id, from / windowSamples, until - from, sum)
         }
-      } finally in.close()
-    } catch {
-      case _: Exception =>
-        Iterator.single(Multimodal.FrameSig(id, -1, 0, -1L))
     }
   }
 
@@ -172,38 +138,20 @@ object AudioCodec {
   def audioFingerprint(windows: Int = 61)(id: Long,
       payload: Array[Byte]): Multimodal.PHash = {
     require(windows >= 2 && windows <= 61, s"windows: $windows")
-    try {
-      val in = AudioSystem.getAudioInputStream(
-        new ByteArrayInputStream(payload))
-      try {
-        val fmt = in.getFormat
-        if (fmt.getEncoding != AudioFormat.Encoding.PCM_SIGNED ||
-            fmt.getSampleSizeInBits != 16) Multimodal.PHash(id, 0L)
-        else {
-          val bytes = in.readAllBytes()
-          val channels = fmt.getChannels
-          val big = fmt.isBigEndian
-          val stride = 2 * channels
-          val n = bytes.length / stride
-          if (n == 0) Multimodal.PHash(id, 0L)
-          else {
-            val sums = new Array[Long](windows)
-            val cnts = new Array[Long](windows)
-            var i = 0
-            while (i < n) {
-              val o = i * stride
-              val s =
-                if (big) ((bytes(o) << 8) | (bytes(o + 1) & 0xff)).toShort
-                else ((bytes(o + 1) << 8) | (bytes(o) & 0xff)).toShort
-              val b = ((i.toLong * windows) / n).toInt
-              sums(b) += math.abs(s.toInt); cnts(b) += 1
-              i += 1
-            }
-            Multimodal.PHash(id, Multimodal.energyDeltaBits(sums, cnts))
-          }
+    pcm16Magnitudes(payload) match {
+      case None => Multimodal.PHash(id, 0L)
+      case Some(mag) =>
+        val n = mag.length
+        val sums = new Array[Long](windows)
+        val cnts = new Array[Long](windows)
+        var i = 0
+        while (i < n) {
+          val b = ((i.toLong * windows) / n).toInt
+          sums(b) += mag(i); cnts(b) += 1
+          i += 1
         }
-      } finally in.close()
-    } catch { case _: Exception => Multimodal.PHash(id, 0L) }
+        Multimodal.PHash(id, Multimodal.energyDeltaBits(sums, cnts))
+    }
   }
 
   /** Fingerprint a whole (id, payload) binary frame with the real PCM

@@ -55,23 +55,38 @@ object ImageCodec {
     (77 * r + 150 * g + 29 * b) >> 8
   }
 
+  /** The one mean-luma pass: Σ [[luma]] over every pixel of `img`. */
+  private def lumaSum(img: BufferedImage): Long = {
+    var sum = 0L
+    var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) { sum += luma(img.getRGB(x, y)); x += 1 }
+      y += 1
+    }
+    sum
+  }
+
+  /** Pixel count of `img` as a frame's `n_bytes` (an Int). */
+  private def pixels(img: BufferedImage): Int =
+    math.min(img.getWidth.toLong * img.getHeight, Int.MaxValue.toLong).toInt
+
+  /** A signature's integer mean luma as a [[Frame]]; a sentinel (negative
+    * sum) maps through with checksum −1. */
+  private def meanFrame(s: Multimodal.FrameSig): Frame =
+    Frame(s.doc_id, s.frame_no, s.n_bytes,
+      if (s.level_sum < 0) -1
+      else (s.level_sum / math.max(s.n_bytes, 1)).toInt)
+
   /** Default image decoder for the [[Multimodal.decodeWith]] plan shape:
     * PNG/JPEG/BMP/GIF bytes → real (width, height, pixels, mean luma). */
   def decodeImage(id: Long, payload: Array[Byte]): ImageMeta =
     readImage(payload) match {
       case None => ImageMeta(id, -1, -1, 0L, -1)
       case Some(img) =>
-        val w = img.getWidth
-        val h = img.getHeight
-        var sum = 0L
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) { sum += luma(img.getRGB(x, y)); x += 1 }
-          y += 1
-        }
-        val n = w.toLong * h
-        ImageMeta(id, w, h, n, (sum / math.max(n, 1L)).toInt)
+        val n = img.getWidth.toLong * img.getHeight
+        ImageMeta(id, img.getWidth, img.getHeight, n,
+          (lumaSum(img) / math.max(n, 1L)).toInt)
     }
 
   /** Decode a whole (id, payload) binary frame — the [[ImageMeta]]-typed
@@ -116,15 +131,8 @@ object ImageCodec {
         val scaled = bilinearFit(img, maxDim)
         val bos = new ByteArrayOutputStream()
         ImageIO.write(scaled, "png", bos)
-        var sum = 0L
-        var y = 0
-        while (y < scaled.getHeight) {
-          var x = 0
-          while (x < scaled.getWidth) { sum += luma(scaled.getRGB(x, y)); x += 1 }
-          y += 1
-        }
         val n = scaled.getWidth.toLong * scaled.getHeight
-        Resized(id, payload.length, bos.size(), (sum / n).toInt)
+        Resized(id, payload.length, bos.size(), (lumaSum(scaled) / n).toInt)
     }
 
   /** Default frame demuxer for the [[Multimodal.framesWith]] seam: REAL
@@ -162,18 +170,7 @@ object ImageCodec {
           else (0 until n).map { i =>
             try {
               val img = reader.read(i)
-              val w = img.getWidth
-              val h = img.getHeight
-              var sum = 0L
-              var y = 0
-              while (y < h) {
-                var x = 0
-                while (x < w) { sum += luma(img.getRGB(x, y)); x += 1 }
-                y += 1
-              }
-              val np = w.toLong * h
-              Frame(id, i, math.min(np, Int.MaxValue.toLong).toInt,
-                (sum / math.max(np, 1L)).toInt)
+              meanFrame(Multimodal.FrameSig(id, i, pixels(img), lumaSum(img)))
             } catch { case _: Exception => Frame(id, i, 0, -1) }
           }.iterator // frames decoded EAGERLY above — the reader is
           // disposed on exit, a lazy iterator would read after close
@@ -340,27 +337,7 @@ object ImageCodec {
     * sentinel frame (−1, 0, −1); a frame that fails mid-stream reports
     * (i, 0, −1) and composition continues on the prior canvas. */
   def gifFramesComposed(id: Long, payload: Array[Byte]): Iterator[Frame] =
-    foldComposedFrames(payload) {
-      case (i, None) => Frame(id, i, 0, -1)
-      case (i, Some(canvas)) =>
-        // luma computed IMMEDIATELY off the live canvas — nothing
-        // retained, so memory stays one canvas however many frames
-        var sum = 0L
-        var y = 0
-        while (y < canvas.getHeight) {
-          var x = 0
-          while (x < canvas.getWidth) {
-            sum += luma(canvas.getRGB(x, y)); x += 1
-          }
-          y += 1
-        }
-        val np = canvas.getWidth.toLong * canvas.getHeight
-        Frame(id, i, math.min(np, Int.MaxValue.toLong).toInt,
-          (sum / math.max(np, 1L)).toInt)
-    } match {
-      case None => Iterator.single(Frame(id, -1, 0, -1))
-      case Some(frames) => frames.iterator
-    }
+    gifFrameSigsComposed(id, payload).map(meanFrame)
 
   /** Frame-extract with viewer-accurate composition — the
     * [[extractFrames]] sibling a phash-over-frames pipeline should scan. */
@@ -383,18 +360,9 @@ object ImageCodec {
     foldComposedFrames(payload) {
       case (i, None) => Multimodal.FrameSig(id, i, 0, -1L)
       case (i, Some(canvas)) =>
-        var sum = 0L
-        var y = 0
-        while (y < canvas.getHeight) {
-          var x = 0
-          while (x < canvas.getWidth) {
-            sum += luma(canvas.getRGB(x, y)); x += 1
-          }
-          y += 1
-        }
-        val np = canvas.getWidth.toLong * canvas.getHeight
-        Multimodal.FrameSig(id, i,
-          math.min(np, Int.MaxValue.toLong).toInt, sum)
+        // summed IMMEDIATELY off the live canvas — nothing retained, so
+        // memory stays one canvas however many frames
+        Multimodal.FrameSig(id, i, pixels(canvas), lumaSum(canvas))
     } match {
       case None => Iterator.single(Multimodal.FrameSig(id, -1, 0, -1L))
       case Some(frames) => frames.iterator

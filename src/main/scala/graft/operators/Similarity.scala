@@ -829,16 +829,22 @@ object Similarity {
   //   <root>/_current        one line: the live version's subdir name
   //   <root>/v<N>/           a complete flat index (cell=…/ + _centroids/)
   //
-  // Readers resolve through `_current`; a retrain builds v<N+1> COMPLETELY,
-  // then flips the pointer (single-file rename — atomic where the FS gives
-  // atomic rename, and self-healing everywhere else: while the pointer is
-  // momentarily absent, readers fall back to the highest COMPLETE version,
-  // which after the build finishes IS the new one). The superseded version
-  // survives one more round (current + previous are kept) so probes that
-  // resolved just before the flip finish their scan on intact files; only
-  // versions older than the previous are deleted. Every existing surface
-  // (probe/assign/append/maintain) accepts either layout — resolution is
-  // per-call, so long-lived callers pick up a flip on their next call.
+  // Readers resolve through `_current`. Every new version goes through ONE
+  // publish step ([[publishVersion]]): number v<N+1> once, build it
+  // COMPLETELY, and only if it is accepted (always, for a plain build or a
+  // retrain; above the recall floor, for a gated deploy) flip the pointer
+  // (single-file rename — atomic where the FS gives atomic rename, and
+  // self-healing everywhere else: while the pointer is momentarily absent,
+  // readers fall back to the highest COMPLETE version, which after the
+  // build finishes IS the new one). A rejected candidate, or one whose
+  // build, audit or flip throws, is deleted, so it never serves. Retention:
+  // the new version and the one that was live before the flip (what
+  // [[resolveIndexDir]] returned, so a lost pointer still names the right
+  // one) are kept, so probes that resolved just before the flip finish
+  // their scan on intact files; every other version is deleted. Every
+  // existing surface (probe/assign/append/maintain) accepts either
+  // layout — resolution is per-call, so long-lived callers pick up a flip
+  // on their next call.
   //
   // WRITER CONTRACT: the versioned layout makes READERS safe under a
   // concurrent retrain; writers (append / maintain / PQ encode) must be
@@ -936,20 +942,48 @@ object Similarity {
           s"(new version is complete at $root/$name; readers fall back to it)")
   }
 
-  /** Build a NEW versioned index at `root` (first version `v1`), or add
-    * the next version over an existing root. Same parameters and training
+  /** The one publish step of the versioned layout (see the layout comment
+    * above): number the next version `v<N>` once, `build` it into
+    * `<root>/v<N>`, and when `accept` passes on what the build returned,
+    * flip `_current` to it and delete every version except `v<N>` and the
+    * one live before the flip. A rejected candidate is deleted; a throw
+    * from the build, the gate or the flip deletes it and rethrows.
+    * Returns (N, the build's value, whether it was published). */
+  private def publishVersion[A](spark: SparkSession, root: String)(
+      build: String => A)(accept: A => Boolean): (Long, A, Boolean) = {
+    val fs = fsOf(spark, root)
+    val rootP = new org.apache.hadoop.fs.Path(root)
+    val live = Some(resolveIndexDir(spark, root)).filter(_ != root)
+      .map(new org.apache.hadoop.fs.Path(_).getName)
+    val next = versionsOf(fs, rootP).lastOption.map(_._1 + 1).getOrElse(1L)
+    val name = s"v$next"
+    val candidate = new org.apache.hadoop.fs.Path(rootP, name)
+    val (out, published) =
+      try {
+        val out = build(candidate.toString)
+        val ok = accept(out)
+        if (ok) writePointer(fs, rootP, name) else fs.delete(candidate, true)
+        (out, ok)
+      } catch { case e: Throwable => fs.delete(candidate, true); throw e }
+    if (published)
+      versionsOf(fs, rootP)
+        .filterNot { case (_, dir) =>
+          dir.getName == name || live.contains(dir.getName) }
+        .foreach { case (_, dir) => fs.delete(dir, true) }
+    (next, out, published)
+  }
+
+  /** Build a NEW versioned index at `root` (first version `v1`), or publish
+    * the next version over an existing root: the new version serves, the
+    * previously live one is kept for one grace round, and older versions
+    * are deleted ([[publishVersion]]). Same parameters and training
     * lifecycle as [[buildIvfIndexOf]]; the flat single-directory build
     * remains available for quiesced deployments. */
   def buildIvfIndexVersionedOf(vecs: DataFrame, root: String, iters: Int,
       idCol: String = "vec_id", embCol: String = "embedding",
-      seedCol: Option[String] = None, cells: Int = 10): Unit = {
-    val spark = vecs.sparkSession
-    val fs = fsOf(spark, root)
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val next = versionsOf(fs, rootP).lastOption.map(_._1 + 1).getOrElse(1L)
-    buildIvfIndexOf(vecs, s"$root/v$next", iters, idCol, embCol, seedCol, cells)
-    writePointer(fs, rootP, s"v$next")
-  }
+      seedCol: Option[String] = None, cells: Int = 10): Unit =
+    publishVersion(vecs.sparkSession, root)(
+      buildIvfIndexOf(vecs, _, iters, idCol, embCol, seedCol, cells))(_ => true)
 
   // ---- driver-side quantizer cache (probe fixed-overhead killer) ------
   // A probe needs two SMALL driver-resident artifacts before its one real
@@ -1077,16 +1111,25 @@ object Similarity {
   private[graft] final case class CodebookRow(sub: Int, code: Long,
       cvec: Array[Long], cn2: Long)
 
-  private def cachedCodebooks(spark: SparkSession,
-      path0: String): Array[CodebookRow] =
-    cachedArtifact(spark, s"$path0/_pq_codebooks") {
-      Tables.parquet(spark, s"$path0/_pq_codebooks")
+  /** The one codebook loader, for either code set: a clear error names
+    * the encoder to run when the index carries no such codebooks. */
+  private def cachedCodebooks(spark: SparkSession, path0: String,
+      set: CodeSet): Array[CodebookRow] = {
+    val dir = set.codebooks(path0)
+    val missing = s"no ${set.codebooksName} at $path0 — run ${set.adder} first"
+    require(fsOf(spark, path0).exists(new org.apache.hadoop.fs.Path(dir)),
+      missing)
+    val rows = cachedArtifact(spark, dir) {
+      Tables.parquet(spark, dir)
         .select(col("sub").cast("int"), col("clabel").cast("long"),
           col("cvec"), col("cn2").cast("long"))
         .collect()
         .map(r => CodebookRow(r.getInt(0), r.getLong(1),
           r.getSeq[Long](2).toArray, r.getLong(3)))
     }
+    require(rows.nonEmpty, missing)
+    rows
+  }
 
   /** Driver replay of the plan-side cell ranking: dot accumulated in Long
     * element order (ArrayDotLong's loop), cosine as
@@ -1097,12 +1140,9 @@ object Similarity {
   private[graft] def rankCellsDriverSide(cents: Array[CentroidRow],
       q: Seq[Long], nprobe: Int): Seq[Long] = {
     val qa = q.toArray
-    val qn2 = { var s = 0L; var i = 0
-      while (i < qa.length) { s += qa(i) * qa(i); i += 1 }; s }
+    val qn2 = dotFrom(qa, 0, qa)
     cents.map { c =>
-      val n = math.min(c.cvec.length, qa.length)
-      var dot = 0L; var i = 0
-      while (i < n) { dot += c.cvec(i) * qa(i); i += 1 }
+      val dot = dotFrom(qa, 0, c.cvec)
       val ccos = if (c.cn2 > 0 && qn2 > 0)
         dot.toDouble / math.sqrt(c.cn2.toDouble * qn2.toDouble)
       else -1.0
@@ -1210,21 +1250,9 @@ object Similarity {
         .select(col("vec_id"), col("cell").as("label"), col("q"),
           col("n2"))
       val grown = graft.Materialize.pin(old.unionByName(fresh))
-      if (versioned) {
-        // reader-safe swap: build the next version COMPLETELY, flip the
-        // `_current` pointer (one-file rename), keep the superseded
-        // version for one grace round (in-flight probes that resolved
-        // the old pointer finish on intact files), drop anything older.
-        val fs = fsOf(spark, path)
-        val rootP = new org.apache.hadoop.fs.Path(path)
-        val next = versionsOf(fs, rootP).lastOption.map(_._1 + 1)
-          .getOrElse(1L)
-        buildIndexFrom(grown, s"$path/v$next", iters)
-        writePointer(fs, rootP, s"v$next")
-        versionsOf(fs, rootP).dropRight(2).foreach { case (_, dir) =>
-          fs.delete(dir, true)
-        }
-      } else {
+      if (versioned) // reader-safe swap: the one publish step
+        publishVersion(spark, path)(buildIndexFrom(grown, _, iters))(_ => true)
+      else {
         val tmp = path + ".retrain"
         buildIndexFrom(grown, tmp, iters)
         // FLAT-layout fallback swap: old → .old, tmp → live, drop .old.
@@ -1274,18 +1302,12 @@ object Similarity {
     * cell ids (a bounded nprobe-scalar collect — the literal IN list is
     * what lets the scan prune partitions; a join would list every cell
     * directory), then exact-cosine re-rank only those cells' members.
-    * Quantization mirrors the build side exactly (round-half-up ×1000,
-    * the `quantized` recipe) so a probe vector equal to an indexed vector
-    * scores 1.0. */
+    * Quantization is the build side's own rule ([[quantizeQuery]]) so a
+    * probe vector equal to an indexed vector scores 1.0. */
   def probeIvfIndex(spark: SparkSession, path: String,
       query: Array[Float], nprobe: Int, k: Int,
-      excludeIds: Seq[Long] = Seq.empty): DataFrame = {
-    // HALF_UP to match Spark's round() on negatives (Math.round would
-    // differ at -x.5: floor(x+0.5) rounds toward positive infinity)
-    val q = query.map(v => new java.math.BigDecimal(v.toDouble * 1000.0)
-      .setScale(0, java.math.RoundingMode.HALF_UP).longValue()).toSeq
-    probeIvfIndexQ(spark, path, q, nprobe, k, excludeIds)
-  }
+      excludeIds: Seq[Long] = Seq.empty): DataFrame =
+    probeIvfIndexQ(spark, path, quantizeQuery(query), nprobe, k, excludeIds)
 
   /** The probe core over an ALREADY-QUANTIZED query vector — the
     * arithmetic [[auditIvfIndex]] replays plan-side, kept callable for
@@ -1299,21 +1321,46 @@ object Similarity {
   def probeIvfIndexQ(spark: SparkSession, path: String,
       q: Seq[Long], nprobe: Int, k: Int,
       excludeIds: Seq[Long] = Seq.empty): DataFrame = {
-    import graft.functions.ArrayDot.dotLong
     require(nprobe >= 1 && k >= 1, s"nprobe/k: $nprobe/$k")
     val path0 = resolveIndexDir(spark, path)
-    val qn2 = q.map(x => x * x).sum
-    val qlit = typedLit(q)
     val cells = rankCellsDriverSide(cachedCentroids(spark, path0), q, nprobe)
-    val probed = Tables.parquet(spark, path0)
+    exactTopK(cellScan(spark, path0, cells, excludeIds), q, k)
+  }
+
+  /** The probe quantizer: `quantize_milli`'s scalar rule per component, so
+    * a probe vector quantizes exactly as the build side stored it. */
+  private[graft] def quantizeQuery(query: Array[Float]): Seq[Long] =
+    query.map(v => graft.functions.QuantizeMilli.milli(v.toDouble)).toSeq
+
+  /** `q` · `v` over `v.length` components of `q` from `from` — the driver
+    * dot behind cell ranking, the ADC LUT and the residual cell term. */
+  private def dotFrom(q: Array[Long], from: Int, v: Array[Long]): Long = {
+    val n = math.min(v.length, q.length - from)
+    var s = 0L; var i = 0
+    while (i < n) { s += q(from + i) * v(i); i += 1 }
+    s
+  }
+
+  /** The cell-pruned scan every probe reads: the literal `cell IN (…)`
+    * list becomes the scan's PartitionFilters, and `excludeIds` drops
+    * the caller's own ids before anything is scored. */
+  private def cellScan(spark: SparkSession, dir: String, cells: Seq[Long],
+      excludeIds: Seq[Long]): DataFrame = {
+    val probed = Tables.parquet(spark, dir)
       .where(col("cell").isInCollection(cells))
-    val scoped =
-      if (excludeIds.isEmpty) probed
-      else probed.where(!col("vec_id").isInCollection(excludeIds))
-    scoped
+    if (excludeIds.isEmpty) probed
+    else probed.where(!col("vec_id").isInCollection(excludeIds))
+  }
+
+  /** Exact cosine top-k of `postings` (vec_id, q, n2) against `q`, rounded
+    * before ranking as every probe path ranks. */
+  private def exactTopK(postings: DataFrame, q: Seq[Long], k: Int): DataFrame = {
+    import graft.functions.ArrayDot.dotLong
+    val qa = q.toArray
+    postings
       .select(col("vec_id"),
-        round(guardedCos(dotLong(col("q"), qlit), lit(qn2), col("n2")), 4)
-          .as("cos"))
+        round(guardedCos(dotLong(col("q"), typedLit(q)),
+          lit(dotFrom(qa, 0, qa)), col("n2")), 4).as("cos"))
       .orderBy(col("cos").desc, col("vec_id"))
       .limit(k)
   }
@@ -1414,33 +1461,28 @@ object Similarity {
   /** GATED versioned deployment — the production loop around
     * [[buildIvfIndexVersionedOf]]: build the NEXT version WITHOUT
     * flipping the `_current` pointer, audit ITS recall on a panel of its
-    * own vectors, and flip only if mean recall ≥ `floorPct`; a failing
-    * candidate is deleted and the previous version keeps serving (no
-    * reader ever sees the bad index). This is the gate that stops a
-    * mis-parameterized retrain (too few cells, too few Lloyd rounds, a
-    * garbage batch folded in) from silently replacing a good index —
-    * recall is a property of the quantizer on YOUR data, so it is
-    * measured, not assumed. */
+    * own vectors, and flip only if mean recall ≥ `floorPct`. A failing
+    * candidate, or one whose build or audit throws (the throw is
+    * rethrown), is deleted and the previous version keeps serving: no
+    * reader ever sees an unaudited index. A flip keeps the new version
+    * and the one live before it and deletes every older version
+    * ([[publishVersion]], the same retention as every versioned build).
+    * This is the gate that stops a mis-parameterized retrain (too few
+    * cells, too few Lloyd rounds, a garbage batch folded in) from
+    * silently replacing a good index — recall is a property of the
+    * quantizer on YOUR data, so it is measured, not assumed. */
   def deployGatedIvfIndex(vecs: DataFrame, root: String, iters: Int,
       panelIds: Seq[Long], nprobe: Int, k: Int, floorPct: Double,
       idCol: String = "vec_id", embCol: String = "embedding",
       cells: Int = 10): IvfGateResult = {
     val spark = vecs.sparkSession
-    val fs = fsOf(spark, root)
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val next = versionsOf(fs, rootP).lastOption.map(_._1 + 1).getOrElse(1L)
-    val candidate = s"$root/v$next"
-    buildIvfIndexOf(vecs, candidate, iters, idCol, embCol, None, cells)
-    val audit = auditIvfIndex(spark, candidate, panelIds, nprobe, k)
-      .agg(avg("recall_pct")).head()
-    val mean = if (audit.isNullAt(0)) 0.0 else audit.getDouble(0)
-    if (mean >= floorPct) {
-      writePointer(fs, rootP, s"v$next")
-      IvfGateResult(next, mean, deployed = true)
-    } else {
-      fs.delete(new org.apache.hadoop.fs.Path(candidate), true)
-      IvfGateResult(next, mean, deployed = false)
-    }
+    val (version, mean, deployed) = publishVersion(spark, root) { candidate =>
+      buildIvfIndexOf(vecs, candidate, iters, idCol, embCol, None, cells)
+      val audit = auditIvfIndex(spark, candidate, panelIds, nprobe, k)
+        .agg(avg("recall_pct")).head()
+      if (audit.isNullAt(0)) 0.0 else audit.getDouble(0)
+    }(_ >= floorPct)
+    IvfGateResult(version, mean, deployed)
   }
 
   // ---- IVF+PQ: codes beside the postings (the FAISS IVFPQ shape) -------
@@ -1459,120 +1501,192 @@ object Similarity {
   // postings reads (Spark's file index skips _-prefixed paths), so every
   // pre-PQ surface works unchanged on a PQ-augmented index.
 
-  /** Encode an existing IVF index's postings into PQ codes, writing
-    * `_pq_codebooks` + cell-partitioned `_pq_codes` beside the postings.
-    * Codebooks are seeded by the stored cell (the coarse quantizer doubles
-    * as the sub-codebook seeding, so codeword count per subspace =
-    * |cells|). Idempotent full re-encode: run it again after
-    * [[appendToIvfIndex]] or a [[maintainIvfIndex]] retrain — appended
-    * rows are invisible to ADC probes until encoded (the probe scores
-    * CODES, and re-encoding is one bounded pass over the postings). */
-  def addPqToIvfIndex(spark: SparkSession, path: String,
-      m: Int): Unit = graft.Materialize.scoped {
+  /** One persisted code set beside the postings — raw PQ (`pq`) or
+    * residual PQ (`rpq`), each described once here: its artifact dirs
+    * (`_<name>_codebooks`, cell-partitioned `_<name>_codes`), its encoder
+    * and its ADC score. Everything else — the cell ranking, the
+    * cell-pruned codes scan, the driver LUT, the exact rerank, the
+    * artifact writes and the refresh — is shared by both. */
+  private sealed abstract class CodeSet(val name: String, val adder: String) {
+    val codebooksName = s"_${name}_codebooks"
+    def codebooks(dir: String): String = s"$dir/$codebooksName"
+    def codes(dir: String): String = s"$dir/_${name}_codes"
+    /** Encode the postings at `dir` with `m` subspaces: (codes with a
+      * `cell` column, codebooks (sub, clabel, cvec, cn2), further
+      * artifacts written after the codebooks). */
+    def encode(spark: SparkSession, dir: String,
+        m: Int): (DataFrame, DataFrame, Seq[(String, DataFrame)])
+    /** (vec_id, adot, an2) of every probed vector, from its codes joined
+      * to the LUT (sub, code, qdot, cn2). */
+    def adc(spark: SparkSession, dir: String, q: Array[Long],
+        cells: Seq[Long], hits: DataFrame): DataFrame
+  }
+
+  /** Raw PQ: codes of the stored vectors; the codebooks are seeded by the
+    * stored cell (the coarse quantizer doubles as the sub-codebook
+    * seeding, so codeword count per subspace = |cells|). ADC sums the
+    * LUT dots and the codewords' norms. */
+  private object RawPq extends CodeSet("pq", "addPqToIvfIndex") {
+    def encode(spark: SparkSession, dir: String,
+        m: Int): (DataFrame, DataFrame, Seq[(String, DataFrame)]) = {
+      val postings = Tables.parquet(spark, dir)
+        .select(col("vec_id"), col("cell").cast("long").as("label"),
+          col("q"), col("cell"))
+      val (subs, cb0) = pqPartsQ(postings.select("vec_id", "label", "q"), m)
+      // two write actions consume the codebook frame (the codes' broadcast
+      // join side AND the _pq_codebooks artifact) — pinned, or each write
+      // re-runs the posexplode + two-level centroid aggregate over the
+      // whole postings set (the pin audit flags exactly this)
+      val cb = graft.Materialize.pin(cb0)
+      val codes = pqEncode(subs, cb)
+        .join(postings.select(col("vec_id"), col("cell")), "vec_id")
+        .select(col("vec_id"), col("sub"), col("code"), col("cell"))
+      (codes, cb, Seq.empty)
+    }
+
+    def adc(spark: SparkSession, dir: String, q: Array[Long],
+        cells: Seq[Long], hits: DataFrame): DataFrame =
+      hits.groupBy("vec_id")
+        .agg(sum(col("qdot")).as("adot"), sum(col("cn2")).as("an2"))
+  }
+
+  /** Residual PQ (see the section comment below): codes of x − rcm(cell),
+    * with `an2 = |x̂|²` stored per vector and the cell references in
+    * `_rpq_centroids`. ADC adds the per-cell term dot(q, rcm(cell)) to the
+    * summed LUT dots and reads `an2` from the codes row. */
+  private object ResidualPq extends CodeSet("rpq", "addResidualPqToIvfIndex") {
+    def encode(spark: SparkSession, dir: String,
+        m: Int): (DataFrame, DataFrame, Seq[(String, DataFrame)]) = {
+      import graft.functions.ArrayDot.dotLong
+      val postings = Tables.parquet(spark, dir)
+        .select(col("vec_id"), col("cell").cast("long").as("label"), col("q"))
+      val cnt = postings.groupBy("label").agg(count(lit(1)).as("n"))
+      // cell references from the stored SUM centroids ÷ live counts
+      val rcm = Tables.parquet(spark, s"$dir/_centroids")
+        .select(col("clabel").as("label"), col("cvec"))
+        .join(broadcast(cnt), "label")
+        .select(col("label"),
+          transform(col("cvec"), x => floorDivCol(x, col("n"))).as("rvec"))
+      val (codes, cbm, xhat) = residualEncode(postings, rcm, m)
+      val an2 = xhat
+        .select(col("vec_id"), dotLong(col("xh"), col("xh")).as("t"))
+        .groupBy("vec_id").agg(sum(col("t")).as("an2"))
+      val out = codes
+        .join(an2, "vec_id")
+        .join(postings.select(col("vec_id"), col("label").as("cell")),
+          "vec_id")
+        .select(col("vec_id"), col("sub"), col("code"), col("an2"),
+          col("cell"))
+      (out, cbm, Seq("_rpq_centroids" ->
+        rcm.withColumn("rn2", dotLong(col("rvec"), col("rvec")))))
+    }
+
+    def adc(spark: SparkSession, dir: String, q: Array[Long],
+        cells: Seq[Long], hits: DataFrame): DataFrame = {
+      import spark.implicits._
+      val cellDot = cachedRpqCentroids(spark, dir).toSeq
+        .filter(r => cells.contains(r.label))
+        .map(r => (r.label, dotFrom(q, 0, r.rvec)))
+        .toDF("cell", "rcdot")
+      hits.groupBy("vec_id", "cell")
+        .agg(sum(col("qdot")).as("sdot"), max(col("an2")).as("an2"))
+        .join(broadcast(cellDot), "cell")
+        .select(col("vec_id"), (col("sdot") + col("rcdot")).as("adot"),
+          col("an2"))
+    }
+  }
+
+  /** Encode `path`'s live postings into `set` and write its artifacts:
+    * the cell-partitioned codes, then the codebooks and any further
+    * artifact, each followed by its cache-invalidation nonce.
+    * Idempotent full re-encode. */
+  private def addCodeSet(spark: SparkSession, path: String, m: Int,
+      set: CodeSet): Unit = graft.Materialize.scoped {
     val path0 = resolveIndexDir(spark, path)
-    val postings = Tables.parquet(spark, path0)
-      .select(col("vec_id"), col("cell").cast("long").as("label"), col("q"),
-        col("cell"))
-    val (subs, cb0) = pqPartsQ(postings.select("vec_id", "label", "q"), m)
-    // two write actions consume the codebook frame (the codes' broadcast
-    // join side AND the _pq_codebooks artifact) — pinned, or each write
-    // re-runs the posexplode + two-level centroid aggregate over the
-    // whole postings set (the pin audit flags exactly this)
-    val cb = graft.Materialize.pin(cb0)
-    val codes = pqEncode(subs, cb)
-      .join(postings.select(col("vec_id"), col("cell")), "vec_id")
-      .select(col("vec_id"), col("sub"), col("code"), col("cell"))
-    graft.sources.Sink.writeCurated(codes, s"$path0/_pq_codes",
+    val (codes, codebooks, more) = set.encode(spark, path0, m)
+    graft.sources.Sink.writeCurated(codes, set.codes(path0),
       partitionCols = Seq("cell"), sortCols = Seq("vec_id", "sub"))
-    cb.write.mode("overwrite").parquet(s"$path0/_pq_codebooks")
-    writeNonce(fsOf(spark, path0), s"$path0/_pq_codebooks")
+    ((set.codebooksName -> codebooks) +: more).foreach { case (name, df) =>
+      df.write.mode("overwrite").parquet(s"$path0/$name")
+      writeNonce(fsOf(spark, path0), s"$path0/$name")
+    }
     ensurePointerUnmoved(spark, path, path0)
   }
 
-  /** Re-derive the PQ codes of a PQ-augmented index after an append or a
-    * retrain, inferring `m` from the stored codebooks — the maintenance
-    * half of the staleness contract (appended rows are ADC-invisible
-    * until encoded). No-op on an index that was never PQ-augmented, so a
-    * nightly job calls it unconditionally after [[maintainIvfIndex]].
-    * Returns whether codes were refreshed. */
-  def refreshPqCodes(spark: SparkSession, path: String): Boolean = {
-    val path0 = resolveIndexDir(spark, path)
-    val cbPath = new org.apache.hadoop.fs.Path(path0, "_pq_codebooks")
-    if (!fsOf(spark, path0).exists(cbPath)) false
-    else {
-      val m = Tables.parquet(spark, s"$path0/_pq_codebooks")
-        .agg(max(col("sub"))).head().getInt(0) + 1
-      addPqToIvfIndex(spark, path0, m)
-      ensurePointerUnmoved(spark, path, path0)
-      true
-    }
-  }
-
-  /** Probe a PQ-augmented IVF index: pick `nprobe` cells by centroid
-    * cosine, ADC-score ONLY those cells' codes (the scan reads
-    * `_pq_codes/cell=…` — partition-pruned, no raw vectors), then
-    * exact-rerank the top-`rerank` shortlist from the postings of the same
-    * cells. `rerank <= 0` returns the raw ADC ranking (vec_id, acos);
-    * otherwise (vec_id, cos) with exact cosines. The LUT —
-    * dot(query_sub, codeword) per (sub, code) — is built on the driver
-    * from the collected codebook table (|subs|·|cells| rows, the table a
-    * CPU ADC scan keeps in L1) and broadcast into the codes join. */
-  def probeIvfPqIndex(spark: SparkSession, path: String,
-      query: Array[Float], nprobe: Int, k: Int, rerank: Int = 0,
-      excludeIds: Seq[Long] = Seq.empty): DataFrame = {
-    import graft.functions.ArrayDot.dotLong
+  /** The one probe core of both code sets: rank `nprobe` cells on the
+    * driver, ADC-score ONLY those cells' codes (the scan reads
+    * `_<name>_codes/cell=…` — partition-pruned, no raw vectors) against a
+    * driver-built LUT — dot(query_sub, codeword) per (sub, code), from
+    * the cached codebook table (|subs|·|cells| rows, the table a CPU ADC
+    * scan keeps in L1), broadcast into the codes join — then
+    * exact-rerank the top-`rerank` shortlist from the postings of the
+    * same cells. `rerank <= 0` returns the raw ADC ranking (vec_id,
+    * acos); otherwise (vec_id, cos) with exact cosines. Both small
+    * artifacts come from the driver-side cache, so a warm probe
+    * schedules only the codes scan (+ the rerank scan). */
+  private def probeCodeSet(spark: SparkSession, path: String,
+      query: Array[Float], nprobe: Int, k: Int, rerank: Int,
+      excludeIds: Seq[Long], set: CodeSet): DataFrame = {
     require(nprobe >= 1 && k >= 1, s"nprobe/k: $nprobe/$k")
     require(rerank <= 0 || rerank >= k, s"rerank $rerank < k $k")
     val path0 = resolveIndexDir(spark, path)
-    val q = query.map(v => new java.math.BigDecimal(v.toDouble * 1000.0)
-      .setScale(0, java.math.RoundingMode.HALF_UP).longValue()).toSeq
-    val qn2 = q.map(x => x * x).sum
-    // both small artifacts come from the driver-side cache: a warm PQ
-    // probe schedules only the codes scan (+ the rerank scan), never the
-    // centroid/codebook fetch jobs the r10 verdict priced as the
-    // fixed-overhead sensitivity
+    val q = quantizeQuery(query)
+    val qa = q.toArray
     val cells = rankCellsDriverSide(cachedCentroids(spark, path0), q, nprobe)
-    // driver-side LUT: qdot = dot(query's sub-slice, codeword). The
-    // codebook table is small by construction (coarse-quantizer-seeded),
-    // and the query must be sliced exactly as pqPartsQ slices postings.
-    require(fsOf(spark, path0).exists(
-      new org.apache.hadoop.fs.Path(path0, "_pq_codebooks")),
-      s"no _pq_codebooks at $path0 — run addPqToIvfIndex first")
-    val cbRows = cachedCodebooks(spark, path0)
-    require(cbRows.nonEmpty, s"no _pq_codebooks at $path0 — run addPqToIvfIndex")
-    val lutRows = cbRows.toSeq.map { r =>
-      val sd = r.cvec.length
-      val qs = q.slice(r.sub * sd, r.sub * sd + sd)
-      val qdot = qs.zip(r.cvec).map { case (a, b) => a * b }.sum
-      (r.sub, r.code, qdot, r.cn2)
-    }
     import spark.implicits._
-    val lut = lutRows.toDF("sub", "code", "qdot", "cn2")
-    val codes = Tables.parquet(spark, s"$path0/_pq_codes")
-      .where(col("cell").isInCollection(cells))
-    val scopedCodes =
-      if (excludeIds.isEmpty) codes
-      else codes.where(!col("vec_id").isInCollection(excludeIds))
-    val adc = scopedCodes
+    // the query is sliced exactly as pqPartsQ slices postings
+    val lut = cachedCodebooks(spark, path0, set).toSeq
+      .map(r => (r.sub, r.code, dotFrom(qa, r.sub * r.cvec.length, r.cvec),
+        r.cn2))
+      .toDF("sub", "code", "qdot", "cn2")
+    val hits = cellScan(spark, set.codes(path0), cells, excludeIds)
       .join(broadcast(lut), Seq("sub", "code"))
-      .groupBy("vec_id")
-      .agg(sum(col("qdot")).as("adot"), sum(col("cn2")).as("an2"))
-      .select(col("vec_id"),
-        round(guardedCos(col("adot"), lit(qn2), col("an2")), 4).as("acos"))
+    val adc = set.adc(spark, path0, qa, cells, hits)
+      .select(col("vec_id"), round(guardedCos(col("adot"),
+        lit(dotFrom(qa, 0, qa)), col("an2")), 4).as("acos"))
       .orderBy(col("acos").desc, col("vec_id"))
     if (rerank <= 0) adc.limit(k)
-    else {
-      val shortlist = adc.limit(rerank).select("vec_id")
-      Tables.parquet(spark, path0)
-        .where(col("cell").isInCollection(cells))
-        .join(broadcast(shortlist), Seq("vec_id"))
-        .select(col("vec_id"),
-          round(guardedCos(dotLong(col("q"), typedLit(q)), lit(qn2),
-            col("n2")), 4).as("cos"))
-        .orderBy(col("cos").desc, col("vec_id"))
-        .limit(k)
-    }
+    else exactTopK(cellScan(spark, path0, cells, excludeIds)
+      .join(broadcast(adc.limit(rerank).select("vec_id")), Seq("vec_id")),
+      q, k)
   }
+
+  /** Encode an existing IVF index's postings into PQ codes, writing
+    * `_pq_codebooks` + cell-partitioned `_pq_codes` beside the postings
+    * ([[RawPq]]). Idempotent full re-encode: run it again (or
+    * [[refreshPqCodes]]) after [[appendToIvfIndex]] or a
+    * [[maintainIvfIndex]] retrain — appended rows are invisible to ADC
+    * probes until encoded (the probe scores CODES, and re-encoding is one
+    * bounded pass over the postings). */
+  def addPqToIvfIndex(spark: SparkSession, path: String, m: Int): Unit =
+    addCodeSet(spark, path, m, RawPq)
+
+  /** Re-derive EVERY code set a PQ-augmented index carries — raw PQ and
+    * residual PQ — after an append or a retrain, inferring each `m` from
+    * that code set's own stored codebooks: the maintenance half of the
+    * staleness contract (appended rows are ADC-invisible until encoded).
+    * No-op on an index with no code set, so a nightly job calls it
+    * unconditionally after [[maintainIvfIndex]]. Returns whether any
+    * codes were refreshed. */
+  def refreshPqCodes(spark: SparkSession, path: String): Boolean = {
+    val path0 = resolveIndexDir(spark, path)
+    val fs = fsOf(spark, path0)
+    val present = Seq(RawPq, ResidualPq).filter(set =>
+      fs.exists(new org.apache.hadoop.fs.Path(set.codebooks(path0))))
+    present.foreach { set =>
+      val m = cachedCodebooks(spark, path0, set).map(_.sub).max + 1
+      addCodeSet(spark, path0, m, set)
+    }
+    if (present.nonEmpty) ensurePointerUnmoved(spark, path, path0)
+    present.nonEmpty
+  }
+
+  /** Probe a PQ-augmented IVF index ([[probeCodeSet]] over [[RawPq]]):
+    * ADC score = Σ_sub lut(sub, code) against Σ_sub |codeword|². */
+  def probeIvfPqIndex(spark: SparkSession, path: String,
+      query: Array[Float], nprobe: Int, k: Int, rerank: Int = 0,
+      excludeIds: Seq[Long] = Seq.empty): DataFrame =
+    probeCodeSet(spark, path, query, nprobe, k, rerank, excludeIds, RawPq)
 
   // ---- residual PQ: encode x − centroid(cell), not x (FAISS IVFPQ) -----
   // Raw PQ quantizes the VECTOR; residual PQ quantizes its OFFSET from the
@@ -1672,26 +1786,7 @@ object Similarity {
         s => s.getField("s")).as("svec"), max(col("n")).as("n"))
       .select(col("label"),
         transform(col("svec"), x => floorDivCol(x, col("n"))).as("rvec"))
-    val res = quant.join(broadcast(rcm), "label")
-      .select(col("vec_id"), col("label"),
-        zip_with(col("q"), col("rvec"), (a, b) => a - b).as("q"))
-    val (subs, _) = pqPartsQ(res, m)
-    val cbm = residualCodebooks(res, subs)
-    val codes = pqEncode(subs, cbm)
-    // reconstruction x̂_sub = rcm_sub(own label) + assigned codeword
-    val rsub = rcm
-      .select(col("label"), explode(sequence(lit(0), lit(m - 1))).as("sub"),
-        col("rvec"))
-      .withColumn("sd", (size(col("rvec")) / m).cast("int"))
-      .select(col("label"), col("sub"),
-        slice(col("rvec"), col("sub") * col("sd") + 1, col("sd")).as("rvs"))
-    val xhat = codes
-      .join(quant.select("vec_id", "label"), "vec_id")
-      .join(broadcast(cbm.select(col("sub"), col("clabel").as("code"),
-        col("cvec").as("mvec"))), Seq("sub", "code"))
-      .join(broadcast(rsub), Seq("label", "sub"))
-      .select(col("vec_id"), col("sub"),
-        zip_with(col("rvs"), col("mvec"), (a, b) => a + b).as("xh"))
+    val (_, _, xhat) = residualEncode(quant, rcm, m)
     val qslices = quant.where(col("vec_id") === lit(queryId))
       .select(explode(sequence(lit(0), lit(m - 1))).as("sub"), col("q"))
       .withColumn("sd", (size(col("q")) / m).cast("int"))
@@ -1712,28 +1807,16 @@ object Similarity {
       .limit(k)
   }
 
-  /** Residual-PQ-augment an existing IVF index: write `_rpq_centroids`
-    * (the integer FLOOR-mean cell references), `_rpq_codebooks`
-    * (FLOOR-mean residual sub-codebooks) and cell-partitioned
-    * `_rpq_codes` (vec_id, sub, code, an2) beside the postings —
-    * `an2 = |rcm(cell) + codeword|²` is precomputed per vector so ADC
-    * probes never reconstruct. Idempotent full re-encode, same staleness
-    * contract as [[addPqToIvfIndex]]: appended rows are invisible to
-    * residual-ADC probes until re-encoded. */
-  def addResidualPqToIvfIndex(spark: SparkSession, path: String,
-      m: Int): Unit = graft.Materialize.scoped {
-    import graft.functions.ArrayDot.dotLong
-    val path0 = resolveIndexDir(spark, path)
-    val postings = Tables.parquet(spark, path0)
-      .select(col("vec_id"), col("cell").cast("long").as("label"), col("q"))
-    val cnt = postings.groupBy("label").agg(count(lit(1)).as("n"))
-    // cell references from the stored SUM centroids ÷ live counts
-    val rcm = Tables.parquet(spark, s"$path0/_centroids")
-      .select(col("clabel").as("label"), col("cvec"))
-      .join(broadcast(cnt), "label")
-      .select(col("label"),
-        transform(col("cvec"), x => floorDivCol(x, col("n"))).as("rvec"))
-    val res = postings.join(broadcast(rcm), "label")
+  /** The one residual encoder, shared by ss18 and the persisted index:
+    * subtract each vector's cell reference `rcm` (label, rvec) from its
+    * quantized `q` in `quant` (vec_id, label, q), PQ-encode the residuals
+    * against [[residualCodebooks]], and reconstruct each subvector as
+    * x̂_sub = rcm_sub(own label) + assigned codeword. Returns (codes
+    * (vec_id, sub, code, cos), codebooks (sub, clabel, cvec, cn2),
+    * x̂ (vec_id, sub, xh)). */
+  private def residualEncode(quant: DataFrame, rcm: DataFrame,
+      m: Int): (DataFrame, DataFrame, DataFrame) = {
+    val res = quant.join(broadcast(rcm), "label")
       .select(col("vec_id"), col("label"),
         zip_with(col("q"), col("rvec"), (a, b) => a - b).as("q"))
     val (subs, _) = pqPartsQ(res, m)
@@ -1745,30 +1828,28 @@ object Similarity {
       .withColumn("sd", (size(col("rvec")) / m).cast("int"))
       .select(col("label"), col("sub"),
         slice(col("rvec"), col("sub") * col("sd") + 1, col("sd")).as("rvs"))
-    val an2 = codes
-      .join(postings.select("vec_id", "label"), "vec_id")
+    val xhat = codes
+      .join(quant.select("vec_id", "label"), "vec_id")
       .join(broadcast(cbm.select(col("sub"), col("clabel").as("code"),
         col("cvec").as("mvec"))), Seq("sub", "code"))
       .join(broadcast(rsub), Seq("label", "sub"))
-      .select(col("vec_id"),
-        dotLong(zip_with(col("rvs"), col("mvec"), (a, b) => a + b),
-          zip_with(col("rvs"), col("mvec"), (a, b) => a + b)).as("t"))
-      .groupBy("vec_id").agg(sum(col("t")).as("an2"))
-    val out = codes
-      .join(an2, "vec_id")
-      .join(postings.select(col("vec_id"), col("label").as("cell")),
-        "vec_id")
-      .select(col("vec_id"), col("sub"), col("code"), col("an2"),
-        col("cell"))
-    graft.sources.Sink.writeCurated(out, s"$path0/_rpq_codes",
-      partitionCols = Seq("cell"), sortCols = Seq("vec_id", "sub"))
-    cbm.write.mode("overwrite").parquet(s"$path0/_rpq_codebooks")
-    writeNonce(fsOf(spark, path0), s"$path0/_rpq_codebooks")
-    rcm.withColumn("rn2", dotLong(col("rvec"), col("rvec")))
-      .write.mode("overwrite").parquet(s"$path0/_rpq_centroids")
-    writeNonce(fsOf(spark, path0), s"$path0/_rpq_centroids")
-    ensurePointerUnmoved(spark, path, path0)
+      .select(col("vec_id"), col("sub"),
+        zip_with(col("rvs"), col("mvec"), (a, b) => a + b).as("xh"))
+    (codes, cbm, xhat)
   }
+
+  /** Residual-PQ-augment an existing IVF index ([[ResidualPq]]): write
+    * `_rpq_centroids` (the integer FLOOR-mean cell references),
+    * `_rpq_codebooks` (FLOOR-mean residual sub-codebooks) and
+    * cell-partitioned `_rpq_codes` (vec_id, sub, code, an2) beside the
+    * postings — `an2 = |rcm(cell) + codeword|²` is precomputed per vector
+    * so ADC probes never reconstruct. Idempotent full re-encode, same
+    * staleness contract as [[addPqToIvfIndex]] (and refreshed by the same
+    * [[refreshPqCodes]]): appended rows are invisible to residual-ADC
+    * probes until re-encoded. */
+  def addResidualPqToIvfIndex(spark: SparkSession, path: String,
+      m: Int): Unit =
+    addCodeSet(spark, path, m, ResidualPq)
 
   private[graft] final case class RpqCentroidRow(label: Long,
       rvec: Array[Long])
@@ -1782,82 +1863,16 @@ object Similarity {
         .map(r => RpqCentroidRow(r.getLong(0), r.getSeq[Long](1).toArray))
     }
 
-  private def cachedRpqCodebooks(spark: SparkSession,
-      path0: String): Array[CodebookRow] =
-    cachedArtifact(spark, s"$path0/_rpq_codebooks") {
-      Tables.parquet(spark, s"$path0/_rpq_codebooks")
-        .select(col("sub").cast("int"), col("clabel").cast("long"),
-          col("cvec"), col("cn2").cast("long"))
-        .collect()
-        .map(r => CodebookRow(r.getInt(0), r.getLong(1),
-          r.getSeq[Long](2).toArray, r.getLong(3)))
-    }
-
-  /** Probe a residual-PQ-augmented IVF index: rank cells on the coarse
-    * quantizer (driver cache), then ADC-score ONLY those cells' residual
-    * codes — `adot = dot(q, rcm(cell)) + Σ_sub lut(sub, code)` with the
-    * per-cell term and the LUT both computed driver-side (nprobe + m·|cells|
-    * dots), and `an2` read from the codes row. Same rerank contract as
-    * [[probeIvfPqIndex]]: `rerank <= 0` returns (vec_id, acos) from codes
-    * alone; otherwise the top-`rerank` shortlist re-scores exactly from
-    * the postings of the probed cells. */
+  /** Probe a residual-PQ-augmented IVF index ([[probeCodeSet]] over
+    * [[ResidualPq]]): `adot = dot(q, rcm(cell)) + Σ_sub lut(sub, code)`
+    * with the per-cell term and the LUT both computed driver-side
+    * (nprobe + m·|cells| dots), and `an2` read from the codes row. Same
+    * rerank contract as [[probeIvfPqIndex]]. */
   def probeIvfResidualPqIndex(spark: SparkSession, path: String,
       query: Array[Float], nprobe: Int, k: Int, rerank: Int = 0,
-      excludeIds: Seq[Long] = Seq.empty): DataFrame = {
-    import graft.functions.ArrayDot.dotLong
-    require(nprobe >= 1 && k >= 1, s"nprobe/k: $nprobe/$k")
-    require(rerank <= 0 || rerank >= k, s"rerank $rerank < k $k")
-    val path0 = resolveIndexDir(spark, path)
-    val q = query.map(v => new java.math.BigDecimal(v.toDouble * 1000.0)
-      .setScale(0, java.math.RoundingMode.HALF_UP).longValue()).toSeq
-    val qn2 = q.map(x => x * x).sum
-    val cells = rankCellsDriverSide(cachedCentroids(spark, path0), q, nprobe)
-    require(fsOf(spark, path0).exists(
-      new org.apache.hadoop.fs.Path(path0, "_rpq_codebooks")),
-      s"no _rpq_codebooks at $path0 — run addResidualPqToIvfIndex first")
-    val cbRows = cachedRpqCodebooks(spark, path0)
-    require(cbRows.nonEmpty,
-      s"no _rpq_codebooks at $path0 — run addResidualPqToIvfIndex")
-    val lutRows = cbRows.toSeq.map { r =>
-      val sd = r.cvec.length
-      val qs = q.slice(r.sub * sd, r.sub * sd + sd)
-      (r.sub, r.code, qs.zip(r.cvec).map { case (a, b) => a * b }.sum)
-    }
-    val rcmRows = cachedRpqCentroids(spark, path0)
-    val cellDotRows = rcmRows.toSeq.filter(r => cells.contains(r.label))
-      .map { r =>
-        (r.label, q.zip(r.rvec).map { case (a, b) => a * b }.sum)
-      }
-    import spark.implicits._
-    val lut = lutRows.toDF("sub", "code", "qdot")
-    val cellDot = cellDotRows.toDF("cell", "rcdot")
-    val codes = Tables.parquet(spark, s"$path0/_rpq_codes")
-      .where(col("cell").isInCollection(cells))
-    val scoped =
-      if (excludeIds.isEmpty) codes
-      else codes.where(!col("vec_id").isInCollection(excludeIds))
-    val adc = scoped
-      .join(broadcast(lut), Seq("sub", "code"))
-      .groupBy("vec_id", "cell")
-      .agg(sum(col("qdot")).as("sdot"), max(col("an2")).as("an2"))
-      .join(broadcast(cellDot), "cell")
-      .select(col("vec_id"),
-        round(guardedCos(col("sdot") + col("rcdot"), lit(qn2),
-          col("an2")), 4).as("acos"))
-      .orderBy(col("acos").desc, col("vec_id"))
-    if (rerank <= 0) adc.limit(k)
-    else {
-      val shortlist = adc.limit(rerank).select("vec_id")
-      Tables.parquet(spark, path0)
-        .where(col("cell").isInCollection(cells))
-        .join(broadcast(shortlist), Seq("vec_id"))
-        .select(col("vec_id"),
-          round(guardedCos(dotLong(col("q"), typedLit(q)), lit(qn2),
-            col("n2")), 4).as("cos"))
-        .orderBy(col("cos").desc, col("vec_id"))
-        .limit(k)
-    }
-  }
+      excludeIds: Seq[Long] = Seq.empty): DataFrame =
+    probeCodeSet(spark, path, query, nprobe, k, rerank, excludeIds,
+      ResidualPq)
 
   /** Pinned quantized corpus with the seed cell column (the given label):
     * (vec_id, label, q, n2). */

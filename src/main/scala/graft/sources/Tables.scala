@@ -128,8 +128,4 @@ object Tables {
           ts.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
         case _ => false
       })
-
-  /** Register every table as a temp view (for the SQL facade / bench). */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => t(spark, sfDir, n).createOrReplaceTempView(n))
 }

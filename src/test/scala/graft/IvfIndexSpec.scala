@@ -603,4 +603,117 @@ class IvfIndexSpec extends SparkSpec {
     assert(resHits >= rawHits,
       s"residual PQ hits $resHits fell below raw PQ $rawHits (of ${10 * panel.length})")
   }
+
+  /** The `v<N>` directories under a versioned root, sorted. */
+  private def versionDirs(root: String): Seq[String] =
+    Option(new java.io.File(root).listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.matches("v[0-9]+"))
+      .map(_.getName).sorted
+
+  private def pointer(root: String): String =
+    java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$root/_current")).trim
+
+  test("refreshPqCodes re-encodes residual PQ too; an appended id becomes residual-ADC visible") {
+    val all = t(spark, sf, "embeddings")
+    val base = all.where(col("vec_id") % 5 =!= 0)
+    val fresh = all.where(col("vec_id") % 5 === 0)
+    val path = tmpDir("ivfrpq-refresh")
+    Similarity.buildIvfIndexOf(base, path, iters = 1, seedCol = Some("label"))
+    Similarity.addPqToIvfIndex(spark, path, m = 4)
+    Similarity.addResidualPqToIvfIndex(spark, path, m = 4)
+    Similarity.appendToIvfIndex(spark, path, fresh)
+    val someFresh = fresh.orderBy("vec_id").limit(1)
+      .select("vec_id", "embedding").head()
+    val fid = someFresh.getLong(0)
+    val fq = someFresh.getSeq[Float](1).toArray
+    val nCells = spark.read.parquet(s"$path/_centroids").count().toInt
+    val everything = all.count().toInt
+    def adcIds(probe: (Array[Float], Int, Int) => org.apache.spark.sql.DataFrame) =
+      probe(fq, nCells, everything).collect().map(_.getLong(0)).toSet
+    val residual = (q: Array[Float], np: Int, k: Int) =>
+      Similarity.probeIvfResidualPqIndex(spark, path, q, nprobe = np, k = k)
+    val raw = (q: Array[Float], np: Int, k: Int) =>
+      Similarity.probeIvfPqIndex(spark, path, q, nprobe = np, k = k)
+    assert(!adcIds(residual).contains(fid), "un-encoded append leaked into residual ADC")
+    assert(Similarity.refreshPqCodes(spark, path))
+    // both code sets now carry the appended row
+    assert(adcIds(raw).contains(fid), "refresh left raw PQ codes stale")
+    assert(adcIds(residual).contains(fid), "refresh left residual PQ codes stale")
+    // m was inferred per code set: both still have 4 subspaces
+    Seq("_pq_codebooks", "_rpq_codebooks").foreach { cb =>
+      assert(spark.read.parquet(s"$path/$cb").agg(max("sub")).head().getInt(0) == 3, cb)
+    }
+  }
+
+  test("gated deployment whose audit throws on a fresh root leaves no version serving") {
+    val all = t(spark, sf, "embeddings").select("vec_id", "embedding")
+    val root = tmpDir("ivf-gated-throws")
+    // a panel id the index does not hold: the audit's panel check throws
+    intercept[IllegalArgumentException] {
+      Similarity.deployGatedIvfIndex(all, root, iters = 1,
+        panelIds = Seq(0L, 987654321L), nprobe = 10, k = 5, floorPct = 0.0)
+    }
+    assert(versionDirs(root).isEmpty, s"left behind: ${versionDirs(root)}")
+    assert(!new java.io.File(s"$root/_current").exists())
+    assert(!Similarity.resolveIndexDir(spark, root).matches(".*/v[0-9]+"))
+  }
+
+  test("gated deployment whose audit throws keeps the serving version") {
+    val all = t(spark, sf, "embeddings").select("vec_id", "embedding")
+    val root = tmpDir("ivf-gated-throws-live")
+    val ok = Similarity.deployGatedIvfIndex(all, root, iters = 1,
+      panelIds = Seq(0L, 1L), nprobe = 10, k = 5, floorPct = 100.0)
+    assert(ok.deployed && ok.version == 1L)
+    intercept[IllegalArgumentException] {
+      Similarity.deployGatedIvfIndex(all, root, iters = 1,
+        panelIds = Seq(0L, 987654321L), nprobe = 10, k = 5, floorPct = 0.0)
+    }
+    assert(pointer(root) == "v1")
+    assert(versionDirs(root) == Seq("v1"), s"left behind: ${versionDirs(root)}")
+    assert(Similarity.resolveIndexDir(spark, root).endsWith("/v1"))
+  }
+
+  test("versioned builds and passing gated deploys keep only the live and previous versions") {
+    val all = t(spark, sf, "embeddings").select("vec_id", "embedding")
+    val built = tmpDir("ivf-retain-built")
+    (1 to 3).foreach { i =>
+      Similarity.buildIvfIndexVersionedOf(all, built, iters = 1, cells = 4)
+      assert(pointer(built) == s"v$i")
+    }
+    assert(versionDirs(built) == Seq("v2", "v3"))
+    val gated = tmpDir("ivf-retain-gated")
+    (1 to 3).foreach { i =>
+      val r = Similarity.deployGatedIvfIndex(all, gated, iters = 1,
+        panelIds = Seq(0L, 1L), nprobe = 4, k = 5, floorPct = 100.0,
+        cells = 4)
+      assert(r.deployed && r.version == i.toLong)
+    }
+    assert(versionDirs(gated) == Seq("v2", "v3"))
+    assert(Similarity.resolveIndexDir(spark, gated).endsWith("/v3"))
+  }
+
+  test("the probe quantizer equals quantize_milli on random floats, ties included") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    val ties = Seq.fill(2000)((2 * rnd.nextInt(1 << 20) + 1) / 16.0f)
+      .flatMap(f => Seq(f, -f)) // odd multiples of 1/16: ×1000 ends in .5
+    val uniform = Seq.fill(4000)((rnd.nextDouble() * 4 - 2).toFloat)
+    val bits = Iterator.continually(java.lang.Float.intBitsToFloat(rnd.nextInt()))
+      .filter(f => !f.isNaN && !f.isInfinite).take(4000).toSeq
+    val floats = (ties ++ uniform ++ bits ++ Seq(0.0f, -0.0f, 0.0005f,
+      -0.0005f, 1.0005f, Float.MinPositiveValue)).toArray
+    val planSide = Seq(Tuple1(floats)).toDF("v")
+      .select(graft.functions.QuantizeMilli.quantize(col("v")))
+      .head().getSeq[Long](0)
+    val driverSide = Similarity.quantizeQuery(floats)
+    assert(driverSide == planSide)
+    // the exact-decimal HALF_UP rule probes used before agrees wherever
+    // ×1000 fits a long, so probes quantize as they always did
+    floats.zip(driverSide).filter(t => math.abs(t._1.toDouble) < 1e15)
+      .foreach { case (f, q) =>
+        assert(q == new java.math.BigDecimal(f.toDouble * 1000.0)
+          .setScale(0, java.math.RoundingMode.HALF_UP).longValue(), s"$f")
+      }
+  }
 }

@@ -2,30 +2,9 @@
 # Direct-JVM Perf runner: bypasses sbt so concurrent source edits can't
 # trigger a recompile under a timed run, and each invocation is a fresh
 # JVM (the honest cross-JVM measurement mode for the scaling rehearsals;
-# see SCALING.md). Usage:
+# see SCALING.md). run_direct.sh owns the classpath, the stale-build
+# guard and the JVM flags. Usage:
 #   tools/perf_direct.sh <sfDir> <mem> [reps=N] <query>...
 set -euo pipefail
-cd /root/repo
 SF_DIR="$1"; MEM="$2"; shift 2
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
-# stale-build guard (same as run_direct.sh): timing STALE bytecode after
-# a source edit mis-attributes perf movement to code that never ran.
-# Compare against the NEWEST .class file, not the classes dir mtime:
-# zinc's incremental compile rewrites class files inside nested package
-# dirs without bumping the top-level dir, so the dir-mtime check cried
-# wolf on every up-to-date build (ADVICE r15).
-NEWEST_CLASS="$(find target/scala-2.13/classes -name '*.class' -printf '%T@ %p\n' 2>/dev/null | sort -rn | head -1 | cut -d' ' -f2-)"
-if [ -z "$NEWEST_CLASS" ]; then
-  echo "WARNING: no compiled classes under target/scala-2.13/classes (sbt compile first)" >&2
-elif [ -n "$(find src/main -name '*.scala' -newer "$NEWEST_CLASS" -print -quit 2>/dev/null)" ]; then
-  echo "WARNING: src/main has edits newer than the newest compiled .class — running STALE bytecode (sbt compile first)" >&2
-fi
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-exec java $OPENS -Djava.awt.headless=true -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC "-Xmx$MEM" \
-  -cp "$CP" graft.tools.Perf "$SF_DIR" "$@"
+exec "$(dirname "$0")/run_direct.sh" "$MEM" graft.tools.Perf "$SF_DIR" "$@"

@@ -939,7 +939,7 @@ object Similarity {
     if (!fs.rename(tmp, cur))
       throw new java.io.IOException(
         s"IVF versioned layout: cannot publish pointer $cur -> $name " +
-          s"(new version is complete at $root/$name; readers fall back to it)")
+          "(readers fall back to the highest complete version)")
   }
 
   /** The one publish step of the versioned layout (see the layout comment
@@ -1179,13 +1179,6 @@ object Similarity {
   final case class IvfAppendStats(nAppended: Long, meanCos: Double,
       minCos: Double)
 
-  /** Incremental IVF maintenance — the nightly-corpus (dd08) shape: assign
-    * NEW vectors to the existing frozen quantizer and append them into the
-    * cell-partitioned layout (new files inside existing `cell=` dirs; the
-    * probe path and its partition pruning are unchanged). `_centroids` is
-    * NOT rewritten — append ≡ rebuild holds exactly while the quantizer is
-    * frozen. Caller owns vec_id uniqueness across the base corpus and all
-    * appends (same contract as any postings file). */
   /** Shared by append and maintain so the two paths cannot drift: the
     * stats extraction and the one-true append layout. */
   private def appendStats(assigned: DataFrame): IvfAppendStats = {
@@ -1201,6 +1194,13 @@ object Similarity {
       path, partitionCols = Seq("cell"), sortCols = Seq("vec_id"),
       mode = "append")
 
+  /** Incremental IVF maintenance — the nightly-corpus (dd08) shape: assign
+    * NEW vectors to the existing frozen quantizer and append them into the
+    * cell-partitioned layout (new files inside existing `cell=` dirs; the
+    * probe path and its partition pruning are unchanged). `_centroids` is
+    * NOT rewritten — append ≡ rebuild holds exactly while the quantizer is
+    * frozen. Caller owns vec_id uniqueness across the base corpus and all
+    * appends (same contract as any postings file). */
   def appendToIvfIndex(spark: SparkSession, path: String, vecs: DataFrame,
       idCol: String = "vec_id",
       embCol: String = "embedding"): IvfAppendStats = graft.Materialize.scoped {

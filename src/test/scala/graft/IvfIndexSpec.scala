@@ -703,11 +703,15 @@ class IvfIndexSpec extends SparkSpec {
       .filter(f => !f.isNaN && !f.isInfinite).take(4000).toSeq
     val floats = (ties ++ uniform ++ bits ++ Seq(0.0f, -0.0f, 0.0005f,
       -0.0005f, 1.0005f, Float.MinPositiveValue)).toArray
-    val planSide = Seq(Tuple1(floats)).toDF("v")
-      .select(graft.functions.QuantizeMilli.quantize(col("v")))
-      .head().getSeq[Long](0)
+    def planSide(v: org.apache.spark.sql.DataFrame) =
+      v.select(graft.functions.QuantizeMilli.quantize(col("v")))
+        .head().getSeq[Long](0)
     val driverSide = Similarity.quantizeQuery(floats)
-    assert(driverSide == planSide)
+    // a local relation evaluates the expression interpreted; an RDD-backed
+    // one runs its generated code
+    assert(driverSide == planSide(Seq(Tuple1(floats)).toDF("v")))
+    assert(driverSide ==
+      planSide(spark.sparkContext.parallelize(Seq(Tuple1(floats)), 1).toDF("v")))
     // the exact-decimal HALF_UP rule probes used before agrees wherever
     // ×1000 fits a long, so probes quantize as they always did
     floats.zip(driverSide).filter(t => math.abs(t._1.toDouble) < 1e15)
